@@ -104,11 +104,8 @@ def check_index(spark: SparkSession, index_dir: str,
            {"bad_blocks": int(bad_blocks)})
 
     # payload decode spot check through the store's own codec dispatch
-    from oscar_spark.functions.codec import block_decoder
-    fmt = store.get_meta("payload_format")
-    if fmt is None:
-        fmt = 2 if store.get_meta("codec") is not None else 1
-    decode = block_decoder(store.get_meta("codec", "varint"), int(fmt))
+    from oscar_spark.functions.codec import store_decoder
+    decode = store_decoder(store.manifest().get("meta", {}))
     cols = ["range_id", "doc_count", "first_doc", "last_doc", "payload"]
     has_pos = bool(store.get_meta("positions", False))
     if has_pos:

@@ -39,7 +39,7 @@ Scale notes (100 TB / 10^12 docs):
   (reference/oscar-create/CellTextCompleter.h:167-199).
 - encode groups are (term, range_id): bounded memory regardless of term
   skew; blocks within a group are ≤ BLOCK_SIZE docs.
-- All UDFs are Arrow-vectorized (mapInPandas/applyInPandas); the BM25
+- All UDFs are Arrow-vectorized (mapInPandas/mapInArrow); the BM25
   expression and every join/agg stay JVM-side.
 """
 
@@ -52,6 +52,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -59,7 +60,8 @@ from oscar_spark.build.docids import assign_doc_ids_ranged
 from oscar_spark.config import (BLOCK_SIZE, BROADCAST_DOCID_MAX,
                                 NUM_TERM_BUCKETS, RANGE_SIZE)
 from oscar_spark.functions.bm25 import bm25_sql
-from oscar_spark.functions.codec import PAYLOAD_FORMAT, encode_runs
+from oscar_spark.functions.codec import (PAYLOAD_FORMAT, block_decoder,
+                                        encode_runs, store_decoder)
 from oscar_spark.functions.extract import extract_series
 from oscar_spark.sources.tables import IndexStore
 
@@ -193,137 +195,56 @@ def _tokenize_batches(batches: Iterator[pd.DataFrame],
                 yield pd.DataFrame(frow)
 
 
-def _encode_run(terms: np.ndarray, rngs: np.ndarray, ids: np.ndarray,
-                tfs: np.ndarray, dls: np.ndarray,
-                codec: str = "varint", positions=None) -> pd.DataFrame:
-    """Encode a (term, range_id, doc_id)-sorted run of postings into
-    posting-block rows via the single-pass batched codec.
+def _encode_partition_arrow(batches, codec: str = "varint",
+                            with_positions: bool = False):
+    """Partition encoder with cross-batch carry-over (mapInArrow).
 
-    The whole run — group detection, delta reset, varint bytes, per-block
-    (max_tf, min_dl) metadata — is ~15 numpy passes total (codec.
-    encode_runs); per-block Python work is one bytes slice.  Earlier
-    shapes measured: per-group applyInPandas ~ms/group of pandas
-    overhead; per-block encode_block calls ~50µs/block of numpy dispatch
-    — both dominated the stage at bench scale.
+    Input partitions are hash-partitioned on (term, range_id) and sorted
+    by (term, range_id, doc_id) — the Spark shuffle IS the external sort
+    (the OOMGEOCELL mapping, SURVEY §2.5 O5).  Arrow batching may split a
+    group across batches, so the trailing (possibly incomplete) group of
+    each unit is held back and prepended to the next; a group is at most
+    RANGE_SIZE postings, so the carry buffer is bounded.
+
+    Each unit is one codec.encode_runs pass: group detection, delta
+    reset, varint bytes and per-block (max_tf, min_dl) metadata are ~15
+    numpy passes total, per-block Python work is one bytes slice.  The
+    shuffled term strings NEVER materialize as Python objects — the
+    string column is dictionary-encoded in C++ (one hash pass), group
+    detection runs on the int32 codes, and the output term column is a
+    C++ dictionary gather (guide §4.2: hand whole batches to native
+    code).  A positional build's per-posting position lists are read as
+    ONE flat int array (the list column's child values), never as a
+    Python list per posting.
 
     Mirrors the per-cell sort + strict-monotone invariant of
     reference/oscar-create/CellTextCompleter.cpp:139-155 (makeConsistent);
     emits (max_tf, min_dl); max_score = bm25(max_tf, min_dl, df) is
     derived later on the tiny blocks table — a valid block-max upper
     bound (BM25 ↑ in tf, ↓ in dl) that keeps the per-posting pipeline
-    free of any df join or score column.
-    """
-    # factorize term strings → dense local codes (one C hash pass), so
-    # encode_runs' adjacent-inequality group detection compares int64,
-    # not per-element Python string equality
-    codes, uniq = pd.factorize(terms)
-    res = encode_runs(codes.astype(np.int64), rngs, ids, tfs, dls,
-                      BLOCK_SIZE, RANGE_SIZE, codec=codec,
-                      positions=positions)
-    out = pd.DataFrame(res)
-    if len(out):
-        out["term"] = np.asarray(uniq, dtype=object)[
-            out["term"].to_numpy(np.int64)]
-    return out
-
-
-def _encode_partition(batches: Iterator[pd.DataFrame],
-                      codec: str = "varint",
-                      with_positions: bool = False) -> Iterator[pd.DataFrame]:
-    """Partition encoder with cross-batch carry-over.
-
-    Input partitions are hash-partitioned on (term, range_id) and sorted
-    by (term, range_id, doc_id) — the Spark shuffle IS the external sort
-    (the OOMGEOCELL mapping, SURVEY §2.5 O5).  Arrow batching may split a
-    group across batches, so the trailing (possibly incomplete) group of
-    each batch is held back and prepended to the next; a group is at most
-    RANGE_SIZE postings, so the carry buffer is bounded.
-    """
-    from oscar_spark.functions.tokenize import _pin_arrow_threads
-    _pin_arrow_threads()
-    pending: pd.DataFrame | None = None
-    buf: list[pd.DataFrame] = []
-    buf_rows = 0
-    for batch in batches:
-        # accumulate Arrow batches (default ~10k rows) into ~256k-row
-        # units: encode_runs is one vectorized pass whose fixed cost
-        # amortizes over the unit size, while the buffer stays far below
-        # executor memory
-        buf.append(batch)
-        buf_rows += len(batch)
-        if buf_rows < 262144:
-            continue
-        pdf = pd.concat(buf, ignore_index=True)
-        buf, buf_rows = [], 0
-        if pending is not None and len(pending):
-            pdf = pd.concat([pending, pdf], ignore_index=True)
-        if len(pdf) == 0:
-            continue
-        terms = pdf["term"].to_numpy()
-        ids = pdf["doc_id"].to_numpy(np.int64)
-        # range_id no longer rides the shuffle — one numpy divide
-        # recreates it (doc-id ranges are fixed-width)
-        rngs = ids // RANGE_SIZE
-        last_group = (terms == terms[-1]) & (rngs == rngs[-1])
-        # sorted input ⇒ the trailing group is a suffix
-        cut = len(pdf) - int(last_group[::-1].cumprod().sum())
-        head = pdf.iloc[:cut]
-        pending = pdf.iloc[cut:]
-        if len(head):
-            yield _encode_run(
-                head["term"].to_numpy(), rngs[:cut],
-                ids[:cut],
-                head["tf"].to_numpy(np.int64),
-                head["dl"].to_numpy(np.int64), codec,
-                head["pos"].to_numpy() if with_positions else None)
-    tail = ([pending] if pending is not None and len(pending) else []) + buf
-    if tail:
-        pdf = pd.concat(tail, ignore_index=True)
-        if len(pdf):
-            ids = pdf["doc_id"].to_numpy(np.int64)
-            yield _encode_run(
-                pdf["term"].to_numpy(), ids // RANGE_SIZE,
-                ids,
-                pdf["tf"].to_numpy(np.int64),
-                pdf["dl"].to_numpy(np.int64), codec,
-                pdf["pos"].to_numpy() if with_positions else None)
-
-
-def _encode_partition_arrow(batches, codec: str = "varint"):
-    """Arrow-native partition encoder (non-positional builds): same
-    carry-over protocol and byte-identical blocks as _encode_partition,
-    but the 10^7 shuffled term strings NEVER materialize as Python
-    objects — mapInArrow hands pyarrow record batches whose string
-    column is dictionary-encoded in C++ (one hash pass), group
-    detection runs on the int32 codes, and the output term column is a
-    C++ dictionary gather (guide §4.2: hand whole batches to native
-    code; the Arrow→pandas object-array conversion was the dominant
-    per-task cost of the encode stage).  Positional builds keep the
-    pandas path: their per-posting position LISTS have no cheap
-    Arrow→numpy form, and positions are an opt-in index mode off the
-    bench path."""
+    free of any df join or score column."""
     import pyarrow as pa
-    import pyarrow.compute as pc  # noqa: F401  (dictionary ops)
 
     from oscar_spark.functions.tokenize import _pin_arrow_threads
     _pin_arrow_threads()
 
     def _emit(tbl: pa.Table) -> pa.RecordBatch | None:
-        n = tbl.num_rows
-        if n == 0:
+        if tbl.num_rows == 0:
             return None
         term_dict = tbl.column("term").combine_chunks().dictionary_encode()
         codes = term_dict.indices.to_numpy().astype(np.int64)
         ids = tbl.column("doc_id").combine_chunks().to_numpy()
         tfs = tbl.column("tf").combine_chunks().to_numpy()
         dls = tbl.column("dl").combine_chunks().to_numpy()
+        pos = (tbl.column("pos").combine_chunks().flatten().to_numpy()
+               if with_positions else None)
         res = encode_runs(codes, ids // RANGE_SIZE,
                           ids.astype(np.int64), tfs.astype(np.int64),
                           dls.astype(np.int64), BLOCK_SIZE, RANGE_SIZE,
-                          codec=codec)
+                          codec=codec, positions=pos)
         out_codes = pa.array(np.asarray(res["term"], dtype=np.int64)
                              .astype(np.int32), pa.int32())
-        return pa.record_batch({
+        cols = {
             "term": term_dict.dictionary.take(out_codes),
             "range_id": pa.array(np.asarray(res["range_id"], np.int64),
                                  pa.int64()),
@@ -337,13 +258,20 @@ def _encode_partition_arrow(batches, codec: str = "varint"):
                                .astype(np.int32), pa.int32()),
             "min_dl": pa.array(np.asarray(res["min_dl"], np.int64)
                                .astype(np.int32), pa.int32()),
-            "payload": pa.array(list(res["payload"]), pa.binary()),
-        })
+            "payload": pa.array(res["payload"], pa.binary()),
+        }
+        if with_positions:
+            cols["pos_payload"] = pa.array(res["pos_payload"], pa.binary())
+        return pa.record_batch(cols)
 
     pending: pa.Table | None = None
     buf: list[pa.RecordBatch] = []
     buf_rows = 0
     for batch in batches:
+        # accumulate Arrow batches (default ~10k rows) into ~256k-row
+        # units: encode_runs is one vectorized pass whose fixed cost
+        # amortizes over the unit size, while the buffer stays far below
+        # executor memory
         buf.append(batch)
         buf_rows += batch.num_rows
         if buf_rows < 262144:
@@ -356,10 +284,11 @@ def _encode_partition_arrow(batches, codec: str = "varint"):
         n = tbl.num_rows
         if n == 0:
             continue
-        ids = tbl.column("doc_id").to_numpy()
-        rngs = ids // RANGE_SIZE
-        term_dict = tbl.column("term").combine_chunks().dictionary_encode()
-        codes = term_dict.indices.to_numpy()
+        # range_id does not ride the shuffle — one numpy divide
+        # recreates it (doc-id ranges are fixed-width)
+        rngs = tbl.column("doc_id").to_numpy() // RANGE_SIZE
+        codes = tbl.column("term").combine_chunks() \
+            .dictionary_encode().indices.to_numpy()
         last_group = (codes == codes[-1]) & (rngs == rngs[-1])
         # sorted input ⇒ the trailing group is a suffix
         cut = n - int(last_group[::-1].cumprod().sum())
@@ -450,7 +379,7 @@ def _final_blocks(spark: SparkSession, tokens: DataFrame,
     # the one big shuffle: hash-partition by (term, range_id), sort
     # within partitions — Spark's shuffle-with-spill is the external
     # sort (O5) — then encode whole partitions with a carry-over
-    # mapInPandas (per-group applyInPandas overhead dominated this
+    # mapInArrow (per-group applyInPandas overhead dominated this
     # stage: ~115-row groups x ~ms of pandas each)
     # 4 encode tasks per core: the (term, range_id) hash is mildly
     # skewed, and coarse tasks leave cores idle behind stragglers
@@ -461,16 +390,12 @@ def _final_blocks(spark: SparkSession, tokens: DataFrame,
     shuffled = (postings_raw
                 .repartition(n_enc, F.col("term"), range_expr)
                 .sortWithinPartitions("term", "doc_id"))
-    if positions:
-        blocks = shuffled.mapInPandas(
-            lambda it, _c=codec: _encode_partition(it, _c, True),
-            BLOCKS_POS_SCHEMA)
-    else:
-        # Arrow-native encode: term strings stay in C++ buffers end to
-        # end (see _encode_partition_arrow)
-        blocks = shuffled.mapInArrow(
-            lambda it, _c=codec: _encode_partition_arrow(it, _c),
-            BLOCKS_SCHEMA)
+    # Arrow-native encode: term strings stay in C++ buffers end to end
+    # (see _encode_partition_arrow)
+    blocks = shuffled.mapInArrow(
+        lambda it, _c=codec, _p=positions:
+            _encode_partition_arrow(it, _c, _p),
+        BLOCKS_POS_SCHEMA if positions else BLOCKS_SCHEMA)
     # phase 2 (the explicit two-phase merge) runs on the TINY blocks
     # stream (~rows/BLOCK_SIZE): per-term df, the block-max upper
     # bound, and global block numbering.  A term's blocks live wholly
@@ -756,11 +681,11 @@ def _build_index_impl(spark: SparkSession, pages: DataFrame,
     (clear error); re-crawled urls arriving in LATER drops are handled
     by the append path's committed-url anti-join.
 
-    codec: posting payload codec ("varint" | "pfor" | "ef" | "wah");
-    defaults to config.POSTINGS_CODEC.  Recorded in the store manifest;
-    serve dispatches on it.  (The reference's 4-codec matrix analog,
-    reference/data/configs/oscar-create/index_*.json; comparison table
-    in BENCH/CODECS.md.)
+    codec: posting payload codec ("varint" | "pfor"); defaults to
+    config.POSTINGS_CODEC.  Recorded in the store manifest; serve
+    dispatches on it.  (Analog of the reference's per-build codec
+    configs, reference/data/configs/oscar-create/index_*.json;
+    comparison table in BENCH/CODECS.md.)
     dedup_payloads: store each distinct posting payload once (A7,
     ItemIndexFactory analog) at the cost of a payload-fetch join in
     serve; recorded in the manifest, serve adapts automatically.
@@ -777,7 +702,7 @@ def _build_index_impl(spark: SparkSession, pages: DataFrame,
     All four mode knobs default to None = "unspecified": a resume over
     an existing store INHERITS its recorded modes, so `cli.py build
     --resume` (which passes no mode flags) appends to a positional/
-    fielded/dedup/ef store instead of silently rebuilding it as a plain
+    fielded/dedup/pfor store instead of silently rebuilding it as a plain
     varint store.  Passing an explicit value still overrides — a real
     mode FLIP rebuilds, as the append gate requires."""
     from oscar_spark.config import POSTINGS_CODEC
@@ -791,6 +716,7 @@ def _build_index_impl(spark: SparkSession, pages: DataFrame,
         if fields is None:
             fields = tuple(_meta.get_meta("fields", []) or [])
     codec = codec or POSTINGS_CODEC
+    block_decoder(codec)  # fail fast on an unknown codec name
     dedup_payloads = bool(dedup_payloads)
     positions = bool(positions)
     fields = tuple(fields or ())
@@ -935,11 +861,8 @@ def _build_index_impl(spark: SparkSession, pages: DataFrame,
         store.commit("doc_stats", fp)
     _mark("doc_stats")
     doc_stats = store.read(spark, "doc_stats")
-    n_docs, avgdl = store.get_meta("n_docs"), store.get_meta("avgdl")
-    if n_docs is None:  # store committed by an older build: derive once
-        n_docs, avgdl = doc_stats.select(
-            F.count("*"), F.avg("doc_len")).collect()[0]
-    n_docs, avgdl = int(n_docs), float(avgdl)
+    n_docs = int(store.get_meta("n_docs"))
+    avgdl = float(store.get_meta("avgdl"))
 
     # ---- stage 2: postings ----
     # codec folded into the stage fingerprint: resume over an index
@@ -1021,15 +944,18 @@ def _build_index_impl(spark: SparkSession, pages: DataFrame,
         # (term, df) and the agg is deterministic on committed input,
         # so "df provably equals the posting contents" (FIXTURES.md
         # inv 2) still holds for everything written here.
-        # r06 session 3: terms_src is materialized ONCE (eager
-        # localCheckpoint — one 16-task agg job) instead of re-running
-        # the postings-parquet agg lineage inside every one of the 5+
+        # terms_src is materialized ONCE (persist +
+        # count — one 16-task agg job) instead of re-running the
+        # postings-parquet agg lineage inside every one of the 5+
         # concurrent jobs (terms write, 2 mirror range-samples, 2
         # mirror writes, stats collect); the dictionary is O(vocab)
-        # slim rows, the standard distributed MEMORY_AND_DISK shape at
-        # any scale, and it is unpersisted before the stage commits.
+        # slim rows, unpersisted before the stage commits.  persist
+        # keeps the lineage, so blocks lost with an executor are
+        # recomputed from the committed postings (a localCheckpoint
+        # would fail the stage instead).
         import threading
-        terms_src = terms_src.localCheckpoint(eager=True)
+        terms_src = terms_src.persist(StorageLevel.MEMORY_AND_DISK)
+        terms_src.count()
         _stats: dict = {}
         _terr: list[BaseException] = []
 
@@ -1053,11 +979,6 @@ def _build_index_impl(spark: SparkSession, pages: DataFrame,
         st.start()
         try:
             _write_terms_rev(store, terms_src)
-            # the ngram mirror carries 2-grams (short-stem substring
-            # path); serve only takes the 2-char pruned path when this
-            # flag says the mirror has them (older stores fall back to
-            # the scan)
-            store.set_meta("ngram2", True)
         finally:
             # join even when the mirror writes raise: otherwise the
             # terms write / stats collect keep running concurrently
@@ -1122,17 +1043,9 @@ def ingest_segment(spark: SparkSession, new_pages: DataFrame,
         raise ValueError(
             f"segment {seg!r} is already committed in this store; "
             "replay/skip it instead of re-ingesting")
-    # a store built before the flag-byte payload (format 1) must not
-    # gain a format-2 segment: commit_append stamps payload_format
-    # store-wide, which would flip the decoder under the OLD blocks and
-    # silently mis-decode any v1 payload starting 0x00/0x01
-    store_fmt = store.get_meta("payload_format")
-    if store_fmt is None:
-        store_fmt = 2 if store.get_meta("codec") is not None else 1
-    if int(store_fmt) != PAYLOAD_FORMAT:
-        raise ValueError(
-            f"store payload format {store_fmt} != current "
-            f"{PAYLOAD_FORMAT}; rebuild instead of appending")
+    # a store in another payload format must not gain a segment in the
+    # current one: commit_append stamps payload_format store-wide
+    store_decoder(store.manifest().get("meta", {}))
     n_old = int(store.get_meta("n_docs"))
     avgdl_old = float(store.get_meta("avgdl"))
     positions = bool(store.get_meta("positions", False))
@@ -1253,7 +1166,7 @@ def ingest_segment(spark: SparkSession, new_pages: DataFrame,
         replace={"terms": [seg], "terms_rev": [seg],
                  "terms_ngram": [seg]},
         meta={"n_docs": n_total, "avgdl": avgdl_total, "codec": codec,
-              "payload_format": PAYLOAD_FORMAT, "ngram2": True,
+              "payload_format": PAYLOAD_FORMAT,
               **(extra_meta or {})},
         stage_fingerprints={"tokens": tfp, "doc_stats": fp,
                             "postings": pfp, "terms": trfp},

@@ -40,7 +40,7 @@ def main(argv: list[str] | None = None) -> int:
                         " (amortized maintenance; see compact)")
     # build-mode knobs: DEFAULT None = unspecified, so --resume inherits
     # the store's recorded modes (build_index's None contract) instead
-    # of silently flipping a positional/fielded/dedup/ef store to plain
+    # of silently flipping a positional/fielded/dedup/pfor store to plain
     b.add_argument("--positions", action="store_true", default=None,
                    help="store per-posting token positions (enables true"
                         ' phrase search, "..." queries)')
@@ -48,7 +48,7 @@ def main(argv: list[str] | None = None) -> int:
                    help="share identical posting payloads via a hash "
                         "side-table (ItemIndexFactory dedup analog)")
     b.add_argument("--codec", default=None,
-                   choices=["varint", "pfor", "ef", "wah"],
+                   choices=["varint", "pfor"],
                    help="posting-block codec (default: config/manifest)")
     b.add_argument("--fields", default=None, metavar="COL[,COL...]",
                    help="page columns indexed as key:value composite "

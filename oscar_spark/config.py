@@ -39,16 +39,14 @@ NUM_TERM_BUCKETS: int = 16     # bucket(term) partitioning of index tables
 # (at 10^12 docs the map is itself a big table)
 BROADCAST_DOCID_MAX: int = 20_000_000
 
-# posting-block payload codec: "varint" (default, single-pass batched
-# encoder), "pfor" (PForDelta: bit-packed with exceptions, ~20% smaller
-# payloads, slower encode), or "ef" (Elias-Fano ids + varint tf/dl —
-# optimal monotone-id code, densest for mid-df terms).  The build
-# records the codec in the store manifest; serve dispatches on it.
-# Mirrors the reference's per-build codec configs
-# (reference/data/configs/oscar-create/index_*.json: rlede/eliasfano/
-# wah/native).
-import os as _os
-POSTINGS_CODEC: str = _os.environ.get("OSCAR_SPARK_CODEC", "varint")
+# default posting-block payload codec: "varint" (single-pass batched
+# encoder); build_index(codec="pfor") selects PForDelta (bit-packed with
+# exceptions, smaller payloads, slower encode).  The build records the
+# codec in the store manifest; serve dispatches on it.  Mirrors the
+# reference's per-build codec configs
+# (reference/data/configs/oscar-create/index_*.json); BENCH/CODECS.md
+# has the comparison that rejected the Elias-Fano and WAH variants.
+POSTINGS_CODEC: str = "varint"
 
 # --- score comparison ---
 SCORE_ROUND: int = 4           # decimals when hashing/comparing scores

@@ -113,6 +113,16 @@ def generate_pages(n_rows: int, seed: int = FIXTURE_SEED,
     pl_act = np.where(np.arange(3)[None, :] < np_sl[:, None], pl, 0)
     row_start = offsets[lo:hi].astype(np.int64)
 
+    def _offsets32(lens: np.ndarray) -> np.ndarray:
+        """List lengths → int32 Arrow list offsets; an oversize slice
+        fails here instead of wrapping around silently."""
+        offs = np.concatenate(([0], np.cumsum(lens)))
+        if offs[-1] >= 2**31:
+            raise ValueError(
+                f"row slice too large for int32 list offsets ({offs[-1]} "
+                "values); generate it in smaller row ranges")
+        return offs.astype(np.int32)
+
     def _ranges(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
         tot = int(lens.sum())
         rep = np.repeat(np.arange(len(lens)), lens)
@@ -124,7 +134,7 @@ def generate_pages(n_rows: int, seed: int = FIXTURE_SEED,
     t_idx, _, _ = _ranges(row_start, tl)
     titles = pc.binary_join(
         pa.ListArray.from_arrays(
-            np.concatenate(([0], np.cumsum(tl))).astype(np.int32),
+            _offsets32(tl),
             words_pa.take(pa.array(t_idx))), " ")
     # paragraphs: flat (row, para) lens with their word-range starts
     p_starts = (row_start[:, None] + tl[:, None]
@@ -136,11 +146,10 @@ def generate_pages(n_rows: int, seed: int = FIXTURE_SEED,
     pw_idx, _, _ = _ranges(pflat_starts, pflat_lens)
     para_txt = pc.binary_join(
         pa.ListArray.from_arrays(
-            np.concatenate(([0], np.cumsum(pflat_lens))).astype(np.int32),
+            _offsets32(pflat_lens),
             words_pa.take(pa.array(pw_idx))), " ")
     wrapped = pc.binary_join_element_wise("<p>", para_txt, "</p>", "")
-    para_list_off = np.concatenate(
-        ([0], np.cumsum(np_sl))).astype(np.int32)
+    para_list_off = _offsets32(np_sl)
     body = pc.binary_join(
         pa.ListArray.from_arrays(para_list_off, wrapped), "")
     body_txt = pc.binary_join(

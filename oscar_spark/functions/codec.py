@@ -137,8 +137,11 @@ def encode_runs(terms: np.ndarray, rngs: np.ndarray, ids: np.ndarray,
     call dispatches: per-block work is reduced to a bytes slice.
     Block metadata (max_tf, min_dl) comes from ufunc.reduceat.
 
+    positions: optional flat array of every posting's occurrence
+    positions (see encode_position_runs) → adds a pos_payload column.
+
     Returns a dict of column arrays (term, range_id, first_doc,
-    last_doc, doc_count, max_tf, min_dl, payload).
+    last_doc, doc_count, max_tf, min_dl, payload[, pos_payload]).
     """
     n = len(ids)
     if n == 0:
@@ -199,18 +202,6 @@ def encode_runs(terms: np.ndarray, rngs: np.ndarray, ids: np.ndarray,
         payloads = [bytes([f]) + pfor_encode(stream[3 * s:e])
                     for f, s, e in zip(flags.tolist(), bstarts.tolist(),
                                        v_end.tolist())]
-    elif codec in ("ef", "wah"):
-        # Elias-Fano ids / WAH bitmap + varint tf/dl tail; dense blocks
-        # carry no id stream (same as the varint codec's dense form)
-        enc = ef_encode_block if codec == "ef" else wah_encode_block
-        payloads = [
-            bytes([FLAG_DENSE]) + varint_encode(
-                stream[3 * s:3 * s + 2 * (e - s) + 1])
-            if f == FLAG_DENSE else
-            enc(ids[s:e], tfs[s:e], dls[s:e],
-                int(rngs[s]) * range_size)
-            for f, s, e in zip(flags.tolist(), bstarts.tolist(),
-                               bends.tolist())]
     else:
         raw, offs = varint_encode_with_offsets(stream)
         bs = offs[3 * bstarts].tolist()
@@ -233,10 +224,11 @@ def encode_runs(terms: np.ndarray, rngs: np.ndarray, ids: np.ndarray,
     return out
 
 
-def encode_position_runs(positions, tfs: np.ndarray,
+def encode_position_runs(positions: np.ndarray, tfs: np.ndarray,
                          bstarts: np.ndarray,
                          bends: np.ndarray) -> list[bytes]:
-    """Per-posting position lists → per-block varint payloads for the
+    """Flat position array (every posting's positions, in posting order;
+    posting i owns tfs[i] of them) → per-block varint payloads for the
     positional SIDE stream (pos_payload column; the main payload format
     is untouched, so positional and plain indexes share one decoder).
 
@@ -247,11 +239,7 @@ def encode_position_runs(positions, tfs: np.ndarray,
     sliced at block boundaries — the same single-pass shape as
     encode_runs."""
     tfs = np.ascontiguousarray(tfs, dtype=np.int64)
-    if len(positions):
-        flat = np.concatenate(
-            [np.asarray(p, dtype=np.int64) for p in positions])
-    else:
-        flat = np.empty(0, dtype=np.int64)
+    flat = np.ascontiguousarray(positions, dtype=np.int64)
     if flat.shape[0] != int(tfs.sum()):
         raise ValueError("positions/tf length mismatch")
     pstarts = np.zeros(len(tfs) + 1, dtype=np.int64)
@@ -324,7 +312,7 @@ def decode_block(payload: bytes, doc_count: int, range_base: int):
 # The reference ships pluggable posting codecs selected per build
 # (rlede / eliasfano / wah / native, reference/data/configs/oscar-create/
 # index_*.json); our analog is varint (default) vs PForDelta, selected
-# by config.POSTINGS_CODEC and recorded in the store manifest.
+# per build (build_index(codec=...)) and recorded in the store manifest.
 #
 # PFor layout per block payload:
 #   [1B bit width b][varint n_total][varint n_exceptions]
@@ -421,255 +409,30 @@ def pfor_decode_block(payload: bytes, doc_count: int, range_base: int):
                             doc_count, range_base)
 
 
-# ---- Elias-Fano codec variant ----
-# Third codec rung (reference compares rlede / eliasfano / wah / native,
-# reference/data/configs/oscar-create/index_eliasfano.json); ours:
-# varint (default) / pfor / ef, selected per build and recorded in the
-# manifest.  EF is the information-theoretic-optimal monotone-sequence
-# code: doc ids within a block are strictly increasing, so the EXPLICIT
-# form stores them as Elias-Fano (low bits packed, high bits unary) and
-# keeps tf/dl as a varint stream; the DENSE form (consecutive ids) has
-# no id stream at all and is byte-identical to the varint codec's.
-#
-# EF block payload layout (after the 1-byte flag):
-#   explicit: [varint u (universe = max offset + 1)]
-#             [high bits: unary bitvector, ceil((n + (u>>l) + 1)/8) B]
-#             [low bits: n*l bits packed little-endian]
-#             [varint stream: tfs then dls]
-#             with l = max(0, floor(log2(u/n))) — derived, not stored.
-#   dense:    [varint stream: delta0, tfs, dls]  (same as varint codec)
-
-def _ef_params(u: int, n: int) -> tuple[int, int, int]:
-    """→ (l, high_bytes, low_bytes) for universe u, count n."""
-    import math
-    l = max(0, int(math.floor(math.log2(max(u / n, 1.0)))))
-    bv_len = n + (u >> l) + 1
-    return l, (bv_len + 7) // 8, (n * l + 7) // 8
-
-
-def ef_encode(vals: np.ndarray) -> bytes:
-    """Elias-Fano encode a strictly-increasing uint64 array (≥1 value)."""
-    vals = np.ascontiguousarray(vals, dtype=np.uint64)
-    n = len(vals)
-    u = int(vals[-1]) + 1
-    l, high_bytes, _ = _ef_params(u, n)
-    low = vals & ((np.uint64(1) << np.uint64(l)) - np.uint64(1)) if l \
-        else np.zeros(n, dtype=np.uint64)
-    high = (vals >> np.uint64(l)).astype(np.int64)
-    bits = np.zeros(high_bytes * 8, dtype=np.uint8)
-    bits[high + np.arange(n, dtype=np.int64)] = 1
-    return (varint_encode(np.array([u], dtype=np.uint64))
-            + np.packbits(bits, bitorder="little").tobytes()
-            + _pack_bits(low, l))
-
-
-def ef_decode(buf: bytes, n: int) -> tuple[np.ndarray, int]:
-    """→ (values uint64[n], bytes consumed)."""
-    # read the universe varint byte-by-byte
-    i = 0
-    u = 0
-    shift = 0
-    while True:
-        c = buf[i]; i += 1
-        u |= (c & 0x7F) << shift
-        shift += 7
-        if not c & 0x80:
-            break
-    l, high_bytes, low_bytes = _ef_params(u, n)
-    bits = np.unpackbits(np.frombuffer(buf[i:i + high_bytes],
-                                       dtype=np.uint8),
-                         bitorder="little")
-    ones = np.flatnonzero(bits)[:n].astype(np.int64)
-    high = (ones - np.arange(n, dtype=np.int64)).astype(np.uint64)
-    i += high_bytes
-    low = _unpack_bits(buf[i:i + low_bytes], n, l)
-    i += low_bytes
-    return (high << np.uint64(l)) | low, i
-
-
-def ef_encode_block(doc_ids: np.ndarray, tfs: np.ndarray,
-                    dls: np.ndarray, range_base: int) -> bytes:
-    """EF twin of encode_block: ids as Elias-Fano offsets from
-    range_base, tf/dl as a varint tail; dense form identical to varint."""
-    flag, stream = _block_stream(doc_ids, tfs, dls, range_base)
-    if flag == FLAG_DENSE:
-        return bytes([flag]) + varint_encode(stream)
-    offs = (np.ascontiguousarray(doc_ids, dtype=np.int64)
-            - range_base).astype(np.uint64)
-    tail = np.concatenate([np.ascontiguousarray(tfs, dtype=np.uint64),
-                           np.ascontiguousarray(dls, dtype=np.uint64)])
-    return bytes([flag]) + ef_encode(offs) + varint_encode(tail)
-
-
-def ef_decode_block(payload: bytes, doc_count: int, range_base: int):
-    flag = payload[0]
-    if flag == FLAG_DENSE:
-        return _stream_to_block(varint_decode(payload[1:]), flag,
-                                doc_count, range_base)
-    if flag != FLAG_EXPLICIT:
-        raise ValueError(f"unknown block flag {flag}")
-    offs, consumed = ef_decode(payload[1:], doc_count)
-    ids = offs.astype(np.int64) + range_base
-    tail = varint_decode(payload[1 + consumed:])
-    if tail.shape[0] != 2 * doc_count:
-        raise ValueError(
-            f"corrupt ef block: {tail.shape[0]} tail values for "
-            f"doc_count={doc_count}")
-    return (ids, tail[:doc_count].astype(np.int64),
-            tail[doc_count:].astype(np.int64))
-
-
-# ---- WAH-style bitmap codec variant ----
-# Fourth codec rung (the reference's index_wah.json variant,
-# reference/data/configs/oscar-create/index_wah.json): doc-id offsets
-# within the block's range become a word-aligned hybrid bitmap — 31
-# payload bits per literal word, fill words for runs of all-0 / all-1
-# groups.  Strongest on ultra-dense mid-df blocks (many ids per 31-bit
-# group amortize to ~1 bit/posting); tf/dl stay a varint tail, and the
-# DENSE (consecutive-ids) form is byte-identical to the varint codec's.
-# Textbook word-aligned-hybrid construction, independently implemented —
-# no reference layout copied.
-#
-# WAH word layout (uint32 little-endian):
-#   MSB=0 → literal: bits 0..30 are the 31-bit group's bitmap
-#   MSB=1 → fill:    bit 30 = fill bit, bits 0..29 = run length in
-#                    31-bit groups
-# Block payload after the 1-byte flag:
-#   explicit: [varint n_words][n_words * uint32 LE][varint tfs..dls]
-#   dense:    [varint stream: delta0, tfs, dls]   (same as varint codec)
-
-_WAH_FULL = np.uint32(0x7FFFFFFF)
-
-
-def _wah_words(offs: np.ndarray) -> np.ndarray:
-    """Sorted distinct non-negative offsets → WAH word stream.
-
-    Never materializes the uncompressed bitmap: used 31-bit groups come
-    from reduceat over the sorted offsets, gaps become 0-fill words, and
-    runs of saturated literals collapse to 1-fill words — so a sparse
-    block over a huge universe stays O(doc_count) work and bytes."""
-    word_idx = (offs // 31).astype(np.int64)
-    bit = (offs % 31).astype(np.uint32)
-    starts = np.flatnonzero(
-        np.concatenate(([True], word_idx[1:] != word_idx[:-1])))
-    uw = word_idx[starts]
-    vals = np.bitwise_or.reduceat(np.uint32(1) << bit, starts)
-    out: list[int] = []
-    nxt = 0  # next expected group index
-    run_ones = 0
-    for w, v in zip(uw.tolist(), vals.tolist()):
-        gap = w - nxt
-        if gap > 0 or v != int(_WAH_FULL):
-            if run_ones:
-                out.append(0x80000000 | 0x40000000 | run_ones)
-                run_ones = 0
-        if gap > 0:
-            out.append(0x80000000 | gap)
-        if v == int(_WAH_FULL):
-            run_ones += 1
-        else:
-            out.append(v)
-        nxt = w + 1
-    if run_ones:
-        out.append(0x80000000 | 0x40000000 | run_ones)
-    return np.asarray(out, dtype=np.uint32)
-
-
-def _wah_offsets(words: np.ndarray) -> np.ndarray:
-    """Inverse of _wah_words → sorted offset array (int64)."""
-    is_fill = (words & np.uint32(0x80000000)) != 0
-    lens = np.where(is_fill, words & np.uint32(0x3FFFFFFF),
-                    1).astype(np.int64)
-    gstart = np.zeros(len(words), dtype=np.int64)  # group index per word
-    np.cumsum(lens[:-1], out=gstart[1:])
-    pieces = []
-    lit = ~is_fill
-    if lit.any():
-        lv = (words[lit] & _WAH_FULL).astype(np.uint32)
-        bits = ((lv[:, None] >> np.arange(31, dtype=np.uint32))
-                & np.uint32(1)).astype(bool)
-        li, bi = np.nonzero(bits)  # row-major → already sorted
-        pieces.append(gstart[lit][li] * 31 + bi)
-    ones = is_fill & (((words >> np.uint32(30)) & np.uint32(1)) == 1)
-    for g0, ln in zip(gstart[ones].tolist(), lens[ones].tolist()):
-        pieces.append(np.arange(g0 * 31, (g0 + ln) * 31, dtype=np.int64))
-    if not pieces:
-        return np.empty(0, dtype=np.int64)
-    return np.sort(np.concatenate(pieces))
-
-
-def wah_encode_block(doc_ids: np.ndarray, tfs: np.ndarray,
-                     dls: np.ndarray, range_base: int) -> bytes:
-    """WAH twin of encode_block: ids as a compressed bitmap of offsets
-    from range_base, tf/dl as a varint tail; dense form = varint's."""
-    flag, stream = _block_stream(doc_ids, tfs, dls, range_base)
-    if flag == FLAG_DENSE:
-        return bytes([flag]) + varint_encode(stream)
-    offs = (np.ascontiguousarray(doc_ids, dtype=np.int64) - range_base)
-    words = _wah_words(offs)
-    tail = np.concatenate([np.ascontiguousarray(tfs, dtype=np.uint64),
-                           np.ascontiguousarray(dls, dtype=np.uint64)])
-    return (bytes([flag])
-            + varint_encode(np.array([len(words)], dtype=np.uint64))
-            + words.astype("<u4").tobytes() + varint_encode(tail))
-
-
-def wah_decode_block(payload: bytes, doc_count: int, range_base: int):
-    flag = payload[0]
-    if flag == FLAG_DENSE:
-        return _stream_to_block(varint_decode(payload[1:]), flag,
-                                doc_count, range_base)
-    if flag != FLAG_EXPLICIT:
-        raise ValueError(f"unknown block flag {flag}")
-    i = 1
-    n_words = 0
-    shift = 0
-    while True:
-        c = payload[i]; i += 1
-        n_words |= (c & 0x7F) << shift
-        shift += 7
-        if not c & 0x80:
-            break
-    words = np.frombuffer(payload, dtype="<u4", count=n_words, offset=i)
-    i += 4 * n_words
-    offs = _wah_offsets(words)
-    if offs.shape[0] != doc_count:
-        raise ValueError(
-            f"corrupt wah block: {offs.shape[0]} bits set for "
-            f"doc_count={doc_count}")
-    tail = varint_decode(payload[i:])
-    if tail.shape[0] != 2 * doc_count:
-        raise ValueError(
-            f"corrupt wah block: {tail.shape[0]} tail values for "
-            f"doc_count={doc_count}")
-    return (offs + range_base, tail[:doc_count].astype(np.int64),
-            tail[doc_count:].astype(np.int64))
-
-
-def decode_block_v1(payload: bytes, doc_count: int, range_base: int):
-    """Format-1 (pre-flag-byte) payloads: the whole payload is one
-    varint stream in EXPLICIT layout (no dense form existed).  Kept so
-    serve stays able to read stores built before the flag byte — the
-    manifest's payload_format field dispatches here."""
-    return _stream_to_block(varint_decode(payload), FLAG_EXPLICIT,
-                            doc_count, range_base)
-
-
 # current payload format (the flag-byte layout documented above).
-# Recorded in the store manifest at build time; block_decoder() picks
-# the decoder from (codec, format) so old stores never hit the flag
-# dispatch (a v1 payload whose first varint byte happens to be 0x00/0x01
-# would otherwise silently mis-decode).
+# Recorded in the store manifest at build time; store_decoder() refuses
+# a store whose recorded format differs, so a payload layout change can
+# never be decoded with the wrong decoder.
 PAYLOAD_FORMAT = 2
 
-BLOCK_DECODERS = {"varint": decode_block, "pfor": pfor_decode_block,
-                  "ef": ef_decode_block, "wah": wah_decode_block}
+BLOCK_DECODERS = {"varint": decode_block, "pfor": pfor_decode_block}
 
 
-def block_decoder(codec: str, payload_format: int = PAYLOAD_FORMAT):
-    if payload_format == 1:
-        if codec != "varint":
-            raise ValueError(
-                f"payload format 1 predates the {codec!r} codec")
-        return decode_block_v1
+def block_decoder(codec: str):
+    if codec not in BLOCK_DECODERS:
+        raise ValueError(f"unknown posting codec {codec!r}; expected one "
+                         f"of {sorted(BLOCK_DECODERS)}")
     return BLOCK_DECODERS[codec]
+
+
+def store_decoder(meta: dict):
+    """Store manifest meta → the block decoder for its payloads.  Every
+    build, append, compaction and stream ingest records codec and
+    payload_format; a store without them (or with another format) is
+    rejected rather than guessed at."""
+    fmt = meta.get("payload_format")
+    if fmt != PAYLOAD_FORMAT:
+        raise ValueError(
+            f"store payload format {fmt!r} is not the current format "
+            f"{PAYLOAD_FORMAT}; rebuild the index")
+    return block_decoder(meta.get("codec"))

@@ -41,6 +41,7 @@ local per-range top-k cut so the final shuffle moves ≤ k rows per range.
 
 from __future__ import annotations
 
+import os as _os
 from typing import Iterator
 
 import numpy as np
@@ -50,7 +51,7 @@ from pyspark.sql import functions as F
 
 from oscar_spark.config import NUM_TERM_BUCKETS, RANGE_SIZE
 from oscar_spark.functions.bm25 import bm25_np
-from oscar_spark.functions.codec import block_decoder
+from oscar_spark.functions.codec import store_decoder
 from oscar_spark.serve import parser
 from oscar_spark.sources.tables import IndexStore
 
@@ -178,26 +179,16 @@ class SearchEngine:
         self.postings = self.store.read(spark, "postings")
         self.terms = self.store.read(spark, "terms")
         self.doc_stats = self.store.read(spark, "doc_stats")
-        n_docs, avgdl = (self.store.get_meta("n_docs"),
-                         self.store.get_meta("avgdl"))
-        if n_docs is None:  # index from an older build: aggregate once
-            row = self.doc_stats.select(
-                F.count("*").alias("n"),
-                F.avg("doc_len").alias("a")).collect()[0]
-            n_docs = int(row["n"])
-            avgdl = float(row["a"]) if row["a"] is not None else 0.0
-        self.n_docs = int(n_docs)
-        self.avgdl = float(avgdl)
+        meta = self.store.manifest().get("meta", {})
         # codec + payload format recorded by the build (varint default,
-        # pfor variant).  Stores that predate the payload_format field:
-        # the flag byte and the codec field landed together, so a store
-        # with codec meta uses the flagged layout (2) and one without
-        # uses the original unflagged layout (1).
-        fmt = self.store.get_meta("payload_format")
-        if fmt is None:
-            fmt = 2 if self.store.get_meta("codec") is not None else 1
-        self._decode = block_decoder(
-            self.store.get_meta("codec", "varint"), int(fmt))
+        # pfor variant)
+        self._decode = store_decoder(meta)
+        self.n_docs = int(meta["n_docs"])
+        self.avgdl = float(meta["avgdl"])
+        # read per engine, not at import, so a deployment can set it
+        # after the module is loaded (see PRUNE_MIN_POSTINGS)
+        self.PRUNE_MIN_POSTINGS = int(_os.environ.get(
+            "OSCAR_PRUNE_MIN_POSTINGS", type(self).PRUNE_MIN_POSTINGS))
         # positional payloads present → quoted queries get TRUE phrase
         # semantics; otherwise they degrade to AND (see _rewrite_prefixes)
         self.has_positions = bool(self.store.get_meta("positions", False))
@@ -214,16 +205,10 @@ class SearchEngine:
         self._payloads = (self.store.read(spark, "payloads")
                           if self.store.get_meta("payload_dedup", False)
                           else None)
-        # suffix mirror (rev-sorted term dictionary) — present on
-        # indexes built since it was introduced; older stores fall back
-        # to the full-dictionary scan
-        import os as _os
-        self._terms_rev = (self.store.read(spark, "terms_rev")
-                           if _os.path.isdir(self.store.path("terms_rev"))
-                           else None)
-        self._terms_ngram = (
-            self.store.read(spark, "terms_ngram")
-            if _os.path.isdir(self.store.path("terms_ngram")) else None)
+        # wildcard mirrors of the term dictionary (rev-sorted suffix
+        # mirror, 2/3-gram substring mirror; see indexer._write_terms_rev)
+        self._terms_rev = self.store.read(spark, "terms_rev")
+        self._terms_ngram = self.store.read(spark, "terms_ngram")
         self._brute_cache: DataFrame | None = None
         # r06 session 3: bounded driver-side postings-block cache for
         # the driver-local scoring path — the serving analog of oscar
@@ -327,14 +312,14 @@ class SearchEngine:
     def expand_wild(self, kind: str, stem: str) -> list[str]:
         """Suffix/substring expansion (QT_SUFFIX / QT_SUBSTRING):
         endswith/contains scan of the term dictionary, sorted, capped —
-        sorted + capped.  Suffix queries use the build's rev-sorted
-        terms_rev mirror when present (the analog of oscar's build-time
-        suffix enumeration, reference/oscar-create/
+        sorted + capped.  Without the driver preload, suffix queries
+        use the build's rev-sorted terms_rev mirror (the analog of
+        oscar's build-time suffix enumeration, reference/oscar-create/
         CellTextCompleter.h:602-637): `*tok` is a PREFIX scan on
         reverse(term), so parquet row-group min/max stats on the
         range-partitioned `rev` column prune the dictionary read at any
-        scale.  Substring remains a capped full-dictionary scan (an
-        n-gram index would be the next step)."""
+        scale.  Substring stems of 2+ chars intersect gram lists of the
+        terms_ngram mirror."""
         from oscar_spark.config import MAX_PREFIX_EXPAND
         if self._term_sorted is not None:
             if kind == "suffix":
@@ -359,22 +344,17 @@ class SearchEngine:
             else:
                 hit = self._substr_candidates(stem)
             return sorted(hit)[:MAX_PREFIX_EXPAND]
-        if kind == "suffix" and self._terms_rev is not None:
+        if kind == "suffix":
             rows = (self._terms_rev
                     .filter(F.col("rev").startswith(stem[::-1]))
                     .select("term").orderBy("term")
                     .limit(MAX_PREFIX_EXPAND).collect())
             return [r["term"] for r in rows]
-        if kind == "substr" and self._terms_ngram is not None \
-                and (len(stem) >= 3
-                     or (len(stem) == 2
-                         and self.store.get_meta("ngram2", False))):
+        if len(stem) >= 2:
             # intersect the stem's 3-gram posting lists over the
             # dictionary, then verify contains on the candidates — the
             # read touches only the matching grams' row groups.  A
-            # 2-char stem uses its single 2-gram list (present in
-            # stores built with the ngram2 mirror — previously it fell
-            # through to a LINEAR scan of the whole dictionary)
+            # 2-char stem uses its single 2-gram list
             grams = (sorted({stem[i:i + 3] for i in range(len(stem) - 2)})
                      if len(stem) >= 3 else [stem])
             cand = (self._terms_ngram
@@ -386,9 +366,9 @@ class SearchEngine:
                     .select("term").orderBy("term")
                     .limit(MAX_PREFIX_EXPAND).collect())
             return [r["term"] for r in rows]
-        cond = (F.col("term").endswith(stem) if kind == "suffix"
-                else F.col("term").contains(stem))
-        rows = (self.terms.filter(cond).select("term").orderBy("term")
+        # 1-char substring stem (below MIN_TOKEN_LEN, no gram list)
+        rows = (self.terms.filter(F.col("term").contains(stem))
+                .select("term").orderBy("term")
                 .limit(MAX_PREFIX_EXPAND).collect())
         return [r["term"] for r in rows]
 
@@ -515,18 +495,26 @@ class SearchEngine:
         # dedupe (order-preserving): the old isin() fetch was set-
         # semantic, so a repeated term must not contribute twice
         terms = list(dict.fromkeys(terms))
-        missing = [t for t in terms if t not in self._block_cache]
+        # snapshot the resident terms' blocks BEFORE inserting fetched
+        # ones: an insert may evict a term this very call still needs
+        got: dict[str, list] = {}
+        for t in terms:
+            if t in self._block_cache:
+                self._block_cache.move_to_end(t)  # LRU touch
+                got[t] = self._block_cache[t]
+        missing = [t for t in terms if t not in got]
         if missing:
             rows = (self._blocks(missing, meta_only=False)
                     .select("term", "range_id", "doc_count", "payload")
                     .collect())
-            by_term: dict[str, list] = {t: [] for t in missing}
+            for t in missing:
+                got[t] = []
             for r in rows:
-                by_term[r["term"]].append(
+                got[r["term"]].append(
                     (int(r["range_id"]), int(r["doc_count"]),
                      bytes(r["payload"])))
             for t in missing:
-                blks = by_term[t]
+                blks = got[t]
                 nb = sum(len(p) for _, _, p in blks)
                 # a term larger than the whole cap is served uncached
                 # rather than evicting everything else
@@ -539,18 +527,10 @@ class SearchEngine:
                         len(p) for _, _, p in old)
                 self._block_cache[t] = blks
                 self._block_cache_bytes += nb
-            got = by_term
-        else:
-            got = {}
         cols: dict[str, list] = {"term": [], "range_id": [],
                                  "doc_count": [], "payload": []}
         for t in terms:
-            if t in self._block_cache:
-                self._block_cache.move_to_end(t)  # LRU touch
-                blks = self._block_cache[t]
-            else:
-                blks = got.get(t, [])
-            for rid, dc, p in blks:
+            for rid, dc, p in got[t]:
                 cols["term"].append(t)
                 cols["range_id"].append(rid)
                 cols["doc_count"].append(dc)
@@ -844,10 +824,10 @@ class SearchEngine:
                         else "pruned")
             else:
                 mode = "brute"
-        # pruned / all_ranges / local score the UNION of present terms —
-        # on a general tree (NOT/XOR) that silently returns OR
-        # semantics, so all three coerce to the set-algebra brute path
-        if mode in ("pruned", "all_ranges", "local") and \
+        # pruned / local score the UNION of present terms — on a
+        # general tree (NOT/XOR) that silently returns OR semantics, so
+        # both coerce to the set-algebra brute path
+        if mode in ("pruned", "local") and \
                 shape not in ("single", "and", "or"):
             mode = "brute"
 
@@ -861,11 +841,6 @@ class SearchEngine:
                 len(terms) if shape == "and" else None, k)
         elif mode == "pruned":
             result = self._search_pruned(terms, dfmap, shape, k)
-        elif mode == "all_ranges":
-            present = [t for t in terms if dfmap.get(t, 0) > 0]
-            result = self._score_ranges(
-                self._blocks(present, meta_only=False), dfmap,
-                len(terms) if shape == "and" else None, local_k=k)
         else:
             # cached: the set-algebra tree references `decoded` once per
             # leaf plus once for scoring — uncached, Spark re-decodes the
@@ -892,9 +867,9 @@ class SearchEngine:
     # take the distributed pruned path as before.  Env-overridable for
     # deployments with different driver budgets (not a local[32]
     # constant: the crossover is job-latency vs decode throughput,
-    # both cluster properties).
-    PRUNE_MIN_POSTINGS = int(__import__("os").environ.get(
-        "OSCAR_PRUNE_MIN_POSTINGS", 2_000_000))
+    # both cluster properties; OSCAR_PRUNE_MIN_POSTINGS, read per
+    # engine in __init__).
+    PRUNE_MIN_POSTINGS = 2_000_000
 
     def _search_pruned(self, terms, dfmap, shape, k) -> DataFrame:
         present = [t for t in terms if dfmap.get(t, 0) > 0]

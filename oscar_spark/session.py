@@ -73,7 +73,8 @@ def get_spark(app: str = "oscar-spark", cores: int | None = None,
         # each page row ~200×, so larger input batches balloon Python
         # worker memory (measured: 65536-page batches made the tokenize
         # stage memory-bound and non-scaling); UDFs that want bigger
-        # units buffer batches internally instead (indexer._encode_partition)
+        # units buffer batches internally instead
+        # (indexer._encode_partition_arrow)
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "134217728")

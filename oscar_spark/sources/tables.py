@@ -178,10 +178,8 @@ class IndexStore:
     def read(self, spark: SparkSession, table: str) -> DataFrame:
         df = spark.read.option("basePath", self.path(table)) \
             .parquet(self.path(table))
-        segs = self.segments(table)
-        if "seg" in df.columns:
-            return df.filter(F.col("seg").isin(segs)).drop("seg")
-        return df  # legacy layout (pre-segment store)
+        return df.filter(F.col("seg").isin(self.segments(table))) \
+            .drop("seg")
 
     def read_segment(self, spark: SparkSession, table: str,
                      segment: str) -> DataFrame:

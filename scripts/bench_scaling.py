@@ -736,8 +736,9 @@ match, 0 mismatches.
 ## Posting-codec variants
 
 See BENCH/CODECS.md for the varint / pfor / ef / wah payload-size and
-encode/decode comparison (scripts/codec_compare.py), the analog of the
-reference's index_*.json variant matrix.
+encode/decode comparison, the analog of the reference's index_*.json
+variant matrix; on it the engine kept varint and pfor and dropped ef
+and wah.
 
 ## Measurement conditions
 

@@ -295,42 +295,20 @@ def test_pfor_block_roundtrip(ids, seed):
     assert np.array_equal(d_dls, dls)
 
 
-@given(
-    st.lists(st.integers(min_value=0, max_value=10**9), min_size=1,
-             max_size=300, unique=True),
-    st.integers(min_value=1, max_value=1000),
-)
-@settings(max_examples=50, deadline=None)
-def test_ef_block_roundtrip(ids, seed):
-    from oscar_spark.functions.codec import (ef_decode_block,
-                                             ef_encode_block)
-    ids = sorted(ids)
-    rng = np.random.RandomState(seed)
-    tfs = rng.randint(1, 50, size=len(ids))
-    dls = rng.randint(1, 500, size=len(ids))
-    base = min(ids) - (min(ids) % 8192)
-    payload = ef_encode_block(np.array(ids), tfs, dls, base)
-    d_ids, d_tfs, d_dls = ef_decode_block(payload, len(ids), base)
-    assert list(d_ids) == ids
-    assert np.array_equal(d_tfs, tfs)
-    assert np.array_equal(d_dls, dls)
-
-
-def test_ef_encode_runs_matches_per_block():
-    """encode_runs(codec='ef') slices == per-block ef_encode_block."""
-    from oscar_spark.functions.codec import ef_encode_block, encode_runs
-    rng = np.random.RandomState(3)
-    ids = np.sort(rng.choice(8192, 500, replace=False)).astype(np.int64)
-    terms = np.repeat(np.arange(2, dtype=np.int64), 250)
-    ids = np.concatenate([ids[:250], ids[:250]])
-    tfs = rng.randint(1, 9, 500).astype(np.int64)
-    dls = rng.randint(5, 99, 500).astype(np.int64)
-    res = encode_runs(terms, np.zeros(500, dtype=np.int64), ids, tfs,
-                      dls, 128, 8192, codec="ef")
-    off = 0
-    for i, p in enumerate(res["payload"]):
-        c = int(res["doc_count"][i])
-        expect = ef_encode_block(ids[off:off + c], tfs[off:off + c],
-                                 dls[off:off + c], 0)
-        assert p == expect, i
-        off += c
+def test_store_decoder_rejects_other_formats():
+    """The store's manifest meta picks the decoder; a store without a
+    recorded payload_format, with another format, or with an unknown
+    codec is refused with a clear error instead of guessed at."""
+    from oscar_spark.functions.codec import (PAYLOAD_FORMAT, decode_block,
+                                             pfor_decode_block,
+                                             store_decoder)
+    assert store_decoder({"codec": "varint",
+                          "payload_format": PAYLOAD_FORMAT}) is decode_block
+    assert store_decoder({"codec": "pfor", "payload_format":
+                          PAYLOAD_FORMAT}) is pfor_decode_block
+    for meta in ({"codec": "varint"},
+                 {"codec": "varint", "payload_format": 1}):
+        with pytest.raises(ValueError, match="payload format"):
+            store_decoder(meta)
+    with pytest.raises(ValueError, match="unknown posting codec"):
+        store_decoder({"codec": "ef", "payload_format": PAYLOAD_FORMAT})

@@ -27,8 +27,10 @@ def test_position_codec_roundtrip(lists):
     pos = [np.sort(np.unique(np.array(p, dtype=np.int64))) for p in lists]
     tfs = np.array([len(p) for p in pos], dtype=np.int64)
     n = len(pos)
+    flat_in = np.concatenate(pos)  # the encoder takes one flat array
     # one block, then split in two at an arbitrary boundary
-    [payload] = encode_position_runs(pos, tfs, np.array([0]), np.array([n]))
+    [payload] = encode_position_runs(flat_in, tfs, np.array([0]),
+                                     np.array([n]))
     flat, offs = decode_position_block(payload, tfs)
     assert offs.tolist() == np.concatenate(
         [[0], np.cumsum(tfs)]).tolist()
@@ -36,7 +38,7 @@ def test_position_codec_roundtrip(lists):
         assert flat[offs[i]:offs[i + 1]].tolist() == p.tolist()
     cut = n // 2
     if 0 < cut < n:
-        p1, p2 = encode_position_runs(pos, tfs, np.array([0, cut]),
+        p1, p2 = encode_position_runs(flat_in, tfs, np.array([0, cut]),
                                       np.array([cut, n]))
         f1, _ = decode_position_block(p1, tfs[:cut])
         f2, _ = decode_position_block(p2, tfs[cut:])
@@ -47,11 +49,11 @@ def test_position_codec_rejects_mismatch():
     from oscar_spark.functions.codec import (decode_position_block,
                                              encode_position_runs)
     with pytest.raises(ValueError, match="mismatch"):
-        encode_position_runs([np.array([1, 2])],
+        encode_position_runs(np.array([1, 2]),
                              np.array([3], dtype=np.int64),
                              np.array([0]), np.array([1]))
     [payload] = encode_position_runs(
-        [np.array([1, 2])], np.array([2], dtype=np.int64),
+        np.array([1, 2]), np.array([2], dtype=np.int64),
         np.array([0]), np.array([1]))
     with pytest.raises(ValueError, match="corrupt position block"):
         decode_position_block(payload, np.array([3], dtype=np.int64))

@@ -121,28 +121,6 @@ def test_tokenize_batch_with_duplicate_urls():
 
 # ---- payload-format dispatch ----
 
-def test_block_decoder_v1_roundtrip():
-    """Pre-flag (format 1) payloads decode via the explicit layout even
-    when their first byte collides with a modern flag value."""
-    from oscar_spark.functions.codec import (block_decoder, varint_encode)
-    ids = np.array([8192, 8194, 8200], dtype=np.int64)
-    tfs = np.array([1, 2, 3], dtype=np.int64)
-    dls = np.array([10, 20, 30], dtype=np.int64)
-    base = 8192
-    stream = np.concatenate([
-        np.array([ids[0] - base], dtype=np.uint64),
-        tfs.astype(np.uint64), dls.astype(np.uint64),
-        np.diff(ids).astype(np.uint64)])
-    payload = varint_encode(stream)  # no flag byte: the v1 layout
-    assert payload[0] == 0x00  # would be misread as FLAG_EXPLICIT + stream
-    d_ids, d_tfs, d_dls = block_decoder("varint", 1)(payload, 3, base)
-    assert d_ids.tolist() == ids.tolist()
-    assert d_tfs.tolist() == tfs.tolist()
-    assert d_dls.tolist() == dls.tolist()
-    with pytest.raises(ValueError, match="predates"):
-        block_decoder("pfor", 1)
-
-
 def test_build_records_payload_format(spark, built_index):
     from oscar_spark.functions.codec import PAYLOAD_FORMAT
     from oscar_spark.sources.tables import IndexStore
@@ -189,9 +167,7 @@ def test_ivf_build_prunes_partitions_and_matches_inline(spark, tmp_path):
 
 def test_substring_2char_stem_pruned_path(spark, built_index):
     from oscar_spark.serve.executor import SearchEngine
-    from oscar_spark.sources.tables import IndexStore
     d, _ = built_index
-    assert IndexStore(d).get_meta("ngram2") is True
     eng = SearchEngine(spark, d)
     all_terms = sorted(eng._term_df)
     stem = "ar"  # common interior bigram in the fixture vocab

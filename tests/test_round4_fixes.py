@@ -6,10 +6,7 @@ from __future__ import annotations
 import math
 from collections import Counter
 
-import numpy as np
 import pytest
-from hypothesis import given, settings
-from hypothesis import strategies as st
 
 from oscar_spark.serve import parser
 
@@ -279,83 +276,6 @@ def test_build_rejects_colliding_field_keys(spark, tmp_path):
     with pytest.raises(ValueError, match="field"):
         build_index(spark, pages_spark_df(spark, 20),
                     str(tmp_path / "i2"), fields=("-", "lang"))
-
-
-# ---- WAH bitmap codec (fourth rung; index_wah.json analog) ----
-
-@given(
-    st.lists(st.integers(min_value=0, max_value=10**9), min_size=1,
-             max_size=300, unique=True),
-    st.integers(min_value=1, max_value=1000),
-)
-@settings(max_examples=50, deadline=None)
-def test_wah_block_roundtrip(ids, seed):
-    from oscar_spark.functions.codec import (wah_decode_block,
-                                             wah_encode_block)
-    ids = sorted(ids)
-    rng = np.random.RandomState(seed)
-    tfs = rng.randint(1, 50, size=len(ids))
-    dls = rng.randint(1, 500, size=len(ids))
-    base = min(ids) - (min(ids) % 8192)
-    payload = wah_encode_block(np.array(ids), tfs, dls, base)
-    d_ids, d_tfs, d_dls = wah_decode_block(payload, len(ids), base)
-    assert list(d_ids) == ids
-    assert np.array_equal(d_tfs, tfs)
-    assert np.array_equal(d_dls, dls)
-
-
-def test_wah_dense_run_compresses():
-    """A saturated 31-bit run becomes ONE fill word, and a sparse block
-    over a huge universe stays tiny (no uncompressed bitmap anywhere)."""
-    from oscar_spark.functions.codec import _wah_offsets, _wah_words
-    dense = np.arange(62, dtype=np.int64)  # two full groups
-    w = _wah_words(dense)
-    assert len(w) == 1 and (int(w[0]) >> 30) == 0b11
-    assert _wah_offsets(w).tolist() == dense.tolist()
-    sparse = np.array([0, 10**9], dtype=np.int64)
-    w2 = _wah_words(sparse)
-    assert len(w2) == 3  # literal, zero-fill, literal
-    assert _wah_offsets(w2).tolist() == sparse.tolist()
-
-
-def test_wah_encode_runs_matches_per_block():
-    from oscar_spark.functions.codec import encode_runs, wah_encode_block
-    rng = np.random.RandomState(3)
-    ids = np.sort(rng.choice(8192, 500, replace=False)).astype(np.int64)
-    terms = np.repeat(np.arange(2, dtype=np.int64), 250)
-    ids = np.concatenate([ids[:250], ids[:250]])
-    tfs = rng.randint(1, 9, 500).astype(np.int64)
-    dls = rng.randint(5, 99, 500).astype(np.int64)
-    res = encode_runs(terms, np.zeros(500, dtype=np.int64), ids, tfs,
-                      dls, 128, 8192, codec="wah")
-    off = 0
-    for i, p in enumerate(res["payload"]):
-        c = int(res["doc_count"][i])
-        expect = wah_encode_block(ids[off:off + c], tfs[off:off + c],
-                                  dls[off:off + c], 0)
-        assert p == expect, i
-        off += c
-
-
-def test_wah_codec_end_to_end(spark, pages_df, tmp_path):
-    from oscar_spark.build.indexer import build_index
-    from oscar_spark.oracle.engine import OracleIndex
-    from oscar_spark.serve.executor import SearchEngine
-    from oscar_spark.sources.tables import IndexStore
-    d = str(tmp_path / "wah_idx")
-    build_index(spark, pages_df, d, codec="wah")
-    assert IndexStore(d).get_meta("codec") == "wah"
-    from oscar_spark.fixtures.pages import generate_pages
-    pdf = generate_pages(300)
-    ds = {r["url"]: r["doc_id"] for r in
-          IndexStore(d).read(spark, "doc_stats").collect()}
-    oracle = OracleIndex([(int(ds[u]), t)
-                          for u, t in zip(pdf["url"], pdf["text"])])
-    eng = SearchEngine(spark, d)
-    for q in ["the", "city + state", "war history world", "wd0042"]:
-        expected = oracle.search(q, k=10)
-        got = eng.search(q, k=10)
-        assert [x for x, _ in got] == [x for x, _ in expected], q
 
 
 # ---- driver-local small-query serve path (auto below
@@ -686,13 +606,13 @@ def test_cli_build_mode_flags_and_resume_inherit(spark, tmp_path, capsys):
     _write_pages_file(pdf.iloc[:100], str(pdir / "p0.parquet"))
     d = str(tmp_path / "idx")
     rc = cli.main(["build", "--pages", str(pdir), "--index", d,
-                   "--positions", "--dedup-payloads", "--codec", "ef",
+                   "--positions", "--dedup-payloads", "--codec", "pfor",
                    "--fields", "lang"])
     assert rc == 0
     out1 = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert out1["n_docs"] == 100
     store = IndexStore(d)
-    assert store.get_meta("codec") == "ef"
+    assert store.get_meta("codec") == "pfor"
     assert bool(store.get_meta("positions"))
     assert bool(store.get_meta("payload_dedup"))
     assert tuple(store.get_meta("fields")) == ("lang",)
@@ -704,7 +624,7 @@ def test_cli_build_mode_flags_and_resume_inherit(spark, tmp_path, capsys):
     out2 = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert out2["n_docs"] >= 60
     # modes survived the flagless resume (no plain-store rebuild)
-    assert store.get_meta("codec") == "ef"
+    assert store.get_meta("codec") == "pfor"
     assert bool(store.get_meta("positions"))
     assert bool(store.get_meta("payload_dedup"))
     assert tuple(store.get_meta("fields")) == ("lang",)
@@ -721,7 +641,7 @@ def test_cli_build_mode_flags_and_resume_inherit(spark, tmp_path, capsys):
             int(doc_id), float(score)
 
     # consistency checker green on the full-feature store: exercises
-    # the ef-decode, pos_payload, and payload-dedup-join branches of
+    # the pfor-decode, pos_payload, and payload-dedup-join branches of
     # check_index in one pass
     rc = cli.main(["check", "--index", d])
     assert rc == 0

@@ -222,14 +222,16 @@ def test_prewarm_thread_started_by_get_spark(spark):
     assert getattr(spark.sparkContext, "_oscar_prewarmed", False)
 
 
-def test_arrow_encoder_matches_pandas_encoder():
-    """_encode_partition_arrow (mapInArrow path) must emit exactly the
-    blocks of _encode_partition (mapInPandas path) — same rows, same
-    payload bytes — including across the 262144-row carry boundary and
-    for every codec."""
+def test_arrow_encoder_matches_whole_run_encode():
+    """_encode_partition_arrow over split Arrow batches (the mapInArrow
+    path, carry-over across the 262144-row unit boundary included) must
+    emit exactly the blocks of ONE encode_runs call over the unsplit
+    run — same rows, same payload and pos_payload bytes — for both
+    codecs, with and without positions."""
     import pyarrow as pa
 
     from oscar_spark.build import indexer
+    from oscar_spark.functions.codec import encode_runs
 
     rng = np.random.RandomState(7)
     n_terms, n = 400, 600_000
@@ -245,22 +247,44 @@ def test_arrow_encoder_matches_pandas_encoder():
         # doc ids must be unique per (term, range) group for the codec
         ids[lo:hi] = np.cumsum(
             np.maximum(np.diff(np.concatenate(([0], ids[lo:hi]))), 1))
-    tfs = rng.randint(1, 9, size=n).astype("int32")
+    tfs = rng.randint(1, 6, size=n).astype("int32")
     dls = rng.randint(10, 300, size=n).astype("int32")
-    pdf = pd.DataFrame({"term": terms, "doc_id": ids, "tf": tfs,
-                        "dl": dls})
-    cuts = [0, 50_000, 263_000, 300_001, 555_555, n]
-    pdf_batches = [pdf.iloc[a:b].reset_index(drop=True)
-                   for a, b in zip(cuts, cuts[1:])]
-    pa_batches = [pa.RecordBatch.from_pandas(b, preserve_index=False)
-                  for b in pdf_batches]
-    for codec in ("varint", "pfor", "ef", "wah"):
-        a = pd.concat(list(indexer._encode_partition(
-            iter(pdf_batches), codec, False)), ignore_index=True)
-        b = pa.Table.from_batches(list(indexer._encode_partition_arrow(
-            iter(pa_batches), codec))).to_pandas()
-        pd.testing.assert_frame_equal(
-            a.reset_index(drop=True), b.reset_index(drop=True))
+    # per-posting strictly increasing positions, tf of them each
+    pos_offs = np.concatenate(([0], np.cumsum(tfs))).astype(np.int32)
+    gaps = rng.randint(1, 20, size=int(pos_offs[-1]))
+    seg_start = np.repeat(pos_offs[:-1], tfs)
+    csum = np.cumsum(gaps)
+    flat = (csum - (csum[seg_start] - gaps[seg_start])).astype(np.int32)
+    tbl = pa.table({
+        "term": pa.array(terms, pa.string()),
+        "doc_id": pa.array(ids, pa.int64()),
+        "tf": pa.array(tfs, pa.int32()),
+        "dl": pa.array(dls, pa.int32()),
+        "pos": pa.ListArray.from_arrays(pa.array(pos_offs),
+                                        pa.array(flat)),
+    })
+    # the second cut lands exactly on the 262144-row unit boundary
+    cuts = [0, 50_000, 262_144, 300_001, 555_555, n]
+    codes, uniq = pd.factorize(terms)
+    for codec in ("varint", "pfor"):
+        for with_pos in (False, True):
+            src = tbl if with_pos else tbl.drop(["pos"])
+            batches = [b for a, e in zip(cuts, cuts[1:])
+                       for b in src.slice(a, e - a).to_batches()]
+            got = pa.Table.from_batches(list(
+                indexer._encode_partition_arrow(
+                    iter(batches), codec, with_pos))).to_pandas()
+            want = pd.DataFrame(encode_runs(
+                codes.astype(np.int64), ids // indexer.RANGE_SIZE, ids,
+                tfs.astype(np.int64), dls.astype(np.int64),
+                indexer.BLOCK_SIZE, indexer.RANGE_SIZE, codec=codec,
+                positions=flat if with_pos else None))
+            want["term"] = uniq[want["term"].to_numpy()]
+            assert list(got.columns) == list(want.columns)
+            assert ("pos_payload" in got.columns) == with_pos
+            for c in got.columns:
+                assert got[c].tolist() == want[c].tolist(), (codec,
+                                                             with_pos, c)
 
 
 def test_simhash_bitsum_count_identity(spark):

@@ -138,16 +138,83 @@ def test_dual_path_equivalence(engine, q):
     Run the pruned path BOTH ways: single-phase (small-query fast path)
     and forced two-phase seed/θ/prune (the at-scale path)."""
     brute = engine.search(q, k=10, mode="brute")
+    saved = engine.PRUNE_MIN_POSTINGS
     try:
         engine.PRUNE_MIN_POSTINGS = 0  # force two-phase
         two_phase = engine.search(q, k=10, mode="pruned")
     finally:
-        del engine.PRUNE_MIN_POSTINGS
+        engine.PRUNE_MIN_POSTINGS = saved
     single = engine.search(q, k=10, mode="pruned")
     for got in (two_phase, single):
         assert [d for d, _ in got] == [d for d, _ in brute]
         for (_, ps), (_, bs) in zip(got, brute):
             assert round(ps, SCORE_ROUND) == round(bs, SCORE_ROUND)
+
+
+def test_prune_min_postings_read_per_engine(spark, built_index,
+                                            monkeypatch):
+    """OSCAR_PRUNE_MIN_POSTINGS set AFTER the module import still
+    reaches a new engine (it is read in SearchEngine.__init__)."""
+    d, _ = built_index
+    monkeypatch.setenv("OSCAR_PRUNE_MIN_POSTINGS", "1234")
+    assert SearchEngine(spark, d).PRUNE_MIN_POSTINGS == 1234
+    monkeypatch.delenv("OSCAR_PRUNE_MIN_POSTINGS")
+    assert SearchEngine(spark, d).PRUNE_MIN_POSTINGS == \
+        SearchEngine.PRUNE_MIN_POSTINGS
+
+
+class _FakeBlocks:
+    def __init__(self, rows):
+        self.rows = rows
+
+    def select(self, *cols):
+        return self
+
+    def collect(self):
+        return self.rows
+
+
+def test_block_cache_eviction_keeps_requested_terms():
+    """Spark-free stub engine: with a 100 B cap and 60 B per term,
+    fetching [a, b] after warming a must evict a to admit b — and still
+    return BOTH terms' rows (a's from the snapshot taken before the
+    eviction)."""
+    from collections import OrderedDict
+    eng = SearchEngine.__new__(SearchEngine)
+    eng._block_cache = OrderedDict()
+    eng._block_cache_bytes = 0
+    eng.BLOCK_CACHE_MAX_BYTES = 100
+    store = {"a": [{"term": "a", "range_id": 0, "doc_count": 1,
+                    "payload": b"A" * 60}],
+             "b": [{"term": "b", "range_id": 1, "doc_count": 1,
+                    "payload": b"B" * 60}]}
+    eng._blocks = lambda terms, meta_only: _FakeBlocks(
+        [r for t in terms for r in store[t]])
+    assert eng._fetch_blocks_local(["a"])["term"].tolist() == ["a"]
+    out = eng._fetch_blocks_local(["a", "b"])
+    assert sorted(out["term"]) == ["a", "b"]
+    assert out.set_index("term")["payload"].to_dict() == {
+        "a": b"A" * 60, "b": b"B" * 60}
+    assert list(eng._block_cache) == ["b"]
+    assert eng._block_cache_bytes == 60
+
+
+def test_block_cache_near_cap_and_query_matches_uncached(spark,
+                                                         built_index):
+    """A warm term plus a cold one whose blocks together exceed the
+    cache cap: the AND query must still match the uncached engine."""
+    d, _ = built_index
+    probe = SearchEngine(spark, d)
+    nbytes = {t: int(probe._fetch_blocks_local([t])["payload"]
+                     .map(len).sum()) for t in ("war", "history")}
+    uncached = SearchEngine(spark, d)
+    uncached.BLOCK_CACHE_MAX_BYTES = 0  # every term served uncached
+    expected = uncached.search("war history", k=10, mode="local")
+    assert expected
+    eng = SearchEngine(spark, d)
+    eng.BLOCK_CACHE_MAX_BYTES = sum(nbytes.values()) - 1
+    eng.search("war", k=10, mode="local")  # warm one term
+    assert eng.search("war history", k=10, mode="local") == expected
 
 
 def test_dont_crash_queries(engine):
@@ -337,23 +404,6 @@ def test_pfor_codec_end_to_end(spark, pages_df, oracle, tmp_path):
     d = str(tmp_path / "pfor_idx")
     build_index(spark, pages_df, d, codec="pfor")
     assert IndexStore(d).get_meta("codec") == "pfor"
-    eng = SearchEngine(spark, d)
-    for q in ["the", "city + state", "war history world", "wd0042"]:
-        expected = oracle.search(q, k=10)
-        got = eng.search(q, k=10)
-        assert [x for x, _ in got] == [x for x, _ in expected]
-
-
-def test_ef_codec_end_to_end(spark, pages_df, oracle, tmp_path):
-    """Build with the Elias-Fano codec flag (third codec rung, analog
-    of reference/data/configs/oscar-create/index_eliasfano.json):
-    manifest records it, serve dispatches on it, results stay
-    rank-identical to the oracle."""
-    from oscar_spark.build.indexer import build_index
-    from oscar_spark.sources.tables import IndexStore
-    d = str(tmp_path / "ef_idx")
-    build_index(spark, pages_df, d, codec="ef")
-    assert IndexStore(d).get_meta("codec") == "ef"
     eng = SearchEngine(spark, d)
     for q in ["the", "city + state", "war history world", "wd0042"]:
         expected = oracle.search(q, k=10)
