@@ -15,6 +15,7 @@ docs, vs the quadratic naive join).
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -405,8 +406,8 @@ _SIM_CKPT_CACHE: list[DataFrame] = []
 
 
 def _release_sim_ckpt_cache() -> None:
-    """Unpersist the previous simhash64_pairs call's fingerprint
-    checkpoint (same lifecycle pattern the serve path uses for its
+    """Unpersist the previous simhash64_pairs call's persisted
+    fingerprints (same lifecycle pattern the serve path uses for its
     brute cache): at most one is live at a time, and every invocation
     recomputes from the parquet input — nothing persists across runs."""
     while _SIM_CKPT_CACHE:
@@ -516,9 +517,10 @@ def simhash64_pairs(spark: SparkSession, sf_dir: str,
     change to the `bands` projection."""
     # r06 (guide §2.4/§1.2): the naive self-join re-executed the whole
     # simhash lineage on both sides (two corpus scans + two 64-agg
-    # chains).  A lazy localCheckpoint of the tiny fingerprint table
-    # (n_docs × 3 longs) makes both join sides read one materialized
-    # RDD, so the corpus is scanned once; the join itself stays a
+    # chains).  Persisting the tiny fingerprint table (n_docs × 3
+    # longs, MEMORY_AND_DISK: a lost block is recomputed from the
+    # lineage) makes both join sides read one cached relation, so the
+    # corpus is scanned once; the join itself stays a
     # codegen'd streaming join over slim int rows (an earlier
     # collect_list + pairwise-lambda shape evaluated the 14.2M sf1.0
     # bucket candidates in interpreted higher-order functions — slower
@@ -528,7 +530,7 @@ def simhash64_pairs(spark: SparkSession, sf_dir: str,
     # only the ≤max_hamming survivors (15 rows at sf1.0) instead of
     # every bucket candidate.
     _release_sim_ckpt_cache()
-    sim = _simhash64_fps(spark, sf_dir).localCheckpoint(eager=False)
+    sim = _simhash64_fps(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK)
     _SIM_CKPT_CACHE.append(sim)
     bands = sim.select(
         "doc_id", "sim_hi", "sim_lo", F.explode(F.array(*[

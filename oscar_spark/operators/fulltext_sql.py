@@ -18,6 +18,7 @@ ASCII so the rule coincides with the pinned tokenizer there.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -103,8 +104,8 @@ _PROJ_CACHE: list[DataFrame] = []
 
 
 def _release_proj_cache() -> None:
-    """Unpersist the previous catalog query's per-doc projection
-    checkpoint — at most one is live at a time (the same lifecycle the
+    """Unpersist the previous catalog query's persisted per-doc
+    projection — at most one is live at a time (the same lifecycle the
     r05 tf cache had; Spark otherwise pins the RDD for the session)."""
     while _PROJ_CACHE:
         _PROJ_CACHE.pop().unpersist()
@@ -145,12 +146,13 @@ def _doc_scores(docs: DataFrame, query_terms: list[str]) -> DataFrame:
     proj = docs.select(
         "doc_id", F.size(arr).alias("dl"),
         *[_tf(qt).alias(f"tf{i}") for i, qt in enumerate(qts)])
-    # the stats pass and the scoring pass both read proj; a lazy
-    # localCheckpoint of this slim (doc_id, dl, tf…) table tokenizes
-    # the corpus ONCE (released on the next _doc_scores call — nothing
-    # persists across bench/oracle invocations)
+    # the stats pass and the scoring pass both read proj; persisting
+    # this slim (doc_id, dl, tf…) table tokenizes the corpus ONCE
+    # (released on the next _doc_scores call — nothing persists across
+    # bench/oracle invocations).  persist, not localCheckpoint: a block
+    # lost with its executor is recomputed from the lineage
     _release_proj_cache()
-    proj = proj.localCheckpoint(eager=False)
+    proj = proj.persist(StorageLevel.MEMORY_AND_DISK)
     _PROJ_CACHE.append(proj)
     stats = (proj.agg(
         F.count("*").cast("double").alias("n"),

@@ -9,17 +9,28 @@ parse (shared parser) → broadcast-of-query-terms lookup in `terms`
 (term + bucket filters pushed to parquet; metadata phase reads ONLY the
 metadata columns, so the scan never touches the payload bytes — column
 pruning is our analog of oscar reading trie payload pointers without
-loading ItemIndex data) → two execution strategies:
+loading ItemIndex data) → four execution strategies:
+
+- local (default for EVERY query shape — single, AND, OR, NOT, XOR,
+  nested trees, bare or nested phrases — whose present terms total
+  fewer than PRUNE_MIN_POSTINGS postings): blocks come from the
+  engine's LRU block cache (one pruned collect job for the terms not
+  yet resident, none once warm), then decode + set algebra + BM25 +
+  top-k run in numpy and search() returns the driver rows directly —
+  no DataFrame is built.  The analog of oscar answering every set-op
+  query from the mmap'd index inside the server process
+  (DecelledACOT::execute).  Same scoring and phrase kernels as the
+  distributed paths.
 
 - brute: decode every matching block, score, set-algebra on DataFrames,
-  global TakeOrdered(k).  The dual-path partner (analog of the cqr==tcqr
-  assert at reference/oscar-cmd/Workfunctions.cpp:1169-1191).
+  global TakeOrdered(k).  Serves NOT/XOR/nested trees above the
+  threshold and is the reference path (mode="brute") the tests pin the
+  local path against — the analog of the cqr==tcqr assert at
+  reference/oscar-cmd/Workfunctions.cpp:1169-1191.
 
-- local (default for single/AND/OR queries whose total candidate
-  postings sit below PRUNE_MIN_POSTINGS): ONE pruned collect job, then
-  decode + BM25 + top-k driver-side — the analog of oscar serving from
-  the mmap'd index inside the server process.  Same kernel as the
-  distributed path (value-identical by construction).
+- phrase: bare phrases above the threshold (and under mode="brute" /
+  "pruned"): metadata-only candidate-range intersection, then the
+  adjacency kernel per range in applyInPandas.
 
 - pruned ("block-max WAND at range granularity", default for
   single/AND/OR queries above the threshold): ranges are oscar's cells;
@@ -34,7 +45,7 @@ loading ItemIndex data) → two execution strategies:
   ranking (the intersection-on-block-ids fast path, mirroring oscar's
   cell-wise set ops with fm/pm refinement, SURVEY.md §2.6).
 
-Everything is DataFrame + Arrow kernels; per-range scoring is a
+The Spark paths are DataFrame + Arrow kernels; per-range scoring is a
 vectorized numpy applyInPandas (decode → bm25_np → segment-sum), with a
 local per-range top-k cut so the final shuffle moves ≤ k rows per range.
 """
@@ -42,7 +53,7 @@ local per-range top-k cut so the final shuffle moves ≤ k rows per range.
 from __future__ import annotations
 
 import os as _os
-from typing import Iterator
+from typing import Iterator, NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -145,6 +156,140 @@ def _score_pdf(pdf: pd.DataFrame, decode, dfmap: dict[str, int],
         uniq, ssum = uniq[order], ssum[order]
     return pd.DataFrame({"doc_id": uniq.astype(np.int64),
                          "score": ssum})
+
+
+def _phrase_pdf(pdf: pd.DataFrame, toks: list[str], decode,
+                dfmap: dict[str, int], n_docs: float, avgdl: float,
+                local_k: int | None, docs_only: bool = False) -> pd.DataFrame:
+    """(doc_id, score) for docs containing the EXACT phrase `toks`, over
+    one batch of (term, range_id, doc_count, payload, pos_payload) blocks
+    of the phrase's member terms: decode each member term's ids +
+    positions, intersect doc sets, verify adjacency (pos of tok_i ==
+    start+i), score matched docs as Σ BM25 of the DISTINCT member terms.
+    The single adjacency kernel shared by the distributed per-range path
+    (_score_phrase_ranges) and the driver-local path (_score_local); a
+    batch may span any number of ranges.  docs_only skips the scoring
+    (set-algebra membership; scores are returned as zeros)."""
+    from oscar_spark.functions.codec import decode_position_block
+    uniq = list(dict.fromkeys(toks))
+    acc: dict[str, list] = {t: [] for t in uniq}
+    for term, payload, posp, doc_count, range_id in zip(
+            pdf["term"], pdf["payload"], pdf["pos_payload"],
+            pdf["doc_count"], pdf["range_id"]):
+        ids, tfs, dls = decode(
+            bytes(payload), int(doc_count), int(range_id) * RANGE_SIZE)
+        flat, offs = decode_position_block(bytes(posp), tfs)
+        acc[term].append((ids, tfs, dls, flat, offs))
+    empty = pd.DataFrame({"doc_id": pd.array([], dtype="int64"),
+                          "score": pd.array([], dtype="float64")})
+    if any(not acc[t] for t in uniq):
+        return empty
+    # per term: one sorted id array + flat positions with per-doc
+    # offsets.  Blocks of one term are DISJOINT and internally sorted,
+    # so ordering blocks by first doc_id makes the concatenation
+    # globally sorted — everything downstream is numpy set algebra on
+    # sorted arrays (the vectorized form of oscar's position-list
+    # adjacency walk), no per-posting Python.
+    t_ids: dict[str, np.ndarray] = {}
+    t_sc: dict[str, np.ndarray] = {}
+    t_flat: dict[str, np.ndarray] = {}
+    t_offs: dict[str, np.ndarray] = {}
+    for t in uniq:
+        blks = sorted(acc[t], key=lambda b: int(b[0][0]) if len(b[0]) else -1)
+        ids = np.concatenate([b[0] for b in blks]).astype(np.int64)
+        cnts = np.concatenate([(b[4][1:] - b[4][:-1]) for b in blks])
+        offs = np.zeros(len(ids) + 1, dtype=np.int64)
+        np.cumsum(cnts, out=offs[1:])
+        t_ids[t] = ids
+        t_flat[t] = np.concatenate([b[3] for b in blks]).astype(np.int64)
+        t_offs[t] = offs
+        if not docs_only:
+            # docs_only callers score matched docs themselves, so
+            # computing BM25 here would be pure double work
+            tfs = np.concatenate([b[1] for b in blks])
+            dls = np.concatenate([b[2] for b in blks])
+            t_sc[t] = bm25_np(
+                tfs.astype(np.float64), dls.astype(np.float64),
+                float(dfmap.get(t, 0)), n_docs, avgdl)
+    cand = t_ids[uniq[0]]
+    for t in uniq[1:]:
+        cand = np.intersect1d(cand, t_ids[t], assume_unique=True)
+        if cand.size == 0:
+            return empty
+    # candidate-doc positions of term t as sorted composite keys
+    # (doc_rank << 32 | position): membership of "(doc, p+i) in
+    # term_i's positions" becomes one searchsorted per token
+    key_cache: dict[str, np.ndarray] = {}
+
+    def cand_keys(t: str) -> np.ndarray:
+        got = key_cache.get(t)
+        if got is None:
+            idx = np.searchsorted(t_ids[t], cand)
+            offs, flat = t_offs[t], t_flat[t]
+            lens = offs[idx + 1] - offs[idx]
+            csum = np.zeros(len(idx) + 1, dtype=np.int64)
+            np.cumsum(lens, out=csum[1:])
+            gather = (np.arange(csum[-1], dtype=np.int64)
+                      - np.repeat(csum[:-1], lens)
+                      + np.repeat(offs[idx], lens))
+            drep = np.repeat(np.arange(cand.size, dtype=np.int64), lens)
+            got = (drep << 32) | flat[gather]
+            key_cache[t] = got
+        return got
+
+    starts = cand_keys(toks[0])
+    for i, t in enumerate(toks[1:], start=1):
+        keys_i = cand_keys(t)
+        want = starts + i
+        hit = np.searchsorted(keys_i, want)
+        hit_c = np.minimum(hit, keys_i.size - 1)
+        starts = starts[keys_i[hit_c] == want]
+        if starts.size == 0:
+            return empty
+    ids_a = cand[np.unique(starts >> np.int64(32))]
+    sc_a = np.zeros(ids_a.size, dtype=np.float64)
+    if not docs_only:
+        for t in uniq:
+            sc_a += t_sc[t][np.searchsorted(t_ids[t], ids_a)]
+    if local_k is not None and len(ids_a) > local_k:
+        order = np.lexsort((ids_a, -sc_a))[:local_k]
+        ids_a, sc_a = ids_a[order], sc_a[order]
+    return pd.DataFrame({"doc_id": ids_a, "score": sc_a})
+
+
+_NO_DOCS = np.empty(0, dtype=np.int64)
+
+
+def _eval_local(node, term_ids: dict[str, np.ndarray],
+                phrase_ids) -> np.ndarray:
+    """Sorted doc ids matching `node` — the numpy twin of
+    SearchEngine._eval_node (and OracleIndex.eval_node) over per-term
+    sorted doc-id arrays; phrase_ids(toks) supplies a phrase leaf's
+    docs.  An absent term matches nothing."""
+    kind = node[0]
+    if kind == "empty":
+        return _NO_DOCS
+    if kind == "term":
+        return term_ids.get(node[1], _NO_DOCS)
+    if kind == "phrase":
+        return phrase_ids(list(node[1]))
+    left = _eval_local(node[1], term_ids, phrase_ids)
+    right = _eval_local(node[2], term_ids, phrase_ids)
+    if kind == "and":
+        return np.intersect1d(left, right, assume_unique=True)
+    if kind == "or":
+        return np.union1d(left, right)
+    if kind == "not":
+        return np.setdiff1d(left, right, assume_unique=True)
+    if kind == "xor":
+        return np.setxor1d(left, right, assume_unique=True)
+    raise ValueError(kind)
+
+
+def _blocks_nbytes(blks: list) -> int:
+    """Payload bytes of cached block tuples (range_id, doc_count,
+    payload[, pos_payload]) — what the block cache's cap counts."""
+    return sum(len(p) for blk in blks for p in blk[2:])
 
 
 def _tree_shape(node) -> str:
@@ -486,12 +631,17 @@ class SearchEngine:
     BLOCK_CACHE_MAX_BYTES = 64 << 20  # driver-local payload cache cap
 
     def _fetch_blocks_local(self, terms: list[str]) -> pd.DataFrame:
-        """Collected (term, range_id, doc_count, payload) block rows for
-        the driver-local path, through the engine's bounded LRU block
-        cache: terms already resident cost no Spark job; the missing
-        ones are fetched in ONE bucket+term-pruned job.  Assembly order
-        is irrelevant downstream — _score_pdf pins its own (term,
-        range_id) sort before any float accumulation."""
+        """Collected (term, range_id, doc_count, payload[, pos_payload])
+        block rows for the driver-local path, through the engine's
+        bounded LRU block cache: terms already resident cost no Spark
+        job; the missing ones are fetched in ONE bucket+term-pruned job.
+        On positional stores every entry carries its pos_payload too, so
+        a term cached by any query can serve a later phrase, and the
+        byte accounting counts both payloads.  Assembly order is
+        irrelevant downstream — the kernels pin their own block order
+        before any float accumulation."""
+        cols = ["range_id", "doc_count", "payload"] + (
+            ["pos_payload"] if self.has_positions else [])
         # dedupe (order-preserving): the old isin() fetch was set-
         # semantic, so a repeated term must not contribute twice
         terms = list(dict.fromkeys(terms))
@@ -505,17 +655,16 @@ class SearchEngine:
         missing = [t for t in terms if t not in got]
         if missing:
             rows = (self._blocks(missing, meta_only=False)
-                    .select("term", "range_id", "doc_count", "payload")
-                    .collect())
+                    .select("term", *cols).collect())
             for t in missing:
                 got[t] = []
             for r in rows:
                 got[r["term"]].append(
                     (int(r["range_id"]), int(r["doc_count"]),
-                     bytes(r["payload"])))
+                     *(bytes(r[c]) for c in cols[2:])))
             for t in missing:
                 blks = got[t]
-                nb = sum(len(p) for _, _, p in blks)
+                nb = _blocks_nbytes(blks)
                 # a term larger than the whole cap is served uncached
                 # rather than evicting everything else
                 if nb > self.BLOCK_CACHE_MAX_BYTES:
@@ -523,48 +672,66 @@ class SearchEngine:
                 while (self._block_cache_bytes + nb
                        > self.BLOCK_CACHE_MAX_BYTES and self._block_cache):
                     _, old = self._block_cache.popitem(last=False)
-                    self._block_cache_bytes -= sum(
-                        len(p) for _, _, p in old)
+                    self._block_cache_bytes -= _blocks_nbytes(old)
                 self._block_cache[t] = blks
                 self._block_cache_bytes += nb
-        cols: dict[str, list] = {"term": [], "range_id": [],
-                                 "doc_count": [], "payload": []}
-        for t in terms:
-            for rid, dc, p in got[t]:
-                cols["term"].append(t)
-                cols["range_id"].append(rid)
-                cols["doc_count"].append(dc)
-                cols["payload"].append(p)
-        return pd.DataFrame(cols)
+        return pd.DataFrame([(t, *blk) for t in terms for blk in got[t]],
+                            columns=["term", *cols])
 
-    def _score_local(self, present: list[str], dfmap: dict[str, int],
-                     require_all: int | None, k: int) -> DataFrame:
-        """Driver-side scoring for SMALL candidate sets: collect the
-        (pruned, term-filtered) posting blocks in ONE Spark job and
-        decode + BM25 + top-k in-process — the analog of oscar serving
-        from its mmap'd index inside the server process.  Below
-        PRUNE_MIN_POSTINGS the decoded arrays are a few MB, and the
-        applyInPandas route costs a whole extra shuffle stage + Python
-        worker round-trip per query for work numpy does in
-        milliseconds.  Same kernel as _score_ranges (global unique-sum
-        is correct because doc ids are distinct across ranges), so the
-        two paths are value-identical by construction."""
-        pdf = self._fetch_blocks_local(present)
-        out = _score_pdf(pdf, self._decode, dfmap, float(self.n_docs),
-                         float(self.avgdl), require_all, local_k=k)
-        # r06b: finish the sort + k-cut here in numpy — (score desc,
-        # doc_id asc), exactly the ordering search_df's Spark tail
-        # applied (equal doubles tie identically in both engines).  The
-        # returned relation is a LocalTableScan, so search_df skips its
-        # orderBy/limit for this path and a collect() costs ZERO Spark
-        # jobs; the Spark sort of these ≤k driver-local rows measured 3
-        # jobs (~0.15s) of the ~0.2s warm query wall.
-        if len(out):
-            order = np.lexsort((out["doc_id"].to_numpy(),
-                                -out["score"].to_numpy()))[:k]
-            out = out.iloc[order].reset_index(drop=True)
-        return self.spark.createDataFrame(
-            out, "doc_id long, score double")
+    def _score_local(self, plan: _Plan, k: int,
+                     blocks: pd.DataFrame | None = None) \
+            -> list[tuple[int, float]]:
+        """Driver-side answer for a query whose present terms total
+        fewer than PRUNE_MIN_POSTINGS postings, any shape: blocks from
+        the block cache (or `blocks`, a batch's shared fetch), then
+        decode + set algebra + BM25 + top-k in numpy, returned as driver
+        rows — the analog of oscar serving from its mmap'd index inside
+        the server process.  Below the threshold the decoded arrays are
+        a few MB, and any Spark round trip costs more than numpy's work.
+
+        - single/AND/OR: _score_pdf over every block (global
+          unique-sum is correct because doc ids are distinct across
+          ranges), so local and pruned are value-identical.
+        - bare phrase: _phrase_pdf over every range, so local and the
+          phrase path are value-identical.
+        - any other tree: per-term sorted doc ids and BM25 from
+          _score_pdf, set algebra as in _eval_node (_eval_local), and
+          each matched doc scored as Σ BM25 over the present query
+          terms, summed in _score_pdf's (sorted term) order."""
+        present = [t for t in plan.terms if plan.dfmap.get(t, 0) > 0]
+        pdf = (self._fetch_blocks_local(present) if blocks is None
+               else blocks[blocks["term"].isin(present)])
+        args = (self._decode, plan.dfmap, float(self.n_docs),
+                float(self.avgdl))
+        if plan.shape in ("single", "and", "or"):
+            out = _score_pdf(pdf, *args, len(plan.terms)
+                             if plan.shape == "and" else None, local_k=k)
+            ids, scores = out["doc_id"].to_numpy(), out["score"].to_numpy()
+        elif plan.shape == "phrase":
+            out = _phrase_pdf(pdf, list(plan.node[1]), *args, local_k=k)
+            ids, scores = out["doc_id"].to_numpy(), out["score"].to_numpy()
+        else:
+            per_term = {t: _score_pdf(g, *args, None, None)
+                        for t, g in pdf.groupby("term", sort=True)}
+
+            def phrase_ids(toks: list[str]) -> np.ndarray:
+                sub = pdf[pdf["term"].isin(toks)]
+                return _phrase_pdf(sub, toks, *args, None, docs_only=True)[
+                    "doc_id"].to_numpy()
+
+            ids = _eval_local(
+                plan.node, {t: o["doc_id"].to_numpy()
+                            for t, o in per_term.items()}, phrase_ids)
+            scores = np.zeros(len(ids))
+            for o in per_term.values():
+                t_ids, t_sc = o["doc_id"].to_numpy(), o["score"].to_numpy()
+                at = np.minimum(np.searchsorted(t_ids, ids), len(t_ids) - 1)
+                hit = t_ids[at] == ids
+                scores[hit] += t_sc[at[hit]]
+        # (score desc, doc_id asc) — the ordering of the Spark paths'
+        # final orderBy (equal doubles tie identically in both engines)
+        order = np.lexsort((ids, -scores))[:k]
+        return [(int(d), float(s)) for d, s in zip(ids[order], scores[order])]
 
     # ---- phrase scoring (QT_EXACT: adjacency over positional payloads;
     # per-node query-type payload analog of
@@ -579,7 +746,6 @@ class SearchEngine:
         score matched docs as Σ BM25 of the DISTINCT member terms.
         Same distribution shape as _score_ranges: one applyInPandas per
         range, local top-k cut, ≤k rows per range into the final sort."""
-        from oscar_spark.functions.codec import decode_position_block
         n_docs, avgdl = float(self.n_docs), float(self.avgdl)
         decode = self._decode
         uniq = list(dict.fromkeys(toks))
@@ -597,104 +763,10 @@ class SearchEngine:
         # cuts the fetched payload to the rare token's ranges.
         blocks = blocks.join(
             F.broadcast(self._phrase_candidate_ranges(uniq)), "range_id")
-
-        def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-            acc: dict[str, list] = {t: [] for t in uniq}
-            for term, payload, posp, doc_count, range_id in zip(
-                    pdf["term"], pdf["payload"], pdf["pos_payload"],
-                    pdf["doc_count"], pdf["range_id"]):
-                ids, tfs, dls = decode(
-                    bytes(payload), int(doc_count),
-                    int(range_id) * RANGE_SIZE)
-                flat, offs = decode_position_block(bytes(posp), tfs)
-                acc[term].append((ids, tfs, dls, flat, offs))
-            empty = pd.DataFrame({"doc_id": pd.array([], dtype="int64"),
-                                  "score": pd.array([], dtype="float64")})
-            if any(not acc[t] for t in uniq):
-                return empty
-            # per term: one sorted id array + flat positions with per-doc
-            # offsets.  Blocks of one term in one range are DISJOINT and
-            # internally sorted, so ordering blocks by first doc_id makes
-            # the concatenation globally sorted — everything downstream
-            # is numpy set algebra on sorted arrays (the vectorized form
-            # of oscar's position-list adjacency walk), no per-posting
-            # Python.
-            t_ids: dict[str, np.ndarray] = {}
-            t_sc: dict[str, np.ndarray] = {}
-            t_flat: dict[str, np.ndarray] = {}
-            t_offs: dict[str, np.ndarray] = {}
-            for t in uniq:
-                blks = sorted(acc[t],
-                              key=lambda b: int(b[0][0]) if len(b[0]) else -1)
-                ids = np.concatenate([b[0] for b in blks]).astype(np.int64)
-                cnts = np.concatenate(
-                    [(b[4][1:] - b[4][:-1]) for b in blks])
-                offs = np.zeros(len(ids) + 1, dtype=np.int64)
-                np.cumsum(cnts, out=offs[1:])
-                t_ids[t] = ids
-                t_flat[t] = np.concatenate(
-                    [b[3] for b in blks]).astype(np.int64)
-                t_offs[t] = offs
-                if not docs_only:
-                    # docs_only (set-algebra membership): skip scoring —
-                    # the brute path re-scores matched docs itself, so
-                    # computing BM25 here would be pure double work
-                    tfs = np.concatenate([b[1] for b in blks])
-                    dls = np.concatenate([b[2] for b in blks])
-                    t_sc[t] = bm25_np(
-                        tfs.astype(np.float64), dls.astype(np.float64),
-                        float(dfmap.get(t, 0)), n_docs, avgdl)
-            cand = t_ids[uniq[0]]
-            for t in uniq[1:]:
-                cand = np.intersect1d(cand, t_ids[t], assume_unique=True)
-                if cand.size == 0:
-                    return empty
-            # candidate-doc positions of term t as sorted composite keys
-            # (doc_rank << 32 | position): membership of "(doc, p+i) in
-            # term_i's positions" becomes one searchsorted per token
-            key_cache: dict[str, np.ndarray] = {}
-
-            def cand_keys(t: str) -> np.ndarray:
-                got = key_cache.get(t)
-                if got is None:
-                    idx = np.searchsorted(t_ids[t], cand)
-                    offs, flat = t_offs[t], t_flat[t]
-                    lens = offs[idx + 1] - offs[idx]
-                    csum = np.zeros(len(idx) + 1, dtype=np.int64)
-                    np.cumsum(lens, out=csum[1:])
-                    gather = (np.arange(csum[-1], dtype=np.int64)
-                              - np.repeat(csum[:-1], lens)
-                              + np.repeat(offs[idx], lens))
-                    drep = np.repeat(
-                        np.arange(cand.size, dtype=np.int64), lens)
-                    got = (drep << 32) | flat[gather]
-                    key_cache[t] = got
-                return got
-
-            starts = cand_keys(toks[0])
-            for i, t in enumerate(toks[1:], start=1):
-                keys_i = cand_keys(t)
-                want = starts + i
-                hit = np.searchsorted(keys_i, want)
-                hit_c = np.minimum(hit, keys_i.size - 1)
-                starts = starts[keys_i[hit_c] == want]
-                if starts.size == 0:
-                    return empty
-            matched = np.unique(starts >> np.int64(32))
-            ids_a = cand[matched]
-            if docs_only:
-                sc_a = np.zeros(ids_a.size, dtype=np.float64)
-            else:
-                sc_a = np.zeros(ids_a.size, dtype=np.float64)
-                for t in uniq:
-                    sc_a += t_sc[t][np.searchsorted(t_ids[t], ids_a)]
-            if local_k is not None and len(ids_a) > local_k:
-                order = np.lexsort((ids_a, -sc_a))[:local_k]
-                ids_a, sc_a = ids_a[order], sc_a[order]
-            return pd.DataFrame({"doc_id": ids_a, "score": sc_a})
-
         return blocks.groupBy("range_id").applyInPandas(
-            lambda key, pdf: kernel(pdf), "doc_id long, score double")
+            lambda key, pdf: _phrase_pdf(pdf, toks, decode, dfmap, n_docs,
+                                         avgdl, local_k, docs_only),
+            "doc_id long, score double")
 
     def _phrase_candidate_ranges(self, uniq: list[str]) -> DataFrame:
         """range_ids where ALL of `uniq` have at least one posting block
@@ -777,70 +849,56 @@ class SearchEngine:
                     .select("doc_id"))
         raise ValueError(kind)
 
-    # ---- public API ----
-    def search_df(self, query: str, k: int = 10,
-                  mode: str = "auto") -> DataFrame:
-        """→ DataFrame(doc_id long, score double), the top-k, ordered.
+    # ---- planning + public API ----
+    def _plan(self, query: str, mode: str) -> _Plan:
+        """Parse, expand and look up `query`, then pick its route — the
+        one planner behind search(), search_df() and search_many():
 
-        Per-stage wall-clock lands in self.last_stage_times after the
-        RESULT is consumed (search() finalizes the last stage; a caller
-        collecting the DataFrame itself can call _finish_timer())."""
-        self._timer = _StageTimer()
+        - empty: no query term is present, or an AND/phrase has an
+          absent term;
+        - local: every shape whose present terms total fewer than
+          PRUNE_MIN_POSTINGS postings (or mode="local");
+        - phrase: a bare phrase otherwise (only reachable when the store
+          has positions — otherwise the rewrite already degraded the
+          phrase to AND);
+        - pruned: single/AND/OR above the threshold (or mode="pruned");
+        - brute: any other tree, or mode="brute".  Pruned and local
+          score the UNION of present terms, so NOT/XOR trees take brute
+          under mode="pruned"."""
+        timer = self._timer = _StageTimer()
         node = parser.parse(query, field_keys=self._field_keys)
-        self._timer.mark("parse")
+        timer.mark("parse")
         node = self._rewrite_prefixes(node)
-        self._timer.mark("expand")
+        timer.mark("expand")
         terms = parser.query_terms(node)
         dfmap = self.term_stats(terms)
-        self._timer.mark("term_lookup")
+        timer.mark("term_lookup")
         shape = _tree_shape(node)
-        # release the previous query's brute-path cache: a long-running
-        # engine would otherwise accumulate one cached RDD per brute
-        # query until executor storage memory evicts under pressure
-        self._release_brute_cache()
-        empty = self.spark.createDataFrame(
-            [], "doc_id long, score double")
-        if shape == "empty" or not terms:
-            return empty
-        if shape in ("and", "phrase") and \
-                any(dfmap.get(t, 0) == 0 for t in terms):
-            return empty
-        if shape == "phrase":
-            # dedicated positional path: adjacency check + scoring in
-            # one decode pass, local top-k per range (only reachable
-            # when the store has positions — otherwise the rewrite
-            # already degraded the phrase to AND)
-            result = self._score_phrase_ranges(list(node[1]), dfmap, k)
-            return result.orderBy(F.desc("score"),
-                                  F.asc("doc_id")).limit(k)
-        if mode == "auto":
-            if shape in ("single", "and", "or"):
-                # below the pruning threshold the whole candidate set is
-                # a few MB decoded: serve it driver-locally (one pruned
-                # collect job, no shuffle/Python-worker round trip —
-                # oscar's in-process mmap serving, re-expressed)
-                total = sum(dfmap.get(t, 0) for t in terms)
-                mode = ("local" if total < self.PRUNE_MIN_POSTINGS
-                        else "pruned")
-            else:
-                mode = "brute"
-        # pruned / local score the UNION of present terms — on a
-        # general tree (NOT/XOR) that silently returns OR semantics, so
-        # both coerce to the set-algebra brute path
-        if mode in ("pruned", "local") and \
-                shape not in ("single", "and", "or"):
-            mode = "brute"
+        total = sum(dfmap.get(t, 0) for t in terms)
+        if shape == "empty" or total == 0 or (
+                shape in ("and", "phrase")
+                and any(dfmap.get(t, 0) == 0 for t in terms)):
+            route = "empty"
+        elif mode == "local" or (
+                mode == "auto" and total < self.PRUNE_MIN_POSTINGS):
+            route = "local"
+        elif shape == "phrase":
+            route = "phrase"
+        elif mode in ("auto", "pruned") and shape in ("single", "and", "or"):
+            route = "pruned"
+        else:
+            route = "brute"
+        return _Plan(route, node, shape, terms, dfmap, timer)
 
-        if mode == "local":
-            present = [t for t in terms if dfmap.get(t, 0) > 0]
-            # already globally sorted + k-cut in numpy (see
-            # _score_local): return the local relation as-is so the
-            # caller's collect() is driver-side, job-free
-            return self._score_local(
-                present, dfmap,
-                len(terms) if shape == "and" else None, k)
-        elif mode == "pruned":
-            result = self._search_pruned(terms, dfmap, shape, k)
+    def _result_df(self, plan: _Plan, k: int) -> DataFrame:
+        """The top-k DataFrame of a phrase / pruned / brute plan."""
+        node, terms, dfmap = plan.node, plan.terms, plan.dfmap
+        if plan.route == "phrase":
+            # adjacency check + scoring in one decode pass, local
+            # top-k per range
+            result = self._score_phrase_ranges(list(node[1]), dfmap, k)
+        elif plan.route == "pruned":
+            result = self._search_pruned(terms, dfmap, plan.shape, k)
         else:
             # cached: the set-algebra tree references `decoded` once per
             # leaf plus once for scoring — uncached, Spark re-decodes the
@@ -853,6 +911,40 @@ class SearchEngine:
             result = (decoded.join(docs, "doc_id")
                       .groupBy("doc_id").agg(F.sum("score").alias("score")))
         return result.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+
+    def _answer(self, plan: _Plan, k: int,
+                blocks: pd.DataFrame | None = None) \
+            -> list[tuple[int, float]]:
+        """Run a plan to its top-k rows; per-stage wall-clock lands in
+        self.last_stage_times."""
+        self._timer = plan.timer
+        # release the previous query's brute-path cache: a long-running
+        # engine would otherwise accumulate one cached RDD per brute
+        # query until executor storage memory evicts under pressure
+        self._release_brute_cache()
+        if plan.route == "empty":
+            rows = []
+        elif plan.route == "local":
+            rows = self._score_local(plan, k, blocks)
+        else:
+            rows = [(int(r["doc_id"]), float(r["score"]))
+                    for r in self._result_df(plan, k).collect()]
+        self._finish_timer()
+        return rows
+
+    def search_df(self, query: str, k: int = 10,
+                  mode: str = "auto") -> DataFrame:
+        """→ DataFrame(doc_id long, score double), the top-k, ordered.
+
+        Per-stage wall-clock lands in self.last_stage_times after the
+        RESULT is consumed (a caller collecting a Spark-path DataFrame
+        itself can call _finish_timer())."""
+        plan = self._plan(query, mode)
+        if plan.route in ("empty", "local"):
+            return self.spark.createDataFrame(
+                self._answer(plan, k), "doc_id long, score double")
+        self._release_brute_cache()
+        return self._result_df(plan, k)
 
     # Below this many candidate postings the driver-local path wins:
     # numpy decodes ~50M postings/s in-process, so a query only
@@ -1039,81 +1131,31 @@ class SearchEngine:
 
     def search(self, query: str, k: int = 10,
                mode: str = "auto") -> list[tuple[int, float]]:
-        rows = self.search_df(query, k, mode).collect()
-        self._finish_timer()
-        return [(int(r["doc_id"]), float(r["score"])) for r in rows]
+        """Top-k (doc_id, score), score desc then doc_id asc.  A local
+        plan returns its driver rows directly; no DataFrame is built."""
+        return self._answer(self._plan(query, mode), k)
 
     def search_many(self, queries: list[str], k: int = 10) \
             -> list[list[tuple[int, float]]]:
         """Batch serve: same answers as [search(q, k) for q in queries],
-        with every driver-local-eligible query (single/AND/OR below
-        PRUNE_MIN_POSTINGS — the common warm case) served from ONE
-        shared pruned block-fetch job over the union of their terms
-        instead of one collect job each.  Per-job launch latency is the
+        planned by the same planner, with every local plan (any shape
+        below PRUNE_MIN_POSTINGS — the common case) served from ONE
+        shared block fetch over the union of their present terms
+        instead of one fetch each.  Per-job launch latency is the
         build/serve fixed cost quantified in BENCH/CAPABILITY.md
-        (~0.2–0.3 s/job); a 10-query batch pays it once.  Non-eligible
-        queries (phrase, NOT/XOR trees, above-threshold) fall back to
-        their normal search() paths unchanged.  Driver memory for the
-        shared fetch is bounded by Σ_q PRUNE_MIN_POSTINGS decoded
-        postings (a few MB per eligible query).  last_stage_times is
-        not populated by the batch path."""
-        plans: list[tuple] = []   # (query, kind, payload)
-        union_terms: dict[str, None] = {}
-        for q in queries:
-            node = self._rewrite_prefixes(
-                parser.parse(q, field_keys=self._field_keys))
-            terms = parser.query_terms(node)
-            dfmap = self.term_stats(terms)
-            shape = _tree_shape(node)
-            if shape == "empty" or not terms or (
-                    shape in ("and", "phrase")
-                    and any(dfmap.get(t, 0) == 0 for t in terms)):
-                plans.append((q, "empty", None))
-                continue
-            total = sum(dfmap.get(t, 0) for t in terms)
-            if shape in ("single", "and", "or") and \
-                    total < self.PRUNE_MIN_POSTINGS:
-                present = [t for t in terms if dfmap.get(t, 0) > 0]
-                if not present:
-                    # e.g. a single/OR query of absent-only terms:
-                    # search() returns [] for these; classifying them
-                    # 'local' with present=[] used to crash the batch
-                    # path when NO other query contributed union terms
-                    # (shared stayed None — round-5 ADVICE fix)
-                    plans.append((q, "empty", None))
-                    continue
-                req = len(terms) if shape == "and" else None
-                plans.append((q, "local", (present, dfmap, req)))
-                for t in present:
-                    union_terms[t] = None
-            else:
-                plans.append((q, "fallback", None))
-        shared: pd.DataFrame | None = None
-        if union_terms:
-            # through the engine block cache (r06 session 3): terms
-            # already resident cost nothing; the missing ones still
-            # share ONE bucket+term-pruned fetch job — a fully warm
-            # batch is zero-job (pinned by
-            # test_search_many_single_fetch_job)
-            shared = self._fetch_blocks_local(list(union_terms))
-        out: list[list[tuple[int, float]]] = []
-        for q, kind, payload in plans:
-            if kind == "empty":
-                out.append([])
-            elif kind == "fallback":
-                out.append(self.search(q, k))
-            else:
-                present, dfmap, req = payload
-                sub = shared[shared["term"].isin(present)]
-                scored = _score_pdf(sub, self._decode, dfmap,
-                                    float(self.n_docs),
-                                    float(self.avgdl), req, local_k=k)
-                scored = scored.sort_values(
-                    ["score", "doc_id"], ascending=[False, True],
-                    kind="mergesort").head(k)
-                out.append([(int(d), float(s)) for d, s in
-                            zip(scored["doc_id"], scored["score"])])
-        return out
+        (~0.2–0.3 s/job); a 10-query batch pays it once, and a fully
+        warm batch not at all (pinned by
+        test_search_many_single_fetch_job).  Other plans run their own
+        Spark paths.  Driver memory for the shared fetch is bounded by
+        Σ_q PRUNE_MIN_POSTINGS decoded postings (a few MB per local
+        query).  After a batch, last_stage_times holds the last query's
+        stages; its rest_score_topk also counts the shared fetch and
+        the answers before it."""
+        plans = [self._plan(q, "auto") for q in queries]
+        union = [t for p in plans if p.route == "local"
+                 for t in p.terms if p.dfmap.get(t, 0) > 0]
+        shared = self._fetch_blocks_local(union) if union else None
+        return [self._answer(p, k, shared) for p in plans]
 
     def search_page(self, query: str, k: int = 10, offset: int = 0,
                     mode: str = "auto") -> list[tuple[int, float]]:
@@ -1130,6 +1172,16 @@ class SearchEngine:
                mode: str = "auto") -> "ResultCursor":
         """Lazy forward cursor over the ranked result list."""
         return ResultCursor(self, query, page=page, mode=mode)
+
+
+class _Plan(NamedTuple):
+    """A parsed, expanded and routed query (see SearchEngine._plan)."""
+    route: str                # empty | local | phrase | pruned | brute
+    node: tuple               # AST after prefix/phrase rewriting
+    shape: str                # _tree_shape(node)
+    terms: list[str]          # distinct query terms (scoring set)
+    dfmap: dict[str, int]     # document frequency of the present terms
+    timer: _StageTimer
 
 
 class ResultCursor:

@@ -1,6 +1,7 @@
 """Rank-identity over the full reference query set (FIXTURES.md §3.1):
-100 stratified queries, engine vs pinned oracle, ids AND scores.
-The pruned path is additionally checked on its eligible subset."""
+100 stratified queries, engine vs pinned oracle, ids AND scores, on
+the brute and the auto (driver-local) paths.  The pruned path is
+additionally checked on its eligible subset."""
 
 from __future__ import annotations
 
@@ -36,6 +37,14 @@ def test_reference_query_set_rank_identity(engine, oracle, corpus):
     for q in corpus:
         _assert_identical(engine.search(q, k=10, mode="brute"),
                           oracle.search(q, k=10), q)
+
+
+def test_reference_query_set_auto_path(engine, oracle, corpus):
+    """Every query shape of the set is served on the driver-local path
+    under mode="auto" (the test corpus sits far below
+    PRUNE_MIN_POSTINGS)."""
+    for q in corpus:
+        _assert_identical(engine.search(q, k=10), oracle.search(q, k=10), q)
 
 
 def test_reference_query_set_pruned_path(engine, oracle, corpus):

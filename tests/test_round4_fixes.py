@@ -281,22 +281,35 @@ def test_build_rejects_colliding_field_keys(spark, tmp_path):
 # ---- driver-local small-query serve path (auto below
 # PRUNE_MIN_POSTINGS): value-identical to pruned and brute ----
 
+def _assert_close(got, want, q):
+    assert [i for i, _ in got] == [i for i, _ in want], q
+    for (_, a), (_, b) in zip(got, want):
+        assert abs(a - b) <= 1e-9 * max(abs(a), 1.0), q
+
+
 def test_local_serve_matches_spark_paths(spark, built_index):
     from oscar_spark.serve.executor import SearchEngine
     d, _ = built_index
     eng = SearchEngine(spark, d)
     for q in ["the", "city + state", "war history world", "wd0042",
-              "of and to in"]:
+              "of and to in", '"to west"']:
         local = eng.search(q, k=10, mode="local")
         pruned = eng.search(q, k=10, mode="pruned")
         brute = eng.search(q, k=10, mode="brute")
-        # local and pruned share one kernel with a pinned block order —
-        # bit-identical; brute sums in Spark (its own float order), so
-        # its scores may differ in the last ulp
+        # local and pruned (the phrase path, for a phrase) share one
+        # kernel with a pinned block order — bit-identical; brute sums
+        # in Spark (its own float order), so its scores may differ in
+        # the last ulp
         assert local == pruned, q
-        assert [i for i, _ in local] == [i for i, _ in brute], q
-        for (_, a), (_, b) in zip(local, brute):
-            assert abs(a - b) <= 1e-9 * max(abs(a), 1.0), q
+        _assert_close(local, brute, q)
+    # every other shape is served locally too: set algebra in numpy vs
+    # the Spark set-algebra path
+    for q in ["time - year", "house ^ music", "(war + history) - world",
+              '"to west" + city', 'city ^ "to west"',
+              "the - (of + and)"]:
+        local = eng.search(q, k=10, mode="local")
+        assert local, q
+        _assert_close(local, eng.search(q, k=10, mode="brute"), q)
     # auto picks local below the threshold (test corpus is tiny)
     assert eng.search("the", k=10, mode="auto") == \
         eng.search("the", k=10, mode="local")

@@ -316,7 +316,8 @@ def test_shingle_kernel_equivalence(spark):
     shingle multiset of the old `transform(sequence, i -> concat_ws(' ',
     slice(words, i+1, 3)))` expression chain — including the < SHINGLE_N
     word drop, empty tokens from repeated separators, trailing-empty
-    split semantics, and unicode lowercasing."""
+    split semantics, and unicode lowercasing (up to the pinned
+    simple-vs-full case-mapping gap below)."""
     from pyspark.sql import functions as F
 
     from oscar_spark.operators.dedup import SHINGLE_N, _shingles
@@ -347,6 +348,18 @@ def test_shingle_kernel_equivalence(spark):
     # distinct form agrees too
     got_d = sorted(map(tuple, _shingles(docs).collect()))
     assert got_d == sorted(set(want))
+    # Known gap, pinned rather than claimed away: Arrow's utf8_lower
+    # applies Unicode SIMPLE case mapping, one code point to one, while
+    # the JVM's lower() (String.toLowerCase) applies FULL case mapping.
+    # They differ where the full mapping expands: U+0130 'İ' becomes
+    # 'i' in the kernel but 'i' + U+0307 (combining dot above) in
+    # Spark.  U+1E9E 'ẞ' lowers to 'ß' in both.
+    pinned = spark.createDataFrame([(8, "İstanbul ẞtraße x")],
+                                   "doc_id long, text string")
+    assert [r["shingle"] for r in _shingles(pinned).collect()] == [
+        "istanbul ßtraße x"]
+    jvm = pinned.select(F.lower("text").alias("t")).first()["t"]
+    assert jvm == "i\u0307stanbul ßtraße x"
 
 
 def test_generate_pages_text_matches_extract():

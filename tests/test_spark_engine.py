@@ -184,6 +184,7 @@ def test_block_cache_eviction_keeps_requested_terms():
     eng._block_cache = OrderedDict()
     eng._block_cache_bytes = 0
     eng.BLOCK_CACHE_MAX_BYTES = 100
+    eng.has_positions = False
     store = {"a": [{"term": "a", "range_id": 0, "doc_count": 1,
                     "payload": b"A" * 60}],
              "b": [{"term": "b", "range_id": 1, "doc_count": 1,
@@ -199,14 +200,20 @@ def test_block_cache_eviction_keeps_requested_terms():
     assert eng._block_cache_bytes == 60
 
 
+def _cached_nbytes(eng, term: str) -> int:
+    """Block-cache bytes of one term: payload plus pos_payload."""
+    blocks = eng._fetch_blocks_local([term])
+    return int(sum(blocks[c].map(len).sum() for c in
+                   ("payload", "pos_payload") if c in blocks))
+
+
 def test_block_cache_near_cap_and_query_matches_uncached(spark,
                                                          built_index):
     """A warm term plus a cold one whose blocks together exceed the
     cache cap: the AND query must still match the uncached engine."""
     d, _ = built_index
     probe = SearchEngine(spark, d)
-    nbytes = {t: int(probe._fetch_blocks_local([t])["payload"]
-                     .map(len).sum()) for t in ("war", "history")}
+    nbytes = {t: _cached_nbytes(probe, t) for t in ("war", "history")}
     uncached = SearchEngine(spark, d)
     uncached.BLOCK_CACHE_MAX_BYTES = 0  # every term served uncached
     expected = uncached.search("war history", k=10, mode="local")
@@ -215,6 +222,63 @@ def test_block_cache_near_cap_and_query_matches_uncached(spark,
     eng.BLOCK_CACHE_MAX_BYTES = sum(nbytes.values()) - 1
     eng.search("war", k=10, mode="local")  # warm one term
     assert eng.search("war history", k=10, mode="local") == expected
+
+
+@pytest.mark.parametrize("near_cap", [False, True])
+def test_block_cache_phrase_after_term_query_matches_uncached(
+        spark, built_index, near_cap):
+    """Terms that enter the block cache through non-phrase queries then
+    serve a phrase from the cache (their pos_payload comes along, and
+    counts toward the cap): the phrase answer, bare and inside a
+    combinator, must equal the uncached engine's — also when the cap
+    holds only part of the phrase's terms."""
+    d, _ = built_index
+    toks = ("to", "west")
+    queries = ['"to west"', '"to west" - city']
+    uncached = SearchEngine(spark, d)
+    uncached.BLOCK_CACHE_MAX_BYTES = 0
+    expected = [uncached.search(q, k=10) for q in queries]
+    assert expected[0]
+    eng = SearchEngine(spark, d)
+    if near_cap:
+        probe = SearchEngine(spark, d)
+        eng.BLOCK_CACHE_MAX_BYTES = sum(
+            _cached_nbytes(probe, t) for t in toks) - 1
+    eng.search("to", k=10)
+    eng.search("west + nosuchterm", k=10)
+    assert "to" in eng._block_cache or "west" in eng._block_cache
+    assert eng._block_cache_bytes <= eng.BLOCK_CACHE_MAX_BYTES
+    assert [eng.search(q, k=10) for q in queries] == expected
+    assert eng.search_many(queries, k=10) == expected
+
+
+def test_warm_local_shapes_run_zero_jobs(spark, built_index, oracle):
+    """Once its terms are in the block cache, a query of any shape below
+    PRUNE_MIN_POSTINGS runs no Spark job: an AND with an empty answer
+    (no DataFrame built), NOT, XOR and a phrase.  last_stage_times is
+    still filled (cli bench and bench.py read it)."""
+    from oscar_spark.serve.executor import SERVE_STAGES
+    d, _ = built_index
+    mid = sorted((t for t in oracle.postings if 2 <= oracle.df(t) <= 30),
+                 key=lambda t: (-oracle.df(t), t))
+    a, b = next((a, b) for a in mid for b in mid if a < b and not (
+        set(oracle.postings[a]) & set(oracle.postings[b])))
+    queries = [f"{a} {b}", "time - year", "house ^ music", '"to west"']
+    eng = SearchEngine(spark, d)
+    first = [eng.search(q, k=10) for q in queries]
+    assert first[0] == [] and all(first[1:])
+    sc = spark.sparkContext
+    for i, q in enumerate(queries):
+        eng.last_stage_times = None
+        group = f"warm-local-{i}"
+        sc.setJobGroup(group, q)
+        try:
+            assert eng.search(q, k=10) == first[i]
+        finally:
+            sc.setJobGroup(None, None)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        assert len(jobs) == 0, f"{q!r} ran Spark jobs {jobs}"
+        assert set(eng.last_stage_times) == set(SERVE_STAGES), q
 
 
 def test_dont_crash_queries(engine):
