@@ -284,9 +284,10 @@ def dedup_components(spark: SparkSession, sf_dir: str,
     large-star/small-star map-reduce CC algorithm), which converges in
     O(component diameter) rounds — near-dup components are shallow
     (docs similar to a common template), so a handful of shuffles, each
-    over |E| rows, at any corpus size.  Labels are checkpointed per
-    round: iterative lineage otherwise re-executes the whole prefix
-    every round.
+    over |E| rows, at any corpus size.  Labels are persisted and
+    materialized per round, and the superseded round released:
+    iterative lineage otherwise re-executes the whole prefix every
+    round.
 
     The loop ALWAYS runs to the fixpoint (min-label propagation is
     monotone-decreasing over a finite label set, so it terminates in
@@ -300,23 +301,21 @@ def dedup_components(spark: SparkSession, sf_dir: str,
                           F.col("doc_b").alias("dst"))
              .union(pairs.select(F.col("doc_b").alias("src"),
                                  F.col("doc_a").alias("dst"))))
-    edges = edges.localCheckpoint(eager=True)
-    labels = (edges.select(F.col("src").alias("doc_id")).distinct()
-              .withColumn("comp", F.col("doc_id"))
-              .localCheckpoint(eager=True))
+    edges = _materialize(edges)
+    labels = _materialize(edges.select(F.col("src").alias("doc_id"))
+                          .distinct().withColumn("comp", F.col("doc_id")))
     rounds = 0
     while True:
         neigh = (edges.join(labels.withColumnRenamed("doc_id", "src"),
                             "src")
                  .groupBy(F.col("dst").alias("doc_id"))
                  .agg(F.min("comp").alias("ncomp")))
-        new_labels = (labels.join(neigh, "doc_id", "left")
-                      .select("doc_id",
-                              F.least(F.col("comp"),
-                                      F.coalesce(F.col("ncomp"),
-                                                 F.col("comp")))
-                              .alias("comp"))
-                      .localCheckpoint(eager=True))
+        new_labels = _materialize(
+            labels.join(neigh, "doc_id", "left")
+            .select("doc_id",
+                    F.least(F.col("comp"),
+                            F.coalesce(F.col("ncomp"), F.col("comp")))
+                    .alias("comp")))
         changed = (new_labels.alias("n").join(labels.alias("o"), "doc_id")
                    .filter(F.col("n.comp") != F.col("o.comp")).count())
         labels.unpersist()
@@ -330,7 +329,19 @@ def dedup_components(spark: SparkSession, sf_dir: str,
                 f"dedup_components: not converged after {max_iter} "
                 "rounds (unusually deep near-dup component); continuing "
                 "to fixpoint", stacklevel=2)
+    edges.unpersist()
     return labels.orderBy("doc_id")
+
+
+def _materialize(df: DataFrame) -> DataFrame:
+    """Persist `df` and fill its cache now.  persist, not
+    localCheckpoint: lost blocks are recomputed from lineage instead of
+    failing the job, and unpersist() really releases the cache (a
+    checkpointed Dataset's unpersist is a no-op, so every round's labels
+    stayed resident)."""
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    df.count()
+    return df
 
 
 def dedup_components_sql() -> str:

@@ -13,14 +13,16 @@ loading ItemIndex data) → four execution strategies:
 
 - local (default for EVERY query shape — single, AND, OR, NOT, XOR,
   nested trees, bare or nested phrases — whose present terms total
-  fewer than PRUNE_MIN_POSTINGS postings): blocks come from the
-  engine's LRU block cache (one pruned collect job for the terms not
-  yet resident, none once warm), then decode + set algebra + BM25 +
-  top-k run in numpy and search() returns the driver rows directly —
-  no DataFrame is built.  The analog of oscar answering every set-op
-  query from the mmap'd index inside the server process
-  (DecelledACOT::execute).  Same scoring and phrase kernels as the
-  distributed paths.
+  fewer than PRUNE_MIN_POSTINGS postings): each term is decoded ONCE
+  per engine into sorted doc ids, final BM25 scores (and positions on
+  positional stores) held in the engine's LRU block cache — one pruned
+  collect job plus one decode for the terms not yet resident, neither
+  once warm.  Set algebra, score sums, phrase adjacency and top-k then
+  run on those numpy arrays and search() returns the driver rows
+  directly — no DataFrame is built.  The analog of oscar answering
+  every set-op query from the index resident in the server process
+  (DecelledACOT::execute).  Same decode routine and array kernels as
+  the distributed paths.
 
 - brute: decode every matching block, score, set-algebra on DataFrames,
   global TakeOrdered(k).  Serves NOT/XOR/nested trees above the
@@ -46,8 +48,9 @@ loading ItemIndex data) → four execution strategies:
   cell-wise set ops with fm/pm refinement, SURVEY.md §2.6).
 
 The Spark paths are DataFrame + Arrow kernels; per-range scoring is a
-vectorized numpy applyInPandas (decode → bm25_np → segment-sum), with a
-local per-range top-k cut so the final shuffle moves ≤ k rows per range.
+vectorized numpy applyInPandas (decode → bm25_np → segment-sum, the
+local path's kernels behind a thin pandas adapter), with a local
+per-range top-k cut so the final shuffle moves ≤ k rows per range.
 """
 
 from __future__ import annotations
@@ -62,7 +65,7 @@ from pyspark.sql import functions as F
 
 from oscar_spark.config import NUM_TERM_BUCKETS, RANGE_SIZE
 from oscar_spark.functions.bm25 import bm25_np
-from oscar_spark.functions.codec import store_decoder
+from oscar_spark.functions.codec import decode_position_block, store_decoder
 from oscar_spark.serve import parser
 from oscar_spark.sources.tables import IndexStore
 
@@ -112,38 +115,70 @@ SERVE_STAGES = ["parse", "expand", "term_lookup", "meta_prune",
                 "seed_score", "rest_score_topk"]
 
 
-def _score_pdf(pdf: pd.DataFrame, decode, dfmap: dict[str, int],
-               n_docs: float, avgdl: float, require_all: int | None,
-               local_k: int | None) -> pd.DataFrame:
-    """Decode + BM25 + per-doc sum over one batch of posting blocks —
-    the single scoring kernel shared by the distributed per-range
-    applyInPandas path (_score_ranges) and the driver-local small-query
-    path (_score_local), so both are value-identical by construction.
+_NO_DOCS = np.empty(0, dtype=np.int64)
+_NO_SCORES = np.empty(0, dtype=np.float64)
 
-    Blocks are sorted by (term, range_id) first: float addition is
-    non-associative, and without a pinned order each doc's per-term
-    score sum depends on shuffle arrival order — the two paths (and
-    even two runs of one path) could differ in the last ulp."""
-    if len(pdf):
-        pdf = pdf.sort_values(["term", "range_id"], kind="mergesort")
-    all_ids, all_scores = [], []
-    for term, payload, doc_count, range_id in zip(
-            pdf["term"], pdf["payload"], pdf["doc_count"],
-            pdf["range_id"]):
-        ids, tfs, dls = decode(
-            bytes(payload), int(doc_count), int(range_id) * RANGE_SIZE)
-        df_t = float(dfmap.get(term, 0))
-        if df_t <= 0:
-            continue
-        all_ids.append(ids)
-        all_scores.append(bm25_np(
-            tfs.astype(np.float64), dls.astype(np.float64),
-            df_t, n_docs, avgdl))
-    if not all_ids:
-        return pd.DataFrame({"doc_id": pd.array([], dtype="int64"),
-                             "score": pd.array([], dtype="float64")})
-    ids = np.concatenate(all_ids)
-    scores = np.concatenate(all_scores)
+
+class _Postings(NamedTuple):
+    """One term's decoded posting columns, in doc-id order."""
+    ids: np.ndarray            # sorted int64 doc ids
+    scores: np.ndarray         # float64 BM25 per posting
+    flat: np.ndarray | None    # positions, on positional stores
+    offs: np.ndarray | None    # posting i: flat[offs[i]:offs[i + 1]]
+
+    @property
+    def nbytes(self) -> int:
+        """Bytes of the decoded arrays — what the block cache's cap
+        counts."""
+        return sum(a.nbytes for a in self if a is not None)
+
+
+def _decode_term(blocks, decode, df: float, n_docs: float,
+                 avgdl: float) -> _Postings:
+    """One term's posting blocks (range_id, doc_count, payload[,
+    pos_payload]) → its decoded columns: the single decode + BM25
+    routine behind the driver-local, per-range and brute paths.
+
+    Blocks of one term are DISJOINT and internally sorted, so ordering
+    them by first doc id makes the concatenation globally sorted.  BM25
+    is the elementwise bm25_np, so a posting's score does not depend on
+    which other blocks were decoded with it; positions are decoded only
+    when the blocks carry a pos_payload."""
+    parts = []
+    for blk in blocks:
+        ids, tfs, dls = decode(bytes(blk[2]), int(blk[1]),
+                               int(blk[0]) * RANGE_SIZE)
+        parts.append((ids, tfs, dls, blk[3] if len(blk) > 3 else None))
+    if not parts:
+        return _Postings(_NO_DOCS, _NO_SCORES, None, None)
+    parts.sort(key=lambda p: int(p[0][0]) if len(p[0]) else -1)
+    ids = np.concatenate([p[0] for p in parts]).astype(np.int64, copy=False)
+    tfs = np.concatenate([p[1] for p in parts])
+    dls = np.concatenate([p[2] for p in parts])
+    scores = bm25_np(tfs.astype(np.float64), dls.astype(np.float64),
+                     df, n_docs, avgdl)
+    flat = offs = None
+    if parts[0][3] is not None:
+        flat = np.concatenate([
+            decode_position_block(bytes(p[3]), p[1])[0] for p in parts])
+        offs = np.zeros(len(ids) + 1, dtype=np.int64)
+        np.cumsum(tfs, out=offs[1:])
+    return _Postings(ids, scores, flat, offs)
+
+
+def _sum_topk(cols: list[_Postings], require_all: int | None,
+              local_k: int | None) -> tuple[np.ndarray, np.ndarray]:
+    """(doc ids, Σ BM25) over the given terms' columns, keeping only
+    docs matched by all `require_all` terms (AND) when set, cut to the
+    top local_k by (score desc, doc asc) when set.  Callers pass the
+    columns in sorted-term order: float addition is non-associative, so
+    np.add.at over the concatenation pins each doc's summation order —
+    every path sums a doc's terms in the same order and is
+    value-identical."""
+    if not cols:
+        return _NO_DOCS, _NO_SCORES
+    ids = np.concatenate([c.ids for c in cols])
+    scores = np.concatenate([c.scores for c in cols])
     uniq, inv = np.unique(ids, return_inverse=True)
     ssum = np.zeros(len(uniq))
     np.add.at(ssum, inv, scores)
@@ -154,68 +189,28 @@ def _score_pdf(pdf: pd.DataFrame, decode, dfmap: dict[str, int],
     if local_k is not None and len(uniq) > local_k:
         order = np.lexsort((uniq, -ssum))[:local_k]
         uniq, ssum = uniq[order], ssum[order]
-    return pd.DataFrame({"doc_id": uniq.astype(np.int64),
-                         "score": ssum})
+    return uniq, ssum
 
 
-def _phrase_pdf(pdf: pd.DataFrame, toks: list[str], decode,
-                dfmap: dict[str, int], n_docs: float, avgdl: float,
-                local_k: int | None, docs_only: bool = False) -> pd.DataFrame:
-    """(doc_id, score) for docs containing the EXACT phrase `toks`, over
-    one batch of (term, range_id, doc_count, payload, pos_payload) blocks
-    of the phrase's member terms: decode each member term's ids +
-    positions, intersect doc sets, verify adjacency (pos of tok_i ==
-    start+i), score matched docs as Σ BM25 of the DISTINCT member terms.
-    The single adjacency kernel shared by the distributed per-range path
-    (_score_phrase_ranges) and the driver-local path (_score_local); a
-    batch may span any number of ranges.  docs_only skips the scoring
-    (set-algebra membership; scores are returned as zeros)."""
-    from oscar_spark.functions.codec import decode_position_block
+def _phrase_match(toks: list[str], cols: dict[str, _Postings],
+                  local_k: int | None, docs_only: bool = False) \
+        -> tuple[np.ndarray, np.ndarray]:
+    """(doc ids, scores) of docs containing the EXACT phrase `toks`,
+    from its member terms' columns (ids + positions): intersect doc
+    sets, verify adjacency (pos of tok_i == start+i), score matched docs
+    as Σ BM25 of the DISTINCT member terms in token order.  Everything
+    is numpy set algebra on sorted arrays (the vectorized form of
+    oscar's position-list adjacency walk), no per-posting Python.
+    docs_only skips the scoring (set-algebra membership; scores are
+    returned as zeros)."""
     uniq = list(dict.fromkeys(toks))
-    acc: dict[str, list] = {t: [] for t in uniq}
-    for term, payload, posp, doc_count, range_id in zip(
-            pdf["term"], pdf["payload"], pdf["pos_payload"],
-            pdf["doc_count"], pdf["range_id"]):
-        ids, tfs, dls = decode(
-            bytes(payload), int(doc_count), int(range_id) * RANGE_SIZE)
-        flat, offs = decode_position_block(bytes(posp), tfs)
-        acc[term].append((ids, tfs, dls, flat, offs))
-    empty = pd.DataFrame({"doc_id": pd.array([], dtype="int64"),
-                          "score": pd.array([], dtype="float64")})
-    if any(not acc[t] for t in uniq):
-        return empty
-    # per term: one sorted id array + flat positions with per-doc
-    # offsets.  Blocks of one term are DISJOINT and internally sorted,
-    # so ordering blocks by first doc_id makes the concatenation
-    # globally sorted — everything downstream is numpy set algebra on
-    # sorted arrays (the vectorized form of oscar's position-list
-    # adjacency walk), no per-posting Python.
-    t_ids: dict[str, np.ndarray] = {}
-    t_sc: dict[str, np.ndarray] = {}
-    t_flat: dict[str, np.ndarray] = {}
-    t_offs: dict[str, np.ndarray] = {}
-    for t in uniq:
-        blks = sorted(acc[t], key=lambda b: int(b[0][0]) if len(b[0]) else -1)
-        ids = np.concatenate([b[0] for b in blks]).astype(np.int64)
-        cnts = np.concatenate([(b[4][1:] - b[4][:-1]) for b in blks])
-        offs = np.zeros(len(ids) + 1, dtype=np.int64)
-        np.cumsum(cnts, out=offs[1:])
-        t_ids[t] = ids
-        t_flat[t] = np.concatenate([b[3] for b in blks]).astype(np.int64)
-        t_offs[t] = offs
-        if not docs_only:
-            # docs_only callers score matched docs themselves, so
-            # computing BM25 here would be pure double work
-            tfs = np.concatenate([b[1] for b in blks])
-            dls = np.concatenate([b[2] for b in blks])
-            t_sc[t] = bm25_np(
-                tfs.astype(np.float64), dls.astype(np.float64),
-                float(dfmap.get(t, 0)), n_docs, avgdl)
-    cand = t_ids[uniq[0]]
+    if any(t not in cols for t in uniq):
+        return _NO_DOCS, _NO_SCORES
+    cand = cols[uniq[0]].ids
     for t in uniq[1:]:
-        cand = np.intersect1d(cand, t_ids[t], assume_unique=True)
+        cand = np.intersect1d(cand, cols[t].ids, assume_unique=True)
         if cand.size == 0:
-            return empty
+            return _NO_DOCS, _NO_SCORES
     # candidate-doc positions of term t as sorted composite keys
     # (doc_rank << 32 | position): membership of "(doc, p+i) in
     # term_i's positions" becomes one searchsorted per token
@@ -224,16 +219,16 @@ def _phrase_pdf(pdf: pd.DataFrame, toks: list[str], decode,
     def cand_keys(t: str) -> np.ndarray:
         got = key_cache.get(t)
         if got is None:
-            idx = np.searchsorted(t_ids[t], cand)
-            offs, flat = t_offs[t], t_flat[t]
-            lens = offs[idx + 1] - offs[idx]
+            c = cols[t]
+            idx = np.searchsorted(c.ids, cand)
+            lens = c.offs[idx + 1] - c.offs[idx]
             csum = np.zeros(len(idx) + 1, dtype=np.int64)
             np.cumsum(lens, out=csum[1:])
             gather = (np.arange(csum[-1], dtype=np.int64)
                       - np.repeat(csum[:-1], lens)
-                      + np.repeat(offs[idx], lens))
+                      + np.repeat(c.offs[idx], lens))
             drep = np.repeat(np.arange(cand.size, dtype=np.int64), lens)
-            got = (drep << 32) | flat[gather]
+            got = (drep << 32) | c.flat[gather]
             key_cache[t] = got
         return got
 
@@ -245,19 +240,56 @@ def _phrase_pdf(pdf: pd.DataFrame, toks: list[str], decode,
         hit_c = np.minimum(hit, keys_i.size - 1)
         starts = starts[keys_i[hit_c] == want]
         if starts.size == 0:
-            return empty
+            return _NO_DOCS, _NO_SCORES
     ids_a = cand[np.unique(starts >> np.int64(32))]
     sc_a = np.zeros(ids_a.size, dtype=np.float64)
     if not docs_only:
         for t in uniq:
-            sc_a += t_sc[t][np.searchsorted(t_ids[t], ids_a)]
+            sc_a += cols[t].scores[np.searchsorted(cols[t].ids, ids_a)]
     if local_k is not None and len(ids_a) > local_k:
         order = np.lexsort((ids_a, -sc_a))[:local_k]
         ids_a, sc_a = ids_a[order], sc_a[order]
-    return pd.DataFrame({"doc_id": ids_a, "score": sc_a})
+    return ids_a, sc_a
 
 
-_NO_DOCS = np.empty(0, dtype=np.int64)
+def _by_term(pdf: pd.DataFrame, cols: tuple[str, ...]) -> dict[str, list]:
+    """A batch of posting-block rows grouped per term: term → [(range_id,
+    doc_count, payload[, pos_payload])], the input of _decode_term."""
+    out: dict[str, list] = {}
+    for term, *blk in zip(pdf["term"], *(pdf[c] for c in cols)):
+        out.setdefault(term, []).append(blk)
+    return out
+
+
+def _score_pdf(pdf: pd.DataFrame, decode, dfmap: dict[str, int],
+               n_docs: float, avgdl: float, require_all: int | None,
+               local_k: int | None) -> pd.DataFrame:
+    """_sum_topk over one applyInPandas batch of posting blocks (the
+    per-range path, _score_ranges): the batch is decoded per term
+    through _decode_term, so the distributed and driver-local paths are
+    value-identical by construction."""
+    groups = _by_term(pdf, ("range_id", "doc_count", "payload"))
+    ids, scores = _sum_topk(
+        [_decode_term(groups[t], decode, float(dfmap[t]), n_docs, avgdl)
+         for t in sorted(groups) if dfmap.get(t, 0) > 0],
+        require_all, local_k)
+    return pd.DataFrame({"doc_id": ids, "score": scores})
+
+
+def _phrase_pdf(pdf: pd.DataFrame, toks: list[str], decode,
+                dfmap: dict[str, int], n_docs: float, avgdl: float,
+                local_k: int | None, docs_only: bool = False) -> pd.DataFrame:
+    """_phrase_match over one applyInPandas batch of (term, range_id,
+    doc_count, payload, pos_payload) blocks of the phrase's member terms
+    (the per-range phrase path, _score_phrase_ranges), decoded per term
+    through _decode_term like the driver-local path."""
+    groups = _by_term(pdf, ("range_id", "doc_count", "payload",
+                            "pos_payload"))
+    ids, scores = _phrase_match(
+        toks, {t: _decode_term(b, decode, float(dfmap.get(t, 0)), n_docs,
+                               avgdl) for t, b in groups.items()},
+        local_k, docs_only)
+    return pd.DataFrame({"doc_id": ids, "score": scores})
 
 
 def _eval_local(node, term_ids: dict[str, np.ndarray],
@@ -284,12 +316,6 @@ def _eval_local(node, term_ids: dict[str, np.ndarray],
     if kind == "xor":
         return np.setxor1d(left, right, assume_unique=True)
     raise ValueError(kind)
-
-
-def _blocks_nbytes(blks: list) -> int:
-    """Payload bytes of cached block tuples (range_id, doc_count,
-    payload[, pos_payload]) — what the block cache's cap counts."""
-    return sum(len(p) for blk in blks for p in blk[2:])
 
 
 def _tree_shape(node) -> str:
@@ -355,20 +381,20 @@ class SearchEngine:
         self._terms_rev = self.store.read(spark, "terms_rev")
         self._terms_ngram = self.store.read(spark, "terms_ngram")
         self._brute_cache: DataFrame | None = None
-        # r06 session 3: bounded driver-side postings-block cache for
-        # the driver-local scoring path — the serving analog of oscar
-        # keeping its index mmap'd+mlocked in the server process (S7,
+        # bounded driver-side cache of DECODED posting columns for the
+        # driver-local path — the serving analog of oscar keeping its
+        # index mmap'd+mlocked in the server process (S7,
         # reference/oscar-cmd/Workfunctions.cpp:781-820): a term's
-        # (pruned, ≤PRUNE_MIN_POSTINGS) payload blocks are fetched from
-        # the store ONCE per engine and re-scored from process memory on
-        # every later query that touches the term — scoring still runs
-        # in full each time; only the block FETCH job is saved.  LRU by
-        # payload bytes, capped at BLOCK_CACHE_MAX_BYTES; released by
-        # drop_memory() with everything else.  Engine instances bind a
-        # store snapshot at construction (self.postings), so the cache
-        # can never outlive the snapshot it mirrors.
+        # (≤PRUNE_MIN_POSTINGS) blocks are fetched and decoded ONCE per
+        # engine into sorted doc ids + final BM25 scores (+ positions),
+        # and every later query that touches the term is pure array
+        # work.  Engine instances bind a store snapshot at construction
+        # (self.postings, fixed df/N/avgdl), so a cached score can
+        # never go stale.  LRU by decoded bytes (_Postings.nbytes),
+        # capped at BLOCK_CACHE_MAX_BYTES; released by drop_memory()
+        # with everything else.
         from collections import OrderedDict
-        self._block_cache: OrderedDict[str, list] = OrderedDict()
+        self._block_cache: OrderedDict[str, _Postings] = OrderedDict()
         self._block_cache_bytes = 0
         self._timer: _StageTimer | None = None
         self.last_stage_times: dict[str, float] | None = None
@@ -610,7 +636,7 @@ class SearchEngine:
                 ["bucket", "payload_hash"])
         return df
 
-    # ---- shared scoring kernel ----
+    # ---- per-range scoring (the _sum_topk kernel per range) ----
     def _score_ranges(self, blocks: DataFrame, dfmap: dict[str, int],
                       require_all: int | None, local_k: int | None) -> DataFrame:
         """blocks (with payload) → (doc_id, score[, n_terms]) per range.
@@ -628,26 +654,24 @@ class SearchEngine:
         return blocks.groupBy("range_id").applyInPandas(
             lambda key, pdf: kernel(pdf), "doc_id long, score double")
 
-    BLOCK_CACHE_MAX_BYTES = 64 << 20  # driver-local payload cache cap
+    BLOCK_CACHE_MAX_BYTES = 64 << 20  # driver-local decoded-column cap
 
-    def _fetch_blocks_local(self, terms: list[str]) -> pd.DataFrame:
-        """Collected (term, range_id, doc_count, payload[, pos_payload])
-        block rows for the driver-local path, through the engine's
-        bounded LRU block cache: terms already resident cost no Spark
-        job; the missing ones are fetched in ONE bucket+term-pruned job.
-        On positional stores every entry carries its pos_payload too, so
-        a term cached by any query can serve a later phrase, and the
-        byte accounting counts both payloads.  Assembly order is
-        irrelevant downstream — the kernels pin their own block order
-        before any float accumulation."""
+    def _fetch_blocks_local(self, terms: list[str]) -> dict[str, _Postings]:
+        """term → decoded posting columns (_decode_term) for the
+        driver-local path, through the engine's bounded LRU block cache:
+        resident terms cost no Spark job and no decode; the missing ones
+        are fetched in ONE bucket+term-pruned job and decoded once.  On
+        positional stores every entry carries its positions too, so a
+        term cached by any query can serve a later phrase, and the byte
+        accounting counts them."""
         cols = ["range_id", "doc_count", "payload"] + (
             ["pos_payload"] if self.has_positions else [])
         # dedupe (order-preserving): the old isin() fetch was set-
         # semantic, so a repeated term must not contribute twice
         terms = list(dict.fromkeys(terms))
-        # snapshot the resident terms' blocks BEFORE inserting fetched
+        # snapshot the resident terms' columns BEFORE inserting fetched
         # ones: an insert may evict a term this very call still needs
-        got: dict[str, list] = {}
+        got: dict[str, _Postings] = {}
         for t in terms:
             if t in self._block_cache:
                 self._block_cache.move_to_end(t)  # LRU touch
@@ -656,15 +680,16 @@ class SearchEngine:
         if missing:
             rows = (self._blocks(missing, meta_only=False)
                     .select("term", *cols).collect())
+            blocks: dict[str, list] = {t: [] for t in missing}
+            for term, *blk in rows:
+                blocks[term].append(blk)
+            dfmap = self.term_stats(missing)
+            n_docs, avgdl = float(self.n_docs), float(self.avgdl)
             for t in missing:
-                got[t] = []
-            for r in rows:
-                got[r["term"]].append(
-                    (int(r["range_id"]), int(r["doc_count"]),
-                     *(bytes(r[c]) for c in cols[2:])))
-            for t in missing:
-                blks = got[t]
-                nb = _blocks_nbytes(blks)
+                got[t] = post = _decode_term(
+                    blocks[t], self._decode, float(dfmap.get(t, 0)),
+                    n_docs, avgdl)
+                nb = post.nbytes
                 # a term larger than the whole cap is served uncached
                 # rather than evicting everything else
                 if nb > self.BLOCK_CACHE_MAX_BYTES:
@@ -672,59 +697,49 @@ class SearchEngine:
                 while (self._block_cache_bytes + nb
                        > self.BLOCK_CACHE_MAX_BYTES and self._block_cache):
                     _, old = self._block_cache.popitem(last=False)
-                    self._block_cache_bytes -= _blocks_nbytes(old)
-                self._block_cache[t] = blks
+                    self._block_cache_bytes -= old.nbytes
+                self._block_cache[t] = post
                 self._block_cache_bytes += nb
-        return pd.DataFrame([(t, *blk) for t in terms for blk in got[t]],
-                            columns=["term", *cols])
+        return {t: got[t] for t in terms}
 
     def _score_local(self, plan: _Plan, k: int,
-                     blocks: pd.DataFrame | None = None) \
+                     blocks: dict[str, _Postings] | None = None) \
             -> list[tuple[int, float]]:
         """Driver-side answer for a query whose present terms total
-        fewer than PRUNE_MIN_POSTINGS postings, any shape: blocks from
-        the block cache (or `blocks`, a batch's shared fetch), then
-        decode + set algebra + BM25 + top-k in numpy, returned as driver
-        rows — the analog of oscar serving from its mmap'd index inside
-        the server process.  Below the threshold the decoded arrays are
-        a few MB, and any Spark round trip costs more than numpy's work.
+        fewer than PRUNE_MIN_POSTINGS postings, any shape: decoded
+        columns from the block cache (or `blocks`, a batch's shared
+        fetch), then set algebra + score sums + top-k on numpy arrays,
+        returned as driver rows — the analog of oscar serving from its
+        mmap'd index inside the server process.  Below the threshold the
+        decoded arrays are a few MB, and any Spark round trip costs more
+        than numpy's work.
 
-        - single/AND/OR: _score_pdf over every block (global
-          unique-sum is correct because doc ids are distinct across
-          ranges), so local and pruned are value-identical.
-        - bare phrase: _phrase_pdf over every range, so local and the
-          phrase path are value-identical.
-        - any other tree: per-term sorted doc ids and BM25 from
-          _score_pdf, set algebra as in _eval_node (_eval_local), and
+        - single/AND/OR: _sum_topk over the terms in sorted order, the
+          kernel the per-range path runs, so local and pruned are
+          value-identical (doc ids are distinct across ranges, so a
+          global sum equals the per-range ones).
+        - bare phrase: _phrase_match, the phrase path's kernel.
+        - any other tree: set algebra as in _eval_node (_eval_local),
           each matched doc scored as Σ BM25 over the present query
-          terms, summed in _score_pdf's (sorted term) order."""
+          terms, summed in sorted term order like _sum_topk."""
         present = [t for t in plan.terms if plan.dfmap.get(t, 0) > 0]
-        pdf = (self._fetch_blocks_local(present) if blocks is None
-               else blocks[blocks["term"].isin(present)])
-        args = (self._decode, plan.dfmap, float(self.n_docs),
-                float(self.avgdl))
+        cols = (self._fetch_blocks_local(present) if blocks is None
+                else {t: blocks[t] for t in present})
         if plan.shape in ("single", "and", "or"):
-            out = _score_pdf(pdf, *args, len(plan.terms)
-                             if plan.shape == "and" else None, local_k=k)
-            ids, scores = out["doc_id"].to_numpy(), out["score"].to_numpy()
+            ids, scores = _sum_topk(
+                [cols[t] for t in sorted(cols)],
+                len(plan.terms) if plan.shape == "and" else None, k)
         elif plan.shape == "phrase":
-            out = _phrase_pdf(pdf, list(plan.node[1]), *args, local_k=k)
-            ids, scores = out["doc_id"].to_numpy(), out["score"].to_numpy()
+            ids, scores = _phrase_match(list(plan.node[1]), cols, k)
         else:
-            per_term = {t: _score_pdf(g, *args, None, None)
-                        for t, g in pdf.groupby("term", sort=True)}
-
-            def phrase_ids(toks: list[str]) -> np.ndarray:
-                sub = pdf[pdf["term"].isin(toks)]
-                return _phrase_pdf(sub, toks, *args, None, docs_only=True)[
-                    "doc_id"].to_numpy()
-
             ids = _eval_local(
-                plan.node, {t: o["doc_id"].to_numpy()
-                            for t, o in per_term.items()}, phrase_ids)
+                plan.node, {t: c.ids for t, c in cols.items()},
+                lambda toks: _phrase_match(toks, cols, None, True)[0])
             scores = np.zeros(len(ids))
-            for o in per_term.values():
-                t_ids, t_sc = o["doc_id"].to_numpy(), o["score"].to_numpy()
+            for t in sorted(cols):
+                t_ids, t_sc = cols[t].ids, cols[t].scores
+                if not len(t_ids):
+                    continue
                 at = np.minimum(np.searchsorted(t_ids, ids), len(t_ids) - 1)
                 hit = t_ids[at] == ids
                 scores[hit] += t_sc[at[hit]]
@@ -795,24 +810,20 @@ class SearchEngine:
         def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:
                 terms_o, ids_o, sc_o = [], [], []
-                for term, payload, doc_count, range_id in zip(
-                        pdf["term"], pdf["payload"], pdf["doc_count"],
-                        pdf["range_id"]):
-                    ids, tfs, dls = decode(
-                        bytes(payload), int(doc_count),
-                        int(range_id) * RANGE_SIZE)
+                # one block at a time: rows leave in their arrival order
+                for term, *blk in zip(pdf["term"], pdf["range_id"],
+                                      pdf["doc_count"], pdf["payload"]):
                     df_t = float(dfmap.get(term, 0))
                     if df_t <= 0:
                         continue
-                    sc = bm25_np(tfs.astype(np.float64),
-                                 dls.astype(np.float64), df_t, n_docs, avgdl)
-                    terms_o.append(np.full(len(ids), term, dtype=object))
-                    ids_o.append(ids)
-                    sc_o.append(sc)
+                    post = _decode_term([blk], decode, df_t, n_docs, avgdl)
+                    terms_o.append(np.full(len(post.ids), term, dtype=object))
+                    ids_o.append(post.ids)
+                    sc_o.append(post.scores)
                 if terms_o:
                     yield pd.DataFrame({
                         "term": np.concatenate(terms_o),
-                        "doc_id": np.concatenate(ids_o).astype(np.int64),
+                        "doc_id": np.concatenate(ids_o),
                         "score": np.concatenate(sc_o)})
                 else:
                     yield pd.DataFrame({"term": pd.array([], dtype=str),
@@ -913,7 +924,7 @@ class SearchEngine:
         return result.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     def _answer(self, plan: _Plan, k: int,
-                blocks: pd.DataFrame | None = None) \
+                blocks: dict[str, _Postings] | None = None) \
             -> list[tuple[int, float]]:
         """Run a plan to its top-k rows; per-stage wall-clock lands in
         self.last_stage_times."""
@@ -1147,10 +1158,11 @@ class SearchEngine:
         warm batch not at all (pinned by
         test_search_many_single_fetch_job).  Other plans run their own
         Spark paths.  Driver memory for the shared fetch is bounded by
-        Σ_q PRUNE_MIN_POSTINGS decoded postings (a few MB per local
-        query).  After a batch, last_stage_times holds the last query's
-        stages; its rest_score_topk also counts the shared fetch and
-        the answers before it."""
+        Σ_q PRUNE_MIN_POSTINGS decoded postings (~16 B each plus
+        positions); terms that fit the block cache stay resident after
+        the batch.  After a batch, last_stage_times holds the last
+        query's stages; its rest_score_topk also counts the shared fetch
+        and the answers before it."""
         plans = [self._plan(q, "auto") for q in queries]
         union = [t for p in plans if p.route == "local"
                  for t in p.terms if p.dfmap.get(t, 0) > 0]

@@ -212,3 +212,26 @@ def test_scan_tuning_restored_on_exception(spark, tmp_path):
         build_index(spark, spark.read.parquet(str(pdir)),
                     str(tmp_path / "idx"))
     assert spark.conf.get("spark.sql.files.maxPartitionBytes") == before
+
+
+def test_dedup_components_releases_round_caches(spark):
+    """Each round's labels and the edge list are persisted and released:
+    across two calls the persistent RDDs grow by at most the two
+    returned label sets, and the answer matches the transitive-closure
+    oracle (DuckDB)."""
+    import duckdb
+
+    from oscar_spark.operators.dedup import (dedup_components,
+                                             dedup_components_sql)
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    first = [tuple(r) for r in dedup_components(spark, SF1).collect()]
+    second = [tuple(r) for r in dedup_components(spark, SF1).collect()]
+    assert persistent().size() - before <= 2
+    assert first == second and first
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW documents AS SELECT * FROM "
+            f"'{SF1}/documents.parquet'")
+    oracle = sorted(tuple(r) for r in con.sql(dedup_components_sql())
+                    .fetchall())
+    assert sorted(first) == oracle

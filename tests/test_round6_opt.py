@@ -401,8 +401,8 @@ def test_hash_probe_join_blocks_identical(spark, built_index):
 def test_block_cache_warm_repeat_zero_jobs(spark, built_index):
     """Driver-local serving through the block cache: a repeated query
     returns identical results with ZERO Spark jobs (the S7 mlock
-    analog — blocks re-scored from process memory), and drop_memory
-    releases the cache."""
+    analog — decoded columns served from process memory), the cache
+    counts its entries' decoded bytes, and drop_memory releases it."""
     from oscar_spark.serve.executor import SearchEngine
 
     d, _ = built_index
@@ -411,6 +411,8 @@ def test_block_cache_warm_repeat_zero_jobs(spark, built_index):
     first = eng.search(q, k=10)
     assert first, "fixture query should match docs"
     assert eng._block_cache_bytes > 0
+    assert eng._block_cache_bytes == sum(
+        c.nbytes for c in eng._block_cache.values())
     sc = spark.sparkContext
     sc.setJobGroup("warmrepeat", "block cache warm repeat")
     second = eng.search(q, k=10)

@@ -175,36 +175,48 @@ class _FakeBlocks:
 
 
 def test_block_cache_eviction_keeps_requested_terms():
-    """Spark-free stub engine: with a 100 B cap and 60 B per term,
-    fetching [a, b] after warming a must evict a to admit b — and still
-    return BOTH terms' rows (a's from the snapshot taken before the
-    eviction)."""
+    """Spark-free stub engine over real encoded blocks: with each term
+    decoding to 64 B (4 postings × int64 id + float64 score) and a
+    100 B cap, fetching [a, b] after warming a must evict a to admit b
+    — and still return BOTH terms' columns (a's from the snapshot taken
+    before the eviction)."""
     from collections import OrderedDict
+
+    from pyspark.sql import Row
+
+    from oscar_spark.functions.codec import encode_block
     eng = SearchEngine.__new__(SearchEngine)
     eng._block_cache = OrderedDict()
     eng._block_cache_bytes = 0
     eng.BLOCK_CACHE_MAX_BYTES = 100
     eng.has_positions = False
-    store = {"a": [{"term": "a", "range_id": 0, "doc_count": 1,
-                    "payload": b"A" * 60}],
-             "b": [{"term": "b", "range_id": 1, "doc_count": 1,
-                    "payload": b"B" * 60}]}
+    eng._decode = decode_block
+    eng._term_df = {"a": 4, "b": 4}
+    eng.n_docs, eng.avgdl = 100, 10.0
+    ids = {"a": np.array([1, 3, 5, 7]),
+           "b": RANGE_SIZE + np.array([0, 1, 2, 3])}
+    store = {t: [Row(term=t, range_id=int(v[0]) // RANGE_SIZE, doc_count=4,
+                     payload=encode_block(v, np.ones(4), np.full(4, 10),
+                                          int(v[0]) // RANGE_SIZE
+                                          * RANGE_SIZE))]
+             for t, v in ids.items()}
     eng._blocks = lambda terms, meta_only: _FakeBlocks(
         [r for t in terms for r in store[t]])
-    assert eng._fetch_blocks_local(["a"])["term"].tolist() == ["a"]
+    assert list(eng._fetch_blocks_local(["a"])) == ["a"]
     out = eng._fetch_blocks_local(["a", "b"])
-    assert sorted(out["term"]) == ["a", "b"]
-    assert out.set_index("term")["payload"].to_dict() == {
-        "a": b"A" * 60, "b": b"B" * 60}
+    assert sorted(out) == ["a", "b"]
+    for t in ("a", "b"):
+        assert out[t].ids.tolist() == ids[t].tolist()
+        assert out[t].nbytes == 64
+    assert out["a"].scores.tolist() == out["b"].scores.tolist()
     assert list(eng._block_cache) == ["b"]
-    assert eng._block_cache_bytes == 60
+    assert eng._block_cache_bytes == 64
 
 
 def _cached_nbytes(eng, term: str) -> int:
-    """Block-cache bytes of one term: payload plus pos_payload."""
-    blocks = eng._fetch_blocks_local([term])
-    return int(sum(blocks[c].map(len).sum() for c in
-                   ("payload", "pos_payload") if c in blocks))
+    """Block-cache bytes of one term: its decoded arrays (ids, scores,
+    and positions with their offsets on a positional store)."""
+    return eng._fetch_blocks_local([term])[term].nbytes
 
 
 def test_block_cache_near_cap_and_query_matches_uncached(spark,
@@ -279,6 +291,37 @@ def test_warm_local_shapes_run_zero_jobs(spark, built_index, oracle):
         jobs = sc.statusTracker().getJobIdsForGroup(group)
         assert len(jobs) == 0, f"{q!r} ran Spark jobs {jobs}"
         assert set(eng.last_stage_times) == set(SERVE_STAGES), q
+
+
+def test_warm_queries_decode_nothing(spark, built_index):
+    """Each term is decoded once per engine: after one pass, a second
+    pass of every local shape (single, AND, OR, NOT, XOR, bare phrase,
+    phrase inside a combinator) calls the block decoder 0 times, runs
+    no Spark job and returns the same answers."""
+    d, _ = built_index
+    queries = ["war", "city state", "city + state", "time - year",
+               "house ^ music", '"to west"', '"to west" + city',
+               'city ^ "to west"']
+    eng = SearchEngine(spark, d)
+    first = [eng.search(q, k=10) for q in queries]
+    assert all(first)
+    calls = []
+    decode = eng._decode
+
+    def counted(*a):
+        calls.append(a)
+        return decode(*a)
+
+    eng._decode = counted
+    sc = spark.sparkContext
+    sc.setJobGroup("warm-decode", "warm queries decode nothing")
+    try:
+        second = [eng.search(q, k=10) for q in queries]
+    finally:
+        sc.setJobGroup(None, None)
+    assert second == first
+    assert len(calls) == 0
+    assert sc.statusTracker().getJobIdsForGroup("warm-decode") == []
 
 
 def test_dont_crash_queries(engine):
