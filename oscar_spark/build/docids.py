@@ -11,18 +11,17 @@ Two interchangeable strategies, both producing the identical mapping
   the window is a single-partition sort — fine at test scale, a wall at
   10^12 docs.
 - assign_doc_ids_ranged: the scale path.  repartitionByRange on the
-  order key gives globally range-ordered partitions; per-partition
-  counts (one tiny collect = the "committed partition manifest") give
-  each partition a contiguous base offset; ids are then assigned
-  sequentially inside each sorted partition with mapInPandas.  No
-  single-partition stage; the only driver data is #partitions rows.
+  order key gives globally range-ordered partitions, cached once;
+  per-partition counts (one tiny collect = the "committed partition
+  manifest") give each partition a contiguous base offset; a doc's id
+  is its partition's base plus its row index within the sorted
+  partition, computed in the JVM.  No single-partition stage and no
+  Python task; the only driver data is #partitions rows.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -46,67 +45,50 @@ def assign_doc_ids_ranged(doc_lens: DataFrame,
 
     stats_col: when given, the manifest collect ALSO aggregates
     count/sum of that column and the function returns
-    (df, {"n": int, "sum": float}) — corpus stats ride along on the
-    job that had to run anyway instead of costing their own job
-    (per-job launch latency is a fixed cost that eats N→4N scaling
-    efficiency at bench scale)."""
-    spark = doc_lens.sparkSession
+    (df, {"n": int, "sum": float, "cached": DataFrame}) — corpus stats
+    ride along on the job that had to run anyway instead of costing
+    their own job (per-job launch latency is a fixed cost that eats
+    N→4N scaling efficiency at bench scale).  `cached` is the persisted
+    range-partitioned relation `df` reads: unpersist it after the last
+    action over `df`."""
     ranged = (doc_lens
               .repartitionByRange(num_partitions, *_order())
               .sortWithinPartitions(*_order())
               .withColumn("_pid", F.spark_partition_id()))
     # PIN the computed partitions: repartitionByRange samples its
-    # boundaries per job, so the manifest job below and the assign job
-    # would otherwise each draw their OWN boundaries — overlapping /
-    # gapped offsets and duplicate doc_ids (caught by the strict-monotone
-    # block invariant at 40k docs).  localCheckpoint materializes the
-    # ranged partitions once; both jobs read the same layout.  LAZY
-    # (eager=False): the manifest collect below is the first action, so
-    # checkpoint materialization rides on a job that must run anyway —
-    # eager=True cost one extra whole job launch (~0.2-1.5s fixed), a
-    # direct N→4N efficiency tax at bench scale.  INVARIANT the laziness
-    # depends on: the FIRST action over `ranged` must compute EVERY
-    # partition (the manifest groupBy below does — it aggregates all
-    # rows).  A future caller whose first action scans only a subset
-    # would leave unvisited partitions to re-run the range-sampling
-    # lineage on a later job — re-drawing boundaries and reintroducing
-    # the exact duplicate/gapped-doc-id hazard this checkpoint exists
-    # to prevent.  If that access pattern ever appears, flip back to
-    # eager=True here rather than weakening the caller.  (Real cluster: a
-    # reliable checkpoint dir / the committed Iceberg partition manifest
-    # plays this role — executor loss must not re-sample.)
-    ranged = ranged.localCheckpoint(eager=False)
+    # boundaries per query, so the manifest job below and the id
+    # projection would otherwise each draw their OWN boundaries —
+    # overlapping / gapped offsets and duplicate doc_ids (caught by the
+    # strict-monotone block invariant at 40k docs).  Both consumers read
+    # this ONE cached relation, whose plan holds one RangePartitioner:
+    # a block lost with an executor is recomputed through that same
+    # partitioner (the shuffle is re-read, or re-run with the same
+    # bounds), never re-sampled.  Lazy: the manifest collect is the
+    # first action and materializes every partition, since it
+    # aggregates all rows.
+    ranged = ranged.persist(StorageLevel.MEMORY_AND_DISK)
     # the committed partition manifest: pid → row count (tiny collect)
     aggs = [F.count("*").alias("n")]
     if stats_col is not None:
         aggs.append(F.sum(stats_col).alias("s"))
     man = ranged.groupBy("_pid").agg(*aggs).collect()
     counts = {r["_pid"]: r["n"] for r in man}
-    offsets = {}
-    acc = 0
+    # base offset per partition: one flat CASE over the manifest's pids
+    base, acc = None, 0
     for pid in sorted(counts):
-        offsets[pid] = acc
+        hit = F.col("_pid") == pid
+        base = F.when(hit, acc) if base is None else base.when(hit, acc)
         acc += counts[pid]
-    b_offsets = spark.sparkContext.broadcast(offsets)
-
-    schema = ranged.drop("_pid").schema.add("doc_id", "long", False)
-
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pos = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if pos is None:
-                pos = b_offsets.value[int(pdf["_pid"].iloc[0])]
-            out = pdf.drop(columns=["_pid"])
-            out["doc_id"] = range(pos, pos + len(pdf))
-            pos += len(pdf)
-            yield out
-
-    # mapInPandas preserves the within-partition sort order, so ids are
+    base = F.lit(0) if base is None else base.otherwise(0)
+    # monotonically_increasing_id() is (partition id << 33) + the row's
+    # index within the partition, and a projection over the cached
+    # relation keeps both its partitions and their sort order: ids are
     # sequential in (quality DESC, url ASC) order partition by partition
-    out = ranged.mapInPandas(assign, schema)
+    row = F.monotonically_increasing_id() - \
+        F.shiftleft(F.spark_partition_id().cast("long"), 33)
+    out = ranged.select(*[c for c in ranged.columns if c != "_pid"],
+                        (base + row).alias("doc_id"))
     if stats_col is not None:
         total = sum((r["s"] or 0) for r in man)
-        return out, {"n": acc, "sum": float(total)}
+        return out, {"n": acc, "sum": float(total), "cached": ranged}
     return out

@@ -11,7 +11,7 @@ Spark plan (one declarative DAG; Catalyst handles what oscar hand-built):
 
     pages ──mapInPandas (tokenize+tf, map-side combine)──▶ tokens parquet
       │        (checkpointed ONCE; both stages below re-read it)
-      └─▶ doc_stats: range-partitioned quality sort → doc_id
+      └─▶ doc_stats: range-partitioned quality sort → doc_id (JVM)
                                      ◀── broadcast join(url) while small
                                                             │
     repartition(term, range_id) + sortWithinPartitions ──▶ encode
@@ -27,12 +27,13 @@ Spark plan (one declarative DAG; Catalyst handles what oscar hand-built):
 
 Scale notes (100 TB / 10^12 docs):
 - The only global ordering is docID assignment: per-partition contiguous
-  ranges over pinned repartitionByRange partitions with base offsets
+  ranges over cached repartitionByRange partitions with base offsets
   from a collected partition manifest (docids.assign_doc_ids_ranged) —
-  no single-partition stage at any scale.  There is no global term
-  dictionary: terms shuffle as their (short) strings and are
-  factorized to local codes inside the encoder, so nothing about the
-  vocabulary size ever concentrates on one partition or the driver.
+  no single-partition stage at any scale, and no Python task.  There
+  is no global term dictionary: terms shuffle as their (short) strings
+  and are factorized to local codes inside the encoder, so nothing
+  about the vocabulary size ever concentrates on one partition or the
+  driver.
 - tf aggregation happens INSIDE the tokenize UDF (pandas value_counts per
   doc), so the big shuffle moves (term, doc, tf) rows, not raw tokens —
   the map-side-combine analog of oscar's per-thread MatchDesc hash
@@ -40,7 +41,11 @@ Scale notes (100 TB / 10^12 docs):
 - encode groups are (term, range_id): bounded memory regardless of term
   skew; blocks within a group are ≤ BLOCK_SIZE docs.
 - All UDFs are Arrow-vectorized (mapInPandas/mapInArrow); the BM25
-  expression and every join/agg stay JVM-side.
+  expression, docID assignment and every join/agg stay JVM-side.  The
+  Python tasks (tokenize, encode) call functions.worker.worker_init
+  first: a pooled worker pays its set-up (Arrow thread pins, the
+  zip-archive re-read gate) once per process, not the ~0.2 s per task
+  that re-reading Spark's archives cost.
 """
 
 from __future__ import annotations
@@ -63,6 +68,7 @@ from oscar_spark.functions.bm25 import bm25_sql
 from oscar_spark.functions.codec import (PAYLOAD_FORMAT, block_decoder,
                                         encode_runs, store_decoder)
 from oscar_spark.functions.extract import extract_series
+from oscar_spark.functions.worker import worker_init
 from oscar_spark.sources.tables import IndexStore
 
 TOKENS_SCHEMA = "url string, term string, tf int, dl int"
@@ -70,6 +76,7 @@ TOKENS_SCHEMA = "url string, term string, tf int, dl int"
 # FILTERED token stream (short tokens dropped before numbering — the
 # same rule tokens_pos/the oracle use, so adjacency agrees everywhere)
 TOKENS_POS_SCHEMA = TOKENS_SCHEMA + ", pos array<int>"
+DOC_STATS_SCHEMA = "doc_id long, url string, doc_len int, quality double"
 # the big shuffle carries the term STRING, not a dictionary id: web
 # vocabulary terms are short (≈7 bytes, about an int64), so a global
 # term→tid dictionary would trade a SECOND full scan of the token table
@@ -113,6 +120,7 @@ def _tokenize_batches(batches: Iterator[pd.DataFrame],
     allocation/bandwidth-hungry stage and capped its N→4N scaling.)
     """
     from oscar_spark.functions.tokenize import tokenize_flat
+    worker_init()
     for pdf in batches:
         codes, uniq, doc_idx, counts = tokenize_flat(pdf["text"])
         n_uniq = max(len(uniq), 1)
@@ -224,9 +232,7 @@ def _encode_partition_arrow(batches, codec: str = "varint",
     bound (BM25 ↑ in tf, ↓ in dl) that keeps the per-posting pipeline
     free of any df join or score column."""
     import pyarrow as pa
-
-    from oscar_spark.functions.tokenize import _pin_arrow_threads
-    _pin_arrow_threads()
+    worker_init()
 
     def _emit(tbl: pa.Table) -> pa.RecordBatch | None:
         if tbl.num_rows == 0:
@@ -565,18 +571,24 @@ def _tune_scan_partitions(spark: SparkSession,
 
 
 def prewarm_workers(spark: SparkSession) -> None:
-    """Pay each Python UDF worker's one-time interpreter spawn +
-    pandas/numpy/pyarrow/oscar_spark import (~1.5s) OUTSIDE any timed
-    or latency-sensitive region — the warm task performs the REAL
-    imports the build kernels use.  A standing cluster's executors keep
-    warm workers; a fresh local JVM does not."""
+    """Pay each Python UDF worker's one-time costs OUTSIDE any timed or
+    latency-sensitive region: the interpreter spawn, the pandas/numpy/
+    pyarrow/oscar_spark imports the build kernels use (~1.5 s), and the
+    one re-read of Spark's zip archives that `worker_init` leaves to a
+    fresh worker.  Once warm, a task's fixed set-up is a few ms instead
+    of the ~0.2 s archive re-read every task paid before `worker_init`.
+    A standing cluster's executors keep warm workers; a fresh local JVM
+    does not."""
     cores = spark.sparkContext.defaultParallelism
 
     def _warm(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import importlib
+
         import pyarrow.compute  # noqa: F401
         from oscar_spark.build import indexer  # noqa: F401
-        from oscar_spark.functions.tokenize import _pin_arrow_threads
-        _pin_arrow_threads()
+        worker_init()
+        # the fresh worker's one archive re-read, paid here
+        importlib.invalidate_caches()
         # also pre-import and first-run the fixture generator: its module
         # import + vocabulary/zipf setup is a per-worker first-task cost
         # that otherwise lands inside the first timed pages_gen job
@@ -592,6 +604,7 @@ def extract_pages(pages: DataFrame) -> DataFrame:
     """html → text via the pinned extractor (vectorized); byte-identity
     with an existing `text` column is a test invariant, not assumed."""
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        worker_init()
         for pdf in batches:
             out = pdf[["url", "warc_ts", "html", "lang"]].copy()
             out["text"] = extract_series(pdf["html"])
@@ -817,7 +830,8 @@ def _build_index_impl(spark: SparkSession, pages: DataFrame,
             TOKENS_POS_SCHEMA if positions else TOKENS_SCHEMA), "tokens")
         store.commit("tokens", tfp)
     _mark("tokens")
-    tokens = store.read(spark, "tokens")
+    tokens = store.read(spark, "tokens",
+                        TOKENS_POS_SCHEMA if positions else TOKENS_SCHEMA)
 
     # ---- stage 1: doc_stats (docID = rank by static quality; analog of
     # applySort score ordering, OsmKeyValueObjectStore.cpp:1339-1399) ----
@@ -834,16 +848,13 @@ def _build_index_impl(spark: SparkSession, pages: DataFrame,
         doc_lens = doc_lens.withColumn(
             "quality", F.col("doc_len").cast("double"))
         # materialize the per-doc table ONCE: repartitionByRange's
-        # boundary-sample job and the partition-pinning checkpoint inside
-        # assign_doc_ids_ranged would otherwise EACH re-execute the full
-        # tokens scan + groupBy lineage (two extra corpus scans measured
-        # as most of this stage's wall time).  LAZY: the boundary-sample
-        # job inside assign_doc_ids_ranged is the first consumer and
-        # doubles as the materializing action — eager=True paid one
-        # extra job launch.  ~one short row per doc; distributed
-        # MEMORY_AND_DISK — on a real cluster a reliable checkpoint dir
-        # / Iceberg staging table plays this role.
-        doc_lens = doc_lens.localCheckpoint(eager=False)
+        # boundary-sample job and the range shuffle inside
+        # assign_doc_ids_ranged would otherwise EACH re-execute the
+        # tokens scan + filter.  Lazy: the boundary-sample job is the
+        # first consumer and materializes it.  ~one short row per doc;
+        # persist keeps the lineage, so a block lost with an executor is
+        # recomputed from the committed tokens.
+        doc_lens = doc_lens.persist(StorageLevel.MEMORY_AND_DISK)
         # corpus stats (n_docs, Σdl) ride along on the docID manifest
         # collect — no separate aggregation job — and persist in the
         # manifest so later stages, resumes, and serve startup never
@@ -854,13 +865,14 @@ def _build_index_impl(spark: SparkSession, pages: DataFrame,
             stats_col="doc_len")
         store.write(doc_stats.select("doc_id", "url", "doc_len", "quality"),
                     "doc_stats")
+        stats["cached"].unpersist()
+        doc_lens.unpersist()
         store.set_meta("n_docs", int(stats["n"]))
         store.set_meta("avgdl",
                        stats["sum"] / stats["n"] if stats["n"] else 0.0)
-        doc_lens.unpersist()
         store.commit("doc_stats", fp)
     _mark("doc_stats")
-    doc_stats = store.read(spark, "doc_stats")
+    doc_stats = store.read(spark, "doc_stats", DOC_STATS_SCHEMA)
     n_docs = int(store.get_meta("n_docs"))
     avgdl = float(store.get_meta("avgdl"))
 
@@ -1060,7 +1072,8 @@ def ingest_segment(spark: SparkSession, new_pages: DataFrame,
             TOKENS_POS_SCHEMA if positions else TOKENS_SCHEMA),
         "tokens", seg)
     mark("tokens_append")
-    tokens_new = store.read_segment(spark, "tokens", seg)
+    tokens_new = store.read_segment(
+        spark, "tokens", seg, TOKENS_POS_SCHEMA if positions else TOKENS_SCHEMA)
 
     # ---- doc ids for the new docs, offset past the committed space.
     # url is the document key: a re-crawled url that is ALREADY indexed
@@ -1075,7 +1088,7 @@ def ingest_segment(spark: SparkSession, new_pages: DataFrame,
                 .join(store.read(spark, "doc_stats").select("url"),
                       "url", "left_anti")
                 .withColumn("quality", F.col("doc_len").cast("double"))
-                .localCheckpoint(eager=False))
+                .persist(StorageLevel.MEMORY_AND_DISK))
     assigned, stats = assign_doc_ids_ranged(
         doc_lens,
         num_partitions=max(spark.sparkContext.defaultParallelism, 8),
@@ -1085,16 +1098,18 @@ def ingest_segment(spark: SparkSession, new_pages: DataFrame,
         .withColumn("doc_id", (F.col("doc_id") + F.lit(n_old)).cast("long"))
         .select("doc_id", "url", "doc_len", "quality"))
     store.write_segment(doc_stats_new, "doc_stats", seg)
+    stats["cached"].unpersist()
+    doc_lens.unpersist()
     n_new, dl_sum_new = int(stats["n"]), int(stats["sum"])
     n_total = n_old + n_new
     avgdl_total = ((avgdl_old * n_old + dl_sum_new) / n_total
                    if n_total else 0.0)
-    doc_lens.unpersist()
     mark("doc_stats_append")
 
     # ---- postings for the new docs (same pipeline, new data only) ----
     final_new = _final_blocks(
-        spark, tokens_new, store.read_segment(spark, "doc_stats", seg),
+        spark, tokens_new,
+        store.read_segment(spark, "doc_stats", seg, DOC_STATS_SCHEMA),
         n_new, n_total, avgdl_total, codec, positions)
     # continue each term's block numbering after its committed blocks
     terms_old = store.read(spark, "terms")

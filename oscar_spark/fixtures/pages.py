@@ -26,6 +26,7 @@ import pandas as pd
 
 from oscar_spark.config import FIXTURE_SEED, VOCAB_SIZE
 from oscar_spark.functions.extract import extract_text
+from oscar_spark.functions.worker import worker_init
 
 # head of the vocabulary: real common words so queries read naturally;
 # tail: generated slugs.  Fixed list — part of the fixture contract.
@@ -240,6 +241,7 @@ def pages_spark_df_dist(spark, n_rows: int, base_seed: int = 42,
         rdd, "seed int, start long, n int, lo int, hi int")
 
     def gen(batches):
+        worker_init()
         for pdf in batches:
             for _, r in pdf.iterrows():
                 yield generate_pages(int(r["n"]), seed=int(r["seed"]),

@@ -86,27 +86,6 @@ def normalize_field_series(vals: pd.Series) -> pd.Series:
             .str.strip("-"))
 
 
-_ARROW_PINNED = False
-
-
-def _pin_arrow_threads() -> None:
-    """One Arrow compute/IO thread per Python worker process.
-
-    pyarrow sizes its global thread pool to the MACHINE's hardware
-    concurrency (32 here), ignoring cpusets and the fact that Spark
-    already runs one worker per core: N workers × 32 Arrow threads on N
-    pinned cpus context-switch-thrashed the tokenize stage flat
-    (measured 34s@2c → 27s@8c, a 1.24× "speedup", with the same kernel
-    at 1 thread scaling ~4×).  Spark's task parallelism IS the
-    parallelism; in-kernel threading only fights it."""
-    global _ARROW_PINNED
-    if not _ARROW_PINNED:
-        import pyarrow as pa
-        pa.set_cpu_count(1)
-        pa.set_io_thread_count(1)
-        _ARROW_PINNED = True
-
-
 def tokenize_flat(texts: pd.Series):
     """Arrow-native flat tokenization for the index build's hot path.
 
@@ -128,7 +107,6 @@ def tokenize_flat(texts: pd.Series):
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
-    _pin_arrow_threads()
     norm = _normalize_series(texts)
     arr = pa.Array.from_pandas(norm, type=pa.string())
     splits = pc.split_pattern_regex(arr, "[^a-z0-9]+")

@@ -19,6 +19,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from oscar_spark.functions.worker import worker_init
 from oscar_spark.operators.fulltext_sql import load_documents
 
 SHINGLE_N = 3
@@ -63,6 +64,7 @@ def _shingle_batches(batches):
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
+    worker_init()
     for batch in batches:
         if batch.num_rows == 0:
             continue

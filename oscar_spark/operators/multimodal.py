@@ -23,6 +23,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from oscar_spark.functions.worker import worker_init
+
 FAKE_DECODE = True  # default for the DRIVER rows: the synthetic media
 # table's payloads are hash bytes, not decodable media, and the fake
 # keeps the features reconstructible in pure SQL.  extract_features(
@@ -191,6 +193,7 @@ def extract_features(media: DataFrame,
     fake=None → module default FAKE_DECODE (the SQL-oracled driver
     path); fake=False → real decode with per-row fake fallback."""
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        worker_init()
         for pdf in batches:
             yield _decode_features(pdf, fake)
     return media.mapInPandas(gen, FEATURE_SCHEMA)
@@ -208,6 +211,7 @@ def media_thumbnails(media: DataFrame, tw: int = 16,
     extract_features — binary in, binary out, bounded per-batch
     memory."""
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        worker_init()
         for pdf in batches:
             ids, blobs = [], []
             for mid, kind, payload in zip(pdf["media_id"], pdf["kind"],

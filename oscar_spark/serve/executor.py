@@ -66,6 +66,7 @@ from pyspark.sql import functions as F
 from oscar_spark.config import NUM_TERM_BUCKETS, RANGE_SIZE
 from oscar_spark.functions.bm25 import bm25_np
 from oscar_spark.functions.codec import decode_position_block, store_decoder
+from oscar_spark.functions.worker import worker_init
 from oscar_spark.serve import parser
 from oscar_spark.sources.tables import IndexStore
 
@@ -648,6 +649,7 @@ class SearchEngine:
         decode = self._decode
 
         def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+            worker_init()
             return _score_pdf(pdf, decode, dfmap, n_docs, avgdl,
                               require_all, local_k)
 
@@ -778,10 +780,14 @@ class SearchEngine:
         # cuts the fetched payload to the rare token's ranges.
         blocks = blocks.join(
             F.broadcast(self._phrase_candidate_ranges(uniq)), "range_id")
+
+        def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+            worker_init()
+            return _phrase_pdf(pdf, toks, decode, dfmap, n_docs, avgdl,
+                               local_k, docs_only)
+
         return blocks.groupBy("range_id").applyInPandas(
-            lambda key, pdf: _phrase_pdf(pdf, toks, decode, dfmap, n_docs,
-                                         avgdl, local_k, docs_only),
-            "doc_id long, score double")
+            lambda key, pdf: kernel(pdf), "doc_id long, score double")
 
     def _phrase_candidate_ranges(self, uniq: list[str]) -> DataFrame:
         """range_ids where ALL of `uniq` have at least one posting block
@@ -808,6 +814,7 @@ class SearchEngine:
             .select("term", "range_id", "doc_count", "payload")
 
         def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            worker_init()
             for pdf in batches:
                 terms_o, ids_o, sc_o = [], [], []
                 # one block at a time: rows leave in their arrival order

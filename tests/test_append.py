@@ -52,6 +52,30 @@ def test_append_detected_and_counts(appended):
     assert res2.docs_per_sec > 0
 
 
+def test_build_and_append_release_their_caches(spark, tmp_path):
+    """A full build and a resume-append each release every RDD they
+    persist: the doc-id stage's per-doc table and its range-partitioned
+    copy are unpersisted once doc_stats is written."""
+    from oscar_spark.build.indexer import build_index
+    from oscar_spark.fixtures.pages import generate_pages
+
+    def held() -> int:
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    pdf = generate_pages(600)
+    pdir = tmp_path / "pages"
+    pdir.mkdir()
+    _write_pages_file(pdf.iloc[:400], str(pdir / "part-0.parquet"))
+    d = str(tmp_path / "idx")
+    before = held()
+    build_index(spark, spark.read.parquet(str(pdir)), d)
+    after_build = held()
+    _write_pages_file(pdf.iloc[400:], str(pdir / "part-1.parquet"))
+    res = build_index(spark, spark.read.parquet(str(pdir)), d, resume=True)
+    assert res.resumed_stages[0].startswith("append:")
+    assert (after_build, held()) == (before, before)
+
+
 def test_append_then_identical_resume(spark, appended):
     from oscar_spark.build.indexer import build_index
     d, pdir, pdf, _ = appended
