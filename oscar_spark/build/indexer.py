@@ -12,7 +12,7 @@ Spark plan (one declarative DAG; Catalyst handles what oscar hand-built):
     pages ──mapInPandas (tokenize+tf, map-side combine)──▶ tokens parquet
       │        (checkpointed ONCE; both stages below re-read it)
       └─▶ doc_stats: range-partitioned quality sort → doc_id (JVM)
-                                     ◀── broadcast join(url) while small
+                         ◀── broadcast hash-probe join(url) while small
                                                             │
     repartition(term, range_id) + sortWithinPartitions ──▶ encode
         range_id = doc_id // RANGE_SIZE  ◀── the salt: EVERY encode
@@ -23,11 +23,20 @@ Spark plan (one declarative DAG; Catalyst handles what oscar hand-built):
         one small repartition(bucket) over the ~rows/BLOCK_SIZE blocks
         stream, in the same job.
                                                             │
-    write doc_stats / terms / postings (+ lineage, manifest commits)
+    write doc_stats / postings / terms (+ lineage, manifest commits)
+        terms and both wildcard mirrors re-derive from the COMMITTED
+        postings: one shuffle into the dictionary write, one aggregate
+        for bucket stats + the mirrors' range sample, one shuffle per
+        mirror.
+
+Every Spark job is a fixed cost at small scale, so each stage spends
+its jobs on data: a build runs 18 (tokens 1, doc_stats 5, postings 4,
+terms 8).  No check, cache or schema-inference job of its own, and one
+sample per range partitioning (doc ids; both mirrors share one).
 
 Scale notes (100 TB / 10^12 docs):
 - The only global ordering is docID assignment: per-partition contiguous
-  ranges over cached repartitionByRange partitions with base offsets
+  ranges cut from one hashed sample (build/ranges.py) with base offsets
   from a collected partition manifest (docids.assign_doc_ids_ranged) —
   no single-partition stage at any scale, and no Python task.  There
   is no global term dictionary: terms shuffle as their (short) strings
@@ -52,16 +61,19 @@ from __future__ import annotations
 
 import os
 import time
+from contextlib import contextmanager
 from dataclasses import dataclass
 from typing import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from oscar_spark.build.docids import assign_doc_ids_ranged
+from oscar_spark.build.ranges import (SAMPLE_PER_RANGE, partition_by_ranges,
+                                      partition_key, range_bounds)
 from oscar_spark.config import (BLOCK_SIZE, BROADCAST_DOCID_MAX,
                                 NUM_TERM_BUCKETS, RANGE_SIZE)
 from oscar_spark.functions.bm25 import bm25_sql
@@ -69,14 +81,9 @@ from oscar_spark.functions.codec import (PAYLOAD_FORMAT, block_decoder,
                                         encode_runs, store_decoder)
 from oscar_spark.functions.extract import extract_series
 from oscar_spark.functions.worker import worker_init
-from oscar_spark.sources.tables import IndexStore
+from oscar_spark.sources.tables import (TOKENS_POS_SCHEMA, TOKENS_SCHEMA,
+                                       IndexStore)
 
-TOKENS_SCHEMA = "url string, term string, tf int, dl int"
-# positional build: per-(doc, term) occurrence positions in the
-# FILTERED token stream (short tokens dropped before numbering — the
-# same rule tokens_pos/the oracle use, so adjacency agrees everywhere)
-TOKENS_POS_SCHEMA = TOKENS_SCHEMA + ", pos array<int>"
-DOC_STATS_SCHEMA = "doc_id long, url string, doc_len int, quality double"
 # the big shuffle carries the term STRING, not a dictionary id: web
 # vocabulary terms are short (≈7 bytes, about an int64), so a global
 # term→tid dictionary would trade a SECOND full scan of the token table
@@ -96,6 +103,12 @@ FINAL_BLOCKS_SCHEMA = (
     "first_doc long, last_doc long, doc_count int, max_tf int, "
     "min_dl int, max_score double, payload binary"
 )
+
+
+def _staged_schema(positions: bool) -> str:
+    """The payload-dedup path's staged blocks: final blocks + md5."""
+    return (FINAL_BLOCKS_SCHEMA + (", pos_payload binary" if positions
+                                   else "") + ", payload_hash string")
 
 
 def _tokenize_batches(batches: Iterator[pd.DataFrame],
@@ -316,51 +329,24 @@ _FINAL_COLS = ["bucket", "term", "block_id", "range_id", "first_doc",
                "payload"]
 
 
+def _url_hash(url: Column) -> Column:
+    """The doc-id probe's join key (a test swaps in a colliding one)."""
+    return F.xxhash64(url)
+
+
 def _final_blocks(spark: SparkSession, tokens: DataFrame,
                   doc_stats: DataFrame, n_ids: int, n_corpus: int,
                   avgdl: float, codec: str,
-                  positions: bool = False,
-                  urls_closed: bool = False) -> DataFrame:
+                  positions: bool = False) -> DataFrame:
     """tokens + doc ids → finalized posting-block DataFrame.
 
     Shared by the full build (n_ids == n_corpus) and the incremental
     append, which runs it over the NEW segment's tokens/doc ids only
     (n_ids = new docs, sizing the join; n_corpus/avgdl = whole corpus,
-    feeding the stored max_score diagnostic).
-
-    urls_closed: the caller guarantees every token url appears in
-    doc_stats (true for the full build, whose doc_stats derives from
-    the same token table; FALSE for the append path, which relies on
-    the inner join dropping re-crawled urls' orphan tokens).  Only a
-    closed caller may take the hashed-probe join below.
+    feeding the stored max_score diagnostic).  Token urls without a doc
+    (the append's already-indexed re-crawls) drop out of the inner
+    join.
     """
-    doc_ids = doc_stats.select("url", "doc_id")
-    hash_probe = False
-    if n_ids <= BROADCAST_DOCID_MAX:
-        # url→doc_id fits comfortably in a broadcast: the big token
-        # table then shuffles ONCE (by term,range) instead of twice.
-        # r06 session 3 (guide §2.3 "narrower types" applied to the
-        # join key): probing a LONG-keyed map beats hashing + equality
-        # on ~55-byte url strings per posting row (A/B at 100k pages:
-        # join phase 0.83s → 0.24s wall).  EXACT under two conditions,
-        # both enforced: (1) the doc-side xxhash64(url) values are
-        # distinct — checked below with one column-pruned aggregate
-        # over the slim doc_stats table (collision ⇒ fall back to the
-        # string join, so correctness never rests on probability);
-        # (2) token urls ⊆ doc urls (urls_closed) — otherwise an
-        # orphan token url could hash-collide into a WRONG doc_id
-        # instead of being dropped, so open callers (append) keep the
-        # string join.
-        if urls_closed:
-            r = doc_stats.select(
-                F.countDistinct(F.xxhash64("url")).alias("h"),
-                F.count("*").alias("n")).collect()[0]
-            hash_probe = int(r["h"]) == int(r["n"])
-        doc_ids = F.broadcast(
-            doc_stats.select(F.xxhash64("url").alias("_uh"), "doc_id")
-            if hash_probe else doc_ids)
-    # else: plain shuffle join; at 10^12 docs the doc_id map is
-    # itself big, and AQE picks the join strategy
     cols = ["term", "doc_id", "tf", "dl"] + \
         (["pos"] if positions else [])
     # url is join-only: drop it BEFORE the big shuffle (its ~55
@@ -376,11 +362,34 @@ def _final_blocks(spark: SparkSession, tokens: DataFrame,
     # through the shuffle AND the Arrow boundary (guide §2.3
     # "shuffle fewer bytes").
     nn = tokens.filter(F.col("term").isNotNull())
-    if hash_probe:
-        postings_raw = (nn.withColumn("_uh", F.xxhash64("url"))
-                        .join(doc_ids, "_uh").select(*cols))
+    if n_ids <= BROADCAST_DOCID_MAX:
+        # url→doc_id fits comfortably in a broadcast: the big token
+        # table then shuffles ONCE (by term,range) instead of twice.
+        # r06 session 3 (guide §2.3 "narrower types" applied to the
+        # join key): probing a LONG-keyed map beats hashing + equality
+        # on ~55-byte url strings per posting row (A/B at 100k pages:
+        # join phase 0.83s → 0.24s wall).  The broadcast also carries
+        # each doc's url (~55 B/doc on top of the 16 B of hash + id),
+        # and a probe match keeps its doc_id only where the two urls
+        # are equal: a hash collision's extra match drops out, so the
+        # join is exact on any input, with no check job and no
+        # reliance on collisions being rare.  The comparison is a
+        # projection, not a join condition, so Catalyst does not make
+        # the url a second (string) join key; it runs on probe matches
+        # only.
+        docs = F.broadcast(doc_stats.select(
+            _url_hash(F.col("url")).alias("_uh"),
+            F.col("doc_id").alias("_id"), F.col("url").alias("_du")))
+        joined = (nn.withColumn("_uh", _url_hash(F.col("url")))
+                  .join(docs, "_uh")
+                  .withColumn("doc_id", F.when(
+                      F.col("url") == F.col("_du"), F.col("_id")))
+                  .filter(F.col("doc_id").isNotNull()))
     else:
-        postings_raw = nn.join(doc_ids, "url").select(*cols)
+        # plain shuffle join; at 10^12 docs the doc_id map is itself
+        # big, and AQE picks the join strategy
+        joined = nn.join(doc_stats.select("url", "doc_id"), "url")
+    postings_raw = joined.select(*cols)
     range_expr = (F.col("doc_id") / F.lit(RANGE_SIZE)).cast("long")
     # the one big shuffle: hash-partition by (term, range_id), sort
     # within partitions — Spark's shuffle-with-spill is the external
@@ -405,9 +414,9 @@ def _final_blocks(spark: SparkSession, tokens: DataFrame,
     # phase 2 (the explicit two-phase merge) runs on the TINY blocks
     # stream (~rows/BLOCK_SIZE): per-term df, the block-max upper
     # bound, and global block numbering.  A term's blocks live wholly
-    # inside its bucket, so hashpartitioning(bucket) SATISFIES the
-    # (bucket, term) clustered distribution the windows below require —
-    # Catalyst inserts NO further exchange, and the whole phase is pure
+    # inside its bucket, so the shuffle by bucket (_by_bucket) SATISFIES
+    # the clustered distribution the windows below require — Catalyst
+    # inserts NO further exchange, and the whole phase is pure
     # JVM: Tungsten-sorted windows + a codegen'd bm25 expression.
     # (An earlier shape ran this as a sorted-partition mapInPandas:
     # correct, but it dragged every payload byte through an Arrow
@@ -416,13 +425,11 @@ def _final_blocks(spark: SparkSession, tokens: DataFrame,
     # consumed exactly once, so the whole stage is ONE job with two
     # exchanges; shuffle retry covers executor loss.
     from pyspark.sql import Window
-    wt = Window.partitionBy("bucket", "term")
+    wt = Window.partitionBy("bucket", "_p", "term")
     fcols = _FINAL_COLS + (["pos_payload"] if positions else [])
     return (
-        blocks
-        .withColumn("bucket", F.pmod(F.hash("term"),
-                                     F.lit(NUM_TERM_BUCKETS)))
-        .repartition(NUM_TERM_BUCKETS, "bucket")
+        _by_bucket(blocks.withColumn("bucket", F.pmod(
+            F.hash("term"), F.lit(NUM_TERM_BUCKETS))))
         .withColumn("block_id",
                     (F.row_number().over(wt.orderBy("first_doc")) - 1)
                     .cast("int"))
@@ -434,8 +441,122 @@ def _final_blocks(spark: SparkSession, tokens: DataFrame,
     )
 
 
-def _write_terms_rev(store: IndexStore, terms: DataFrame,
-                     seg: str | None = None) -> None:
+def _concurrently(*fns) -> None:
+    """Run independent driver actions (each submits its own Spark jobs)
+    in threads, wait for ALL of them — also when one raises, so no job
+    keeps running into error teardown — then raise the first error."""
+    import threading
+    errs: list[BaseException] = []
+
+    def _run(fn) -> None:
+        try:
+            fn()
+        except BaseException as e:  # surfaced after join
+            errs.append(e)
+
+    ts = [threading.Thread(target=_run, args=(fn,)) for fn in fns]
+    for t in ts:
+        t.start()
+    for t in ts:
+        t.join()
+    if errs:
+        raise errs[0]
+
+
+def _block_terms(postings: DataFrame) -> DataFrame:
+    """One (bucket, term, df, n_blocks, first) row per posting block;
+    `first` marks each term's first block, so counting it counts
+    terms."""
+    return postings.select("bucket", "term",
+                           F.col("doc_count").cast("long").alias("df"),
+                           F.lit(1).cast("long").alias("n_blocks"),
+                           (F.col("block_id") == 0).alias("first"))
+
+
+def _by_bucket(df: DataFrame) -> DataFrame:
+    """df plus `_p`, shuffled into n = min(write width, NUM_TERM_BUCKETS)
+    partitions, bucket b to partition b mod n: each write task writes
+    the same number of bucket files (one file per bucket), and the
+    explicit count keeps adaptive execution from coalescing the write
+    into one task.  `_p` is a function of bucket, so grouping or
+    windowing by (bucket, _p, …) changes no group, and the hash
+    partitioning on `_p` already clusters every such group: no second
+    exchange.  Keeping bucket first in those keys keeps the rows sorted
+    by bucket, as the partitioned write needs, without another sort."""
+    n = min(_write_width(df.sparkSession), NUM_TERM_BUCKETS)
+    return df.withColumn("_p", partition_key(f"pmod(bucket, {n})", n)) \
+        .repartition(n, "_p")
+
+
+def _sum_terms(rows: DataFrame) -> DataFrame:
+    """Per-term totals of (bucket, term, df, n_blocks) rows, in one
+    shuffle (_by_bucket)."""
+    return (_by_bucket(rows)
+            .groupBy("bucket", "_p", "term")
+            .agg(F.sum("df").alias("df"),
+                 # every term has a block: stored as a required column
+                 F.coalesce(F.sum("n_blocks"), F.lit(0).cast("long"))
+                 .alias("n_blocks"))
+            .drop("_p"))
+
+
+def _write_terms(store: IndexStore, terms: DataFrame,
+                 seg: str | None = None) -> None:
+    """The term dictionary, term-sorted within each bucket (so parquet
+    row-group min/max prunes dictionary range scans): one file per
+    bucket."""
+    out = terms.sortWithinPartitions("bucket", "term")
+    if seg is None:
+        store.write(out, "terms", partition_by=["bucket"])
+    else:
+        store.write_segment(out, "terms", seg, partition_by=["bucket"])
+
+
+def _write_width(spark: SparkSession) -> int:
+    """Tasks per table write: one per core.  A parquet write task's
+    fixed cost (30–90 ms per task just to deserialize it, Hadoop
+    configuration included, on a 4-core host in Spark 4.1 local mode)
+    outweighs its data at small scale, so the build writes doc_stats
+    ranges, mirror ranges and (up to NUM_TERM_BUCKETS) bucket files
+    with this many tasks."""
+    return spark.sparkContext.defaultParallelism
+
+
+def _dictionary_stats(rows: DataFrame,
+                      n_ranges: int) -> tuple[list[dict], list[str]]:
+    """Per-bucket stats — lineage rows AND global counts — plus a term
+    sample for the mirrors' range bounds, from ONE aggregate over
+    (bucket, term, df, n_blocks, first) rows: one row per posting block
+    (_block_terms) or per term (first = true).
+
+    The groups are (bucket, xxhash64(term) mod k), k sized so that the
+    groups' smallest-hash terms — one per group, a deterministic
+    uniform sample — number about SAMPLE_PER_RANGE × n_ranges; the
+    driver sums the groups back into buckets."""
+    k = -(-SAMPLE_PER_RANGE * n_ranges // NUM_TERM_BUCKETS)
+    h = F.xxhash64("term")
+    groups = rows.groupBy("bucket", F.pmod(h, F.lit(k))).agg(
+        F.sum("df").alias("rows_in"),
+        F.count_if("first").alias("terms_out"),
+        F.sum("n_blocks").alias("blocks_out"),
+        F.min_by("term", h).alias("sample")).collect()
+    stats: dict[int, dict] = {}
+    for g in groups:
+        b = stats.setdefault(g["bucket"], {"bucket": g["bucket"],
+                                           "rows_in": 0, "terms_out": 0,
+                                           "blocks_out": 0})
+        for c in ("rows_in", "terms_out", "blocks_out"):
+            b[c] += g[c]
+    return [stats[b] for b in sorted(stats)], [g["sample"] for g in groups]
+
+
+def _grams(term: str) -> set[str]:
+    return ({term[i:i + 3] for i in range(len(term) - 2)}
+            | {term[i:i + 2] for i in range(len(term) - 1)})
+
+
+def _write_mirrors(store: IndexStore, rows: DataFrame, sample: list[str],
+                   seg: str | None = None) -> None:
     """Wildcard mirrors of the term dictionary.
 
     terms_rev: (rev=reverse(term), term, df), range-partitioned and
@@ -453,60 +574,70 @@ def _write_terms_rev(store: IndexStore, terms: DataFrame,
     the whole dictionary).  O(Σ len(term)) rows per gram length (~2×
     the 3-gram-only mirror), range-partitioned by gram so the per-query
     read touches only matching row groups; 2- and 3-char grams are
-    disjoint string sets so one column serves both."""
-    par = max(terms.sparkSession.sparkContext.defaultParallelism, 8)
-    rev = (terms.select(F.reverse("term").alias("rev"), "term", "df")
-           .repartitionByRange(par, "rev")
-           .sortWithinPartitions("rev"))
+    disjoint string sets so one column serves both.
+
+    Both derive from dictionary rows (_write_dictionary), not from the
+    written dictionary, so they need not wait for it.  Their range
+    bounds come from ONE term sample (_dictionary_stats): a sampled term
+    gives its reversal to the rev bounds and its grams to the gram
+    bounds.  Each mirror is then one shuffle and one write, and file i
+    holds exactly range i: the files cover disjoint, sorted key
+    ranges.  terms_rev sums df per term right after its shuffle (rows
+    of one term share a range, so no second exchange); terms_ngram
+    explodes the grams of each term's `first` row."""
+    n = _write_width(rows.sparkSession)
+    rev_order = [("rev", True)]
+    rev = (partition_by_ranges(
+        rows.select(F.reverse("term").alias("rev"), "term", "df"),
+        rev_order, range_bounds([(t[::-1],) for t in sample], n, rev_order))
+        .groupBy("_p", "rev", "term").agg(F.sum("df").alias("df"))
+        .drop("_p").sortWithinPartitions("rev"))
+    # one explode of each term's distinct 2- and 3-grams;
     # sequence(1, length-g+1) must not count DOWN (junk rows), hence the
-    # per-length filters; MIN_TOKEN_LEN=2 means every term has a 2-gram
-    g3 = (terms.select("term")
-          .filter(F.length("term") >= 3)
-          .withColumn("gram", F.explode(F.array_distinct(F.expr(
-              "transform(sequence(1, length(term) - 2),"
-              " i -> substring(term, i, 3))")))))
-    g2 = (terms.select("term")
-          .filter(F.length("term") >= 2)
-          .withColumn("gram", F.explode(F.array_distinct(F.expr(
-              "transform(sequence(1, length(term) - 1),"
-              " i -> substring(term, i, 2))")))))
-    grams = (g3.unionByName(g2)
-             .select("gram", "term")
-             .repartitionByRange(par, "gram")
-             .sortWithinPartitions("gram", "term"))
-    # both mirrors derive from the already-committed terms parquet and
-    # are independent: submit their write jobs CONCURRENTLY (Spark
-    # schedules parallel jobs fine) — sequentially they cost two full
-    # job latencies on a stage that is otherwise seconds
-    import threading
-    errs: list[BaseException] = []
+    # length guards; MIN_TOKEN_LEN=2 means every term has a 2-gram
+    g2 = F.expr("transform(sequence(1, length(term) - 1),"
+                " i -> substring(term, i, 2))")
+    g3 = F.when(F.length("term") >= 3, F.expr(
+        "transform(sequence(1, length(term) - 2),"
+        " i -> substring(term, i, 3))")).otherwise(
+        F.array().cast("array<string>"))
+    gram_order = [("gram", True)]
+    grams = (partition_by_ranges(
+        rows.filter(F.col("first") & (F.length("term") >= 2)).select(
+            F.explode(F.array_distinct(F.concat(g3, g2))).alias("gram"),
+            "term"),
+        gram_order,
+        range_bounds([(g,) for t in sample for g in _grams(t)], n,
+                     gram_order))
+        .drop("_p").sortWithinPartitions("gram", "term"))
 
-    def _w(df: DataFrame, name: str) -> None:
-        try:
-            if seg is None:
-                store.write(df, name)
-            else:
-                store.write_segment(df, name, seg)
-        except BaseException as e:  # surfaced after join
-            errs.append(e)
+    def _w(df: DataFrame, name: str):
+        if seg is None:
+            return lambda: store.write(df, name)
+        return lambda: store.write_segment(df, name, seg)
 
-    ts = [threading.Thread(target=_w, args=(rev, "terms_rev")),
-          threading.Thread(target=_w, args=(grams, "terms_ngram"))]
-    for t in ts:
-        t.start()
-    for t in ts:
-        t.join()
-    if errs:
-        raise errs[0]
+    _concurrently(_w(rev, "terms_rev"), _w(grams, "terms_ngram"))
 
 
-def _collect_bucket_stats(terms: DataFrame) -> list:
-    """Per-bucket stats from the TINY terms table (not a postings
-    rescan): they double as lineage rows AND global counts."""
-    return terms.groupBy("bucket").agg(
-        F.sum("df").alias("rows_in"),
-        F.count("*").alias("terms_out"),
-        F.sum("n_blocks").alias("blocks_out")).collect()
+def _write_dictionary(store: IndexStore, rows: DataFrame,
+                      seg: str | None = None) -> list[dict]:
+    """Write the term dictionary and both wildcard mirrors from
+    (bucket, term, df, n_blocks, first) rows — one row per posting
+    block (_block_terms) and/or per committed term (first = true) — and
+    return the per-bucket stats.  Eight jobs, four deep: the dictionary
+    write (one shuffle) runs alongside the stats/sample aggregate, which
+    the two mirror writes (one shuffle each) follow."""
+    n = _write_width(rows.sparkSession)
+    stats: list = []
+
+    def _mirrors() -> None:
+        bucket_stats, sample = _dictionary_stats(rows, n)
+        stats.extend(bucket_stats)
+        _write_mirrors(store, rows, sample, seg)
+
+    _concurrently(lambda: _write_terms(store, _sum_terms(rows), seg),
+                  _mirrors)
+    return stats
 
 
 def _write_lineage(store: IndexStore, bucket_stats, fp: str,
@@ -548,10 +679,14 @@ class BuildResult:
     stage_secs: dict | None = None
 
 
-def _tune_scan_partitions(spark: SparkSession,
-                          sigs: dict[str, str] | None) -> str | None:
-    """Size spark.sql.files.maxPartitionBytes so the input scan yields
-    ~4 tasks per core (returns the previous setting, None if untouched).
+@contextmanager
+def _input_scan(spark: SparkSession, sigs: dict[str, str] | None):
+    """While the input pages are scanned, size
+    spark.sql.files.maxPartitionBytes so the scan yields ~4 tasks per
+    core; restored on every exit (a leaked 4 MB setting would explode
+    task counts for every later scan in the session).  Only the input
+    scan: under it the build's own small tables split one task per
+    file (16 per postings scan at 3000 pages).
 
     Rationale: the default 128 MB packing gave a 480k-page bench input
     NINE scan partitions — at 8 cores that is two task waves with the
@@ -561,13 +696,17 @@ def _tune_scan_partitions(spark: SparkSession,
     512 MB) the computed target exceeds the 128 MB default and the cap
     keeps Spark's normal behavior."""
     if not sigs:
-        return None
+        yield
+        return
     total = sum(max(int(s.split("|")[0]), 0) for s in sigs.values())
     par = spark.sparkContext.defaultParallelism * 4
     tgt = min(max(total // max(par, 1), 4 << 20), 128 << 20)
     old = spark.conf.get("spark.sql.files.maxPartitionBytes")
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(tgt))
-    return old
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", old)
 
 
 def prewarm_workers(spark: SparkSession) -> None:
@@ -667,26 +806,6 @@ def build_index(spark: SparkSession, pages: DataFrame, index_dir: str,
                 dedup_payloads: bool | None = None,
                 positions: bool | None = None,
                 fields: tuple[str, ...] | None = None) -> BuildResult:
-    """Build the full index — see _build_index_impl for the pipeline.
-    This wrapper owns the session-conf scan tuning so the restore runs
-    on EVERY exit (including exceptions mid-build: a leaked 4 MB
-    maxPartitionBytes would explode task counts for every later scan
-    in the session)."""
-    old_mpb = _tune_scan_partitions(spark, input_files_sig(pages))
-    try:
-        return _build_index_impl(spark, pages, index_dir, resume, codec,
-                                 dedup_payloads, positions, fields)
-    finally:
-        if old_mpb is not None:
-            spark.conf.set("spark.sql.files.maxPartitionBytes", old_mpb)
-
-
-def _build_index_impl(spark: SparkSession, pages: DataFrame,
-                      index_dir: str, resume: bool = False,
-                      codec: str | None = None,
-                      dedup_payloads: bool | None = None,
-                      positions: bool | None = None,
-                      fields: tuple[str, ...] | None = None) -> BuildResult:
     """Build the full index (doc_stats, terms, postings, lineage).
 
     Input contract: url is the document key — ONE page row per url.
@@ -824,12 +943,16 @@ def _build_index_impl(spark: SparkSession, pages: DataFrame,
     if resume and store.committed("tokens", tfp):
         resumed.append("tokens")
     else:
-        store.write(pages.select("url", "text", *fields).mapInPandas(
-            lambda it, _p=positions, _f=fields:
-                _tokenize_batches(it, _p, _f),
-            TOKENS_POS_SCHEMA if positions else TOKENS_SCHEMA), "tokens")
+        with _input_scan(spark, input_files_sig(raw_pages)):
+            store.write(pages.select("url", "text", *fields).mapInPandas(
+                lambda it, _p=positions, _f=fields:
+                    _tokenize_batches(it, _p, _f),
+                TOKENS_POS_SCHEMA if positions else TOKENS_SCHEMA),
+                "tokens")
         store.commit("tokens", tfp)
     _mark("tokens")
+    # this build's schema, not the store's: the recorded `positions`
+    # mode changes only at the postings commit
     tokens = store.read(spark, "tokens",
                         TOKENS_POS_SCHEMA if positions else TOKENS_SCHEMA)
 
@@ -847,32 +970,24 @@ def _build_index_impl(spark: SparkSession, pages: DataFrame,
         # quality := doc_len (pinned static score for the fixture corpus)
         doc_lens = doc_lens.withColumn(
             "quality", F.col("doc_len").cast("double"))
-        # materialize the per-doc table ONCE: repartitionByRange's
-        # boundary-sample job and the range shuffle inside
-        # assign_doc_ids_ranged would otherwise EACH re-execute the
-        # tokens scan + filter.  Lazy: the boundary-sample job is the
-        # first consumer and materializes it.  ~one short row per doc;
-        # persist keeps the lineage, so a block lost with an executor is
-        # recomputed from the committed tokens.
-        doc_lens = doc_lens.persist(StorageLevel.MEMORY_AND_DISK)
-        # corpus stats (n_docs, Σdl) ride along on the docID manifest
-        # collect — no separate aggregation job — and persist in the
-        # manifest so later stages, resumes, and serve startup never
-        # pay one either
+        # three column-pruned scans of the committed tokens (sample,
+        # per-range counts, the id write), nothing cached: a cache
+        # would cost its own materialization job.  Corpus stats (n_docs,
+        # Σdl) ride along on the per-range count — no separate
+        # aggregation job — and persist in the manifest so later
+        # stages, resumes, and serve startup never pay one either
         doc_stats, stats = assign_doc_ids_ranged(
             doc_lens,
-            num_partitions=max(spark.sparkContext.defaultParallelism, 8),
+            num_partitions=_write_width(spark),
             stats_col="doc_len")
         store.write(doc_stats.select("doc_id", "url", "doc_len", "quality"),
                     "doc_stats")
-        stats["cached"].unpersist()
-        doc_lens.unpersist()
         store.set_meta("n_docs", int(stats["n"]))
         store.set_meta("avgdl",
                        stats["sum"] / stats["n"] if stats["n"] else 0.0)
         store.commit("doc_stats", fp)
     _mark("doc_stats")
-    doc_stats = store.read(spark, "doc_stats", DOC_STATS_SCHEMA)
+    doc_stats = store.read(spark, "doc_stats")
     n_docs = int(store.get_meta("n_docs"))
     avgdl = float(store.get_meta("avgdl"))
 
@@ -885,8 +1000,7 @@ def _build_index_impl(spark: SparkSession, pages: DataFrame,
         resumed.append("postings")
     else:
         final_blocks = _final_blocks(spark, tokens, doc_stats, n_docs,
-                                     n_docs, avgdl, codec, positions,
-                                     urls_closed=True)
+                                     n_docs, avgdl, codec, positions)
         if dedup_payloads:
             # A7: store-wide posting-payload dedup (ItemIndexFactory,
             # reference/oscar-create/oscarcreate.cpp:74,100-115 — one
@@ -902,7 +1016,8 @@ def _build_index_impl(spark: SparkSession, pages: DataFrame,
             # materialize once: payloads + postings below would each
             # re-run the whole encode otherwise
             store.write_segment(fb, "_postings_staged", "base")
-            staged = store.read_segment(spark, "_postings_staged", "base")
+            staged = store.read_segment(spark, "_postings_staged", "base",
+                                        _staged_schema(positions))
             payloads = (staged.select("bucket", "payload_hash", "payload")
                         .dropDuplicates(["bucket", "payload_hash"]))
             store.write(payloads, "payloads", partition_by=["bucket"])
@@ -936,73 +1051,13 @@ def _build_index_impl(spark: SparkSession, pages: DataFrame,
     trfp = f"{fp}|f={ffp}"
     if resume and store.committed("terms", trfp):
         resumed.append("terms")
-        terms = store.read(spark, "terms")
-        bucket_stats = _collect_bucket_stats(terms)
+        bucket_stats, _ = _dictionary_stats(
+            store.read(spark, "terms").withColumn("first", F.lit(True)), 1)
     else:
-        terms_src = (
-            postings.groupBy("bucket", "term")
-            .agg(F.sum("doc_count").cast("long").alias("df"),
-                 F.count("*").cast("long").alias("n_blocks"))
-        )
-        # r06: all FOUR jobs of this stage — the terms write (term-
-        # sorted within each bucket so parquet row-group min/max prunes
-        # dictionary range scans), both wildcard-mirror writes, and the
-        # bucket-stats collect — derive from the same deterministic
-        # aggregation over the COMMITTED postings parquet (terms_src),
-        # so they are independent and run CONCURRENTLY (guide §2.6).
-        # The mirrors/stats previously waited for the committed terms
-        # parquet, serializing the stage behind two extra job-latency
-        # barriers.  Contents are unchanged: the mirrors project only
-        # (term, df) and the agg is deterministic on committed input,
-        # so "df provably equals the posting contents" (FIXTURES.md
-        # inv 2) still holds for everything written here.
-        # terms_src is materialized ONCE (persist +
-        # count — one 16-task agg job) instead of re-running the
-        # postings-parquet agg lineage inside every one of the 5+
-        # concurrent jobs (terms write, 2 mirror range-samples, 2
-        # mirror writes, stats collect); the dictionary is O(vocab)
-        # slim rows, unpersisted before the stage commits.  persist
-        # keeps the lineage, so blocks lost with an executor are
-        # recomputed from the committed postings (a localCheckpoint
-        # would fail the stage instead).
-        import threading
-        terms_src = terms_src.persist(StorageLevel.MEMORY_AND_DISK)
-        terms_src.count()
-        _stats: dict = {}
-        _terr: list[BaseException] = []
-
-        def _terms_job() -> None:
-            try:
-                store.write(terms_src.repartition("bucket")
-                            .sortWithinPartitions("bucket", "term"),
-                            "terms", partition_by=["bucket"])
-            except BaseException as e:
-                _terr.append(e)
-
-        def _stats_job() -> None:
-            try:
-                _stats["rows"] = _collect_bucket_stats(terms_src)
-            except BaseException as e:
-                _stats["err"] = e
-
-        tt = threading.Thread(target=_terms_job)
-        st = threading.Thread(target=_stats_job)
-        tt.start()
-        st.start()
-        try:
-            _write_terms_rev(store, terms_src)
-        finally:
-            # join even when the mirror writes raise: otherwise the
-            # terms write / stats collect keep running concurrently
-            # with error teardown (round-5 ADVICE)
-            tt.join()
-            st.join()
-            terms_src.unpersist()
-        if _terr:
-            raise _terr[0]
-        if "err" in _stats:
-            raise _stats["err"]
-        bucket_stats = _stats["rows"]
+        # The dictionary and both wildcard mirrors derive from the
+        # COMMITTED postings parquet, so df provably equals the posting
+        # contents (FIXTURES.md inv 2) for everything written here.
+        bucket_stats = _write_dictionary(store, _block_terms(postings))
         store.commit("terms", trfp)
     _mark("terms")
 
@@ -1072,8 +1127,7 @@ def ingest_segment(spark: SparkSession, new_pages: DataFrame,
             TOKENS_POS_SCHEMA if positions else TOKENS_SCHEMA),
         "tokens", seg)
     mark("tokens_append")
-    tokens_new = store.read_segment(
-        spark, "tokens", seg, TOKENS_POS_SCHEMA if positions else TOKENS_SCHEMA)
+    tokens_new = store.read_segment(spark, "tokens", seg)
 
     # ---- doc ids for the new docs, offset past the committed space.
     # url is the document key: a re-crawled url that is ALREADY indexed
@@ -1082,7 +1136,9 @@ def ingest_segment(spark: SparkSession, new_pages: DataFrame,
     # one-doc-per-url groupBy semantics; its orphaned token rows never
     # meet a doc_id and fall out of the postings join ----
     # per-doc lengths from the tokenizer's NULL-term marker rows (one
-    # per doc) — same filter-not-groupBy shape as the full build (r06)
+    # per doc) — same filter-not-groupBy shape as the full build (r06).
+    # The id assignment reads doc_lens three times (sample, per-range
+    # count, id write); persisted so the anti-join runs once ----
     doc_lens = (tokens_new.filter(F.col("term").isNull())
                 .select("url", F.col("dl").alias("doc_len"))
                 .join(store.read(spark, "doc_stats").select("url"),
@@ -1091,14 +1147,13 @@ def ingest_segment(spark: SparkSession, new_pages: DataFrame,
                 .persist(StorageLevel.MEMORY_AND_DISK))
     assigned, stats = assign_doc_ids_ranged(
         doc_lens,
-        num_partitions=max(spark.sparkContext.defaultParallelism, 8),
+        num_partitions=_write_width(spark),
         stats_col="doc_len")
     doc_stats_new = (
         assigned
         .withColumn("doc_id", (F.col("doc_id") + F.lit(n_old)).cast("long"))
         .select("doc_id", "url", "doc_len", "quality"))
     store.write_segment(doc_stats_new, "doc_stats", seg)
-    stats["cached"].unpersist()
     doc_lens.unpersist()
     n_new, dl_sum_new = int(stats["n"]), int(stats["sum"])
     n_total = n_old + n_new
@@ -1109,7 +1164,7 @@ def ingest_segment(spark: SparkSession, new_pages: DataFrame,
     # ---- postings for the new docs (same pipeline, new data only) ----
     final_new = _final_blocks(
         spark, tokens_new,
-        store.read_segment(spark, "doc_stats", seg, DOC_STATS_SCHEMA),
+        store.read_segment(spark, "doc_stats", seg),
         n_new, n_total, avgdl_total, codec, positions)
     # continue each term's block numbering after its committed blocks
     terms_old = store.read(spark, "terms")
@@ -1133,7 +1188,8 @@ def ingest_segment(spark: SparkSession, new_pages: DataFrame,
         import shutil
         fb = final_new.withColumn("payload_hash", F.md5("payload"))
         store.write_segment(fb, "_postings_staged", seg)
-        staged = store.read_segment(spark, "_postings_staged", seg)
+        staged = store.read_segment(spark, "_postings_staged", seg,
+                                    _staged_schema(positions))
         committed_p = store.read(spark, "payloads") \
             .select("bucket", "payload_hash")
         novel = (staged.select("bucket", "payload_hash", "payload")
@@ -1157,18 +1213,12 @@ def ingest_segment(spark: SparkSession, new_pages: DataFrame,
     # ---- merged terms: old + new df/n_blocks, written as a NEW segment
     # that atomically REPLACES the old one at commit (no self-overwrite,
     # no window where df disagrees with the visible postings) ----
-    terms_new = (store.read_segment(spark, "postings", seg)
-                 .groupBy("bucket", "term")
-                 .agg(F.sum("doc_count").cast("long").alias("df"),
-                      F.count("*").cast("long").alias("n_blocks")))
-    merged = (terms_old.unionByName(terms_new)
-              .groupBy("bucket", "term")
-              .agg(F.sum("df").cast("long").alias("df"),
-                   F.sum("n_blocks").cast("long").alias("n_blocks")))
-    store.write_segment(merged.repartition("bucket")
-                        .sortWithinPartitions("bucket", "term"),
-                        "terms", seg, partition_by=["bucket"])
-    _write_terms_rev(store, store.read_segment(spark, "terms", seg), seg)
+    # a new block of a committed term has block_id > 0 (numbering
+    # continues past the committed blocks), so `first` still marks one
+    # row per term
+    bucket_stats = _write_dictionary(store, terms_old.withColumn(
+        "first", F.lit(True)).unionByName(
+        _block_terms(store.read_segment(spark, "postings", seg))), seg)
     mark("terms_append")
 
     # ---- ONE atomic snapshot commit (fingerprint scheme matches
@@ -1186,7 +1236,8 @@ def ingest_segment(spark: SparkSession, new_pages: DataFrame,
         stage_fingerprints={"tokens": tfp, "doc_stats": fp,
                             "postings": pfp, "terms": trfp},
     )
-    return {"n_new": n_new, "n_total": n_total, "avgdl": avgdl_total}
+    return {"n_new": n_new, "n_total": n_total, "avgdl": avgdl_total,
+            "bucket_stats": bucket_stats}
 
 
 def _uri_variants(f: str) -> set[str]:
@@ -1271,15 +1322,12 @@ def _append_index(spark: SparkSession, pages: DataFrame, store: IndexStore,
     # input_file_name() is only defined directly over the file scan)
     if "text" not in new_pages.columns:
         new_pages = extract_pages(new_pages)
-    stats = ingest_segment(spark, new_pages, store, seg, codec, fp,
-                           extra_meta={"input_files": cur_sigs},
-                           mark=_mark)
+    with _input_scan(spark, cur_sigs):
+        stats = ingest_segment(spark, new_pages, store, seg, codec, fp,
+                               extra_meta={"input_files": cur_sigs},
+                               mark=_mark)
 
-    terms = store.read(spark, "terms")
-    bucket_stats = terms.groupBy("bucket").agg(
-        F.sum("df").alias("rows_in"),
-        F.count("*").alias("terms_out"),
-        F.sum("n_blocks").alias("blocks_out")).collect()
+    bucket_stats = stats["bucket_stats"]
     n_terms = sum(r["terms_out"] for r in bucket_stats)
     n_blocks = sum(r["blocks_out"] for r in bucket_stats)
     elapsed = time.time() - t0
@@ -1368,14 +1416,8 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
 
     # terms re-derived from the compacted postings so the stored df
     # provably equals the posting contents (FIXTURES.md invariant 2)
-    terms = (store.read_segment(spark, "postings", seg)
-             .groupBy("bucket", "term")
-             .agg(F.sum("doc_count").cast("long").alias("df"),
-                  F.count("*").cast("long").alias("n_blocks")))
-    store.write_segment(terms.repartition("bucket")
-                        .sortWithinPartitions("bucket", "term"),
-                        "terms", seg, partition_by=["bucket"])
-    _write_terms_rev(store, store.read_segment(spark, "terms", seg), seg)
+    _write_dictionary(store, _block_terms(
+        store.read_segment(spark, "postings", seg)), seg)
 
     # resume snapshots collapse to one segment unchanged
     store.write_segment(store.read(spark, "tokens"), "tokens", seg)

@@ -1,8 +1,11 @@
-"""Python mirror of Spark's `hash()` (Murmur3 x86-32, seed 42) for strings.
+"""Python mirror of Spark's `hash()` (Murmur3 x86-32, seed 42) for strings
+and ints.
 
 Needed so the serve path can compute a term's bucket partition
 (pmod(hash(term), NUM_TERM_BUCKETS)) driver-side without launching a
-Spark job per query term.  Murmur3 is a public-domain algorithm; the
+Spark job per query term, and so the build can pick int keys that
+`repartition(n, key)` (hash partitioning, the same pmod(hash, n)) sends
+to chosen partitions.  Murmur3 is a public-domain algorithm; the
 tail handling here matches Spark's hashUnsafeBytes (whole little-endian
 int words, then each remaining byte mixed individually as a signed int),
 which differs from reference murmur3 tails.  Parity with `F.hash()` is
@@ -61,3 +64,24 @@ def spark_hash_string(s: str, seed: int = 42) -> int:
 def term_bucket(term: str, n_buckets: int) -> int:
     """= pmod(hash(term), n_buckets) in Spark SQL."""
     return spark_hash_string(term) % n_buckets
+
+
+def spark_hash_int(v: int, seed: int = 42) -> int:
+    """= Spark SQL hash(v) for an IntegerType value (signed int32)."""
+    out = _fmix(_mix_h1(seed & _M32, _mix_k1(v & _M32)), 4)
+    return out - (1 << 32) if out >= (1 << 31) else out
+
+
+def partition_keys(n: int) -> list[int]:
+    """keys[i] = the smallest int k ≥ 0 with pmod(hash(k), n) == i, so
+    `repartition(n, <int column holding keys[i]>)` puts the row in
+    shuffle partition i."""
+    keys: list[int | None] = [None] * n
+    left, k = n, 0
+    while left:
+        p = spark_hash_int(k) % n
+        if keys[p] is None:
+            keys[p] = k
+            left -= 1
+        k += 1
+    return keys

@@ -378,7 +378,7 @@ class SearchEngine:
                           if self.store.get_meta("payload_dedup", False)
                           else None)
         # wildcard mirrors of the term dictionary (rev-sorted suffix
-        # mirror, 2/3-gram substring mirror; see indexer._write_terms_rev)
+        # mirror, 2/3-gram substring mirror; see indexer._write_mirrors)
         self._terms_rev = self.store.read(spark, "terms_rev")
         self._terms_ngram = self.store.read(spark, "terms_ngram")
         self._brute_cache: DataFrame | None = None

@@ -12,11 +12,9 @@ writes partitioned parquet plus an explicit `_manifest.json` that mimics
 the snapshot/commit semantics we rely on:
 
     <index_dir>/
-      doc_stats/          doc_id, url, doc_len, quality        (parquet)
-      terms/bucket=*/     term, df                             (parquet)
-      postings/bucket=*/  term, block_id, range_id, first_doc,
-                          last_doc, doc_count, max_tf,
-                          max_score, payload                   (parquet)
+      tokens/, doc_stats/, terms/bucket=*/, terms_rev/, terms_ngram/,
+      postings/bucket=*/, payloads/bucket=*/      (parquet, under seg=*/;
+                          columns: the *_SCHEMA constants below)
       lineage/            partition_id, input_fingerprint, rows_in,
                           terms_out, docs_per_sec, snapshot_id, ts
       _manifest.json      {stage: {fingerprint, snapshot_id, ts}}
@@ -37,6 +35,50 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 STAGES = ("doc_stats", "postings", "terms")
+
+# Every committed table's columns (DDL: data columns in write order,
+# then the `bucket` partition column where the table has one).  Reads
+# hand them to Spark, which otherwise runs a one-task job per read to
+# infer the schema from parquet footers.
+TOKENS_SCHEMA = "url string, term string, tf int, dl int"
+# positional build: per-(doc, term) occurrence positions in the
+# FILTERED token stream (short tokens dropped before numbering — the
+# same rule tokens_pos/the oracle use, so adjacency agrees everywhere)
+TOKENS_POS_SCHEMA = TOKENS_SCHEMA + ", pos array<int>"
+DOC_STATS_SCHEMA = "doc_id long, url string, doc_len int, quality double"
+TERMS_SCHEMA = "term string, df long, n_blocks long, bucket int"
+TERMS_REV_SCHEMA = "rev string, term string, df long"
+TERMS_NGRAM_SCHEMA = "gram string, term string"
+PAYLOADS_SCHEMA = "payload_hash string, payload binary, bucket int"
+POSTINGS_META_SCHEMA = (
+    "term string, block_id int, range_id long, first_doc long, "
+    "last_doc long, doc_count int, max_tf int, min_dl int, "
+    "max_score double")
+
+
+def postings_schema(positions: bool, dedup: bool) -> str:
+    """Payload-dedup stores keep the payload in `payloads` and its md5
+    in postings (indexer: the staged table's `drop("payload")`)."""
+    return (POSTINGS_META_SCHEMA
+            + ("" if dedup else ", payload binary")
+            + (", pos_payload binary" if positions else "")
+            + (", payload_hash string" if dedup else "")
+            + ", bucket int")
+
+
+def table_schema(table: str, meta: dict) -> str | None:
+    """The committed table's DDL under the store's recorded modes; None
+    for a table this module does not know."""
+    positions = bool(meta.get("positions", False))
+    if table == "tokens":
+        return TOKENS_POS_SCHEMA if positions else TOKENS_SCHEMA
+    if table == "postings":
+        return postings_schema(positions,
+                               bool(meta.get("payload_dedup", False)))
+    return {"doc_stats": DOC_STATS_SCHEMA, "terms": TERMS_SCHEMA,
+            "terms_rev": TERMS_REV_SCHEMA,
+            "terms_ngram": TERMS_NGRAM_SCHEMA,
+            "payloads": PAYLOADS_SCHEMA}.get(table)
 
 # serializes manifest read-modify-write across in-process threads (the
 # build submits independent table writes concurrently); cross-process
@@ -176,9 +218,11 @@ class IndexStore:
         self._mutate(fn)
 
     def _reader(self, spark: SparkSession, table: str,
-                schema: str | None) -> DataFrame:
-        """The table with its `seg` column.  A known schema (DDL) skips
-        Spark's schema inference, which costs a 1-task job per read."""
+                schema: str | None, m: dict) -> DataFrame:
+        """The table with its `seg` column, read with the given schema
+        (DDL) or else the table's known one (table_schema); only an
+        unknown table pays Spark's schema-inference job."""
+        schema = schema or table_schema(table, m.get("meta", {}))
         r = spark.read.option("basePath", self.path(table))
         if schema is not None:
             r = r.schema(f"{schema}, seg string")
@@ -186,11 +230,12 @@ class IndexStore:
 
     def read(self, spark: SparkSession, table: str,
              schema: str | None = None) -> DataFrame:
-        df = self._reader(spark, table, schema)
-        return df.filter(F.col("seg").isin(self.segments(table))) \
-            .drop("seg")
+        m = self.manifest()
+        segs = m.get("segments", {}).get(table, ["base"])
+        return self._reader(spark, table, schema, m) \
+            .filter(F.col("seg").isin(segs)).drop("seg")
 
     def read_segment(self, spark: SparkSession, table: str,
                      segment: str, schema: str | None = None) -> DataFrame:
-        df = self._reader(spark, table, schema)
-        return df.filter(F.col("seg") == segment).drop("seg")
+        return self._reader(spark, table, schema, self.manifest()) \
+            .filter(F.col("seg") == segment).drop("seg")
