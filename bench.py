@@ -23,6 +23,20 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
+def peak_rss_mb(spark) -> float:
+    """Peak resident memory of the driver Python process plus the JVM
+    (perfbench's `peak_rss_mb`: ru_maxrss plus the JVM's VmHWM)."""
+    import resource
+    py_kb = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss
+    pid = spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid()
+    jvm_kb = 0
+    with open(f"/proc/{pid}/status") as f:
+        for line in f:
+            if line.startswith("VmHWM:"):
+                jvm_kb = int(line.split()[1])
+    return round((py_kb + jvm_kb) / 1024.0, 1)
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -156,6 +170,7 @@ def main() -> None:
         "sf": sf,
         "cpus": cpus,
         "bench_pages": n_pages,
+        "peak_rss_mb": peak_rss_mb(spark),
     }))
     spark.stop()
 

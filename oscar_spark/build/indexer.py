@@ -68,7 +68,7 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 from pyspark import StorageLevel
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from oscar_spark.build.docids import assign_doc_ids_ranged
@@ -1083,7 +1083,8 @@ def build_index(spark: SparkSession, pages: DataFrame, index_dir: str,
 def ingest_segment(spark: SparkSession, new_pages: DataFrame,
                    store: IndexStore, seg: str, codec: str, fp: str,
                    extra_meta: dict | None = None,
-                   mark=lambda name: None) -> dict:
+                   mark=lambda name: None,
+                   check_tokens=lambda: None) -> dict:
     """Core incremental ingest: merge new page rows into a committed
     index as one segment.
 
@@ -1099,6 +1100,8 @@ def ingest_segment(spark: SparkSession, new_pages: DataFrame,
 
     Shared by the file-growth append path (_append_index) and the
     Structured Streaming foreachBatch ingest (streaming/jobs.py).
+    `check_tokens` runs right after the new tokens are written: an
+    input check raising there commits nothing.
     """
     if seg in store.segments("postings"):
         # a committed segment must never be overwritten: re-running the
@@ -1126,6 +1129,7 @@ def ingest_segment(spark: SparkSession, new_pages: DataFrame,
                 _tokenize_batches(it, _p, _f),
             TOKENS_POS_SCHEMA if positions else TOKENS_SCHEMA),
         "tokens", seg)
+    check_tokens()
     mark("tokens_append")
     tokens_new = store.read_segment(spark, "tokens", seg)
 
@@ -1293,14 +1297,25 @@ def _append_index(spark: SparkSession, pages: DataFrame, store: IndexStore,
     # input_file_name() is matched against that closed set.  A zero-row
     # match is a hard error below, never a silent empty append.
     targets = sorted(set().union(*(_uri_variants(f) for f in new_files)))
-    new_pages = pages.filter(F.input_file_name().isin(targets))
-    # EVERY new file must match (a partial match would silently drop
-    # the unmatched files' docs while recording them as ingested —
-    # distinct scan-side names are each one real file, so a count
-    # comparison detects any miss)
-    matched = {r["f"] for r in new_pages
-               .select(F.input_file_name().alias("f")).distinct().collect()}
-    if len(matched) < len(new_files):
+    # the file names and row count are observed on the filtered scan
+    # that feeds the tokens write, so the match check costs no scan of
+    # its own (input_file_name() is projected first: observing it
+    # directly fails with "InputFileName should be initialized before
+    # eval")
+    seen = Observation("append_files")
+    new_pages = (pages.withColumn("_file", F.input_file_name())
+                 .filter(F.col("_file").isin(targets))
+                 .observe(seen, F.collect_set("_file").alias("files"),
+                          F.count("_file").alias("rows")))
+
+    def _check_files() -> None:
+        # EVERY new file must match (a partial match would silently
+        # drop the unmatched files' docs while recording them as
+        # ingested — distinct scan-side names are each one real file,
+        # so a count comparison detects any miss)
+        matched = set(seen.get["files"])
+        if len(matched) >= len(new_files):
+            return
         # a legitimately EMPTY parquet drop (0 rows) has no rows whose
         # input_file_name() could match — indistinguishable from a URI
         # rendering mismatch by row counts alone.  Read just the
@@ -1314,10 +1329,12 @@ def _append_index(spark: SparkSession, pages: DataFrame, store: IndexStore,
         if dropped:
             raise RuntimeError(
                 f"append: {len(dropped)} non-empty new input file(s) "
-                "matched zero rows (URI rendering mismatch between "
+                f"matched zero rows ({seen.get['rows']} rows matched "
+                "from the others; URI rendering mismatch between "
                 "inputFiles() and input_file_name()); refusing to "
                 "commit a partial segment. First affected: "
                 f"{dropped[0]!r}")
+
     # html-only input: extract AFTER the per-file filter (the filter's
     # input_file_name() is only defined directly over the file scan)
     if "text" not in new_pages.columns:
@@ -1325,7 +1342,7 @@ def _append_index(spark: SparkSession, pages: DataFrame, store: IndexStore,
     with _input_scan(spark, cur_sigs):
         stats = ingest_segment(spark, new_pages, store, seg, codec, fp,
                                extra_meta={"input_files": cur_sigs},
-                               mark=_mark)
+                               mark=_mark, check_tokens=_check_files)
 
     bucket_stats = stats["bucket_stats"]
     n_terms = sum(r["terms_out"] for r in bucket_stats)

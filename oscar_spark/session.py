@@ -26,7 +26,7 @@ def find_iceberg_jar() -> str | None:
     On a real deployment, put the jar on the classpath or point
     ICEBERG_JAR at it and get_spark wires a hadoop-type `oscar` catalog
     (warehouse from OSCAR_ICEBERG_WAREHOUSE); the skipif test
-    tests/test_round5_fixes.py::test_iceberg_catalog_roundtrip then
+    tests/test_session.py::test_iceberg_catalog_roundtrip then
     exercises the SURVEY §1.2 `writeTo(...).createOrReplace()` mapping
     end-to-end."""
     env = os.environ.get("ICEBERG_JAR")
@@ -78,6 +78,18 @@ def get_spark(app: str = "oscar-spark", cores: int | None = None,
         # units buffer batches internally instead
         # (indexer._encode_partition_arrow)
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
+        # Tungsten page size: the largest power of two whose on-heap
+        # page (a long[] plus its 16-byte header) stays under half a G1
+        # region, so no page is a humongous object.  G1 sizes regions
+        # at heap/2048 (4 MB on the 8 GB heap above); Spark's default
+        # page (64 MB at local[4], 32 MB at local[8]) went straight
+        # into old-gen humongous regions, one per sort, hash aggregate
+        # and shuffle-map task, and the heap grew to fit that churn,
+        # not live data.  Limit: TaskMemoryManager's 8192-entry page
+        # table caps one task at 8 GB of pages at this size.  A conf,
+        # not a GC flag (-XX:G1HeapRegionSize): the driver's JVM options
+        # belong to whoever launches it (perfbench/run.py sets its own).
+        .config("spark.buffer.pageSize", "1m")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         # v2 file-output commit: v1's job-commit phase renames every

@@ -149,6 +149,34 @@ def test_append_html_only_input(spark, tmp_path):
     assert IndexStore(d).read(spark, "doc_stats").count() == 200
 
 
+def test_append_unmatched_file_raises_and_commits_nothing(
+        spark, tmp_path, monkeypatch):
+    """A non-empty new file whose URI renderings all miss
+    input_file_name() must fail the append after the tokens write and
+    before anything commits: the manifest is left as it was."""
+    from oscar_spark.build import indexer
+    from oscar_spark.fixtures.pages import generate_pages
+    from oscar_spark.sources.tables import IndexStore
+
+    pdf = generate_pages(200)
+    pdir = tmp_path / "pages"
+    pdir.mkdir()
+    d = str(tmp_path / "idx")
+    _write_pages_file(pdf.iloc[:150], str(pdir / "f0.parquet"))
+    indexer.build_index(spark, spark.read.parquet(str(pdir)), d)
+    _write_pages_file(pdf.iloc[150:175], str(pdir / "f1.parquet"))
+    _write_pages_file(pdf.iloc[175:], str(pdir / "f2.parquet"))
+    real = indexer._uri_variants
+    monkeypatch.setattr(
+        indexer, "_uri_variants",
+        lambda f: {"nomatch:" + f} if f.endswith("f2.parquet") else real(f))
+    before = IndexStore(d).manifest()
+    with pytest.raises(RuntimeError, match="matched zero rows"):
+        indexer.build_index(spark, spark.read.parquet(str(pdir)), d,
+                            resume=True)
+    assert IndexStore(d).manifest() == before
+
+
 def test_append_recrawled_urls_not_duplicated(spark, tmp_path):
     """An appended file re-containing already-indexed urls must not
     create second docs for them: url is the document key (the full

@@ -202,26 +202,6 @@ def test_drop_memory_releases_preload(spark, built_index):
     assert len(ex._PRELOAD_CACHE) == 0
 
 
-def test_worker_keepalive_tick_runs_and_detects_stop(spark):
-    """The session keepalive beat (a 1-row Python job refreshing
-    PythonWorkerFactory's idle timer so the 60s monitor never culls the
-    warm worker pool) runs clean on a live session and reports a
-    stopped context instead of raising."""
-    from oscar_spark import session as sess
-    assert sess._keepalive_tick(spark) is True
-
-    class _Stopped:
-        sparkContext = type("SC", (), {"_jsc": None})()
-
-    assert sess._keepalive_tick(_Stopped()) is False
-
-
-def test_prewarm_thread_started_by_get_spark(spark):
-    """get_spark launches the async prewarm/keepalive thread at most
-    once per context (flag set on the SparkContext)."""
-    assert getattr(spark.sparkContext, "_oscar_prewarmed", False)
-
-
 def test_arrow_encoder_matches_whole_run_encode():
     """_encode_partition_arrow over split Arrow batches (the mapInArrow
     path, carry-over across the 262144-row unit boundary included) must
