@@ -18,6 +18,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from oscar_spark.config import NUM_TERM_BUCKETS, RANGE_SIZE
+from oscar_spark.functions.codec import decode_position_block, store_decoder
 from oscar_spark.sources.tables import IndexStore
 
 DECODE_SAMPLE = 2000  # payload-decode spot check, bounded at any scale
@@ -32,14 +33,17 @@ def check_index(spark: SparkSession, index_dir: str,
         out[name] = {"ok": bool(ok), "detail": detail}
 
     man = store.manifest()
+    meta = man.get("meta", {})
+    # a store its own engine cannot read is rejected, not reported on
+    decode = store_decoder(meta)
     committed = set(man.get("snapshots", {}))
     record("stages_committed",
            {"doc_stats", "postings", "terms"} <= committed,
            sorted(committed))
 
-    ds = store.read(spark, "doc_stats")
-    n_docs_meta = store.get_meta("n_docs")
-    avgdl_meta = store.get_meta("avgdl")
+    ds = store.read(spark, "doc_stats", manifest=man)
+    n_docs_meta = meta.get("n_docs")
+    avgdl_meta = meta.get("avgdl")
     row = ds.agg(
         F.count("*").alias("n"),
         F.count_distinct("url").alias("nu"),
@@ -62,11 +66,11 @@ def check_index(spark: SparkSession, index_dir: str,
 
     # terms ↔ postings cross check (FIXTURES.md invariant 2: the stored
     # df provably equals the posting contents)
-    post = store.read(spark, "postings")
+    post = store.read(spark, "postings", manifest=man)
     agg = post.groupBy("bucket", "term").agg(
         F.sum("doc_count").cast("long").alias("p_df"),
         F.count("*").cast("long").alias("p_blocks"))
-    terms = store.read(spark, "terms")
+    terms = store.read(spark, "terms", manifest=man)
     joined = terms.join(agg, ["bucket", "term"], "full_outer")
     bad_df = joined.filter(
         F.col("df").isNull() | F.col("p_df").isNull() |
@@ -104,17 +108,11 @@ def check_index(spark: SparkSession, index_dir: str,
            {"bad_blocks": int(bad_blocks)})
 
     # payload decode spot check through the store's own codec dispatch
-    from oscar_spark.functions.codec import store_decoder
-    decode = store_decoder(store.manifest().get("meta", {}))
     cols = ["range_id", "doc_count", "first_doc", "last_doc", "payload"]
-    has_pos = bool(store.get_meta("positions", False))
+    has_pos = bool(meta.get("positions", False))
     if has_pos:
         cols.append("pos_payload")
-    fetch = post
-    if store.get_meta("payload_dedup", False):
-        fetch = post.join(store.read(spark, "payloads"),
-                          ["bucket", "payload_hash"])
-    sample = fetch.select(*cols).limit(decode_sample).collect()
+    sample = post.select(*cols).limit(decode_sample).collect()
     bad_payload = 0
     for r in sample:
         try:
@@ -127,8 +125,6 @@ def check_index(spark: SparkSession, index_dir: str,
                   and bool((np.diff(ids) > 0).all())
                   and bool((tfs > 0).all()) and bool((dls > 0).all()))
             if ok and has_pos:
-                from oscar_spark.functions.codec import \
-                    decode_position_block
                 flat, offs = decode_position_block(
                     bytes(r["pos_payload"]), tfs)
                 ok = offs[-1] == int(tfs.sum())

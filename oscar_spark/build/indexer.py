@@ -98,17 +98,6 @@ BLOCKS_SCHEMA = (
     "doc_count int, max_tf int, min_dl int, payload binary"
 )
 BLOCKS_POS_SCHEMA = BLOCKS_SCHEMA + ", pos_payload binary"
-FINAL_BLOCKS_SCHEMA = (
-    "bucket int, term string, block_id int, range_id long, "
-    "first_doc long, last_doc long, doc_count int, max_tf int, "
-    "min_dl int, max_score double, payload binary"
-)
-
-
-def _staged_schema(positions: bool) -> str:
-    """The payload-dedup path's staged blocks: final blocks + md5."""
-    return (FINAL_BLOCKS_SCHEMA + (", pos_payload binary" if positions
-                                   else "") + ", payload_hash string")
 
 
 def _tokenize_batches(batches: Iterator[pd.DataFrame],
@@ -214,6 +203,15 @@ def _tokenize_batches(batches: Iterator[pd.DataFrame],
                     fpos = np.array([FIELD_POS_BASE + j], dtype="int32")
                     frow["pos"] = [fpos] * int(km.sum())
                 yield pd.DataFrame(frow)
+
+
+def _tokenize(pages: DataFrame, positions: bool,
+              fields: tuple[str, ...]) -> DataFrame:
+    """pages (url, text, fields…) → the tokens table (_tokenize_batches),
+    as the build and the append both write it."""
+    return pages.select("url", "text", *fields).mapInPandas(
+        lambda it, _p=positions, _f=fields: _tokenize_batches(it, _p, _f),
+        TOKENS_POS_SCHEMA if positions else TOKENS_SCHEMA)
 
 
 def _encode_partition_arrow(batches, codec: str = "varint",
@@ -800,10 +798,30 @@ def input_fingerprint(pages: DataFrame) -> str:
     return f"n{row['n']}-u{row['u']}-t{row['t']}"
 
 
+def _stage_fingerprints(fp: str, codec: str, positions: bool,
+                        fields: tuple[str, ...]) -> dict[str, str]:
+    """Each stage's resume fingerprint: the input fingerprint plus the
+    modes its output depends on, so a resume under another mode redoes
+    the stage instead of keeping output of the old one.
+
+    - tokens: positions and fields; `|m2` is tokens-table format 2
+      (per-doc NULL-term marker rows), so a store whose tokens were
+      committed WITHOUT markers re-tokenizes on resume, or the
+      marker-filter doc lengths would see only empty docs.
+    - postings: codec too, so a resume under another codec rebuilds
+      instead of keeping the old payloads under the new codec label.
+    - terms: df depends on the fielded-token set (not on codec or
+      positions), so a fields flip rebuilds the dictionary too."""
+    f = ",".join(fields)
+    return {"tokens": f"{fp}|pos={int(positions)}|f={f}|m2",
+            "doc_stats": fp,
+            "postings": f"{fp}|codec={codec}|pos={int(positions)}|f={f}",
+            "terms": f"{fp}|f={f}"}
+
+
 def build_index(spark: SparkSession, pages: DataFrame, index_dir: str,
                 resume: bool = False,
                 codec: str | None = None,
-                dedup_payloads: bool | None = None,
                 positions: bool | None = None,
                 fields: tuple[str, ...] | None = None) -> BuildResult:
     """Build the full index (doc_stats, terms, postings, lineage).
@@ -818,9 +836,6 @@ def build_index(spark: SparkSession, pages: DataFrame, index_dir: str,
     dispatches on it.  (Analog of the reference's per-build codec
     configs, reference/data/configs/oscar-create/index_*.json;
     comparison table in BENCH/CODECS.md.)
-    dedup_payloads: store each distinct posting payload once (A7,
-    ItemIndexFactory analog) at the cost of a payload-fetch join in
-    serve; recorded in the manifest, serve adapts automatically.
     positions: store per-posting occurrence positions in a pos_payload
     side column (QT_EXACT support: quoted queries become TRUE phrase
     queries in serve instead of AND-of-tokens).  Costs ~Σtf extra
@@ -831,25 +846,26 @@ def build_index(spark: SparkSession, pages: DataFrame, index_dir: str,
     reference/oscar-create/TextSearchTraits.h:108) — `lang:en` then
     works as a query leaf; recorded in the manifest, appends inherit.
 
-    All four mode knobs default to None = "unspecified": a resume over
+    All three mode knobs default to None = "unspecified": a resume over
     an existing store INHERITS its recorded modes, so `cli.py build
     --resume` (which passes no mode flags) appends to a positional/
-    fielded/dedup/pfor store instead of silently rebuilding it as a plain
+    fielded/pfor store instead of silently rebuilding it as a plain
     varint store.  Passing an explicit value still overrides — a real
-    mode FLIP rebuilds, as the append gate requires."""
+    mode FLIP rebuilds, as the append gate requires.
+
+    Without resume the build starts a new store: no metadata of an
+    earlier store in index_dir (its modes, its input files) survives."""
     from oscar_spark.config import POSTINGS_CODEC
+    store = IndexStore(index_dir)
     if resume:
-        _meta = IndexStore(index_dir)
-        codec = codec or _meta.get_meta("codec", None) or POSTINGS_CODEC
-        if dedup_payloads is None:
-            dedup_payloads = bool(_meta.get_meta("payload_dedup", False))
+        meta = store.manifest().get("meta", {})
+        codec = codec or meta.get("codec")
         if positions is None:
-            positions = bool(_meta.get_meta("positions", False))
+            positions = bool(meta.get("positions", False))
         if fields is None:
-            fields = tuple(_meta.get_meta("fields", []) or [])
+            fields = tuple(meta.get("fields", []) or [])
     codec = codec or POSTINGS_CODEC
     block_decoder(codec)  # fail fast on an unknown codec name
-    dedup_payloads = bool(dedup_payloads)
     positions = bool(positions)
     fields = tuple(fields or ())
     if fields:
@@ -871,6 +887,8 @@ def build_index(spark: SparkSession, pages: DataFrame, index_dir: str,
             raise ValueError(
                 f"field columns collide after key normalization: {coll}"
                 " — the composite key:value tokens would be ambiguous")
+    if not resume:
+        store.clear_meta()
     t0 = time.time()
     stage_secs: dict[str, float] = {}
     _last = [t0]
@@ -890,7 +908,6 @@ def build_index(spark: SparkSession, pages: DataFrame, index_dir: str,
     if "text" not in pages.columns:
         pages = extract_pages(pages)
 
-    store = IndexStore(index_dir)
     fp = input_fingerprint(pages)
     _mark("fingerprint")
     resumed: list[str] = []
@@ -901,23 +918,16 @@ def build_index(spark: SparkSession, pages: DataFrame, index_dir: str,
     # tokenize ONLY the new files and merge their postings into the
     # committed index as a new segment — a daily crawl drop costs
     # O(new data), not a rebuild ----
+    fps = _stage_fingerprints(fp, codec, positions, fields)
     if resume:
-        recorded = store.get_meta("input_files")
+        recorded = meta.get("input_files")
         cur = input_files_sig(raw_pages)
         if (recorded and cur and len(cur) > len(recorded)
-                and not store.committed(
-                    "postings",
-                    f"{fp}|codec={codec}|pos={int(positions)}"
-                    f"|f={','.join(fields)}")
-                and store.get_meta("codec", codec) == codec
+                and not store.committed("postings", fps["postings"])
+                and meta.get("codec", codec) == codec
                 # a positional/fielded flag flip means a rebuild
-                and store.get_meta("positions", False) == positions
-                and store.get_meta("fields", []) == list(fields)
-                # payload-dedup stores append fine (the new segment's
-                # payloads anti-join the committed payloads table, A7×S6,
-                # re-dedup-on-reimport analog of reference/oscar-create/
-                # oscarcreate.cpp:100-115) — only a MODE FLIP rebuilds
-                and store.get_meta("payload_dedup", False) == dedup_payloads
+                and meta.get("positions", False) == positions
+                and meta.get("fields", []) == list(fields)
                 and set(recorded).issubset(cur)
                 and all(cur[f] == recorded[f] for f in recorded)):
             return _append_index(
@@ -934,22 +944,12 @@ def build_index(spark: SparkSession, pages: DataFrame, index_dir: str,
     # inverted N→4N scaling.  A parquet checkpoint makes the cost flat,
     # disk-backed, fully parallel, and doubles as a resume snapshot
     # (store→store re-import, reference/oscar-create/oscarcreate.cpp:86-116).
-    ffp = ",".join(fields)
-    # |m2 = tokens-table format 2 (per-doc NULL-term marker rows): a
-    # store whose tokens were committed WITHOUT markers must re-tokenize
-    # on resume, or the marker-filter doc_lens below would see only
-    # empty docs
-    tfp = f"{fp}|pos={int(positions)}|f={ffp}|m2"
-    if resume and store.committed("tokens", tfp):
+    if resume and store.committed("tokens", fps["tokens"]):
         resumed.append("tokens")
     else:
         with _input_scan(spark, input_files_sig(raw_pages)):
-            store.write(pages.select("url", "text", *fields).mapInPandas(
-                lambda it, _p=positions, _f=fields:
-                    _tokenize_batches(it, _p, _f),
-                TOKENS_POS_SCHEMA if positions else TOKENS_SCHEMA),
-                "tokens")
-        store.commit("tokens", tfp)
+            store.write(_tokenize(pages, positions, fields), "tokens")
+        store.commit("tokens", fps["tokens"])
     _mark("tokens")
     # this build's schema, not the store's: the recorded `positions`
     # mode changes only at the postings commit
@@ -958,7 +958,7 @@ def build_index(spark: SparkSession, pages: DataFrame, index_dir: str,
 
     # ---- stage 1: doc_stats (docID = rank by static quality; analog of
     # applySort score ordering, OsmKeyValueObjectStore.cpp:1339-1399) ----
-    if resume and store.committed("doc_stats", fp):
+    if resume and store.committed("doc_stats", fps["doc_stats"]):
         resumed.append("doc_stats")
     else:
         # r06: per-doc lengths come from the tokenizer's NULL-term
@@ -985,71 +985,30 @@ def build_index(spark: SparkSession, pages: DataFrame, index_dir: str,
         store.set_meta("n_docs", int(stats["n"]))
         store.set_meta("avgdl",
                        stats["sum"] / stats["n"] if stats["n"] else 0.0)
-        store.commit("doc_stats", fp)
+        store.commit("doc_stats", fps["doc_stats"])
     _mark("doc_stats")
     doc_stats = store.read(spark, "doc_stats")
     n_docs = int(store.get_meta("n_docs"))
     avgdl = float(store.get_meta("avgdl"))
 
     # ---- stage 2: postings ----
-    # codec folded into the stage fingerprint: resume over an index
-    # committed with a DIFFERENT codec must rebuild, not silently keep
-    # the old payloads under the new codec label
-    pfp = f"{fp}|codec={codec}|pos={int(positions)}|f={ffp}"
-    if resume and store.committed("postings", pfp):
+    if resume and store.committed("postings", fps["postings"]):
         resumed.append("postings")
     else:
-        final_blocks = _final_blocks(spark, tokens, doc_stats, n_docs,
-                                     n_docs, avgdl, codec, positions)
-        if dedup_payloads:
-            # A7: store-wide posting-payload dedup (ItemIndexFactory,
-            # reference/oscar-create/oscarcreate.cpp:74,100-115 — one
-            # ItemIndex stored per distinct item set).  Identical
-            # payloads are endemic in the Zipf tail: every hapax term
-            # of one doc encodes the same (delta, tf=1, dl) bytes.
-            # Payloads are stored ONCE per (bucket, md5); postings keep
-            # the 32-char ref.  Opt-in: serve's payload fetch gains a
-            # per-bucket hash join, which a latency-critical index may
-            # not want.  JVM-side F.md5 — no Python in the path.
-            import shutil
-            fb = final_blocks.withColumn("payload_hash", F.md5("payload"))
-            # materialize once: payloads + postings below would each
-            # re-run the whole encode otherwise
-            store.write_segment(fb, "_postings_staged", "base")
-            staged = store.read_segment(spark, "_postings_staged", "base",
-                                        _staged_schema(positions))
-            payloads = (staged.select("bucket", "payload_hash", "payload")
-                        .dropDuplicates(["bucket", "payload_hash"]))
-            store.write(payloads, "payloads", partition_by=["bucket"])
-            store.write(staged.drop("payload"), "postings",
-                        partition_by=["bucket"])
-            n_all = staged.count()
-            n_uniq = store.read(spark, "payloads").count()
-            store.set_meta("payload_dedup", True)
-            store.set_meta("payload_dedup_stats",
-                           {"blocks": int(n_all),
-                            "unique_payloads": int(n_uniq)})
-            shutil.rmtree(store.path("_postings_staged"),
-                          ignore_errors=True)
-        else:
-            store.write(final_blocks, "postings", partition_by=["bucket"])
-            store.set_meta("payload_dedup", False)
+        store.write(_final_blocks(spark, tokens, doc_stats, n_docs, n_docs,
+                                  avgdl, codec, positions),
+                    "postings", partition_by=["bucket"])
         store.set_meta("codec", codec)
         store.set_meta("payload_format", PAYLOAD_FORMAT)
         store.set_meta("positions", positions)
         store.set_meta("fields", list(fields))
-        store.commit("postings", pfp)
+        store.commit("postings", fps["postings"])
     _mark("postings")
     postings = store.read(spark, "postings")
 
     # ---- stage 3: terms (df recomputed from committed postings so the
     # stored df provably equals the posting contents — FIXTURES.md inv 2) ----
-    # df contents depend on the fielded-token set (not codec/positions),
-    # so the terms fingerprint carries the fields flag — without it a
-    # fields-flip rebuild would skip the terms stage and leave a stale
-    # dictionary disagreeing with the postings
-    trfp = f"{fp}|f={ffp}"
-    if resume and store.committed("terms", trfp):
+    if resume and store.committed("terms", fps["terms"]):
         resumed.append("terms")
         bucket_stats, _ = _dictionary_stats(
             store.read(spark, "terms").withColumn("first", F.lit(True)), 1)
@@ -1058,7 +1017,7 @@ def build_index(spark: SparkSession, pages: DataFrame, index_dir: str,
         # COMMITTED postings parquet, so df provably equals the posting
         # contents (FIXTURES.md inv 2) for everything written here.
         bucket_stats = _write_dictionary(store, _block_terms(postings))
-        store.commit("terms", trfp)
+        store.commit("terms", fps["terms"])
     _mark("terms")
 
     n_terms = sum(r["terms_out"] for r in bucket_stats)
@@ -1113,22 +1072,20 @@ def ingest_segment(spark: SparkSession, new_pages: DataFrame,
         raise ValueError(
             f"segment {seg!r} is already committed in this store; "
             "replay/skip it instead of re-ingesting")
-    # a store in another payload format must not gain a segment in the
-    # current one: commit_append stamps payload_format store-wide
-    store_decoder(store.manifest().get("meta", {}))
-    n_old = int(store.get_meta("n_docs"))
-    avgdl_old = float(store.get_meta("avgdl"))
-    positions = bool(store.get_meta("positions", False))
-    fields = tuple(store.get_meta("fields", ()) or ())
+    # a store in another payload format or layout must not gain a
+    # segment in the current one: commit_append stamps payload_format
+    # store-wide
+    meta = store.manifest().get("meta", {})
+    store_decoder(meta)
+    n_old = int(meta["n_docs"])
+    avgdl_old = float(meta["avgdl"])
+    positions = bool(meta.get("positions", False))
+    fields = tuple(meta.get("fields", ()) or ())
 
     # ---- tokenize only the new pages (positional/fielded stores stay
     # that way: the flags are inherited from the manifest) ----
-    store.write_segment(
-        new_pages.select("url", "text", *fields).mapInPandas(
-            lambda it, _p=positions, _f=fields:
-                _tokenize_batches(it, _p, _f),
-            TOKENS_POS_SCHEMA if positions else TOKENS_SCHEMA),
-        "tokens", seg)
+    store.write_segment(_tokenize(new_pages, positions, fields),
+                        "tokens", seg)
     check_tokens()
     mark("tokens_append")
     tokens_new = store.read_segment(spark, "tokens", seg)
@@ -1181,37 +1138,8 @@ def ingest_segment(spark: SparkSession, new_pages: DataFrame,
                                  F.coalesce(F.col("_ob"), F.lit(0)))
                     .cast("int"))
         .select(*fcols))
-    if store.get_meta("payload_dedup", False):
-        # A7 × S6: dedup-aware segment merge (the round-2 gap — dedup
-        # stores used to bail to a full rebuild).  Hash the NEW
-        # segment's payloads, keep only those absent from the committed
-        # payloads table (anti-join on (bucket, md5) — the re-dedup-on-
-        # reimport analog of reference/oscar-create/
-        # oscarcreate.cpp:100-115), and write postings without payload
-        # bytes, same layout as the base build's dedup form.
-        import shutil
-        fb = final_new.withColumn("payload_hash", F.md5("payload"))
-        store.write_segment(fb, "_postings_staged", seg)
-        staged = store.read_segment(spark, "_postings_staged", seg,
-                                    _staged_schema(positions))
-        committed_p = store.read(spark, "payloads") \
-            .select("bucket", "payload_hash")
-        novel = (staged.select("bucket", "payload_hash", "payload")
-                 .dropDuplicates(["bucket", "payload_hash"])
-                 .join(committed_p, ["bucket", "payload_hash"],
-                       "left_anti"))
-        store.write_segment(novel, "payloads", seg,
-                            partition_by=["bucket"])
-        store.write_segment(staged.drop("payload"), "postings", seg,
-                            partition_by=["bucket"])
-        shutil.rmtree(store.path("_postings_staged"), ignore_errors=True)
-        seg_adds = {"tokens": [seg], "doc_stats": [seg],
-                    "postings": [seg], "payloads": [seg]}
-    else:
-        store.write_segment(final_new, "postings", seg,
-                            partition_by=["bucket"])
-        seg_adds = {"tokens": [seg], "doc_stats": [seg],
-                    "postings": [seg]}
+    store.write_segment(final_new, "postings", seg,
+                        partition_by=["bucket"])
     mark("postings_append")
 
     # ---- merged terms: old + new df/n_blocks, written as a NEW segment
@@ -1225,20 +1153,17 @@ def ingest_segment(spark: SparkSession, new_pages: DataFrame,
         _block_terms(store.read_segment(spark, "postings", seg))), seg)
     mark("terms_append")
 
-    # ---- ONE atomic snapshot commit (fingerprint scheme matches
-    # build_index's, incl. the positional/fielded flags) ----
-    tfp = f"{fp}|pos={int(positions)}|f={','.join(fields)}|m2"
-    pfp = f"{fp}|codec={codec}|pos={int(positions)}|f={','.join(fields)}"
-    trfp = f"{fp}|f={','.join(fields)}"
+    # ---- ONE atomic snapshot commit (the stage fingerprints are
+    # build_index's, so a later resume over the same input resumes) ----
     store.commit_append(
-        add=seg_adds,
+        add={"tokens": [seg], "doc_stats": [seg], "postings": [seg]},
         replace={"terms": [seg], "terms_rev": [seg],
                  "terms_ngram": [seg]},
         meta={"n_docs": n_total, "avgdl": avgdl_total, "codec": codec,
               "payload_format": PAYLOAD_FORMAT,
               **(extra_meta or {})},
-        stage_fingerprints={"tokens": tfp, "doc_stats": fp,
-                            "postings": pfp, "terms": trfp},
+        stage_fingerprints=_stage_fingerprints(fp, codec, positions,
+                                               fields),
     )
     return {"n_new": n_new, "n_total": n_total, "avgdl": avgdl_total,
             "bucket_stats": bucket_stats}
@@ -1389,9 +1314,8 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
     (bucket, term) — ordering by first_doc is globally consistent
     because appended docs always take ids past the committed space, so
     the per-term strictly-increasing block invariant holds in the
-    compacted store.  Payload-dedup stores re-dedup payloads across
-    segments (a no-op by construction — append anti-joins committed
-    hashes — kept as cheap paranoia on a maintenance path).
+    compacted store.  A store in a layout the decoder rejects is
+    rejected here too, before anything is written.
 
     Scale shape: ONE shuffle of the postings table (the renumbering
     window on (bucket, term)), linear unions for the rest.  One atomic
@@ -1405,9 +1329,8 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
     from pyspark.sql import Window
 
     store = IndexStore(index_dir)
-    dedup = bool(store.get_meta("payload_dedup", False))
-    tables = ["tokens", "doc_stats", "postings"] + \
-        (["payloads"] if dedup else [])
+    store_decoder(store.manifest().get("meta", {}))
+    tables = ["tokens", "doc_stats", "postings"]
     mirrors = ["terms", "terms_rev", "terms_ngram"]
     pre = {t: store.segments(t) for t in tables + mirrors}
     if all(len(pre[t]) <= 1 for t in tables):
@@ -1424,12 +1347,6 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
                       (F.row_number().over(w) - 1).cast("int"))
           .select(*posting_cols))
     store.write_segment(p2, "postings", seg, partition_by=["bucket"])
-
-    if dedup:
-        store.write_segment(
-            store.read(spark, "payloads")
-            .dropDuplicates(["bucket", "payload_hash"]),
-            "payloads", seg, partition_by=["bucket"])
 
     # terms re-derived from the compacted postings so the stored df
     # provably equals the posting contents (FIXTURES.md invariant 2)

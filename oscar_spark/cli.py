@@ -40,13 +40,10 @@ def main(argv: list[str] | None = None) -> int:
                         " (amortized maintenance; see compact)")
     # build-mode knobs: DEFAULT None = unspecified, so --resume inherits
     # the store's recorded modes (build_index's None contract) instead
-    # of silently flipping a positional/fielded/dedup/pfor store to plain
+    # of silently flipping a positional/fielded/pfor store to plain
     b.add_argument("--positions", action="store_true", default=None,
                    help="store per-posting token positions (enables true"
                         ' phrase search, "..." queries)')
-    b.add_argument("--dedup-payloads", action="store_true", default=None,
-                   help="share identical posting payloads via a hash "
-                        "side-table (ItemIndexFactory dedup analog)")
     b.add_argument("--codec", default=None,
                    choices=["varint", "pfor"],
                    help="posting-block codec (default: config/manifest)")
@@ -103,7 +100,6 @@ def main(argv: list[str] | None = None) -> int:
         res = build_index(
             spark, pages, args.index, resume=args.resume,
             codec=args.codec,
-            dedup_payloads=args.dedup_payloads,
             positions=args.positions,
             fields=(tuple(f for f in args.fields.split(",") if f)
                     if args.fields is not None else None))

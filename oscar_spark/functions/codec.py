@@ -429,7 +429,13 @@ def store_decoder(meta: dict):
     """Store manifest meta → the block decoder for its payloads.  Every
     build, append, compaction and stream ingest records codec and
     payload_format; a store without them (or with another format) is
-    rejected rather than guessed at."""
+    rejected rather than guessed at.  So is a store in the retired
+    payload-dedup layout, whose postings hold an md5 ref where the
+    payload bytes belong."""
+    if meta.get("payload_dedup"):
+        raise ValueError(
+            "store uses the payload-dedup layout (payloads in a side "
+            "table), which is no longer read; rebuild the index")
     fmt = meta.get("payload_format")
     if fmt != PAYLOAD_FORMAT:
         raise ValueError(

@@ -348,13 +348,17 @@ class SearchEngine:
     def __init__(self, spark: SparkSession, index_dir: str):
         self.spark = spark
         self.store = IndexStore(index_dir)
-        self.postings = self.store.read(spark, "postings")
-        self.terms = self.store.read(spark, "terms")
-        self.doc_stats = self.store.read(spark, "doc_stats")
-        meta = self.store.manifest().get("meta", {})
+        # ONE manifest read: every table, count and mode below comes
+        # from the same committed snapshot, even while an append or a
+        # compaction commits beside this open
+        m = self.store.manifest()
+        meta = m.get("meta", {})
         # codec + payload format recorded by the build (varint default,
         # pfor variant)
         self._decode = store_decoder(meta)
+        self.postings = self.store.read(spark, "postings", manifest=m)
+        self.terms = self.store.read(spark, "terms", manifest=m)
+        self.doc_stats = self.store.read(spark, "doc_stats", manifest=m)
         self.n_docs = int(meta["n_docs"])
         self.avgdl = float(meta["avgdl"])
         # read per engine, not at import, so a deployment can set it
@@ -363,24 +367,19 @@ class SearchEngine:
             "OSCAR_PRUNE_MIN_POSTINGS", type(self).PRUNE_MIN_POSTINGS))
         # positional payloads present → quoted queries get TRUE phrase
         # semantics; otherwise they degrade to AND (see _rewrite_prefixes)
-        self.has_positions = bool(self.store.get_meta("positions", False))
+        self.has_positions = bool(meta.get("positions", False))
+        self._fields = list(meta.get("fields", []) or [])
         # normalized indexed-field keys: colon words with OTHER keys
         # ('16:30') parse as token intersections, not dead fielded leaves
         from oscar_spark.functions.tokenize import normalize_field_value
         self._field_keys = {
-            kn for kn in (normalize_field_value(k) for k in
-                          (self.store.get_meta("fields", []) or []))
+            kn for kn in (normalize_field_value(k) for k in self._fields)
             if kn}
-        # A7 payload-dedup stores keep payloads in a side table keyed by
-        # (bucket, md5); only the payload-FETCH path joins it — metadata
-        # pruning stays join-free
-        self._payloads = (self.store.read(spark, "payloads")
-                          if self.store.get_meta("payload_dedup", False)
-                          else None)
         # wildcard mirrors of the term dictionary (rev-sorted suffix
         # mirror, 2/3-gram substring mirror; see indexer._write_mirrors)
-        self._terms_rev = self.store.read(spark, "terms_rev")
-        self._terms_ngram = self.store.read(spark, "terms_ngram")
+        self._terms_rev = self.store.read(spark, "terms_rev", manifest=m)
+        self._terms_ngram = self.store.read(spark, "terms_ngram",
+                                            manifest=m)
         self._brute_cache: DataFrame | None = None
         # bounded driver-side cache of DECODED posting columns for the
         # driver-local path — the serving analog of oscar keeping its
@@ -408,8 +407,8 @@ class SearchEngine:
         # suffix/gram mirrors live in the same dict and persist across
         # engine instances too.
         key = (_os.path.abspath(index_dir),
-               self.store.snapshot_id("terms"),
-               tuple(self.store.segments("terms")),
+               self.store.snapshot_id("terms", m),
+               tuple(self.store.segments("terms", m)),
                self.TERMS_PRELOAD_MAX)  # part of the preload decision
         pre = _PRELOAD_CACHE.get(key)
         if pre is None:
@@ -627,15 +626,7 @@ class SearchEngine:
         df = (self.postings
               .filter(F.col("bucket").isin(buckets))
               .filter(F.col("term").isin(terms)))
-        if meta_only:
-            return df.select(*_META_COLS)
-        if self._payloads is not None:
-            # re-attach deduped payloads; bucket filter prunes the
-            # payload side's partitions before the hash join
-            df = df.join(
-                self._payloads.filter(F.col("bucket").isin(buckets)),
-                ["bucket", "payload_hash"])
-        return df
+        return df.select(*_META_COLS) if meta_only else df
 
     # ---- per-range scoring (the _sum_topk kernel per range) ----
     def _score_ranges(self, blocks: DataFrame, dfmap: dict[str, int],
@@ -1104,8 +1095,7 @@ class SearchEngine:
         keys defaults to every field indexed at build time
         (fields=(...)); a store built without fields yields no rows."""
         from oscar_spark.functions.tokenize import normalize_field_value
-        raw_keys = (list(keys) if keys is not None
-                    else list(self.store.get_meta("fields", []) or []))
+        raw_keys = list(keys) if keys is not None else self._fields
         kns = [kn for kn in (normalize_field_value(k) for k in raw_keys)
                if kn]
         empty = self.spark.createDataFrame(

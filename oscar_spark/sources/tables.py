@@ -13,11 +13,15 @@ the snapshot/commit semantics we rely on:
 
     <index_dir>/
       tokens/, doc_stats/, terms/bucket=*/, terms_rev/, terms_ngram/,
-      postings/bucket=*/, payloads/bucket=*/      (parquet, under seg=*/;
-                          columns: the *_SCHEMA constants below)
+      postings/bucket=*/  (parquet, under seg=*/; columns: the *_SCHEMA
+                          constants below; each posting block carries its
+                          own payload bytes)
       lineage/            partition_id, input_fingerprint, rows_in,
                           terms_out, docs_per_sec, snapshot_id, ts
-      _manifest.json      {stage: {fingerprint, snapshot_id, ts}}
+      _manifest.json      stage snapshots {fingerprint, snapshot_id, ts},
+                          segment lists, and store meta (n_docs, avgdl,
+                          codec, payload_format, positions, fields,
+                          input_files)
 
 A stage directory is only readable through the store if the manifest has
 committed it (write-then-commit, so a killed build never exposes a
@@ -49,21 +53,10 @@ DOC_STATS_SCHEMA = "doc_id long, url string, doc_len int, quality double"
 TERMS_SCHEMA = "term string, df long, n_blocks long, bucket int"
 TERMS_REV_SCHEMA = "rev string, term string, df long"
 TERMS_NGRAM_SCHEMA = "gram string, term string"
-PAYLOADS_SCHEMA = "payload_hash string, payload binary, bucket int"
-POSTINGS_META_SCHEMA = (
+POSTINGS_SCHEMA = (
     "term string, block_id int, range_id long, first_doc long, "
     "last_doc long, doc_count int, max_tf int, min_dl int, "
-    "max_score double")
-
-
-def postings_schema(positions: bool, dedup: bool) -> str:
-    """Payload-dedup stores keep the payload in `payloads` and its md5
-    in postings (indexer: the staged table's `drop("payload")`)."""
-    return (POSTINGS_META_SCHEMA
-            + ("" if dedup else ", payload binary")
-            + (", pos_payload binary" if positions else "")
-            + (", payload_hash string" if dedup else "")
-            + ", bucket int")
+    "max_score double, payload binary")
 
 
 def table_schema(table: str, meta: dict) -> str | None:
@@ -73,12 +66,11 @@ def table_schema(table: str, meta: dict) -> str | None:
     if table == "tokens":
         return TOKENS_POS_SCHEMA if positions else TOKENS_SCHEMA
     if table == "postings":
-        return postings_schema(positions,
-                               bool(meta.get("payload_dedup", False)))
+        return (POSTINGS_SCHEMA + (", pos_payload binary" if positions
+                                   else "") + ", bucket int")
     return {"doc_stats": DOC_STATS_SCHEMA, "terms": TERMS_SCHEMA,
             "terms_rev": TERMS_REV_SCHEMA,
-            "terms_ngram": TERMS_NGRAM_SCHEMA,
-            "payloads": PAYLOADS_SCHEMA}.get(table)
+            "terms_ngram": TERMS_NGRAM_SCHEMA}.get(table)
 
 # serializes manifest read-modify-write across in-process threads (the
 # build submits independent table writes concurrently); cross-process
@@ -127,8 +119,10 @@ class IndexStore:
             return sid
         return self._mutate(fn)
 
-    def snapshot_id(self, stage: str) -> int | None:
-        snap = self.manifest()["snapshots"].get(stage)
+    def snapshot_id(self, stage: str,
+                    manifest: dict | None = None) -> int | None:
+        m = self.manifest() if manifest is None else manifest
+        snap = m["snapshots"].get(stage)
         return snap["snapshot_id"] if snap else None
 
     # --- store-level metadata (e.g. posting codec) ---
@@ -139,6 +133,9 @@ class IndexStore:
     def get_meta(self, key: str, default=None):
         return self.manifest().get("meta", {}).get(key, default)
 
+    def clear_meta(self) -> None:
+        self._mutate(lambda m: m.pop("meta", None))
+
     # --- table IO ---
     # Every table is written under an outer `seg=<name>` partition level
     # (the base build is seg=base; each incremental append adds one) and
@@ -146,13 +143,16 @@ class IndexStore:
     # of Iceberg snapshot isolation: a crashed append's half-written
     # segment directory is simply never listed, so it is invisible, and
     # "commit" is one atomic manifest replace.  Spark prunes the seg
-    # partition, so the filter costs file-listing only.
+    # partition, so the filter costs file-listing only.  A reader that
+    # must see ONE snapshot across several reads (an engine open) reads
+    # the manifest once and passes it to each call.
 
     def path(self, table: str) -> str:
         return os.path.join(self.dir, table)
 
-    def segments(self, table: str) -> list[str]:
-        m = self.manifest()
+    def segments(self, table: str,
+                 manifest: dict | None = None) -> list[str]:
+        m = self.manifest() if manifest is None else manifest
         return m.get("segments", {}).get(table, ["base"])
 
     def _set_segments(self, table: str, segs: list[str]) -> None:
@@ -229,11 +229,11 @@ class IndexStore:
         return r.parquet(self.path(table))
 
     def read(self, spark: SparkSession, table: str,
-             schema: str | None = None) -> DataFrame:
-        m = self.manifest()
-        segs = m.get("segments", {}).get(table, ["base"])
+             schema: str | None = None,
+             manifest: dict | None = None) -> DataFrame:
+        m = self.manifest() if manifest is None else manifest
         return self._reader(spark, table, schema, m) \
-            .filter(F.col("seg").isin(segs)).drop("seg")
+            .filter(F.col("seg").isin(self.segments(table, m))).drop("seg")
 
     def read_segment(self, spark: SparkSession, table: str,
                      segment: str, schema: str | None = None) -> DataFrame:

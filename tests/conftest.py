@@ -51,3 +51,29 @@ def oracle(spark, built_index):
     docs = [(int(ds[u]), t) for u, t in zip(pdf["url"], pdf["text"])]
     assert len(docs) == 300
     return OracleIndex(docs)
+
+
+@pytest.fixture(scope="session")
+def fielded_index(spark, tmp_path_factory):
+    """Positional + fielded (`lang`) index over 250 pages: (engine,
+    matching oracle, doc id → lang).  Shared by the facet and phrase
+    suites."""
+    from oscar_spark.build.indexer import build_index
+    from oscar_spark.fixtures.pages import generate_pages, pages_spark_df
+    from oscar_spark.oracle.engine import OracleIndex
+    from oscar_spark.serve.executor import SearchEngine
+    from oscar_spark.sources.tables import IndexStore
+
+    d = str(tmp_path_factory.mktemp("fielded"))
+    build_index(spark, pages_spark_df(spark, 250), d,
+                positions=True, fields=("lang",))
+    pdf = generate_pages(250)
+    ds = {r["url"]: r["doc_id"]
+          for r in IndexStore(d).read(spark, "doc_stats").collect()}
+    oracle = OracleIndex(
+        [(int(ds[u]), t) for u, t in zip(pdf["url"], pdf["text"])],
+        fields={int(ds[u]): {"lang": lg}
+                for u, lg in zip(pdf["url"], pdf["lang"])})
+    eng = SearchEngine(spark, d)
+    doc_lang = {int(ds[u]): lg for u, lg in zip(pdf["url"], pdf["lang"])}
+    return eng, oracle, doc_lang

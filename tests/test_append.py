@@ -2,7 +2,9 @@
 reference/oscar-create/oscarcreate.cpp:86-116): build on pages[0:200],
 drop pages[200:300] as new input files, rebuild with resume=True —
 only the new files are ingested, and the merged index is rank-identical
-to a 300-doc oracle."""
+to a 300-doc oracle.  Also segment compaction (merging the appended
+segments back into one) and the CLI's flagless `build --resume`, which
+inherits the store's modes."""
 
 from __future__ import annotations
 
@@ -309,64 +311,210 @@ def test_append_block_invariants(spark, appended):
         assert sorted(bids) == list(range(len(bids))), t
 
 
-def test_append_to_payload_dedup_store(spark, tmp_path):
-    """A7 × S6: appending to a payload-dedup store merges segment
-    payloads via anti-join (no rebuild), keeps (bucket, md5) unique
-    store-wide, leaves every posting's payload resolvable, and stays
-    rank-identical to a full-corpus oracle."""
-    import pyspark.sql.functions as F
+# ---- segment compaction (S6 hygiene: merge N committed segments into
+# one fresh segment; re-import analog of oscarcreate.cpp:86-116) ----
 
-    from oscar_spark.build.indexer import build_index
+COMPACT_QUERIES = ["the", "city + state", "war history world",
+                   "time - year", "first ^ one", "wd0042"]
+
+
+def test_compact_after_appends_identical_results(spark, tmp_path):
+    from oscar_spark.build.indexer import build_index, compact_index
     from oscar_spark.fixtures.pages import generate_pages
-    from oscar_spark.oracle.engine import OracleIndex
     from oscar_spark.serve.executor import SearchEngine
     from oscar_spark.sources.tables import IndexStore
 
+    pdf = generate_pages(260)
     pdir = tmp_path / "pages"
     pdir.mkdir()
-    pdf = generate_pages(180)
-    _write_pages_file(pdf.iloc[:120], str(pdir / "part-0.parquet"))
+    _write_pages_file(pdf.iloc[:140], str(pdir / "p0.parquet"))
+    d = str(tmp_path / "idx")
+    build_index(spark, spark.read.parquet(str(pdir)), d)
+    _write_pages_file(pdf.iloc[140:200], str(pdir / "p1.parquet"))
+    build_index(spark, spark.read.parquet(str(pdir)), d, resume=True)
+    _write_pages_file(pdf.iloc[200:], str(pdir / "p2.parquet"))
+    build_index(spark, spark.read.parquet(str(pdir)), d, resume=True)
+
+    store = IndexStore(d)
+    assert len(store.segments("postings")) == 3
+    eng = SearchEngine(spark, d)
+    before = {q: eng.search(q, k=10) for q in COMPACT_QUERIES}
+    before_df = dict(eng.term_stats(["the", "city", "wd0042"]))
+
+    out = compact_index(spark, d)
+    assert out["compacted"] and out["segments_before"] == 3
+    for t in ("tokens", "doc_stats", "postings", "terms",
+              "terms_rev", "terms_ngram"):
+        assert store.segments(t) == [out["segment"]], t
+    import os
+    segdirs = os.listdir(store.path("postings"))
+    assert segdirs == [f"seg={out['segment']}"]
+
+    eng2 = SearchEngine(spark, d)
+    assert eng2.n_docs == 260
+    for q in COMPACT_QUERIES:
+        assert eng2.search(q, k=10) == before[q], q
+        assert eng2.search(q, k=10, mode="brute") == before[q], q
+    assert dict(eng2.term_stats(["the", "city", "wd0042"])) == before_df
+
+    # per-term blocks renumber 0..n-1 with strictly increasing doc ranges
+    post = store.read(spark, "postings")
+    rows = (post.filter(post.term == "the")
+            .select("term", "block_id", "first_doc", "last_doc")
+            .orderBy("block_id").collect())
+    assert [r["block_id"] for r in rows] == list(range(len(rows)))
+    for a, b in zip(rows, rows[1:]):
+        assert a["last_doc"] < b["first_doc"]
+
+    # a second compact is a no-op
+    assert compact_index(spark, d)["compacted"] is False
+
+    # and the compacted store still accepts a fresh append
+    more = generate_pages(40, start_index=260)
+    _write_pages_file(more, str(pdir / "p3.parquet"))
+    res = build_index(spark, spark.read.parquet(str(pdir)), d, resume=True)
+    assert res.resumed_stages[0].startswith("append:")
+    assert res.n_docs == 300
+
+
+def test_maybe_compact_policy(spark, tmp_path):
+    """Below the threshold: no-op.  Above: one fresh segment, results
+    identical (amortized maintenance on the append path)."""
+    from oscar_spark.build.indexer import build_index, maybe_compact
+    from oscar_spark.fixtures.pages import generate_pages
+    from oscar_spark.serve.executor import SearchEngine
+    from oscar_spark.sources.tables import IndexStore
+
+    pdf = generate_pages(220)
+    pdir = tmp_path / "pages"
+    pdir.mkdir()
+    _write_pages_file(pdf.iloc[:120], str(pdir / "p0.parquet"))
+    d = str(tmp_path / "idx")
+    build_index(spark, spark.read.parquet(str(pdir)), d)
+    _write_pages_file(pdf.iloc[120:170], str(pdir / "p1.parquet"))
+    build_index(spark, spark.read.parquet(str(pdir)), d, resume=True)
+    store = IndexStore(d)
+    assert len(store.segments("postings")) == 2
+    # threshold not exceeded → untouched
+    r = maybe_compact(spark, d, max_segments=2)
+    assert not r["compacted"] and len(store.segments("postings")) == 2
+    _write_pages_file(pdf.iloc[170:], str(pdir / "p2.parquet"))
+    build_index(spark, spark.read.parquet(str(pdir)), d, resume=True)
+    before = {q: SearchEngine(spark, d).search(q, k=10)
+              for q in COMPACT_QUERIES[:3]}
+    r = maybe_compact(spark, d, max_segments=2)
+    assert r["compacted"] and r["segments_before"] == 3
+    assert len(store.segments("postings")) == 1
+    eng = SearchEngine(spark, d)
+    for q, want in before.items():
+        assert eng.search(q, k=10) == want, q
+
+
+def test_compact_positional_fielded_store(spark, tmp_path):
+    """Compaction over the FULL store feature matrix — positions +
+    fields — preserves phrase, fielded, and set-op results exactly and
+    keeps the manifest flags.  The basic compaction test covers the
+    plain store; this pins the interactions (positional payload bytes
+    ride the postings copy verbatim).
+
+    The resume call passes NO mode flags on purpose: build_index must
+    inherit the store's recorded modes (positions/fields/codec)
+    and APPEND — not silently rebuild a plain store, which is what
+    `cli.py build --resume` would previously do to any moded store."""
+    from oscar_spark.build.indexer import build_index, compact_index
+    from oscar_spark.fixtures.pages import generate_pages
+    from oscar_spark.serve.executor import SearchEngine
+    from oscar_spark.sources.tables import IndexStore
+
+    pdf = generate_pages(220)
+    pdir = tmp_path / "pages"
+    pdir.mkdir()
+    _write_pages_file(pdf.iloc[:120], str(pdir / "p0.parquet"))
     d = str(tmp_path / "idx")
     build_index(spark, spark.read.parquet(str(pdir)), d,
-                dedup_payloads=True)
+                positions=True, fields=("lang",))
+    _write_pages_file(pdf.iloc[120:], str(pdir / "p1.parquet"))
+    build_index(spark, spark.read.parquet(str(pdir)), d, resume=True)
+
     store = IndexStore(d)
-    assert store.get_meta("payload_dedup") is True
+    assert len(store.segments("postings")) == 2
 
-    _write_pages_file(pdf.iloc[120:], str(pdir / "part-1.parquet"))
-    res = build_index(spark, spark.read.parquet(str(pdir)), d,
-                      resume=True, dedup_payloads=True)
-    # appended, NOT rebuilt
-    assert res.resumed_stages and \
-        res.resumed_stages[0].startswith("append:")
-    assert res.n_docs == 180
-    assert "payloads" in store.manifest()["segments"]
-    assert len(store.segments("payloads")) == 2
-
-    # store-wide payload invariants
-    payloads = store.read(spark, "payloads")
-    n_all = payloads.count()
-    n_uniq = payloads.select("bucket", "payload_hash").distinct().count()
-    assert n_all == n_uniq
-    postings = store.read(spark, "postings")
-    assert "payload" not in postings.columns
-    dangling = (postings.select("bucket", "payload_hash")
-                .join(payloads.select("bucket", "payload_hash"),
-                      ["bucket", "payload_hash"], "left_anti").count())
-    assert dangling == 0
-    # the anti-join actually deduplicated something across segments
-    # (Zipf tail: identical single-posting payloads recur in new docs)
-    n_blocks = postings.count()
-    assert n_all < n_blocks
-
-    # rank identity vs 180-doc oracle through the dedup payload join
-    ds = {r["url"]: r["doc_id"]
-          for r in store.read(spark, "doc_stats").collect()}
-    oracle = OracleIndex([(int(ds[u]), t)
-                          for u, t in zip(pdf["url"], pdf["text"])])
+    # a phrase that provably occurs: the first two >=2-char tokens of
+    # doc 0 are adjacent there by construction
+    toks = [w for w in pdf["text"].iloc[0].split() if len(w) >= 2][:2]
+    queries = [f'"{toks[0]} {toks[1]}"', "lang:en", "city + state",
+               "the - war"]
     eng = SearchEngine(spark, d)
-    for q in APPEND_QUERIES:
-        got = eng.search(q, k=10)
-        exp = oracle.search(q, k=10)
-        assert [x for x, _ in got] == [x for x, _ in exp], q
-        for (_, gs), (_, es) in zip(got, exp):
-            assert round(gs, SCORE_ROUND) == round(es, SCORE_ROUND), q
+    assert eng.has_positions
+    before = {q: eng.search(q, k=10) for q in queries}
+    assert before[queries[0]], "phrase query must match at least doc 0"
+    assert before["lang:en"], "fielded query must match"
+
+    out = compact_index(spark, d)
+    assert out["compacted"]
+
+    eng2 = SearchEngine(spark, d)
+    assert eng2.has_positions  # manifest flags survive the swap
+    for q in queries:
+        assert eng2.search(q, k=10) == before[q], q
+        assert eng2.search(q, k=10, mode="brute") == before[q], q
+
+
+def test_cli_build_mode_flags_and_resume_inherit(spark, tmp_path, capsys):
+    """cli.py exposes the three build-mode knobs (--positions,
+    --codec, --fields) and a FLAGLESS `build --resume`
+    inherits the store's recorded modes — the CLI face of build_index's
+    None-default contract.  Then `search` serves a fielded and a phrase
+    query from the appended store through the CLI."""
+    import json as _json
+
+    from oscar_spark import cli
+    from oscar_spark.fixtures.pages import generate_pages
+    from oscar_spark.sources.tables import IndexStore
+
+    pdf = generate_pages(160)
+    pdir = tmp_path / "pages"
+    pdir.mkdir()
+    _write_pages_file(pdf.iloc[:100], str(pdir / "p0.parquet"))
+    d = str(tmp_path / "idx")
+    rc = cli.main(["build", "--pages", str(pdir), "--index", d,
+                   "--positions", "--codec", "pfor",
+                   "--fields", "lang"])
+    assert rc == 0
+    out1 = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert out1["n_docs"] == 100
+    store = IndexStore(d)
+    assert store.get_meta("codec") == "pfor"
+    assert bool(store.get_meta("positions"))
+    assert tuple(store.get_meta("fields")) == ("lang",)
+
+    _write_pages_file(pdf.iloc[100:], str(pdir / "p1.parquet"))
+    rc = cli.main(["build", "--pages", str(pdir), "--index", d,
+                   "--resume"])
+    assert rc == 0
+    out2 = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert out2["n_docs"] >= 60
+    # modes survived the flagless resume (no plain-store rebuild)
+    assert store.get_meta("codec") == "pfor"
+    assert bool(store.get_meta("positions"))
+    assert tuple(store.get_meta("fields")) == ("lang",)
+    assert len(store.segments("postings")) == 2
+
+    for q in ("lang:en", '"%s %s"' % tuple(
+            [w for w in pdf["text"].iloc[0].split() if len(w) >= 2][:2])):
+        rc = cli.main(["search", "--index", d, "--query", q, "-k", "5"])
+        assert rc == 0
+        lines = capsys.readouterr().out.strip().splitlines()
+        assert lines, q
+        for ln in lines:
+            doc_id, score = ln.split("\t")
+            int(doc_id), float(score)
+
+    # consistency checker green on the full-feature store: exercises
+    # the pfor-decode and pos_payload branches of check_index in one
+    # pass
+    rc = cli.main(["check", "--index", d])
+    assert rc == 0
+    chk = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert chk["ok"], chk
+    assert chk["checks"]["payload_decode_sample"]["detail"]["sampled"] > 0

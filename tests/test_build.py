@@ -141,3 +141,18 @@ def test_second_engine_open_runs_no_jobs(spark, file_build):
     eng, jobs = spark_jobs(spark, lambda: SearchEngine(spark, d))
     assert jobs == [], [j.name() for j in jobs]
     assert eng.n_docs == 400
+
+
+# ---- ADVICE: duplicate normalized field keys fail fast at build ----
+
+def test_build_rejects_colliding_field_keys(spark, tmp_path):
+    from oscar_spark.build.indexer import build_index
+    from oscar_spark.fixtures.pages import pages_spark_df
+    p = pages_spark_df(spark, 20)
+    pages = p.withColumn("Lang", p["lang"])
+    with pytest.raises(ValueError, match="field"):
+        build_index(spark, pages, str(tmp_path / "i1"),
+                    fields=("lang", "Lang"))
+    with pytest.raises(ValueError, match="field"):
+        build_index(spark, pages_spark_df(spark, 20),
+                    str(tmp_path / "i2"), fields=("-", "lang"))

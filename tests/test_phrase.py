@@ -301,3 +301,27 @@ def test_fields_flip_resume_rebuilds_terms(spark, tmp_path):
     eng = SearchEngine(spark, d)
     n = int((pdf["lang"] == lg).sum())
     assert eng.term_stats([f"lang:{lg}"]).get(f"lang:{lg}") == n
+
+
+# ---- ADVICE: colon words with un-indexed keys parse as token
+# intersections, not dead fielded leaves ----
+
+def test_colon_word_narrowing(fielded_index, spark, built_index):
+    from oscar_spark.serve.executor import SearchEngine
+    eng, oracle, _ = fielded_index
+    # 'war' is not an indexed field key → same results as the AND query
+    assert eng.search("war:history", k=10) == eng.search("war history", k=10)
+    assert oracle.search("war:history", k=10) == \
+        oracle.search("war history", k=10)
+    # indexed key keeps fielded semantics (differs from the AND form)
+    assert parser.parse("lang:en", field_keys={"lang"}) == \
+        ("term", "lang:en")
+    # store without fields: every colon word degrades
+    d, _ = built_index
+    eng2 = SearchEngine(spark, d)
+    assert eng2._field_keys == set()
+    assert eng2.search("city:state", k=10) == eng2.search("city state", k=10)
+    # bare parse() (no store context) keeps the old unconditional rule
+    assert parser.parse("lang:en") == ("term", "lang:en")
+    assert parser.parse("lang:en", field_keys=set()) == \
+        ("and", ("term", "lang"), ("term", "en"))

@@ -477,32 +477,6 @@ def test_build_from_html_only(spark, pages_df, built_index, tmp_path):
         (ref.n_docs, ref.n_terms, ref.n_blocks)
 
 
-def test_payload_dedup_end_to_end(spark, pages_df, oracle, tmp_path):
-    """A7 (ItemIndexFactory analog, oscar-create/oscarcreate.cpp:74,
-    100-115): duplicate posting payloads — endemic for the Zipf tail's
-    hapax terms, which share (delta, tf=1, dl) bytes per doc — are
-    stored once; serve re-attaches them by hash and stays
-    rank-identical on both fetch paths."""
-    from oscar_spark.build.indexer import build_index
-    from oscar_spark.sources.tables import IndexStore
-    d = str(tmp_path / "dedup_idx")
-    build_index(spark, pages_df, d, dedup_payloads=True)
-    store = IndexStore(d)
-    assert store.get_meta("payload_dedup") is True
-    stats = store.get_meta("payload_dedup_stats")
-    assert stats["unique_payloads"] < stats["blocks"]
-    # the payloads table holds exactly the distinct payloads
-    assert store.read(spark, "payloads").count() == stats["unique_payloads"]
-    eng = SearchEngine(spark, d)
-    for q in ["the", "city + state", "war history world", "wd0042"]:
-        expected = oracle.search(q, k=10)
-        for mode in ("brute", "pruned"):
-            got = eng.search(q, k=10, mode=mode)
-            assert [x for x, _ in got] == [x for x, _ in expected], (q, mode)
-            for (_, gs), (_, es) in zip(got, expected):
-                assert round(gs, SCORE_ROUND) == round(es, SCORE_ROUND)
-
-
 def test_pfor_codec_end_to_end(spark, pages_df, oracle, tmp_path):
     """Build with the PForDelta codec flag: manifest records it, serve
     dispatches on it, results stay rank-identical to the oracle."""
@@ -516,3 +490,91 @@ def test_pfor_codec_end_to_end(spark, pages_df, oracle, tmp_path):
         expected = oracle.search(q, k=10)
         got = eng.search(q, k=10)
         assert [x for x, _ in got] == [x for x, _ in expected]
+
+
+# ---- suffix expansion under the driver-side preload: bisect on the
+# reversed-sorted mirror, not a full endswith scan ----
+
+class _CountingList(list):
+    def __init__(self, it):
+        super().__init__(it)
+        self.accesses = 0
+
+    def __getitem__(self, i):
+        self.accesses += 1
+        return super().__getitem__(i)
+
+
+def test_suffix_preload_bisect_identical_and_pruned(spark, built_index):
+    from oscar_spark.config import MAX_PREFIX_EXPAND
+    from oscar_spark.serve.executor import SearchEngine
+    d, _ = built_index
+    eng = SearchEngine(spark, d)
+    assert eng._term_sorted is not None, "preload expected at test scale"
+    for stem in ("ory", "er", "42", "the", "zzzz"):
+        brute = sorted(t for t in eng._term_sorted
+                       if t.endswith(stem))[:MAX_PREFIX_EXPAND]
+        assert eng.expand_wild("suffix", stem) == brute, stem
+    # instrument the mirror: a lookup must touch O(log n + matches)
+    # entries, nowhere near the dictionary size
+    eng._term_sorted_rev = _CountingList(
+        sorted(t[::-1] for t in eng._term_sorted))
+    n_match = len(eng.expand_wild("suffix", "ory"))
+    assert eng._term_sorted_rev.accesses <= n_match + 2 * (
+        len(eng._term_sorted).bit_length() + 2)
+    assert eng._term_sorted_rev.accesses < len(eng._term_sorted) // 4
+
+
+# ---- driver-local small-query serve path (auto below
+# PRUNE_MIN_POSTINGS): value-identical to pruned and brute ----
+
+def _assert_close(got, want, q):
+    assert [i for i, _ in got] == [i for i, _ in want], q
+    for (_, a), (_, b) in zip(got, want):
+        assert abs(a - b) <= 1e-9 * max(abs(a), 1.0), q
+
+
+def test_local_serve_matches_spark_paths(spark, built_index):
+    from oscar_spark.serve.executor import SearchEngine
+    d, _ = built_index
+    eng = SearchEngine(spark, d)
+    for q in ["the", "city + state", "war history world", "wd0042",
+              "of and to in", '"to west"']:
+        local = eng.search(q, k=10, mode="local")
+        pruned = eng.search(q, k=10, mode="pruned")
+        brute = eng.search(q, k=10, mode="brute")
+        # local and pruned (the phrase path, for a phrase) share one
+        # kernel with a pinned block order — bit-identical; brute sums
+        # in Spark (its own float order), so its scores may differ in
+        # the last ulp
+        assert local == pruned, q
+        _assert_close(local, brute, q)
+    # every other shape is served locally too: set algebra in numpy vs
+    # the Spark set-algebra path
+    for q in ["time - year", "house ^ music", "(war + history) - world",
+              '"to west" + city', 'city ^ "to west"',
+              "the - (of + and)"]:
+        local = eng.search(q, k=10, mode="local")
+        assert local, q
+        _assert_close(local, eng.search(q, k=10, mode="brute"), q)
+    # auto picks local below the threshold (test corpus is tiny)
+    assert eng.search("the", k=10, mode="auto") == \
+        eng.search("the", k=10, mode="local")
+
+
+def test_engine_open_reads_manifest_once(spark, built_index, monkeypatch):
+    """An engine open reads `_manifest.json` once: its tables, counts,
+    modes and preload key all come from that one snapshot, so a commit
+    landing mid-open cannot pair new n_docs/avgdl with old segments."""
+    from oscar_spark.sources.tables import IndexStore
+    d, _ = built_index
+    calls = []
+    orig = IndexStore.manifest
+
+    def counting(self):
+        calls.append(1)
+        return orig(self)
+
+    monkeypatch.setattr(IndexStore, "manifest", counting)
+    SearchEngine(spark, d)
+    assert len(calls) == 1
