@@ -19,7 +19,6 @@ from __future__ import annotations
 
 import argparse
 import json
-import os
 import sys
 import time
 
@@ -79,11 +78,9 @@ def main(argv: list[str] | None = None) -> int:
     be.add_argument("--out", default=None,
                     help="write per-query CSV here (like <out>.raw)")
     be.add_argument("--cold", action="store_true",
-                    help="drop engine/Spark caches (and, with "
-                         "OSCAR_DROP_OS_CACHE=1, best-effort OS page "
-                         "cache) before each query — the reference's "
-                         "per-query cache purge, oscar-cmd/"
-                         "Benchmark.cpp:117-123")
+                    help="drop engine/Spark caches before each query "
+                         "— the reference's per-query cache purge, "
+                         "oscar-cmd/Benchmark.cpp:117-123")
 
     args = ap.parse_args(argv)
 
@@ -149,12 +146,6 @@ def main(argv: list[str] | None = None) -> int:
         # count as cold-path work, like the reference re-reading its
         # mmap'd trie after the page-cache purge
         eng = SearchEngine(spark, args.index)
-        if os.environ.get("OSCAR_DROP_OS_CACHE") == "1":
-            try:  # root-only; best-effort like the reference's sysctl
-                with open("/proc/sys/vm/drop_caches", "w") as f:
-                    f.write("1\n")
-            except OSError:
-                pass
 
     # per-stage split of the WARM run (parse / expand / term-lookup /
     # metadata-prune / seed-score / rest-score+topk) — the analog of

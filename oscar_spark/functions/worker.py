@@ -14,7 +14,7 @@ directory and re-reads it only when an import needs it.
 
 `worker_init()` is the one set-up hook.  Every function the engine
 hands Spark to run in a Python worker calls it first; kernels the
-driver also runs (`_decode_term`, `_sum_topk`, `_phrase_match`,
+driver also runs (`_decode_term`, `_sum_scores`, `_phrase_match`,
 `tokenize_flat`) do not.  The first task on a fresh worker still pays
 one re-read of each archive.
 """

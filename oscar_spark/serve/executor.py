@@ -17,22 +17,21 @@ loading ItemIndex data) → four execution strategies:
   per engine into sorted doc ids, final BM25 scores (and positions on
   positional stores) held in the engine's LRU block cache — one pruned
   collect job plus one decode for the terms not yet resident, neither
-  once warm.  Set algebra, score sums, phrase adjacency and top-k then
-  run on those numpy arrays and search() returns the driver rows
-  directly — no DataFrame is built.  The analog of oscar answering
-  every set-op query from the index resident in the server process
-  (DecelledACOT::execute).  Same decode routine and array kernels as
-  the distributed paths.
+  once warm.  The query kernel (_evaluate: set algebra, score sums,
+  phrase adjacency, top-k) then runs on those numpy arrays and search()
+  returns the driver rows directly — no DataFrame is built.  The analog
+  of oscar answering every set-op query from the index resident in the
+  server process (DecelledACOT::execute).
 
-- brute: decode every matching block, score, set-algebra on DataFrames,
-  global TakeOrdered(k).  Serves NOT/XOR/nested trees above the
-  threshold and is the reference path (mode="brute") the tests pin the
-  local path against — the analog of the cqr==tcqr assert at
-  reference/oscar-cmd/Workfunctions.cpp:1169-1191.
+- brute: the same kernel over every block of the present terms, one
+  doc-id range at a time, no pruning.  Serves NOT/XOR/nested trees
+  above the threshold and is the reference path (mode="brute") the
+  tests pin the local path against — the analog of the cqr==tcqr
+  assert at reference/oscar-cmd/Workfunctions.cpp:1169-1191.
 
 - phrase: bare phrases above the threshold (and under mode="brute" /
-  "pruned"): metadata-only candidate-range intersection, then the
-  adjacency kernel per range in applyInPandas.
+  "pruned"): metadata-only candidate-range intersection in front of
+  the same per-range kernel.
 
 - pruned ("block-max WAND at range granularity", default for
   single/AND/OR queries above the threshold): ranges are oscar's cells;
@@ -47,10 +46,13 @@ loading ItemIndex data) → four execution strategies:
   ranking (the intersection-on-block-ids fast path, mirroring oscar's
   cell-wise set ops with fm/pm refinement, SURVEY.md §2.6).
 
-The Spark paths are DataFrame + Arrow kernels; per-range scoring is a
-vectorized numpy applyInPandas (decode → bm25_np → segment-sum, the
-local path's kernels behind a thin pandas adapter), with a local
-per-range top-k cut so the final shuffle moves ≤ k rows per range.
+Every Spark route is one grouped-map pandas apply of the local route's
+kernel per range_id (_score_ranges), oscar's cell-wise CellQueryResult
+re-expressed.  This is exact: a doc lives in one range (doc_id //
+RANGE_SIZE) and all of its postings carry that range, so every boolean
+tree, phrase and BM25 sum decomposes by range, and the routes agree bit
+for bit.  A per-range top-k cut keeps the final shuffle at ≤ k rows per
+range.
 """
 
 from __future__ import annotations
@@ -167,15 +169,14 @@ def _decode_term(blocks, decode, df: float, n_docs: float,
     return _Postings(ids, scores, flat, offs)
 
 
-def _sum_topk(cols: list[_Postings], require_all: int | None,
-              local_k: int | None) -> tuple[np.ndarray, np.ndarray]:
+def _sum_scores(cols: list[_Postings], require_all: int | None) \
+        -> tuple[np.ndarray, np.ndarray]:
     """(doc ids, Σ BM25) over the given terms' columns, keeping only
-    docs matched by all `require_all` terms (AND) when set, cut to the
-    top local_k by (score desc, doc asc) when set.  Callers pass the
-    columns in sorted-term order: float addition is non-associative, so
-    np.add.at over the concatenation pins each doc's summation order —
-    every path sums a doc's terms in the same order and is
-    value-identical."""
+    docs matched by all `require_all` terms (AND) when set.  Callers
+    pass the columns in sorted-term order: float addition is
+    non-associative, so np.add.at over the concatenation pins each
+    doc's summation order — every path sums a doc's terms in the same
+    order and is value-identical."""
     if not cols:
         return _NO_DOCS, _NO_SCORES
     ids = np.concatenate([c.ids for c in cols])
@@ -187,14 +188,11 @@ def _sum_topk(cols: list[_Postings], require_all: int | None,
         cnt = np.bincount(inv, minlength=len(uniq))
         keep = cnt == require_all
         uniq, ssum = uniq[keep], ssum[keep]
-    if local_k is not None and len(uniq) > local_k:
-        order = np.lexsort((uniq, -ssum))[:local_k]
-        uniq, ssum = uniq[order], ssum[order]
     return uniq, ssum
 
 
 def _phrase_match(toks: list[str], cols: dict[str, _Postings],
-                  local_k: int | None, docs_only: bool = False) \
+                  docs_only: bool = False) \
         -> tuple[np.ndarray, np.ndarray]:
     """(doc ids, scores) of docs containing the EXACT phrase `toks`,
     from its member terms' columns (ids + positions): intersect doc
@@ -247,58 +245,76 @@ def _phrase_match(toks: list[str], cols: dict[str, _Postings],
     if not docs_only:
         for t in uniq:
             sc_a += cols[t].scores[np.searchsorted(cols[t].ids, ids_a)]
-    if local_k is not None and len(ids_a) > local_k:
-        order = np.lexsort((ids_a, -sc_a))[:local_k]
-        ids_a, sc_a = ids_a[order], sc_a[order]
     return ids_a, sc_a
 
 
-def _by_term(pdf: pd.DataFrame, cols: tuple[str, ...]) -> dict[str, list]:
-    """A batch of posting-block rows grouped per term: term → [(range_id,
-    doc_count, payload[, pos_payload])], the input of _decode_term."""
-    out: dict[str, list] = {}
-    for term, *blk in zip(pdf["term"], *(pdf[c] for c in cols)):
-        out.setdefault(term, []).append(blk)
-    return out
+def _evaluate(shape: str, node, terms: list[str],
+              cols: dict[str, _Postings], k: int | None,
+              docs_only: bool = False) -> tuple[np.ndarray, np.ndarray]:
+    """The one query kernel: (doc ids, scores) of the docs matching
+    `node`, from the decoded columns of its present terms; when k is
+    set, the top k by (score desc, doc asc), in that order.  The
+    driver-local route runs it over whole posting lists, every Spark
+    route over one doc-id range at a time (_score_pdf).
+
+    - single/AND/OR: _sum_scores over the terms in sorted order;
+    - bare phrase: _phrase_match;
+    - any other tree: set algebra (_eval_local), each matched doc
+      scored as Σ BM25 over the present query terms, summed in sorted
+      term order like _sum_scores.
+
+    docs_only skips the scoring of phrases and general trees (their
+    scores are zeros): a facet needs the doc set only."""
+    if shape in ("single", "and", "or"):
+        ids, scores = _sum_scores([cols[t] for t in sorted(cols)],
+                                  len(terms) if shape == "and" else None)
+    elif shape == "phrase":
+        ids, scores = _phrase_match(list(node[1]), cols, docs_only)
+    else:
+        ids = _eval_local(
+            node, {t: c.ids for t, c in cols.items()},
+            lambda toks: _phrase_match(toks, cols, True)[0])
+        scores = np.zeros(len(ids))
+        for t in () if docs_only else sorted(cols):
+            t_ids, t_sc = cols[t].ids, cols[t].scores
+            if not len(t_ids):
+                continue
+            at = np.minimum(np.searchsorted(t_ids, ids), len(t_ids) - 1)
+            hit = t_ids[at] == ids
+            scores[hit] += t_sc[at[hit]]
+    if k is not None:
+        order = np.lexsort((ids, -scores))[:k]
+        ids, scores = ids[order], scores[order]
+    return ids, scores
 
 
-def _score_pdf(pdf: pd.DataFrame, decode, dfmap: dict[str, int],
-               n_docs: float, avgdl: float, require_all: int | None,
-               local_k: int | None) -> pd.DataFrame:
-    """_sum_topk over one applyInPandas batch of posting blocks (the
-    per-range path, _score_ranges): the batch is decoded per term
-    through _decode_term, so the distributed and driver-local paths are
+def _score_pdf(pdf: pd.DataFrame, decode, shape: str, node,
+               terms: list[str], dfmap: dict[str, int], n_docs: float,
+               avgdl: float, k: int | None,
+               docs_only: bool) -> pd.DataFrame:
+    """_evaluate over one doc-id range's posting blocks (term, range_id,
+    doc_count, payload[, pos_payload]) — the per-range adapter of
+    _score_ranges.  The blocks are decoded per term through
+    _decode_term, so the Spark and driver-local routes are
     value-identical by construction."""
-    groups = _by_term(pdf, ("range_id", "doc_count", "payload"))
-    ids, scores = _sum_topk(
-        [_decode_term(groups[t], decode, float(dfmap[t]), n_docs, avgdl)
-         for t in sorted(groups) if dfmap.get(t, 0) > 0],
-        require_all, local_k)
-    return pd.DataFrame({"doc_id": ids, "score": scores})
-
-
-def _phrase_pdf(pdf: pd.DataFrame, toks: list[str], decode,
-                dfmap: dict[str, int], n_docs: float, avgdl: float,
-                local_k: int | None, docs_only: bool = False) -> pd.DataFrame:
-    """_phrase_match over one applyInPandas batch of (term, range_id,
-    doc_count, payload, pos_payload) blocks of the phrase's member terms
-    (the per-range phrase path, _score_phrase_ranges), decoded per term
-    through _decode_term like the driver-local path."""
-    groups = _by_term(pdf, ("range_id", "doc_count", "payload",
-                            "pos_payload"))
-    ids, scores = _phrase_match(
-        toks, {t: _decode_term(b, decode, float(dfmap.get(t, 0)), n_docs,
-                               avgdl) for t, b in groups.items()},
-        local_k, docs_only)
+    blocks: dict[str, list] = {}
+    pos = [pdf["pos_payload"]] if "pos_payload" in pdf else []
+    for term, *blk in zip(pdf["term"], pdf["range_id"], pdf["doc_count"],
+                          pdf["payload"], *pos):
+        blocks.setdefault(term, []).append(blk)
+    ids, scores = _evaluate(
+        shape, node, terms,
+        {t: _decode_term(b, decode, float(dfmap[t]), n_docs, avgdl)
+         for t, b in blocks.items()}, k, docs_only)
     return pd.DataFrame({"doc_id": ids, "score": scores})
 
 
 def _eval_local(node, term_ids: dict[str, np.ndarray],
                 phrase_ids) -> np.ndarray:
     """Sorted doc ids matching `node` — the numpy twin of
-    SearchEngine._eval_node (and OracleIndex.eval_node) over per-term
-    sorted doc-id arrays; phrase_ids(toks) supplies a phrase leaf's
-    docs.  An absent term matches nothing."""
+    OracleIndex.eval_node over per-term sorted doc-id arrays;
+    phrase_ids(toks) supplies a phrase leaf's docs.  An absent term
+    matches nothing."""
     kind = node[0]
     if kind == "empty":
         return _NO_DOCS
@@ -336,6 +352,15 @@ def _tree_shape(node) -> str:
         if l in ok and r in ok:
             return kind
     return "general"
+
+
+def _has_phrase(node) -> bool:
+    """Whether `node` has a phrase leaf, i.e. its kernel reads
+    positions."""
+    if node[0] == "phrase":
+        return True
+    return node[0] not in ("term", "empty") and (
+        _has_phrase(node[1]) or _has_phrase(node[2]))
 
 
 class SearchEngine:
@@ -380,7 +405,6 @@ class SearchEngine:
         self._terms_rev = self.store.read(spark, "terms_rev", manifest=m)
         self._terms_ngram = self.store.read(spark, "terms_ngram",
                                             manifest=m)
-        self._brute_cache: DataFrame | None = None
         # bounded driver-side cache of DECODED posting columns for the
         # driver-local path — the serving analog of oscar keeping its
         # index mmap'd+mlocked in the server process (S7,
@@ -437,7 +461,6 @@ class SearchEngine:
     def drop_memory(self) -> None:
         self.postings = self.postings.unpersist()
         self.terms = self.terms.unpersist()
-        self._release_brute_cache()
         # also release THIS engine's driver-side preload entry (term
         # dict + lazy rev/gram mirrors) — the largest driver-resident
         # structure; without this, "drop memory" no longer dropped it
@@ -454,11 +477,6 @@ class SearchEngine:
         self._term_sorted_rev = self._term_grams = None
         self._block_cache.clear()
         self._block_cache_bytes = 0
-
-    def _release_brute_cache(self) -> None:
-        if self._brute_cache is not None:
-            self._brute_cache.unpersist()
-            self._brute_cache = None
 
     # ---- prefix expansion (QT_PREFIX → sorted term-table range scan;
     # the trie-subtree merge of CellTextCompleter.h:496-525 re-expressed.
@@ -628,24 +646,31 @@ class SearchEngine:
               .filter(F.col("term").isin(terms)))
         return df.select(*_META_COLS) if meta_only else df
 
-    # ---- per-range scoring (the _sum_topk kernel per range) ----
-    def _score_ranges(self, blocks: DataFrame, dfmap: dict[str, int],
-                      require_all: int | None, local_k: int | None) -> DataFrame:
-        """blocks (with payload) → (doc_id, score[, n_terms]) per range.
+    # ---- per-range scoring: the one distributed entry ----
+    def _score_ranges(self, blocks: DataFrame, plan: _Plan,
+                      local_k: int | None,
+                      docs_only: bool = False) -> DataFrame:
+        """Posting blocks of the plan's present terms → (doc_id, score)
+        rows of _evaluate, run one doc-id range at a time.  local_k cuts
+        each range's output to its top local_k by (score desc, doc asc);
+        None keeps every matching doc.  Only the columns the kernel
+        decodes reach Python: positions only when the tree has a phrase
+        leaf."""
+        # plain values only: the closure is pickled to every worker
+        shape, node, terms, dfmap = (plan.shape, plan.node, plan.terms,
+                                     plan.dfmap)
+        decode, n_docs, avgdl = self._decode, float(self.n_docs), \
+            float(self.avgdl)
+        cols = ["term", "range_id", "doc_count", "payload"] + (
+            ["pos_payload"] if _has_phrase(node) else [])
 
-        require_all=n keeps docs matched by all n terms (AND); local_k
-        cuts each range's output to its top-k by (score desc, doc asc).
-        """
-        n_docs, avgdl = float(self.n_docs), float(self.avgdl)
-        decode = self._decode
-
-        def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        def kernel(key, pdf):
             worker_init()
-            return _score_pdf(pdf, decode, dfmap, n_docs, avgdl,
-                              require_all, local_k)
+            return _score_pdf(pdf, decode, shape, node, terms, dfmap,
+                              n_docs, avgdl, local_k, docs_only)
 
-        return blocks.groupBy("range_id").applyInPandas(
-            lambda key, pdf: kernel(pdf), "doc_id long, score double")
+        return blocks.select(*cols).groupBy("range_id").applyInPandas(
+            kernel, "doc_id long, score double")
 
     BLOCK_CACHE_MAX_BYTES = 64 << 20  # driver-local decoded-column cap
 
@@ -705,80 +730,33 @@ class SearchEngine:
         returned as driver rows — the analog of oscar serving from its
         mmap'd index inside the server process.  Below the threshold the
         decoded arrays are a few MB, and any Spark round trip costs more
-        than numpy's work.
-
-        - single/AND/OR: _sum_topk over the terms in sorted order, the
-          kernel the per-range path runs, so local and pruned are
-          value-identical (doc ids are distinct across ranges, so a
-          global sum equals the per-range ones).
-        - bare phrase: _phrase_match, the phrase path's kernel.
-        - any other tree: set algebra as in _eval_node (_eval_local),
-          each matched doc scored as Σ BM25 over the present query
-          terms, summed in sorted term order like _sum_topk."""
+        than numpy's work.  The kernel is _evaluate, the one every
+        Spark route runs per doc-id range, so the routes are
+        value-identical."""
         present = [t for t in plan.terms if plan.dfmap.get(t, 0) > 0]
         cols = (self._fetch_blocks_local(present) if blocks is None
                 else {t: blocks[t] for t in present})
-        if plan.shape in ("single", "and", "or"):
-            ids, scores = _sum_topk(
-                [cols[t] for t in sorted(cols)],
-                len(plan.terms) if plan.shape == "and" else None, k)
-        elif plan.shape == "phrase":
-            ids, scores = _phrase_match(list(plan.node[1]), cols, k)
-        else:
-            ids = _eval_local(
-                plan.node, {t: c.ids for t, c in cols.items()},
-                lambda toks: _phrase_match(toks, cols, None, True)[0])
-            scores = np.zeros(len(ids))
-            for t in sorted(cols):
-                t_ids, t_sc = cols[t].ids, cols[t].scores
-                if not len(t_ids):
-                    continue
-                at = np.minimum(np.searchsorted(t_ids, ids), len(t_ids) - 1)
-                hit = t_ids[at] == ids
-                scores[hit] += t_sc[at[hit]]
-        # (score desc, doc_id asc) — the ordering of the Spark paths'
-        # final orderBy (equal doubles tie identically in both engines)
-        order = np.lexsort((ids, -scores))[:k]
-        return [(int(d), float(s)) for d, s in zip(ids[order], scores[order])]
+        ids, scores = _evaluate(plan.shape, plan.node, plan.terms, cols, k)
+        return [(int(d), float(s)) for d, s in zip(ids, scores)]
 
     # ---- phrase scoring (QT_EXACT: adjacency over positional payloads;
     # per-node query-type payload analog of
     # reference/oscar-create/CellTextCompleter.h:457-473) ----
-    def _score_phrase_ranges(self, toks: list[str],
-                             dfmap: dict[str, int],
-                             local_k: int | None,
-                             docs_only: bool = False) -> DataFrame:
-        """(doc_id, score) per range for docs containing the EXACT
-        phrase: per range, decode each member term's ids + positions,
-        intersect doc sets, verify adjacency (pos of tok_i == start+i),
-        score matched docs as Σ BM25 of the DISTINCT member terms.
-        Same distribution shape as _score_ranges: one applyInPandas per
-        range, local top-k cut, ≤k rows per range into the final sort."""
-        n_docs, avgdl = float(self.n_docs), float(self.avgdl)
-        decode = self._decode
-        uniq = list(dict.fromkeys(toks))
-        blocks = self._blocks(uniq, meta_only=False).select(
-            "term", "range_id", "doc_count", "payload", "pos_payload")
-        # r06 (round-5 verdict ask #3): metadata-only candidate-range
-        # intersection BEFORE any payload is fetched — a range can
-        # contain the phrase only if EVERY member term has postings in
-        # it (the AND path's nt == require_all cell refinement, the
-        # fm/pm analog of reference/oscar-create/CellTextCompleter.h:
-        # 457-473).  Previously every member term's payload blocks were
-        # fetched and the per-range kernel returned empty on a missing
-        # term — after the payload bytes had already shuffled.  For a
-        # web-scale phrase (usually one rare + one common token) this
-        # cuts the fetched payload to the rare token's ranges.
-        blocks = blocks.join(
+    def _score_phrase_ranges(self, plan: _Plan,
+                             local_k: int | None) -> DataFrame:
+        """(doc_id, score) rows of a bare-phrase plan: _score_ranges
+        over the member terms' blocks in the phrase's candidate ranges
+        only.  Metadata-only candidate-range intersection runs BEFORE
+        any payload is fetched — a range can contain the phrase only if
+        EVERY member term has postings in it (the AND path's
+        nt == require_all cell refinement, the fm/pm analog of
+        reference/oscar-create/CellTextCompleter.h:457-473).  For a
+        web-scale phrase (usually one rare + one common token) this cuts
+        the fetched payload to the rare token's ranges."""
+        uniq = list(dict.fromkeys(plan.node[1]))
+        blocks = self._blocks(uniq, meta_only=False).join(
             F.broadcast(self._phrase_candidate_ranges(uniq)), "range_id")
-
-        def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-            worker_init()
-            return _phrase_pdf(pdf, toks, decode, dfmap, n_docs, avgdl,
-                               local_k, docs_only)
-
-        return blocks.groupBy("range_id").applyInPandas(
-            lambda key, pdf: kernel(pdf), "doc_id long, score double")
+        return self._score_ranges(blocks, plan, local_k)
 
     def _phrase_candidate_ranges(self, uniq: list[str]) -> DataFrame:
         """range_ids where ALL of `uniq` have at least one posting block
@@ -790,13 +768,7 @@ class SearchEngine:
                 .filter(F.col("nt") == len(uniq))
                 .select("range_id"))
 
-    def _phrase_docs_df(self, toks: list[str],
-                        dfmap: dict[str, int]) -> DataFrame:
-        """Doc-id set containing the exact phrase (for set algebra)."""
-        return self._score_phrase_ranges(toks, dfmap, None,
-                                         docs_only=True).select("doc_id")
-
-    # ---- per-term decoded postings (for set algebra / general trees) ----
+    # ---- per-term decoded postings (facet_stats' key:value terms) ----
     def _decoded(self, terms: list[str], dfmap: dict[str, int]) -> DataFrame:
         """→ (term, doc_id, score) for every posting of the given terms."""
         n_docs, avgdl = float(self.n_docs), float(self.avgdl)
@@ -831,37 +803,20 @@ class SearchEngine:
         return blocks.mapInPandas(
             kernel, "term string, doc_id long, score double")
 
-    # ---- set algebra on DataFrames (§2.6 mapping) ----
-    def _eval_node(self, node, decoded: DataFrame,
-                   dfmap: dict[str, int]) -> DataFrame:
-        kind = node[0]
-        if kind == "empty":
-            return self.spark.range(0).select(F.col("id").alias("doc_id"))
-        if kind == "term":
-            return (decoded.filter(F.col("term") == node[1])
-                    .select("doc_id"))
-        if kind == "phrase":
-            return self._phrase_docs_df(list(node[1]), dfmap)
-        left = self._eval_node(node[1], decoded, dfmap)
-        right = self._eval_node(node[2], decoded, dfmap)
-        if kind == "and":
-            return left.join(right, "doc_id", "inner").select("doc_id")
-        if kind == "or":
-            return left.union(right).distinct()
-        if kind == "not":
-            return left.join(right, "doc_id", "left_anti").select("doc_id")
-        if kind == "xor":
-            l = left.withColumn("_l", F.lit(1))
-            r = right.withColumn("_r", F.lit(1))
-            return (l.join(r, "doc_id", "full_outer")
-                    .filter(F.col("_l").isNull() | F.col("_r").isNull())
-                    .select("doc_id"))
-        raise ValueError(kind)
+    # ---- the brute and general-tree route ----
+    def _eval_node(self, plan: _Plan, local_k: int | None,
+                   docs_only: bool = False) -> DataFrame:
+        """_score_ranges over every block of the plan's present terms,
+        no pruning: any tree, and mode="brute".  With local_k None and
+        docs_only it yields the full matching doc set (facet_stats)."""
+        present = [t for t in plan.terms if plan.dfmap.get(t, 0) > 0]
+        return self._score_ranges(self._blocks(present, meta_only=False),
+                                  plan, local_k, docs_only)
 
     # ---- planning + public API ----
     def _plan(self, query: str, mode: str) -> _Plan:
         """Parse, expand and look up `query`, then pick its route — the
-        one planner behind search(), search_df() and search_many():
+        one planner behind search(), search_many() and facet_stats():
 
         - empty: no query term is present, or an AND/phrase has an
           absent term;
@@ -899,61 +854,28 @@ class SearchEngine:
             route = "brute"
         return _Plan(route, node, shape, terms, dfmap, timer)
 
-    def _result_df(self, plan: _Plan, k: int) -> DataFrame:
-        """The top-k DataFrame of a phrase / pruned / brute plan."""
-        node, terms, dfmap = plan.node, plan.terms, plan.dfmap
-        if plan.route == "phrase":
-            # adjacency check + scoring in one decode pass, local
-            # top-k per range
-            result = self._score_phrase_ranges(list(node[1]), dfmap, k)
-        elif plan.route == "pruned":
-            result = self._search_pruned(terms, dfmap, plan.shape, k)
-        else:
-            # cached: the set-algebra tree references `decoded` once per
-            # leaf plus once for scoring — uncached, Spark re-decodes the
-            # blocks for every reference inside the single job.  Held in
-            # _brute_cache; released on the next query / drop_memory.
-            decoded = self._decoded([t for t in terms if dfmap.get(t, 0) > 0],
-                                    dfmap).cache()
-            self._brute_cache = decoded
-            docs = self._eval_node(node, decoded, dfmap)
-            result = (decoded.join(docs, "doc_id")
-                      .groupBy("doc_id").agg(F.sum("score").alias("score")))
-        return result.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-
     def _answer(self, plan: _Plan, k: int,
                 blocks: dict[str, _Postings] | None = None) \
             -> list[tuple[int, float]]:
         """Run a plan to its top-k rows; per-stage wall-clock lands in
         self.last_stage_times."""
         self._timer = plan.timer
-        # release the previous query's brute-path cache: a long-running
-        # engine would otherwise accumulate one cached RDD per brute
-        # query until executor storage memory evicts under pressure
-        self._release_brute_cache()
         if plan.route == "empty":
             rows = []
         elif plan.route == "local":
             rows = self._score_local(plan, k, blocks)
         else:
-            rows = [(int(r["doc_id"]), float(r["score"]))
-                    for r in self._result_df(plan, k).collect()]
+            if plan.route == "phrase":
+                result = self._score_phrase_ranges(plan, k)
+            elif plan.route == "pruned":
+                result = self._search_pruned(plan, k)
+            else:
+                result = self._eval_node(plan, k)
+            rows = [(int(r["doc_id"]), float(r["score"])) for r in
+                    result.orderBy(F.desc("score"), F.asc("doc_id"))
+                    .limit(k).collect()]
         self._finish_timer()
         return rows
-
-    def search_df(self, query: str, k: int = 10,
-                  mode: str = "auto") -> DataFrame:
-        """→ DataFrame(doc_id long, score double), the top-k, ordered.
-
-        Per-stage wall-clock lands in self.last_stage_times after the
-        RESULT is consumed (a caller collecting a Spark-path DataFrame
-        itself can call _finish_timer())."""
-        plan = self._plan(query, mode)
-        if plan.route in ("empty", "local"):
-            return self.spark.createDataFrame(
-                self._answer(plan, k), "doc_id long, score double")
-        self._release_brute_cache()
-        return self._result_df(plan, k)
 
     # Below this many candidate postings the driver-local path wins:
     # numpy decodes ~50M postings/s in-process, so a query only
@@ -972,13 +894,10 @@ class SearchEngine:
     # engine in __init__).
     PRUNE_MIN_POSTINGS = 2_000_000
 
-    def _search_pruned(self, terms, dfmap, shape, k) -> DataFrame:
-        present = [t for t in terms if dfmap.get(t, 0) > 0]
-        require_all = len(terms) if shape == "and" else None
-        if sum(dfmap.get(t, 0) for t in present) < self.PRUNE_MIN_POSTINGS:
-            return self._score_ranges(
-                self._blocks(present, meta_only=False), dfmap,
-                require_all, local_k=k)
+    def _search_pruned(self, plan: _Plan, k: int) -> DataFrame:
+        dfmap = plan.dfmap
+        present = [t for t in plan.terms if dfmap.get(t, 0) > 0]
+        require_all = len(plan.terms) if plan.shape == "and" else None
         meta = self._blocks(present, meta_only=True)
 
         # range-level upper bounds from block metadata only (no payload
@@ -1024,8 +943,7 @@ class SearchEngine:
 
         blocks = self._blocks(present, meta_only=False)
         seed_scored = self._score_ranges(
-            blocks.filter(F.col("range_id").isin(seed_ids)),
-            dfmap, require_all, local_k=k)
+            blocks.filter(F.col("range_id").isin(seed_ids)), plan, k)
         if exhausted:
             # all candidate ranges already scored — skip phase B entirely
             return seed_scored
@@ -1040,8 +958,7 @@ class SearchEngine:
             rest = rest.filter(F.col("ub") >= F.lit(theta))
         rest_ids = rest.select("range_id")
         rest_scored = self._score_ranges(
-            blocks.join(F.broadcast(rest_ids), "range_id"),
-            dfmap, require_all, local_k=k)
+            blocks.join(F.broadcast(rest_ids), "range_id"), plan, k)
         seed_df = self.spark.createDataFrame(
             [(int(r["doc_id"]), float(r["score"])) for r in seed_top],
             "doc_id long, score double")
@@ -1053,23 +970,8 @@ class SearchEngine:
     # doClusteredComplete, reference/oscar-cmd/LiveCompleter.cpp:222-227).
     # The store needs no side table: fielded composite terms (`lang:en`,
     # built with fields=(...)) carry posting lists, so the count of
-    # (key, value) over matched docs is |postings(key:value) ∩ docs| —
-    # one decode + semi-join per facet job, reusing the query machinery.
-    def _docs_for_query(self, query: str) -> DataFrame:
-        """Full (unranked) doc-id set matching a parsed query — set
-        algebra, prefix/suffix expansion, and phrase leaves included."""
-        node = self._rewrite_prefixes(
-            parser.parse(query, field_keys=self._field_keys))
-        terms = parser.query_terms(node)
-        dfmap = self.term_stats(terms)
-        self._release_brute_cache()
-        if node[0] == "empty" or not terms:
-            return self.spark.createDataFrame([], "doc_id long")
-        decoded = self._decoded(
-            [t for t in terms if dfmap.get(t, 0) > 0], dfmap).cache()
-        self._brute_cache = decoded
-        return self._eval_node(node, decoded, dfmap)
-
+    # (key, value) over matched docs is |postings(key:value) ∩ docs|,
+    # where docs is the query kernel's doc set (_eval_node, docs_only).
     def _facet_value_terms(self, key_norm: str, cap: int) -> list[str]:
         """All `key:value` dictionary terms of one facet key (prefix
         range scan on the sorted dictionary; cap >> MAX_PREFIX_EXPAND
@@ -1107,7 +1009,11 @@ class SearchEngine:
             fterms += self._facet_value_terms(kn, max_values)
         if not fterms:
             return empty
-        docs = self._docs_for_query(query)
+        plan = self._plan(query, "brute")
+        docs = (self.spark.createDataFrame([], "doc_id long")
+                if plan.route == "empty"
+                else self._eval_node(plan, None, docs_only=True)
+                .select("doc_id"))
         fmap = self.term_stats(fterms)
         fdec = self._decoded(
             [t for t in fterms if fmap.get(t, 0) > 0], fmap) \

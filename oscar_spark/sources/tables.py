@@ -175,18 +175,13 @@ class IndexStore:
     def write_segment(self, df: DataFrame, table: str, segment: str,
                       partition_by: list[str] | None = None) -> None:
         """Write one NEW segment of a table; invisible to read() until
-        commit_segment() lists it in the manifest.  Files go directly
+        a commit (commit_append) lists it in the manifest.  Files go directly
         into the table's seg=<name> directory (same layout partitionBy
         would produce for that one seg value)."""
         w = df.write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(os.path.join(self.path(table), f"seg={segment}"))
-
-    def commit_segment(self, table: str, segment: str) -> None:
-        segs = self.segments(table)
-        if segment not in segs:
-            self._set_segments(table, segs + [segment])
 
     def commit_append(self, add: dict[str, list[str]] | None = None,
                       replace: dict[str, list[str]] | None = None,

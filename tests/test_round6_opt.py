@@ -135,73 +135,6 @@ def test_scan_parallelize_noop_when_enough_partitions(spark):
     assert parallelize(many) is many
 
 
-def test_phrase_candidate_range_intersection(spark, built_index):
-    """_phrase_candidate_ranges keeps exactly the ranges where every
-    member term has a posting block (metadata-only pruning, r06), and
-    the pruned phrase path returns identical results."""
-    from pyspark.sql import functions as F
-
-    from oscar_spark.serve.executor import SearchEngine
-    d, _ = built_index
-    eng = SearchEngine(spark, d)
-    # synthetic metadata: term 'aa' in ranges {0,1,2}, 'bb' only in {1}
-    meta = spark.createDataFrame(
-        [("aa", 0), ("aa", 1), ("aa", 2), ("aa", 1), ("bb", 1)],
-        "term string, range_id long")
-    orig = eng._blocks
-    try:
-        # the real _blocks filters to the requested terms; mirror that
-        eng._blocks = lambda terms, meta_only: meta.filter(
-            F.col("term").isin(terms))
-        got = sorted(r["range_id"] for r in
-                     eng._phrase_candidate_ranges(["aa", "bb"]).collect())
-        assert got == [1]
-        got1 = sorted(r["range_id"] for r in
-                      eng._phrase_candidate_ranges(["aa"]).collect())
-        assert got1 == [0, 1, 2]
-    finally:
-        eng._blocks = orig
-    # end-to-end: pruned phrase path matches the un-pruned kernel
-    # (fixture has one range, so pruning is a no-op there; equality of
-    # the full search path against the OracleIndex is test_phrase.py's
-    # job and still passes on the pruned path)
-    res = eng.search('"north south"', k=10)
-    assert isinstance(res, list)
-
-
-def test_search_many_all_absent_terms(spark, built_index):
-    """round-5 ADVICE medium: a batch whose every eligible query has no
-    present terms must return [] per query, not crash."""
-    from oscar_spark.serve.executor import SearchEngine
-    d, _ = built_index
-    eng = SearchEngine(spark, d)
-    assert eng.search_many(["nosuchterm"], k=5) == [[]]
-    assert eng.search_many(["nosuchterm", "alsomissing + gonetoo"],
-                           k=5) == [[], []]
-    # mixed batch still serves the present-term query
-    got = eng.search_many(["nosuchterm", "the"], k=5)
-    assert got[0] == [] and got[1] == eng.search("the", k=5)
-
-
-def test_drop_memory_releases_preload(spark, built_index):
-    """round-5 ADVICE low: drop_memory must release the driver-side
-    preload cache entry, not only executor caches."""
-    from oscar_spark.serve import executor as ex
-    d, _ = built_index
-    eng = ex.SearchEngine(spark, d)
-    assert eng._term_df is not None  # fixture is below the preload cap
-    n_before = len(ex._PRELOAD_CACHE)
-    eng.drop_memory()
-    assert eng._term_df is None and eng._term_sorted is None
-    assert len(ex._PRELOAD_CACHE) == n_before - 1
-    # engine still answers (falls back to Spark-side term lookups)
-    assert eng.search("the", k=3)
-    eng2 = ex.SearchEngine(spark, d)   # re-preloads fresh
-    assert eng2._term_df is not None
-    ex.clear_preload_cache()
-    assert len(ex._PRELOAD_CACHE) == 0
-
-
 def test_arrow_encoder_matches_whole_run_encode():
     """_encode_partition_arrow over split Arrow batches (the mapInArrow
     path, carry-over across the 262144-row unit boundary included) must
@@ -400,30 +333,3 @@ def test_hash_probe_join_blocks_identical(spark, built_index, monkeypatch):
             .join(doc_stats, "url").select("term", "doc_id", "tf").collect()]
     assert sorted(got) == sorted(want) and len(want) > 0
     assert sorted(map(tuple, rows)) == real
-
-
-def test_block_cache_warm_repeat_zero_jobs(spark, built_index):
-    """Driver-local serving through the block cache: a repeated query
-    returns identical results with ZERO Spark jobs (the S7 mlock
-    analog — decoded columns served from process memory), the cache
-    counts its entries' decoded bytes, and drop_memory releases it."""
-    from oscar_spark.serve.executor import SearchEngine
-
-    d, _ = built_index
-    eng = SearchEngine(spark, d)
-    q = "city + state"
-    first = eng.search(q, k=10)
-    assert first, "fixture query should match docs"
-    assert eng._block_cache_bytes > 0
-    assert eng._block_cache_bytes == sum(
-        c.nbytes for c in eng._block_cache.values())
-    sc = spark.sparkContext
-    sc.setJobGroup("warmrepeat", "block cache warm repeat")
-    second = eng.search(q, k=10)
-    sc.setJobGroup(None, None)
-    assert second == first
-    jobs = sc.statusTracker().getJobIdsForGroup("warmrepeat")
-    assert len(jobs) == 0, f"expected 0 jobs on warm repeat, got {jobs}"
-    eng.drop_memory()
-    assert eng._block_cache_bytes == 0 and not eng._block_cache
-    assert eng.search(q, k=10) == first  # refetch path still identical

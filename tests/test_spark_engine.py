@@ -133,22 +133,10 @@ def test_rank_identity(engine, oracle, q):
                                "war history world", "wd0001",
                                "first + one + two"])
 def test_dual_path_equivalence(engine, q):
-    """pruned == brute (cqr == tcqr analog, Workfunctions.cpp:1169-1191).
-
-    Run the pruned path BOTH ways: single-phase (small-query fast path)
-    and forced two-phase seed/θ/prune (the at-scale path)."""
-    brute = engine.search(q, k=10, mode="brute")
-    saved = engine.PRUNE_MIN_POSTINGS
-    try:
-        engine.PRUNE_MIN_POSTINGS = 0  # force two-phase
-        two_phase = engine.search(q, k=10, mode="pruned")
-    finally:
-        engine.PRUNE_MIN_POSTINGS = saved
-    single = engine.search(q, k=10, mode="pruned")
-    for got in (two_phase, single):
-        assert [d for d, _ in got] == [d for d, _ in brute]
-        for (_, ps), (_, bs) in zip(got, brute):
-            assert round(ps, SCORE_ROUND) == round(bs, SCORE_ROUND)
+    """pruned == brute (cqr == tcqr analog, Workfunctions.cpp:1169-1191):
+    the metadata bounds in front of the kernel drop no result."""
+    assert engine.search(q, k=10, mode="pruned") == \
+        engine.search(q, k=10, mode="brute")
 
 
 def test_prune_min_postings_read_per_engine(spark, built_index,
@@ -528,12 +516,6 @@ def test_suffix_preload_bisect_identical_and_pruned(spark, built_index):
 # ---- driver-local small-query serve path (auto below
 # PRUNE_MIN_POSTINGS): value-identical to pruned and brute ----
 
-def _assert_close(got, want, q):
-    assert [i for i, _ in got] == [i for i, _ in want], q
-    for (_, a), (_, b) in zip(got, want):
-        assert abs(a - b) <= 1e-9 * max(abs(a), 1.0), q
-
-
 def test_local_serve_matches_spark_paths(spark, built_index):
     from oscar_spark.serve.executor import SearchEngine
     d, _ = built_index
@@ -543,20 +525,18 @@ def test_local_serve_matches_spark_paths(spark, built_index):
         local = eng.search(q, k=10, mode="local")
         pruned = eng.search(q, k=10, mode="pruned")
         brute = eng.search(q, k=10, mode="brute")
-        # local and pruned (the phrase path, for a phrase) share one
-        # kernel with a pinned block order — bit-identical; brute sums
-        # in Spark (its own float order), so its scores may differ in
-        # the last ulp
-        assert local == pruned, q
-        _assert_close(local, brute, q)
-    # every other shape is served locally too: set algebra in numpy vs
-    # the Spark set-algebra path
+        # every route runs one kernel with a pinned block and term
+        # order (pruned is the phrase route, for a phrase), so the
+        # answers are bit-identical
+        assert local == pruned == brute, q
+    # every other shape too: the brute route runs the same set algebra
+    # per doc-id range
     for q in ["time - year", "house ^ music", "(war + history) - world",
               '"to west" + city', 'city ^ "to west"',
               "the - (of + and)"]:
         local = eng.search(q, k=10, mode="local")
         assert local, q
-        _assert_close(local, eng.search(q, k=10, mode="brute"), q)
+        assert local == eng.search(q, k=10, mode="brute"), q
     # auto picks local below the threshold (test corpus is tiny)
     assert eng.search("the", k=10, mode="auto") == \
         eng.search("the", k=10, mode="local")
@@ -578,3 +558,218 @@ def test_engine_open_reads_manifest_once(spark, built_index, monkeypatch):
     monkeypatch.setattr(IndexStore, "manifest", counting)
     SearchEngine(spark, d)
     assert len(calls) == 1
+
+
+# ---- the Spark routes: a bounded job count, nothing left persisted ----
+
+def _jobs_of(spark, group, fn):
+    """(fn(), ids of the Spark jobs it ran)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
+@pytest.mark.parametrize("q", ["the", "time - year", "house ^ music",
+                               '"to west" + city',
+                               "(war + history) - world"])
+def test_brute_query_runs_at_most_three_jobs(spark, engine, q):
+    """A brute query of any shape is one per-range kernel pass: its
+    shuffle and the global top-k, not a job per set operation."""
+    rows, jobs = _jobs_of(spark, f"brute-jobs-{q}",
+                          lambda: engine.search(q, k=10, mode="brute"))
+    assert rows, q
+    assert len(jobs) <= 3, f"{q!r} ran {len(jobs)} jobs"
+
+
+def test_spark_routes_leave_nothing_persisted(spark, engine,
+                                              fielded_index):
+    """A brute query and a facet count persist no RDD: the kernel
+    decodes each block once per range, so no decoded DataFrame is held
+    for the next query to release."""
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    assert engine.search("time - year", k=10, mode="brute")
+    assert jsc.getPersistentRDDs().size() == before
+    eng, _, _ = fielded_index
+    assert eng.facet_stats("city + state").collect()
+    assert jsc.getPersistentRDDs().size() == before
+
+
+# ---- wildcard expansion under the driver-side preload: gram-list
+# intersection, not a linear `stem in t` scan over the dictionary ----
+
+def test_substr_preload_grams_identical(spark, built_index):
+    from oscar_spark.config import MAX_PREFIX_EXPAND
+    from oscar_spark.serve.executor import SearchEngine
+    d, _ = built_index
+    eng = SearchEngine(spark, d)
+    assert eng._term_sorted is not None, "preload expected at test scale"
+    for stem in ("or", "ry", "he", "42", "ord", "ist", "zzzz", "a",
+                 "wd00", "tor"):
+        brute = sorted(t for t in eng._term_sorted
+                       if stem in t)[:MAX_PREFIX_EXPAND]
+        assert eng.expand_wild("substr", stem) == brute, stem
+
+
+def test_substr_preload_no_full_scan(spark, built_index):
+    from oscar_spark.serve.executor import SearchEngine
+    d, _ = built_index
+    eng = SearchEngine(spark, d)
+    assert eng._term_sorted is not None
+    # force a fresh gram build against an instrumented dictionary: the
+    # gram build iterates (no __getitem__); the query itself must only
+    # index the candidate entries, nowhere near the dictionary size
+    eng._term_sorted = _CountingList(eng._term_sorted)
+    eng._term_grams = None
+    got = eng.expand_wild("substr", "ord")
+    n_terms = len(eng._term_sorted)
+    # every candidate term is read twice (verify + yield); allow slack
+    assert eng._term_sorted.accesses <= 4 * max(len(got), 1) + 8
+    assert eng._term_sorted.accesses < n_terms // 4
+    # absent gram short-circuits without touching the dictionary
+    eng._term_sorted.accesses = 0
+    assert eng.expand_wild("substr", "q#z") == []
+    assert eng._term_sorted.accesses == 0
+
+
+# ---- engine cold-start cache: the ≤2M-row terms preload is paid once
+# per store snapshot, not once per SearchEngine instance ----
+
+def test_engine_preload_cached_across_instances(spark, built_index):
+    from oscar_spark.serve import executor as ex
+    d, _ = built_index
+    e1 = ex.SearchEngine(spark, d)
+    e2 = ex.SearchEngine(spark, d)
+    # same dict objects, not equal copies — the collect ran once
+    assert e1._term_df is e2._term_df
+    assert e1._term_sorted is e2._term_sorted
+    # lazy mirrors built by one instance are visible to the next
+    e1.expand_wild("suffix", "ory")
+    e1.expand_wild("substr", "ord")
+    e3 = ex.SearchEngine(spark, d)
+    assert e3._term_sorted_rev is e1._term_sorted_rev
+    assert e3._term_grams is e1._term_grams
+    # results stay identical through the cache
+    assert e3.search("the", k=5) == e1.search("the", k=5)
+
+
+def test_engine_preload_cache_invalidated_by_commit(spark, tmp_path):
+    """A new commit to the same path must NOT serve the old preload."""
+    from oscar_spark.build.indexer import build_index
+    from oscar_spark.fixtures.pages import pages_spark_df
+    from oscar_spark.serve.executor import SearchEngine
+    d = str(tmp_path / "idx")
+    build_index(spark, pages_spark_df(spark, 60), d)
+    e1 = SearchEngine(spark, d)
+    n1 = len(e1._term_df)
+    build_index(spark, pages_spark_df(spark, 120), d)
+    e2 = SearchEngine(spark, d)
+    assert e2._term_df is not e1._term_df
+    assert len(e2._term_df) >= n1
+
+
+def test_drop_memory_releases_preload(spark, built_index):
+    """round-5 ADVICE low: drop_memory must release the driver-side
+    preload cache entry, not only executor caches."""
+    from oscar_spark.serve import executor as ex
+    d, _ = built_index
+    eng = ex.SearchEngine(spark, d)
+    assert eng._term_df is not None  # fixture is below the preload cap
+    n_before = len(ex._PRELOAD_CACHE)
+    eng.drop_memory()
+    assert eng._term_df is None and eng._term_sorted is None
+    assert len(ex._PRELOAD_CACHE) == n_before - 1
+    # engine still answers (falls back to Spark-side term lookups)
+    assert eng.search("the", k=3)
+    eng2 = ex.SearchEngine(spark, d)   # re-preloads fresh
+    assert eng2._term_df is not None
+    ex.clear_preload_cache()
+    assert len(ex._PRELOAD_CACHE) == 0
+
+
+# ---- batch serve: search_many equals per-query search() while the
+# driver-local queries share one fetch job ----
+
+def test_search_many_matches_sequential(spark, built_index):
+    from oscar_spark.serve.executor import SearchEngine
+    d, _ = built_index
+    eng = SearchEngine(spark, d)
+    queries = ["the", "of and", "city + state", "time - year",
+               "house ^ music", "war history world", '"north south"',
+               "wd0042", "nosuchterm", "((", "ci* + history"]
+    batch = eng.search_many(queries, k=10)
+    seq = [eng.search(q, k=10) for q in queries]
+    assert batch == seq
+
+
+def test_search_many_single_fetch_job(spark, built_index):
+    """All eligible queries share ONE block-fetch collect: count the
+    Spark jobs a pure-eligible batch triggers via a job group."""
+    from oscar_spark.serve.executor import SearchEngine
+    d, _ = built_index
+    eng = SearchEngine(spark, d)
+    queries = ["the", "of and", "city state", "war history"]
+    eng.search_many(queries, k=5)  # warm any lazy init + block cache
+    sc = spark.sparkContext
+    # r06: a fully warm batch is CACHE-resident — zero fetch jobs
+    sc.setJobGroup("batchjob", "search_many job count")
+    batch = eng.search_many(queries, k=5)
+    sc.setJobGroup(None, None)
+    jobs = sc.statusTracker().getJobIdsForGroup("batchjob")
+    assert len(jobs) == 0, f"expected 0 jobs on warm batch, got {jobs}"
+    # cold block cache: every eligible query still shares ONE fetch job
+    eng._block_cache.clear()
+    eng._block_cache_bytes = 0
+    sc.setJobGroup("batchjob2", "search_many cold job count")
+    batch2 = eng.search_many(queries, k=5)
+    sc.setJobGroup(None, None)
+    jobs2 = sc.statusTracker().getJobIdsForGroup("batchjob2")
+    assert len(jobs2) == 1, f"expected 1 shared fetch job, got {jobs2}"
+    assert batch == batch2 == [eng.search(q, k=5) for q in queries]
+
+
+def test_search_many_all_absent_terms(spark, built_index):
+    """round-5 ADVICE medium: a batch whose every eligible query has no
+    present terms must return [] per query, not crash."""
+    from oscar_spark.serve.executor import SearchEngine
+    d, _ = built_index
+    eng = SearchEngine(spark, d)
+    assert eng.search_many(["nosuchterm"], k=5) == [[]]
+    assert eng.search_many(["nosuchterm", "alsomissing + gonetoo"],
+                           k=5) == [[], []]
+    # mixed batch still serves the present-term query
+    got = eng.search_many(["nosuchterm", "the"], k=5)
+    assert got[0] == [] and got[1] == eng.search("the", k=5)
+
+
+# ---- the driver-local block cache ----
+
+def test_block_cache_warm_repeat_zero_jobs(spark, built_index):
+    """Driver-local serving through the block cache: a repeated query
+    returns identical results with ZERO Spark jobs (the S7 mlock
+    analog — decoded columns served from process memory), the cache
+    counts its entries' decoded bytes, and drop_memory releases it."""
+    from oscar_spark.serve.executor import SearchEngine
+
+    d, _ = built_index
+    eng = SearchEngine(spark, d)
+    q = "city + state"
+    first = eng.search(q, k=10)
+    assert first, "fixture query should match docs"
+    assert eng._block_cache_bytes > 0
+    assert eng._block_cache_bytes == sum(
+        c.nbytes for c in eng._block_cache.values())
+    sc = spark.sparkContext
+    sc.setJobGroup("warmrepeat", "block cache warm repeat")
+    second = eng.search(q, k=10)
+    sc.setJobGroup(None, None)
+    assert second == first
+    jobs = sc.statusTracker().getJobIdsForGroup("warmrepeat")
+    assert len(jobs) == 0, f"expected 0 jobs on warm repeat, got {jobs}"
+    eng.drop_memory()
+    assert eng._block_cache_bytes == 0 and not eng._block_cache
+    assert eng.search(q, k=10) == first  # refetch path still identical
