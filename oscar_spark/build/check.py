@@ -13,6 +13,8 @@ Usage: check_index(spark, dir) → {"ok": bool, "checks": {...}} or via
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -40,6 +42,14 @@ def check_index(spark: SparkSession, index_dir: str,
     record("stages_committed",
            {"doc_stats", "postings", "terms"} <= committed,
            sorted(committed))
+    # a listed segment whose directory is gone: an engine opened before
+    # the deletion fails its queries (FILE_NOT_EXIST), and the fresh
+    # scans below would just see fewer rows
+    missing = [f"{t}/seg={s}"
+               for t, segs in sorted(man.get("segments", {}).items())
+               for s in segs
+               if not os.path.isdir(os.path.join(store.path(t), f"seg={s}"))]
+    record("segments_present", not missing, {"missing": missing})
 
     ds = store.read(spark, "doc_stats", manifest=man)
     n_docs_meta = meta.get("n_docs")

@@ -10,7 +10,8 @@ reference/oscar-create/readwritefuncs.cpp:340-394).
 Spark plan (one declarative DAG; Catalyst handles what oscar hand-built):
 
     pages ──mapInPandas (tokenize+tf, map-side combine)──▶ tokens parquet
-      │        (checkpointed ONCE; both stages below re-read it)
+      │        (checkpointed ONCE; both stages below re-read it, and
+      │         the build drops it once postings commit)
       └─▶ doc_stats: range-partitioned quality sort → doc_id (JVM)
                          ◀── broadcast hash-probe join(url) while small
                                                             │
@@ -942,9 +943,15 @@ def build_index(spark: SparkSession, pages: DataFrame, index_dir: str,
     # SILENTLY RE-TOKENIZED during the postings shuffle — more often at
     # higher core counts (more concurrent execution memory), which
     # inverted N→4N scaling.  A parquet checkpoint makes the cost flat,
-    # disk-backed, fully parallel, and doubles as a resume snapshot
-    # (store→store re-import, reference/oscar-create/oscarcreate.cpp:86-116).
-    if resume and store.committed("tokens", fps["tokens"]):
+    # disk-backed, fully parallel, and is the resume snapshot until
+    # postings, its last reader, commit (store→store re-import,
+    # reference/oscar-create/oscarcreate.cpp:86-116); the build then
+    # drops it.  So resume asks the downstream stages first: once both
+    # readers committed, tokens is done without being read.
+    readers_done = resume and all(
+        store.committed(s, fps[s]) for s in ("doc_stats", "postings"))
+    if readers_done or (resume and store.committed("tokens",
+                                                   fps["tokens"])):
         resumed.append("tokens")
     else:
         with _input_scan(spark, input_files_sig(raw_pages)):
@@ -953,8 +960,8 @@ def build_index(spark: SparkSession, pages: DataFrame, index_dir: str,
     _mark("tokens")
     # this build's schema, not the store's: the recorded `positions`
     # mode changes only at the postings commit
-    tokens = store.read(spark, "tokens",
-                        TOKENS_POS_SCHEMA if positions else TOKENS_SCHEMA)
+    tokens = None if readers_done else store.read(
+        spark, "tokens", TOKENS_POS_SCHEMA if positions else TOKENS_SCHEMA)
 
     # ---- stage 1: doc_stats (docID = rank by static quality; analog of
     # applySort score ordering, OsmKeyValueObjectStore.cpp:1339-1399) ----
@@ -1003,6 +1010,8 @@ def build_index(spark: SparkSession, pages: DataFrame, index_dir: str,
         store.set_meta("positions", positions)
         store.set_meta("fields", list(fields))
         store.commit("postings", fps["postings"])
+    # nothing after the postings commit reads tokens
+    store.drop("tokens")
     _mark("postings")
     postings = store.read(spark, "postings")
 
@@ -1154,17 +1163,20 @@ def ingest_segment(spark: SparkSession, new_pages: DataFrame,
     mark("terms_append")
 
     # ---- ONE atomic snapshot commit (the stage fingerprints are
-    # build_index's, so a later resume over the same input resumes) ----
+    # build_index's, so a later resume over the same input resumes;
+    # tokens is left out: the segment's tokens are dropped below) ----
+    fps = _stage_fingerprints(fp, codec, positions, fields)
+    del fps["tokens"]
     store.commit_append(
-        add={"tokens": [seg], "doc_stats": [seg], "postings": [seg]},
+        add={"doc_stats": [seg], "postings": [seg]},
         replace={"terms": [seg], "terms_rev": [seg],
                  "terms_ngram": [seg]},
         meta={"n_docs": n_total, "avgdl": avgdl_total, "codec": codec,
               "payload_format": PAYLOAD_FORMAT,
               **(extra_meta or {})},
-        stage_fingerprints=_stage_fingerprints(fp, codec, positions,
-                                               fields),
+        stage_fingerprints=fps,
     )
+    store.drop("tokens")
     return {"n_new": n_new, "n_total": n_total, "avgdl": avgdl_total,
             "bucket_stats": bucket_stats}
 
@@ -1306,8 +1318,10 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
     store→store re-import analog (reference/oscar-create/
     oscarcreate.cpp:86-116).  Without it a daily-append store's
     per-query segment/file count grows without bound (terms is
-    swap-replaced on append, but postings/tokens/doc_stats segments
-    accumulate).
+    swap-replaced on append, but postings/doc_stats segments
+    accumulate).  Tokens are not copied: nothing reads them once
+    postings commit, and a store that still lists tokens segments has
+    them dropped here.
 
     Search results are invariant: doc ids, payload bytes, df and
     n_docs/avgdl are all preserved.  Only block_id is renumbered per
@@ -1330,7 +1344,7 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
 
     store = IndexStore(index_dir)
     store_decoder(store.manifest().get("meta", {}))
-    tables = ["tokens", "doc_stats", "postings"]
+    tables = ["doc_stats", "postings"]
     mirrors = ["terms", "terms_rev", "terms_ngram"]
     pre = {t: store.segments(t) for t in tables + mirrors}
     if all(len(pre[t]) <= 1 for t in tables):
@@ -1353,12 +1367,11 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
     _write_dictionary(store, _block_terms(
         store.read_segment(spark, "postings", seg)), seg)
 
-    # resume snapshots collapse to one segment unchanged
-    store.write_segment(store.read(spark, "tokens"), "tokens", seg)
     store.write_segment(store.read(spark, "doc_stats"), "doc_stats", seg)
 
     every = tables + mirrors
     store.commit_append(replace={t: [seg] for t in every})
+    store.drop("tokens")
     for t in every:
         for s in set(pre.get(t, [])):
             if s != seg:

@@ -83,6 +83,14 @@ _META_COLS = ["bucket", "term", "block_id", "range_id", "first_doc",
 _PRELOAD_CACHE: dict = {}
 _PRELOAD_CACHE_MAX = 4
 
+# the pruned route's range counts: it scores at least PRUNE_SEED_RANGES
+# seed ranges before cutting θ, and fetches up to PRUNE_FETCH_RANGES
+# candidate ranges in its first pass — when every candidate fits, phase
+# B (θ from the seed top-k, then the remaining ranges with ub ≥ θ) is
+# skipped
+PRUNE_SEED_RANGES = 4
+PRUNE_FETCH_RANGES = 64
+
 
 def clear_preload_cache() -> None:
     """Drop every cached terms preload (round-5 ADVICE: the module
@@ -925,12 +933,12 @@ class SearchEngine:
             agg = agg.filter(F.col("nt") == require_all)
         ranges = agg.select("range_id", "ub")
 
-        seed_n = max(4, (2 * k) // 64 + 1)
+        seed_n = max(PRUNE_SEED_RANGES, (2 * k) // 64 + 1)
         # fetch well past seed_n: when ALL candidate ranges fit in one
-        # fetch (the common case until ~64×RANGE_SIZE matching docs),
-        # two-phase pruning only adds driver roundtrips — score every
-        # candidate in a single job instead
-        fetch_n = max(seed_n, 64)
+        # fetch (the common case until PRUNE_FETCH_RANGES×RANGE_SIZE
+        # matching docs), two-phase pruning only adds driver roundtrips
+        # — score every candidate in a single job instead
+        fetch_n = max(seed_n, PRUNE_FETCH_RANGES)
         seed_rows = ranges.orderBy(F.desc("ub")).limit(fetch_n + 1).collect()
         if self._timer:
             self._timer.mark("meta_prune")

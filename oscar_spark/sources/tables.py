@@ -12,10 +12,13 @@ writes partitioned parquet plus an explicit `_manifest.json` that mimics
 the snapshot/commit semantics we rely on:
 
     <index_dir>/
-      tokens/, doc_stats/, terms/bucket=*/, terms_rev/, terms_ngram/,
+      doc_stats/, terms/bucket=*/, terms_rev/, terms_ngram/,
       postings/bucket=*/  (parquet, under seg=*/; columns: the *_SCHEMA
                           constants below; each posting block carries its
                           own payload bytes)
+      tokens/             the build's resume checkpoint, present only
+                          while a build or append runs: dropped once
+                          postings (its last reader) commit
       lineage/            partition_id, input_fingerprint, rows_in,
                           terms_out, docs_per_sec, snapshot_id, ts
       _manifest.json      stage snapshots {fingerprint, snapshot_id, ts},
@@ -154,6 +157,20 @@ class IndexStore:
                  manifest: dict | None = None) -> list[str]:
         m = self.manifest() if manifest is None else manifest
         return m.get("segments", {}).get(table, ["base"])
+
+    def drop(self, table: str) -> None:
+        """Retire a table: ONE manifest commit removes its snapshot and
+        lists it with no segments (an unlisted table would default to
+        ["base"]), then its files are deleted.  A kill between the two
+        leaves only unlisted bytes, which the next full write() of the
+        table clears."""
+        import shutil
+
+        def fn(m):
+            m["snapshots"].pop(table, None)
+            m.setdefault("segments", {})[table] = []
+        self._mutate(fn)
+        shutil.rmtree(self.path(table), ignore_errors=True)
 
     def _set_segments(self, table: str, segs: list[str]) -> None:
         self._mutate(lambda m: m.setdefault("segments", {})

@@ -97,10 +97,11 @@ def main() -> int:
         # satisfies — asserted by requiring a partitioned Window spec
         # and banning both SinglePartition and any window without
         # PARTITION BY.
-        from oscar_spark.build.indexer import _final_blocks
+        # (a finished build keeps no tokens table: tokenize the pages)
+        from oscar_spark.build.indexer import _final_blocks, _tokenize
         from oscar_spark.sources.tables import IndexStore
         st = IndexStore(d)
-        fb = _final_blocks(spark, st.read(spark, "tokens"),
+        fb = _final_blocks(spark, _tokenize(pages, False, ()),
                            st.read(spark, "doc_stats"),
                            300, 300, 50.0, "varint")
         check("index build postings pipeline (no single-partition stage)",
@@ -111,8 +112,7 @@ def main() -> int:
 
         # 8. positional build: positions ride the SAME single shuffle —
         # no extra exchange, still no single-partition stage
-        fbp = _final_blocks(spark, st.read(spark, "tokens")
-                            .withColumn("pos", F.array().cast("array<int>")),
+        fbp = _final_blocks(spark, _tokenize(pages, True, ()),
                             st.read(spark, "doc_stats"),
                             300, 300, 50.0, "varint", positions=True)
         check("positional build pipeline (positions add no exchange)",

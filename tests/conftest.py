@@ -77,3 +77,21 @@ def fielded_index(spark, tmp_path_factory):
     eng = SearchEngine(spark, d)
     doc_lang = {int(ds[u]): lg for u, lg in zip(pdf["url"], pdf["lang"])}
     return eng, oracle, doc_lang
+
+
+@pytest.fixture(scope="session")
+def no_tokens():
+    """A check that a store keeps no tokens checkpoint: no data file
+    under tokens/, and no tokens snapshot or segment in the manifest."""
+    import glob
+    import os
+
+    from oscar_spark.sources.tables import IndexStore
+
+    def check(d: str) -> None:
+        store = IndexStore(d)
+        assert not glob.glob(os.path.join(store.path("tokens"), "**",
+                                          "*.parquet"), recursive=True)
+        assert "tokens" not in store.manifest()["snapshots"]
+        assert store.segments("tokens") == []
+    return check

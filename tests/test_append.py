@@ -2,7 +2,8 @@
 reference/oscar-create/oscarcreate.cpp:86-116): build on pages[0:200],
 drop pages[200:300] as new input files, rebuild with resume=True —
 only the new files are ingested, and the merged index is rank-identical
-to a 300-doc oracle.  Also segment compaction (merging the appended
+to a 300-doc oracle.  Also the streaming ingest and its replay guard,
+append input-file matching, segment compaction (merging the appended
 segments back into one) and the CLI's flagless `build --resume`, which
 inherits the store's modes."""
 
@@ -76,6 +77,12 @@ def test_build_and_append_release_their_caches(spark, tmp_path):
     res = build_index(spark, spark.read.parquet(str(pdir)), d, resume=True)
     assert res.resumed_stages[0].startswith("append:")
     assert (after_build, held()) == (before, before)
+
+
+def test_append_keeps_no_tokens(appended, no_tokens):
+    """The append writes and reads its own tokens segment, then drops
+    it with the commit."""
+    no_tokens(appended[0])
 
 
 def test_append_then_identical_resume(spark, appended):
@@ -251,7 +258,7 @@ def test_segment_snapshot_isolation(spark, tmp_path):
     assert store.read(spark, "t").count() == 8
 
 
-def test_streaming_index_ingest(spark, tmp_path):
+def test_streaming_index_ingest(spark, tmp_path, no_tokens):
     """Structured-Streaming incremental ingest: each micro-batch of new
     page files becomes one committed segment; the streaming checkpoint
     prevents re-ingesting consumed files across restarts; the result is
@@ -277,6 +284,7 @@ def test_streaming_index_ingest(spark, tmp_path):
     # a third drain with nothing new must be a no-op
     stream_index_ingest(spark, str(pdir), d, cp)
     assert store.get_meta("n_docs") == 300
+    no_tokens(d)
 
     ds = {r["url"]: r["doc_id"] for r in
           store.read(spark, "doc_stats").collect()}
@@ -311,6 +319,92 @@ def test_append_block_invariants(spark, appended):
         assert sorted(bids) == list(range(len(bids))), t
 
 
+# ---- streaming replay / ingest guard ----
+
+def test_ingest_segment_refuses_committed_segment(spark, built_index):
+    """Re-ingesting a manifest-listed segment would replace its data
+    with EMPTY files while n_docs/df still count it — hard error."""
+    from oscar_spark.build.indexer import ingest_segment
+    from oscar_spark.sources.tables import IndexStore
+    d, _ = built_index
+    store = IndexStore(d)
+    assert "base" in store.segments("postings")
+    with pytest.raises(ValueError, match="already committed"):
+        ingest_segment(spark, spark.range(0), store, "base", "varint",
+                       fp="replay")
+
+
+def test_streaming_replayed_epoch_is_noop(spark, tmp_path):
+    """Simulate the at-least-once crash window: the batch ingestor
+    invoked again with an epoch whose segment is already committed
+    must leave the store byte-identical (no empty-segment overwrite)."""
+    import json
+
+    from oscar_spark.fixtures.pages import pages_spark_df
+    from oscar_spark.sources.tables import IndexStore
+    from oscar_spark.streaming.jobs import make_batch_ingestor
+
+    d = str(tmp_path / "idx")
+    pages = pages_spark_df(spark, 120)
+    ingest = make_batch_ingestor(spark, d)
+    ingest(pages.limit(80), 0)          # first batch → full build
+    ingest(pages.subtract(pages.limit(80)), 1)  # second batch → seg e1
+    store = IndexStore(d)
+    assert "e1" in store.segments("postings")
+    manifest_before = json.dumps(store.manifest(), sort_keys=True)
+    n_before = store.read(spark, "doc_stats").count()
+
+    # replay of epoch 1 (crash between commit_append and checkpoint
+    # advance): must be a no-op
+    ingest(pages.subtract(pages.limit(80)), 1)
+    assert json.dumps(store.manifest(), sort_keys=True) == manifest_before
+    assert store.read(spark, "doc_stats").count() == n_before == 120
+
+
+# ---- append URI matching ----
+
+def test_uri_variants_cover_common_renderings():
+    from oscar_spark.build.indexer import _uri_variants
+    v = _uri_variants("file:/tmp/a b/p.parquet")
+    # raw, decoded path, and the percent-encoded forms Spark renders
+    assert "file:/tmp/a b/p.parquet" in v
+    assert "/tmp/a b/p.parquet" in v
+    assert "file:///tmp/a%20b/p.parquet" in v
+    v2 = _uri_variants("s3a://bucket/key.parquet")
+    assert "s3a://bucket/key.parquet" in v2  # raw URI always matches
+    v3 = _uri_variants("/plain/path.parquet")
+    assert "file:///plain/path.parquet" in v3
+
+
+def test_append_with_percent_encoded_dir(spark, tmp_path):
+    """A pages directory whose path needs percent-encoding must append
+    the new file's docs (round-2 normalization mismatch committed an
+    EMPTY segment here), and the loud-failure guard must not trip."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from oscar_spark.build.indexer import build_index
+    from oscar_spark.fixtures.pages import generate_pages
+
+    pdir = tmp_path / "pages with space"
+    pdir.mkdir()
+    pdf = generate_pages(120)
+    pdf = pdf.assign(warc_ts=pdf["warc_ts"].astype("datetime64[us]"))
+    pq.write_table(pa.Table.from_pandas(pdf.iloc[:80],
+                                        preserve_index=False),
+                   str(pdir / "part-0.parquet"))
+    d = str(tmp_path / "idx")
+    res1 = build_index(spark, spark.read.parquet(str(pdir)), d)
+    assert res1.n_docs == 80
+    pq.write_table(pa.Table.from_pandas(pdf.iloc[80:],
+                                        preserve_index=False),
+                   str(pdir / "part-1.parquet"))
+    res2 = build_index(spark, spark.read.parquet(str(pdir)), d,
+                       resume=True)
+    assert res2.resumed_stages[0].startswith("append:")
+    assert res2.n_docs == 120
+
+
 # ---- segment compaction (S6 hygiene: merge N committed segments into
 # one fresh segment; re-import analog of oscarcreate.cpp:86-116) ----
 
@@ -318,11 +412,16 @@ COMPACT_QUERIES = ["the", "city + state", "war history world",
                    "time - year", "first ^ one", "wd0042"]
 
 
-def test_compact_after_appends_identical_results(spark, tmp_path):
+def test_compact_after_appends_identical_results(spark, tmp_path,
+                                                 no_tokens):
+    """Compaction leaves one segment per table and the same answers; a
+    store that still lists tokens segments has them dropped, on disk
+    and in the manifest."""
+    from oscar_spark.build.check import check_index
     from oscar_spark.build.indexer import build_index, compact_index
     from oscar_spark.fixtures.pages import generate_pages
     from oscar_spark.serve.executor import SearchEngine
-    from oscar_spark.sources.tables import IndexStore
+    from oscar_spark.sources.tables import TOKENS_SCHEMA, IndexStore
 
     pdf = generate_pages(260)
     pdir = tmp_path / "pages"
@@ -341,14 +440,24 @@ def test_compact_after_appends_identical_results(spark, tmp_path):
     before = {q: eng.search(q, k=10) for q in COMPACT_QUERIES}
     before_df = dict(eng.term_stats(["the", "city", "wd0042"]))
 
+    # the store as older builds left it: a tokens segment listed beside
+    # each postings segment, and a tokens snapshot
+    tok = spark.createDataFrame([("u", "t", 1, 1)], TOKENS_SCHEMA)
+    for s in store.segments("postings"):
+        store.write_segment(tok, "tokens", s)
+    store.commit_append(add={"tokens": store.segments("postings")},
+                        stage_fingerprints={"tokens": "old"})
+
     out = compact_index(spark, d)
     assert out["compacted"] and out["segments_before"] == 3
-    for t in ("tokens", "doc_stats", "postings", "terms",
+    for t in ("doc_stats", "postings", "terms",
               "terms_rev", "terms_ngram"):
         assert store.segments(t) == [out["segment"]], t
+    no_tokens(d)
     import os
     segdirs = os.listdir(store.path("postings"))
     assert segdirs == [f"seg={out['segment']}"]
+    assert check_index(spark, d)["ok"]
 
     eng2 = SearchEngine(spark, d)
     assert eng2.n_docs == 260

@@ -1,5 +1,7 @@
 """Build-stage shape: the jobs a build runs, how its dictionary files are
-written, and the range partitioning behind doc ids and the mirrors."""
+written, the range partitioning behind doc ids and the mirrors, the
+doc-id probe, and what a finished or resumed build keeps of its tokens
+checkpoint."""
 
 from __future__ import annotations
 
@@ -8,6 +10,7 @@ import os
 import re
 import time
 
+import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
@@ -156,3 +159,168 @@ def test_build_rejects_colliding_field_keys(spark, tmp_path):
     with pytest.raises(ValueError, match="field"):
         build_index(spark, pages_spark_df(spark, 20),
                     str(tmp_path / "i2"), fields=("-", "lang"))
+
+
+# ---- duplicate urls in one tokenize batch ----
+
+def test_tokenize_batch_with_duplicate_urls():
+    """from_codes over a non-unique url column raised ValueError; the
+    TOKENIZE stage must tolerate duplicates (streaming/append batches
+    see re-crawls before the committed-url anti-join dedups them).  A
+    FULL build still requires one row per url — the posting encoder
+    fails fast with an explanatory error otherwise."""
+    from oscar_spark.build.indexer import _tokenize_batches
+    pdf = pd.DataFrame({
+        "url": ["https://a/", "https://a/", "https://b/"],
+        "text": ["alpha beta alpha", "alpha gamma", "delta"],
+    })
+    out = pd.concat(list(_tokenize_batches(iter([pdf]))),
+                    ignore_index=True)
+    assert set(out["url"].astype(str)) == {"https://a/", "https://b/"}
+    # both duplicate rows' tokens present: 'alpha' tf rows from rows 0+1
+    alpha = out[(out["term"].astype(str) == "alpha")]
+    assert sorted(alpha["tf"].tolist()) == [1, 2]
+
+
+# ---- payload-format dispatch ----
+
+def test_build_records_payload_format(spark, built_index):
+    from oscar_spark.functions.codec import PAYLOAD_FORMAT
+    from oscar_spark.sources.tables import IndexStore
+    d, _ = built_index
+    assert IndexStore(d).get_meta("payload_format") == PAYLOAD_FORMAT
+
+
+# ---- the doc-id probe ----
+
+def test_hash_probe_join_blocks_identical(spark, pages_df, built_index,
+                                         monkeypatch):
+    """The doc-id probe joins on a url hash but keeps a match only where
+    the urls are equal.  With the hash forced to collide (the url's
+    length: many docs share one), the blocks still hold exactly the
+    postings of a plain url string join, and equal the blocks of the
+    real hash byte for byte."""
+    from pyspark.sql import functions as F
+
+    from oscar_spark.build import indexer
+    from oscar_spark.config import RANGE_SIZE
+    from oscar_spark.functions.codec import block_decoder
+    from oscar_spark.sources.tables import IndexStore
+
+    d, res = built_index
+    tokens = indexer._tokenize(pages_df, True, ())
+    doc_stats = IndexStore(d).read(spark, "doc_stats")
+    kw = dict(n_ids=res.n_docs, n_corpus=res.n_docs, avgdl=res.avgdl,
+              codec="varint", positions=True)
+    cols = ["bucket", "term", "block_id", "range_id", "first_doc",
+            "last_doc", "doc_count", "max_tf", "min_dl", "payload",
+            "pos_payload"]
+    real = sorted(map(tuple, indexer._final_blocks(
+        spark, tokens, doc_stats, **kw).select(*cols).collect()))
+    # the forced hash really collides: far fewer lengths than urls
+    assert doc_stats.select(F.length("url")).distinct().count() \
+        < res.n_docs // 10
+    monkeypatch.setattr(indexer, "_url_hash",
+                        lambda url: F.length(url).cast("long"))
+    forced = indexer._final_blocks(spark, tokens, doc_stats, **kw)
+    assert "BroadcastHashJoin" in forced._jdf.queryExecution() \
+        .executedPlan().toString()
+    rows = forced.select(*cols).collect()
+    decode = block_decoder("varint")
+    got = []
+    for r in rows:
+        ids, tfs, _ = decode(bytes(r["payload"]), r["doc_count"],
+                             r["range_id"] * RANGE_SIZE)
+        got += [(r["term"], int(i), int(t)) for i, t in zip(ids, tfs)]
+    # the plain string join, computed here
+    want = [(r["term"], r["doc_id"], r["tf"]) for r in
+            tokens.filter(F.col("term").isNotNull())
+            .join(doc_stats, "url").select("term", "doc_id", "tf").collect()]
+    assert sorted(got) == sorted(want) and len(want) > 0
+    assert sorted(map(tuple, rows)) == real
+
+
+# ---- the tokens checkpoint lives only until postings commit ----
+
+def _pages_of(file_build, spark):
+    d, _, _ = file_build
+    return spark.read.parquet(os.path.join(os.path.dirname(d),
+                                           "part-*.parquet"))
+
+
+def _tables(spark, d):
+    """(postings, terms) of a store, as comparable sets."""
+    from oscar_spark.sources.tables import IndexStore
+    store = IndexStore(d)
+    post = {(r["term"], r["block_id"], bytes(r["payload"]))
+            for r in store.read(spark, "postings").collect()}
+    terms = {(r["term"], r["df"], r["n_blocks"])
+             for r in store.read(spark, "terms").collect()}
+    return post, terms
+
+
+def test_finished_build_keeps_no_tokens(built_index, file_build, no_tokens):
+    """Positional and plain builds both drop their tokens checkpoint."""
+    no_tokens(built_index[0])
+    no_tokens(file_build[0])
+
+
+def _spy_tokenize(monkeypatch) -> list:
+    from oscar_spark.build import indexer
+    calls, real = [], indexer._tokenize
+    monkeypatch.setattr(indexer, "_tokenize",
+                        lambda *a: calls.append(a) or real(*a))
+    return calls
+
+
+@pytest.mark.parametrize("stage,kill_at,resumed", [
+    ("doc_stats", "assign_doc_ids_ranged", ["tokens"]),
+    ("terms", "_write_dictionary", ["tokens", "doc_stats", "postings"]),
+])
+def test_killed_build_resumes_without_tokenizing(
+        spark, file_build, tmp_path, monkeypatch, no_tokens,
+        stage, kill_at, resumed):
+    """A build killed inside the doc_stats stage resumes from its tokens
+    checkpoint; one killed inside the terms stage, after postings
+    committed and tokens were dropped, needs no tokens at all.  Neither
+    tokenizes again, and both end with the postings and terms of a
+    clean build."""
+    from oscar_spark.build import indexer
+    from oscar_spark.build.check import check_index
+    pages = _pages_of(file_build, spark)
+    d = str(tmp_path / "idx")
+
+    def killed(*a, **kw):
+        raise RuntimeError(f"killed in {stage}")
+    monkeypatch.setattr(indexer, kill_at, killed)
+    with pytest.raises(RuntimeError, match="killed"):
+        indexer.build_index(spark, pages, d)
+    monkeypatch.undo()
+    calls = _spy_tokenize(monkeypatch)
+    res = indexer.build_index(spark, pages, d, resume=True)
+    assert calls == []
+    assert res.resumed_stages == resumed
+    assert _tables(spark, d) == _tables(spark, file_build[0])
+    no_tokens(d)
+    assert check_index(spark, d)["ok"]
+
+
+def test_resume_under_other_codec_matches_fresh_build(
+        spark, file_build, tmp_path, monkeypatch, no_tokens):
+    """A finished store resumed under another codec has no checkpoint to
+    read: it tokenizes again and ends with the postings of a fresh
+    build under that codec."""
+    import shutil
+
+    from oscar_spark.build import indexer
+    pages = _pages_of(file_build, spark)
+    d, d_fresh = str(tmp_path / "idx"), str(tmp_path / "fresh")
+    shutil.copytree(file_build[0], d)
+    calls = _spy_tokenize(monkeypatch)
+    res = indexer.build_index(spark, pages, d, resume=True, codec="pfor")
+    # the dictionary does not depend on the codec
+    assert len(calls) == 1
+    assert res.resumed_stages == ["doc_stats", "terms"]
+    indexer.build_index(spark, pages, d_fresh, codec="pfor")
+    assert _tables(spark, d) == _tables(spark, d_fresh)
+    no_tokens(d)

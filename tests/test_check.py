@@ -24,7 +24,8 @@ def test_check_index_green_on_fresh_and_appended(spark, built_index):
     res = check_index(spark, d)
     assert res["ok"], res["checks"]
     assert set(res["checks"]) >= {
-        "stages_committed", "doc_stats_keys_unique", "doc_ids_contiguous",
+        "stages_committed", "segments_present", "doc_stats_keys_unique",
+        "doc_ids_contiguous",
         "meta_counts_match", "terms_df_equals_postings",
         "terms_bucket_is_hash", "postings_bucket_is_hash",
         "block_ranges_strictly_increasing", "payload_decode_sample"}
@@ -42,6 +43,23 @@ def test_check_index_catches_meta_corruption(spark, tmp_path):
     res = check_index(spark, d)
     assert not res["ok"]
     assert not res["checks"]["meta_counts_match"]["ok"]
+
+
+def test_check_index_catches_missing_segment(spark, built_index, tmp_path):
+    """A segment the manifest lists but whose directory is gone fails
+    the check (an engine opened before the deletion fails its queries
+    with FILE_NOT_EXIST; a fresh read just misses the rows)."""
+    import os
+    import shutil
+
+    from oscar_spark.build.check import check_index
+    d = str(tmp_path / "copy")
+    shutil.copytree(built_index[0], d)
+    shutil.rmtree(os.path.join(d, "doc_stats", "seg=base"))
+    res = check_index(spark, d)
+    assert not res["ok"]
+    assert res["checks"]["segments_present"] == {
+        "ok": False, "detail": {"missing": ["doc_stats/seg=base"]}}
 
 
 def test_payload_dedup_store_rejected(spark, tmp_path):

@@ -99,3 +99,25 @@ def test_facet_stats_match_oracle(store):
         got = {(r["key"], r["value"]): r["cnt"]
                for r in eng.facet_stats(q).collect()}
         assert got == {("lang", v): c for v, c in want.items()}, q
+
+
+def test_pruned_phase_b_matches_oracle(store, monkeypatch):
+    """With the seed and fetch floors at 1, a k=10 pruned query over the
+    3 ranges scores one seed range first, cuts θ from its top-k, then
+    scores the other ranges whose bound reaches θ (phase B, which a
+    store needs PRUNE_FETCH_RANGES ranges to reach otherwise).  Single,
+    AND and OR queries still equal the oracle at SCORE_ROUND."""
+    from oscar_spark.serve import executor
+    eng, oracle, _ = store
+    monkeypatch.setattr(executor, "PRUNE_SEED_RANGES", 1)
+    monkeypatch.setattr(executor, "PRUNE_FETCH_RANGES", 1)
+    passes: list[int] = []
+    real = eng._score_ranges
+    monkeypatch.setattr(eng, "_score_ranges",
+                        lambda *a, **kw: passes.append(1) or real(*a, **kw))
+    for q in ("the", "city state", "city + state"):
+        passes.clear()
+        _assert_oracle(eng.search(q, k=10, mode="pruned"),
+                       oracle.search(q, k=10), q)
+        # the seed pass, then the rest: phase B ran
+        assert len(passes) == 2, q

@@ -1,131 +1,13 @@
-"""Round-3 hardening: streaming replay idempotency, append URI
-matching, duplicate-url tokenize batches, payload-format dispatch,
-IVF auto-sizing + partition-pruned probes, 2-char substring path,
-dedup_components fixpoint."""
+"""Round-3 hardening: IVF auto-sizing + partition-pruned probes, 2-char
+substring path, dedup_components fixpoint, scan tuning restored on
+error."""
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pytest
 
 SF1 = "/root/testdata/sf0.001"
-
-
-# ---- streaming replay / ingest guard ----
-
-def test_ingest_segment_refuses_committed_segment(spark, built_index):
-    """Re-ingesting a manifest-listed segment would replace its data
-    with EMPTY files while n_docs/df still count it — hard error."""
-    from oscar_spark.build.indexer import ingest_segment
-    from oscar_spark.sources.tables import IndexStore
-    d, _ = built_index
-    store = IndexStore(d)
-    assert "base" in store.segments("postings")
-    with pytest.raises(ValueError, match="already committed"):
-        ingest_segment(spark, spark.range(0), store, "base", "varint",
-                       fp="replay")
-
-
-def test_streaming_replayed_epoch_is_noop(spark, tmp_path):
-    """Simulate the at-least-once crash window: the batch ingestor
-    invoked again with an epoch whose segment is already committed
-    must leave the store byte-identical (no empty-segment overwrite)."""
-    import json
-
-    from oscar_spark.fixtures.pages import pages_spark_df
-    from oscar_spark.sources.tables import IndexStore
-    from oscar_spark.streaming.jobs import make_batch_ingestor
-
-    d = str(tmp_path / "idx")
-    pages = pages_spark_df(spark, 120)
-    ingest = make_batch_ingestor(spark, d)
-    ingest(pages.limit(80), 0)          # first batch → full build
-    ingest(pages.subtract(pages.limit(80)), 1)  # second batch → seg e1
-    store = IndexStore(d)
-    assert "e1" in store.segments("postings")
-    manifest_before = json.dumps(store.manifest(), sort_keys=True)
-    n_before = store.read(spark, "doc_stats").count()
-
-    # replay of epoch 1 (crash between commit_append and checkpoint
-    # advance): must be a no-op
-    ingest(pages.subtract(pages.limit(80)), 1)
-    assert json.dumps(store.manifest(), sort_keys=True) == manifest_before
-    assert store.read(spark, "doc_stats").count() == n_before == 120
-
-
-# ---- append URI matching ----
-
-def test_uri_variants_cover_common_renderings():
-    from oscar_spark.build.indexer import _uri_variants
-    v = _uri_variants("file:/tmp/a b/p.parquet")
-    # raw, decoded path, and the percent-encoded forms Spark renders
-    assert "file:/tmp/a b/p.parquet" in v
-    assert "/tmp/a b/p.parquet" in v
-    assert "file:///tmp/a%20b/p.parquet" in v
-    v2 = _uri_variants("s3a://bucket/key.parquet")
-    assert "s3a://bucket/key.parquet" in v2  # raw URI always matches
-    v3 = _uri_variants("/plain/path.parquet")
-    assert "file:///plain/path.parquet" in v3
-
-
-def test_append_with_percent_encoded_dir(spark, tmp_path):
-    """A pages directory whose path needs percent-encoding must append
-    the new file's docs (round-2 normalization mismatch committed an
-    EMPTY segment here), and the loud-failure guard must not trip."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from oscar_spark.build.indexer import build_index
-    from oscar_spark.fixtures.pages import generate_pages
-
-    pdir = tmp_path / "pages with space"
-    pdir.mkdir()
-    pdf = generate_pages(120)
-    pdf = pdf.assign(warc_ts=pdf["warc_ts"].astype("datetime64[us]"))
-    pq.write_table(pa.Table.from_pandas(pdf.iloc[:80],
-                                        preserve_index=False),
-                   str(pdir / "part-0.parquet"))
-    d = str(tmp_path / "idx")
-    res1 = build_index(spark, spark.read.parquet(str(pdir)), d)
-    assert res1.n_docs == 80
-    pq.write_table(pa.Table.from_pandas(pdf.iloc[80:],
-                                        preserve_index=False),
-                   str(pdir / "part-1.parquet"))
-    res2 = build_index(spark, spark.read.parquet(str(pdir)), d,
-                       resume=True)
-    assert res2.resumed_stages[0].startswith("append:")
-    assert res2.n_docs == 120
-
-
-# ---- duplicate urls in one tokenize batch ----
-
-def test_tokenize_batch_with_duplicate_urls():
-    """from_codes over a non-unique url column raised ValueError; the
-    TOKENIZE stage must tolerate duplicates (streaming/append batches
-    see re-crawls before the committed-url anti-join dedups them).  A
-    FULL build still requires one row per url — the posting encoder
-    fails fast with an explanatory error otherwise."""
-    from oscar_spark.build.indexer import _tokenize_batches
-    pdf = pd.DataFrame({
-        "url": ["https://a/", "https://a/", "https://b/"],
-        "text": ["alpha beta alpha", "alpha gamma", "delta"],
-    })
-    out = pd.concat(list(_tokenize_batches(iter([pdf]))),
-                    ignore_index=True)
-    assert set(out["url"].astype(str)) == {"https://a/", "https://b/"}
-    # both duplicate rows' tokens present: 'alpha' tf rows from rows 0+1
-    alpha = out[(out["term"].astype(str) == "alpha")]
-    assert sorted(alpha["tf"].tolist()) == [1, 2]
-
-
-# ---- payload-format dispatch ----
-
-def test_build_records_payload_format(spark, built_index):
-    from oscar_spark.functions.codec import PAYLOAD_FORMAT
-    from oscar_spark.sources.tables import IndexStore
-    d, _ = built_index
-    assert IndexStore(d).get_meta("payload_format") == PAYLOAD_FORMAT
 
 
 # ---- IVF sizing + partition-pruned probes ----

@@ -286,50 +286,3 @@ def test_generate_pages_text_matches_extract():
     assert n_corrupt > 0  # the corruption branch is exercised
     for h, t in zip(df.html, df.text):
         assert extract_text(h) == t
-
-
-def test_hash_probe_join_blocks_identical(spark, built_index, monkeypatch):
-    """The doc-id probe joins on a url hash but keeps a match only where
-    the urls are equal.  With the hash forced to collide (the url's
-    length: many docs share one), the blocks still hold exactly the
-    postings of a plain url string join, and equal the blocks of the
-    real hash byte for byte."""
-    from pyspark.sql import functions as F
-
-    from oscar_spark.build import indexer
-    from oscar_spark.config import RANGE_SIZE
-    from oscar_spark.functions.codec import block_decoder
-    from oscar_spark.sources.tables import IndexStore
-
-    d, res = built_index
-    store = IndexStore(d)
-    tokens = store.read(spark, "tokens")
-    doc_stats = store.read(spark, "doc_stats")
-    kw = dict(n_ids=res.n_docs, n_corpus=res.n_docs, avgdl=res.avgdl,
-              codec="varint", positions=True)
-    cols = ["bucket", "term", "block_id", "range_id", "first_doc",
-            "last_doc", "doc_count", "max_tf", "min_dl", "payload",
-            "pos_payload"]
-    real = sorted(map(tuple, indexer._final_blocks(
-        spark, tokens, doc_stats, **kw).select(*cols).collect()))
-    # the forced hash really collides: far fewer lengths than urls
-    assert doc_stats.select(F.length("url")).distinct().count() \
-        < res.n_docs // 10
-    monkeypatch.setattr(indexer, "_url_hash",
-                        lambda url: F.length(url).cast("long"))
-    forced = indexer._final_blocks(spark, tokens, doc_stats, **kw)
-    assert "BroadcastHashJoin" in forced._jdf.queryExecution() \
-        .executedPlan().toString()
-    rows = forced.select(*cols).collect()
-    decode = block_decoder("varint")
-    got = []
-    for r in rows:
-        ids, tfs, _ = decode(bytes(r["payload"]), r["doc_count"],
-                             r["range_id"] * RANGE_SIZE)
-        got += [(r["term"], int(i), int(t)) for i, t in zip(ids, tfs)]
-    # the plain string join, computed here
-    want = [(r["term"], r["doc_id"], r["tf"]) for r in
-            tokens.filter(F.col("term").isNotNull())
-            .join(doc_stats, "url").select("term", "doc_id", "tf").collect()]
-    assert sorted(got) == sorted(want) and len(want) > 0
-    assert sorted(map(tuple, rows)) == real

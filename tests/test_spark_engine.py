@@ -345,21 +345,22 @@ def test_resume_equivalence(spark, pages_df, tmp_path):
     assert a == b
 
 
-def test_resume_skips_tokens_stage(spark, pages_df, tmp_path):
-    """Interrupted after the tokens checkpoint: resume must not
-    re-tokenize, and the final index must equal a from-scratch build."""
-    from oscar_spark.build.indexer import build_index
-    import json, shutil
-    d1, d2 = str(tmp_path / "a"), str(tmp_path / "b")
-    build_index(spark, pages_df, d1)
-    os_mk = __import__("os").makedirs
-    os_mk(d2)
-    shutil.copytree(f"{d1}/tokens", f"{d2}/tokens")
-    m = json.load(open(f"{d1}/_manifest.json"))
-    m["snapshots"] = {"tokens": m["snapshots"]["tokens"]}
-    m["next_snapshot_id"] = 2
-    json.dump(m, open(f"{d2}/_manifest.json", "w"))
-    res = build_index(spark, pages_df, d2, resume=True)
+def test_resume_skips_tokens_stage(spark, pages_df, built_index, tmp_path,
+                                   monkeypatch):
+    """Killed after the tokens checkpoint (inside the doc_stats stage):
+    resume must not re-tokenize, and the final index must equal a
+    from-scratch build."""
+    from oscar_spark.build import indexer
+
+    def killed(*a, **kw):
+        raise RuntimeError("killed")
+    d1, d2 = built_index[0], str(tmp_path / "b")
+    monkeypatch.setattr(indexer, "assign_doc_ids_ranged", killed)
+    with pytest.raises(RuntimeError, match="killed"):
+        indexer.build_index(spark, pages_df, d2, positions=True)
+    monkeypatch.undo()
+    res = indexer.build_index(spark, pages_df, d2, resume=True,
+                              positions=True)
     assert res.resumed_stages == ["tokens"]
     a = {(r["term"], r["block_id"], bytes(r["payload"]))
          for r in spark.read.parquet(f"{d1}/postings").collect()}
