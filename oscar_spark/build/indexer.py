@@ -30,10 +30,18 @@ Spark plan (one declarative DAG; Catalyst handles what oscar hand-built):
         for bucket stats + the mirrors' range sample, one shuffle per
         mirror.
 
+One pipeline (_ingest) writes every segment.  A full build is the
+first segment of an empty store (`base`, published in place of what the
+store held); a file-growth append (`a<crc>`) and a streaming epoch
+(`e<epoch>`) add a segment on top of the committed snapshot, and only
+they run the steps that need one: the committed-url anti-join, the
+doc-id offset, the block-numbering join and the dictionary merge.
+
 Every Spark job is a fixed cost at small scale, so each stage spends
 its jobs on data: a build runs 18 (tokens 1, doc_stats 5, postings 4,
-terms 8).  No check, cache or schema-inference job of its own, and one
-sample per range partitioning (doc ids; both mirrors share one).
+terms 8), an append 21 (tokens 1, doc_stats 7, postings 5, terms 8).
+No check, cache or schema-inference job of its own, and one sample per
+range partitioning (doc ids; both mirrors share one).
 
 Scale notes (100 TB / 10^12 docs):
 - The only global ordering is docID assignment: per-partition contiguous
@@ -83,7 +91,7 @@ from oscar_spark.functions.codec import (PAYLOAD_FORMAT, block_decoder,
 from oscar_spark.functions.extract import extract_series
 from oscar_spark.functions.worker import worker_init
 from oscar_spark.sources.tables import (TOKENS_POS_SCHEMA, TOKENS_SCHEMA,
-                                       IndexStore)
+                                       IndexStore, table_schema)
 
 # the big shuffle carries the term STRING, not a dictionary id: web
 # vocabulary terms are short (≈7 bytes, about an int64), so a global
@@ -323,11 +331,6 @@ def _encode_partition_arrow(batches, codec: str = "varint",
             yield out
 
 
-_FINAL_COLS = ["bucket", "term", "block_id", "range_id", "first_doc",
-               "last_doc", "doc_count", "max_tf", "min_dl", "max_score",
-               "payload"]
-
-
 def _url_hash(url: Column) -> Column:
     """The doc-id probe's join key (a test swaps in a colliding one)."""
     return F.xxhash64(url)
@@ -425,7 +428,9 @@ def _final_blocks(spark: SparkSession, tokens: DataFrame,
     # exchanges; shuffle retry covers executor loss.
     from pyspark.sql import Window
     wt = Window.partitionBy("bucket", "_p", "term")
-    fcols = _FINAL_COLS + (["pos_payload"] if positions else [])
+    fcols = ["bucket", "term", "block_id", "range_id", "first_doc",
+             "last_doc", "doc_count", "max_tf", "min_dl", "max_score",
+             "payload"] + (["pos_payload"] if positions else [])
     return (
         _by_bucket(blocks.withColumn("bucket", F.pmod(
             F.hash("term"), F.lit(NUM_TERM_BUCKETS))))
@@ -499,18 +504,6 @@ def _sum_terms(rows: DataFrame) -> DataFrame:
             .drop("_p"))
 
 
-def _write_terms(store: IndexStore, terms: DataFrame,
-                 seg: str | None = None) -> None:
-    """The term dictionary, term-sorted within each bucket (so parquet
-    row-group min/max prunes dictionary range scans): one file per
-    bucket."""
-    out = terms.sortWithinPartitions("bucket", "term")
-    if seg is None:
-        store.write(out, "terms", partition_by=["bucket"])
-    else:
-        store.write_segment(out, "terms", seg, partition_by=["bucket"])
-
-
 def _write_width(spark: SparkSession) -> int:
     """Tasks per table write: one per core.  A parquet write task's
     fixed cost (30–90 ms per task just to deserialize it, Hadoop
@@ -555,7 +548,7 @@ def _grams(term: str) -> set[str]:
 
 
 def _write_mirrors(store: IndexStore, rows: DataFrame, sample: list[str],
-                   seg: str | None = None) -> None:
+                   seg: str) -> None:
     """Wildcard mirrors of the term dictionary.
 
     terms_rev: (rev=reverse(term), term, df), range-partitioned and
@@ -610,16 +603,12 @@ def _write_mirrors(store: IndexStore, rows: DataFrame, sample: list[str],
                      gram_order))
         .drop("_p").sortWithinPartitions("gram", "term"))
 
-    def _w(df: DataFrame, name: str):
-        if seg is None:
-            return lambda: store.write(df, name)
-        return lambda: store.write_segment(df, name, seg)
-
-    _concurrently(_w(rev, "terms_rev"), _w(grams, "terms_ngram"))
+    _concurrently(lambda: store.write_segment(rev, "terms_rev", seg),
+                  lambda: store.write_segment(grams, "terms_ngram", seg))
 
 
 def _write_dictionary(store: IndexStore, rows: DataFrame,
-                      seg: str | None = None) -> list[dict]:
+                      seg: str) -> list[dict]:
     """Write the term dictionary and both wildcard mirrors from
     (bucket, term, df, n_blocks, first) rows — one row per posting
     block (_block_terms) and/or per committed term (first = true) — and
@@ -634,8 +623,11 @@ def _write_dictionary(store: IndexStore, rows: DataFrame,
         stats.extend(bucket_stats)
         _write_mirrors(store, rows, sample, seg)
 
-    _concurrently(lambda: _write_terms(store, _sum_terms(rows), seg),
-                  _mirrors)
+    # the dictionary is term-sorted within each bucket (so parquet
+    # row-group min/max prunes dictionary range scans): one file per bucket
+    _concurrently(lambda: store.write_segment(
+        _sum_terms(rows).sortWithinPartitions("bucket", "term"), "terms",
+        seg, partition_by=["bucket"]), _mirrors)
     return stats
 
 
@@ -754,7 +746,6 @@ def extract_pages(pages: DataFrame) -> DataFrame:
 def input_files_sig(pages: DataFrame) -> dict[str, str] | None:
     """File-backed input → {file URI: "size|mtime"} (driver-side listing,
     no data scan); None for in-memory input."""
-    import zlib  # noqa: F401  (kept for fingerprint parity)
     from urllib.parse import unquote, urlparse
     files = sorted(pages.inputFiles())
     if not files:
@@ -775,16 +766,17 @@ def input_files_sig(pages: DataFrame) -> dict[str, str] | None:
     return out
 
 
-def input_fingerprint(pages: DataFrame) -> str:
+def input_fingerprint(pages: DataFrame,
+                      sigs: dict[str, str] | None) -> str:
     """Cheap deterministic fingerprint of the input table (resume gate).
 
-    File-backed input: hash of the sorted (path, size, mtime) manifest —
-    a driver-side listing, no data scan (the Iceberg-snapshot-id analog;
-    at 10^12 docs a content scan just to decide "did the input change"
-    is not acceptable).  In-memory input (tests): content-based scan.
+    File-backed input (sigs, its input_files_sig): hash of the sorted
+    (path, size, mtime) manifest — a driver-side listing, no data scan
+    (the Iceberg-snapshot-id analog; at 10^12 docs a content scan just
+    to decide "did the input change" is not acceptable).  In-memory
+    input (tests): content-based scan.
     """
     import zlib
-    sigs = input_files_sig(pages)
     if sigs is not None:
         h = 0
         for f, s in sorted(sigs.items()):
@@ -799,8 +791,26 @@ def input_fingerprint(pages: DataFrame) -> str:
     return f"n{row['n']}-u{row['u']}-t{row['t']}"
 
 
-def _stage_fingerprints(fp: str, codec: str, positions: bool,
-                        fields: tuple[str, ...]) -> dict[str, str]:
+def _modes(codec: str, positions: bool, fields) -> dict:
+    """The store modes a segment is written under, as the manifest
+    records them.  Fails fast on an unknown codec, and on field columns
+    whose keys normalize to nothing or to the same key (e.g. 'Lang' and
+    'lang'): those would emit duplicate (url, term) postings and crash
+    the block encoder later with a misleading duplicate-url error."""
+    from oscar_spark.functions.tokenize import normalize_field_value
+    block_decoder(codec)
+    fields = list(fields or ())
+    keys = [normalize_field_value(f) for f in fields]
+    if not all(keys) or len(set(keys)) < len(keys):
+        raise ValueError(
+            f"field columns {fields} normalize to the keys {keys}: each "
+            "needs an alphanumeric and its own key, or the composite "
+            "key:value tokens would be ambiguous")
+    return {"codec": codec, "payload_format": PAYLOAD_FORMAT,
+            "positions": bool(positions), "fields": fields}
+
+
+def _stage_fingerprints(fp: str, modes: dict) -> dict[str, str]:
     """Each stage's resume fingerprint: the input fingerprint plus the
     modes its output depends on, so a resume under another mode redoes
     the stage instead of keeping output of the old one.
@@ -813,11 +823,25 @@ def _stage_fingerprints(fp: str, codec: str, positions: bool,
       instead of keeping the old payloads under the new codec label.
     - terms: df depends on the fielded-token set (not on codec or
       positions), so a fields flip rebuilds the dictionary too."""
-    f = ",".join(fields)
-    return {"tokens": f"{fp}|pos={int(positions)}|f={f}|m2",
+    f = ",".join(modes["fields"])
+    pos = int(modes["positions"])
+    return {"tokens": f"{fp}|pos={pos}|f={f}|m2",
             "doc_stats": fp,
-            "postings": f"{fp}|codec={codec}|pos={int(positions)}|f={f}",
+            "postings": f"{fp}|codec={modes['codec']}|pos={pos}|f={f}",
             "terms": f"{fp}|f={f}"}
+
+
+class _Clock:
+    """BuildResult.stage_secs: each mark is the time since the last."""
+
+    def __init__(self) -> None:
+        self.t0 = self._last = time.time()
+        self.secs: dict[str, float] = {}
+
+    def mark(self, name: str) -> None:
+        now = time.time()
+        self.secs[name] = round(now - self._last, 2)
+        self._last = now
 
 
 def build_index(spark: SparkSession, pages: DataFrame, index_dir: str,
@@ -825,7 +849,8 @@ def build_index(spark: SparkSession, pages: DataFrame, index_dir: str,
                 codec: str | None = None,
                 positions: bool | None = None,
                 fields: tuple[str, ...] | None = None) -> BuildResult:
-    """Build the full index (doc_stats, terms, postings, lineage).
+    """Build the full index (doc_stats, terms, postings, lineage): the
+    ingest pipeline (_ingest) over an empty base, as segment `base`.
 
     Input contract: url is the document key — ONE page row per url.
     Duplicate urls within one build fail fast in the posting encoder
@@ -847,338 +872,275 @@ def build_index(spark: SparkSession, pages: DataFrame, index_dir: str,
     reference/oscar-create/TextSearchTraits.h:108) — `lang:en` then
     works as a query leaf; recorded in the manifest, appends inherit.
 
-    All three mode knobs default to None = "unspecified": a resume over
-    an existing store INHERITS its recorded modes, so `cli.py build
-    --resume` (which passes no mode flags) appends to a positional/
-    fielded/pfor store instead of silently rebuilding it as a plain
-    varint store.  Passing an explicit value still overrides — a real
+    All three mode knobs default to None = "unspecified": a resume
+    INHERITS the modes of the killed build it resumes (recorded with its
+    first stage commit), else those of the committed store, so `cli.py
+    build --resume` (which passes no mode flags) finishes or appends to
+    a positional/fielded/pfor store instead of silently rebuilding it as
+    a plain varint store.  An explicit value still overrides — a real
     mode FLIP rebuilds, as the append gate requires.
 
-    Without resume the build starts a new store: no metadata of an
-    earlier store in index_dir (its modes, its input files) survives."""
+    Without resume the build starts a new store: its publish replaces
+    every segment and all metadata (modes, input files) of an earlier
+    store in index_dir."""
     from oscar_spark.config import POSTINGS_CODEC
     store = IndexStore(index_dir)
-    if resume:
-        meta = store.manifest().get("meta", {})
-        codec = codec or meta.get("codec")
-        if positions is None:
-            positions = bool(meta.get("positions", False))
-        if fields is None:
-            fields = tuple(meta.get("fields", []) or [])
-    codec = codec or POSTINGS_CODEC
-    block_decoder(codec)  # fail fast on an unknown codec name
-    positions = bool(positions)
-    fields = tuple(fields or ())
-    if fields:
-        # fail fast with a field-specific message: two columns whose
-        # names normalize to the same key (e.g. 'Lang' and 'lang') would
-        # emit duplicate (url, term) postings and crash the block
-        # encoder later with a misleading duplicate-url error
-        from oscar_spark.functions.tokenize import normalize_field_value
-        kns = [normalize_field_value(f) for f in fields]
-        empty_keys = [f for f, kn in zip(fields, kns) if not kn]
-        if empty_keys:
-            raise ValueError(
-                f"field column(s) {empty_keys} normalize to an empty "
-                "key — rename them to contain at least one alphanumeric")
-        dupes = sorted({kn for kn in kns if kns.count(kn) > 1})
-        if dupes:
-            coll = {kn: [f for f, k in zip(fields, kns) if k == kn]
-                    for kn in dupes}
-            raise ValueError(
-                f"field columns collide after key normalization: {coll}"
-                " — the composite key:value tokens would be ambiguous")
-    if not resume:
-        store.clear_meta()
-    t0 = time.time()
-    stage_secs: dict[str, float] = {}
-    _last = [t0]
-
-    def _mark(name: str) -> None:
-        now = time.time()
-        stage_secs[name] = round(now - _last[0], 2)
-        _last[0] = now
-
+    m = store.manifest()
+    meta = m.get("meta", {})
+    rec = {**meta, **m.get("pending", {}).get("meta", {})} if resume else {}
+    modes = _modes(
+        codec or rec.get("codec") or POSTINGS_CODEC,
+        rec.get("positions", False) if positions is None else positions,
+        rec.get("fields") if fields is None else fields)
+    clock = _Clock()
     # input_hint shape is (url, warc_ts, html, text, lang); a table
     # carrying only the raw html gets the pinned extractor applied
-    # (byte-identity with pre-extracted text is a test invariant).
-    # raw_pages is kept for the append path: its per-file filter uses
-    # input_file_name(), which does not survive a mapInPandas — the
-    # extractor is applied AFTER file filtering there.
-    raw_pages = pages
-    if "text" not in pages.columns:
-        pages = extract_pages(pages)
-
-    fp = input_fingerprint(pages)
-    _mark("fingerprint")
-    resumed: list[str] = []
+    # (byte-identity with pre-extracted text is a test invariant) — for
+    # an append only AFTER its per-file filter, whose input_file_name()
+    # does not survive a mapInPandas
+    text_pages = pages if "text" in pages.columns else extract_pages(pages)
+    sigs = input_files_sig(pages)  # the one listing of the input
+    fp = input_fingerprint(text_pages, sigs)
+    clock.mark("fingerprint")
 
     # ---- incremental append (store→store re-import analog,
     # reference/oscar-create/oscarcreate.cpp:86-116): if the input grew
     # by whole files while every previously-ingested file is unchanged,
-    # tokenize ONLY the new files and merge their postings into the
-    # committed index as a new segment — a daily crawl drop costs
-    # O(new data), not a rebuild ----
-    fps = _stage_fingerprints(fp, codec, positions, fields)
-    if resume:
-        recorded = meta.get("input_files")
-        cur = input_files_sig(raw_pages)
-        if (recorded and cur and len(cur) > len(recorded)
-                and not store.committed("postings", fps["postings"])
-                and meta.get("codec", codec) == codec
-                # a positional/fielded flag flip means a rebuild
-                and meta.get("positions", False) == positions
-                and meta.get("fields", []) == list(fields)
-                and set(recorded).issubset(cur)
-                and all(cur[f] == recorded[f] for f in recorded)):
-            return _append_index(
-                spark, raw_pages, store, codec, fp, cur,
-                sorted(set(cur) - set(recorded)))
+    # ingest ONLY the new files, as a segment on the committed store — a
+    # daily crawl drop costs O(new data), not a rebuild ----
+    recorded = meta.get("input_files")
+    if (resume and recorded and sigs and len(sigs) > len(recorded)
+            and not store.committed(
+                "postings", _stage_fingerprints(fp, modes)["postings"])
+            # a codec/positional/fielded flip means a rebuild
+            and all(meta.get(k) == modes[k]
+                    for k in ("codec", "positions", "fields"))
+            and all(sigs.get(f) == s for f, s in recorded.items())):
+        return _append_index(spark, pages, store, fp, modes, sigs,
+                             sorted(set(sigs) - set(recorded)), clock)
+    return _ingest(spark, text_pages, store, "base", fp, modes,
+                   replace=True, resume=resume, sigs=sigs, clock=clock)
+
+
+# every table a segment has once published → the stage that writes it
+_TABLES = {"doc_stats": "doc_stats", "postings": "postings",
+           "terms": "terms", "terms_rev": "terms", "terms_ngram": "terms"}
+
+
+def _ingest(spark: SparkSession, pages: DataFrame, store: IndexStore,
+            seg: str, fp: str, modes: dict, *, replace: bool,
+            resume: bool = False, sigs: dict[str, str] | None = None,
+            clock: _Clock | None = None,
+            check_tokens=lambda: None) -> BuildResult:
+    """The one ingest pipeline: `pages` become segment `seg` of every
+    table on top of a base snapshot, and one publish makes it visible.
+    A build (`replace`) has an empty base; its publish replaces every
+    table's segments and the store's metadata.  An append or a streaming
+    epoch builds on the committed snapshot; its publish adds the segment
+    beside the committed ones and swaps in the merged dictionary.
+    Scores stay exact: serve derives BM25 at query time from tf/dl
+    payloads and the merged df, n_docs and avgdl.
+
+    Each stage records a stage commit of the pending segment under its
+    fingerprint, with the modes and counts it ran under; with resume, a
+    stage whose commit matches is not run again, and a build also keeps
+    a committed table whose snapshot matches.  `check_tokens` runs right
+    after the tokens write: an input check raising there commits
+    nothing."""
+    clock = clock or _Clock()
+    suffix = "" if replace else "_append"  # the stage_secs keys
+    if "text" not in pages.columns:  # html-only input (see build_index)
+        pages = extract_pages(pages)
+    m = store.manifest()
+    old = {} if replace else m.get("meta", {})  # the base's meta
+    if old:
+        # a store in another payload format or layout must not gain a
+        # segment in the current one: the publish stamps it store-wide
+        store_decoder(old)
+    n_old = int(old.get("n_docs", 0))
+    fps = _stage_fingerprints(fp, modes)
+    pending = m.get("pending") or {}
+    if pending.get("segment") != seg:
+        pending = {"stages": {}}
+    kept: set[str] = set()  # a build's stages the committed store holds
+
+    def done(stage: str) -> dict | None:
+        """The meta `stage` was committed with — by the pending segment,
+        or for a build by the committed store, whose table it then
+        keeps — or None: run the stage."""
+        if resume and pending["stages"].get(stage) == fps[stage]:
+            return pending["meta"]
+        snap = m["snapshots"].get(stage) or {}
+        if resume and replace and snap.get("fingerprint") == fps[stage]:
+            kept.add(stage)
+            return m.get("meta", {})
+        return None
+
+    def commit(stage: str, **counts) -> None:
+        store.commit_stage(seg, stage, fps[stage], {**modes, **counts})
+
+    def read(table: str) -> DataFrame:
+        schema = table_schema(table, modes)
+        if table in kept:
+            return store.read(spark, table, schema, manifest=m)
+        return store.read_segment(spark, table, seg, schema)
+
+    resumed: list[str] = []
 
     # ---- stage 0: tokens checkpoint ----
-    # Tokenize EXACTLY once and checkpoint to parquet.  Two downstream
-    # stages (doc_stats, postings) re-read it as cheap columnar scans.
-    # Previously this was .cache(): at corpus sizes where the cached
-    # token table exceeded storage memory, partitions were evicted and
-    # SILENTLY RE-TOKENIZED during the postings shuffle — more often at
-    # higher core counts (more concurrent execution memory), which
-    # inverted N→4N scaling.  A parquet checkpoint makes the cost flat,
-    # disk-backed, fully parallel, and is the resume snapshot until
+    # Tokenize EXACTLY once to parquet; doc_stats and postings re-read it
+    # as columnar scans.  (A .cache() here was evicted once the token
+    # table outgrew storage memory, and then SILENTLY RE-TOKENIZED
+    # inside the postings shuffle — more often at higher core counts,
+    # which inverted N→4N scaling.)  It is the resume snapshot until
     # postings, its last reader, commit (store→store re-import,
-    # reference/oscar-create/oscarcreate.cpp:86-116); the build then
-    # drops it.  So resume asks the downstream stages first: once both
-    # readers committed, tokens is done without being read.
-    readers_done = resume and all(
-        store.committed(s, fps[s]) for s in ("doc_stats", "postings"))
-    if readers_done or (resume and store.committed("tokens",
-                                                   fps["tokens"])):
+    # reference/oscar-create/oscarcreate.cpp:86-116), and is dropped
+    # then: once both readers committed, tokens is done without a read.
+    readers_done = (done("doc_stats") is not None
+                    and done("postings") is not None)
+    if readers_done or done("tokens") is not None:
         resumed.append("tokens")
     else:
-        with _input_scan(spark, input_files_sig(raw_pages)):
-            store.write(_tokenize(pages, positions, fields), "tokens")
-        store.commit("tokens", fps["tokens"])
-    _mark("tokens")
-    # this build's schema, not the store's: the recorded `positions`
-    # mode changes only at the postings commit
-    tokens = None if readers_done else store.read(
-        spark, "tokens", TOKENS_POS_SCHEMA if positions else TOKENS_SCHEMA)
+        with _input_scan(spark, sigs):
+            store.write_segment(_tokenize(pages, modes["positions"],
+                                          tuple(modes["fields"])),
+                                "tokens", seg)
+        check_tokens()
+        commit("tokens")
+    clock.mark("tokens" + suffix)
+    tokens = None if readers_done else read("tokens")
 
     # ---- stage 1: doc_stats (docID = rank by static quality; analog of
     # applySort score ordering, OsmKeyValueObjectStore.cpp:1339-1399) ----
-    if resume and store.committed("doc_stats", fps["doc_stats"]):
+    counts = done("doc_stats")
+    if counts is not None:
         resumed.append("doc_stats")
     else:
-        # r06: per-doc lengths come from the tokenizer's NULL-term
-        # marker rows (exactly one per doc, tf=0, dl attached) — a
-        # column-pruned filter scan instead of a full groupBy(url) pass
-        # + exchange over the whole token table (guide §2.3/§2.4)
+        # per-doc lengths come from the tokenizer's NULL-term marker
+        # rows (exactly one per doc, tf=0, dl attached) — a column-
+        # pruned filter scan instead of a full groupBy(url) pass +
+        # exchange over the whole token table (r06); quality := doc_len
+        # (pinned static score for the fixture corpus)
         doc_lens = (tokens.filter(F.col("term").isNull())
-                    .select("url", F.col("dl").alias("doc_len")))
-        # quality := doc_len (pinned static score for the fixture corpus)
-        doc_lens = doc_lens.withColumn(
-            "quality", F.col("doc_len").cast("double"))
-        # three column-pruned scans of the committed tokens (sample,
-        # per-range counts, the id write), nothing cached: a cache
+                    .select("url", F.col("dl").alias("doc_len"))
+                    .withColumn("quality", F.col("doc_len").cast("double")))
+        if old:
+            # url is the document key: a re-crawled url that is ALREADY
+            # indexed is dropped, and its token rows never meet a doc
+            # id.  The id assignment reads doc_lens three times: persist
+            # so the anti-join runs once
+            doc_lens = doc_lens.join(
+                store.read(spark, "doc_stats", manifest=m).select("url"),
+                "url", "left_anti").persist(StorageLevel.MEMORY_AND_DISK)
+        # three column-pruned scans of the tokens (sample, per-range
+        # counts, the id write); a build caches nothing, as a cache
         # would cost its own materialization job.  Corpus stats (n_docs,
         # Σdl) ride along on the per-range count — no separate
         # aggregation job — and persist in the manifest so later
         # stages, resumes, and serve startup never pay one either
-        doc_stats, stats = assign_doc_ids_ranged(
-            doc_lens,
-            num_partitions=_write_width(spark),
+        assigned, stats = assign_doc_ids_ranged(
+            doc_lens, num_partitions=_write_width(spark),
             stats_col="doc_len")
-        store.write(doc_stats.select("doc_id", "url", "doc_len", "quality"),
-                    "doc_stats")
-        store.set_meta("n_docs", int(stats["n"]))
-        store.set_meta("avgdl",
-                       stats["sum"] / stats["n"] if stats["n"] else 0.0)
-        store.commit("doc_stats", fps["doc_stats"])
-    _mark("doc_stats")
-    doc_stats = store.read(spark, "doc_stats")
-    n_docs = int(store.get_meta("n_docs"))
-    avgdl = float(store.get_meta("avgdl"))
+        if old:  # past the committed id space
+            assigned = assigned.withColumn(
+                "doc_id", (F.col("doc_id") + F.lit(n_old)).cast("long"))
+        store.write_segment(
+            assigned.select("doc_id", "url", "doc_len", "quality"),
+            "doc_stats", seg)
+        doc_lens.unpersist()
+        n = n_old + int(stats["n"])
+        counts = {"n_docs": n, "avgdl": (
+            (float(old.get("avgdl", 0.0)) * n_old + stats["sum"]) / n
+            if n else 0.0)}
+        commit("doc_stats", **counts)
+    clock.mark("doc_stats" + suffix)
+    n_docs, avgdl = int(counts["n_docs"]), float(counts["avgdl"])
 
     # ---- stage 2: postings ----
-    if resume and store.committed("postings", fps["postings"]):
+    if done("postings") is not None:
         resumed.append("postings")
     else:
-        store.write(_final_blocks(spark, tokens, doc_stats, n_docs, n_docs,
-                                  avgdl, codec, positions),
-                    "postings", partition_by=["bucket"])
-        store.set_meta("codec", codec)
-        store.set_meta("payload_format", PAYLOAD_FORMAT)
-        store.set_meta("positions", positions)
-        store.set_meta("fields", list(fields))
-        store.commit("postings", fps["postings"])
-    # nothing after the postings commit reads tokens
-    store.drop("tokens")
-    _mark("postings")
-    postings = store.read(spark, "postings")
+        blocks = _final_blocks(spark, tokens, read("doc_stats"),
+                               n_docs - n_old, n_docs, avgdl,
+                               modes["codec"], modes["positions"])
+        if old:  # continue each term's numbering past its committed blocks
+            blocks = (blocks.join(
+                store.read(spark, "terms", manifest=m)
+                .select("term", F.col("n_blocks").alias("_ob")),
+                "term", "left")
+                .withColumn("block_id", (F.col("block_id") + F.coalesce(
+                    F.col("_ob"), F.lit(0))).cast("int"))
+                .select(*blocks.columns))
+        store.write_segment(blocks, "postings", seg, partition_by=["bucket"])
+        commit("postings")
+    store.drop("tokens")  # nothing after the postings commit reads it
+    clock.mark("postings" + suffix)
 
-    # ---- stage 3: terms (df recomputed from committed postings so the
-    # stored df provably equals the posting contents — FIXTURES.md inv 2) ----
-    if resume and store.committed("terms", fps["terms"]):
+    # ---- stage 3: terms (the dictionary and both wildcard mirrors
+    # derive from the COMMITTED postings, so the stored df provably
+    # equals the posting contents — FIXTURES.md inv 2) ----
+    if done("terms") is not None:
         resumed.append("terms")
         bucket_stats, _ = _dictionary_stats(
-            store.read(spark, "terms").withColumn("first", F.lit(True)), 1)
+            read("terms").withColumn("first", F.lit(True)), 1)
     else:
-        # The dictionary and both wildcard mirrors derive from the
-        # COMMITTED postings parquet, so df provably equals the posting
-        # contents (FIXTURES.md inv 2) for everything written here.
-        bucket_stats = _write_dictionary(store, _block_terms(postings))
-        store.commit("terms", fps["terms"])
-    _mark("terms")
+        rows = _block_terms(read("postings"))
+        if old:
+            # merged with the committed dictionary: a new block of a
+            # committed term has block_id > 0, so `first` still marks
+            # one row per term
+            rows = (store.read(spark, "terms", manifest=m)
+                    .withColumn("first", F.lit(True)).unionByName(rows))
+        bucket_stats = _write_dictionary(store, rows, seg)
+        commit("terms")
+    clock.mark("terms" + suffix)
 
-    n_terms = sum(r["terms_out"] for r in bucket_stats)
-    n_blocks = sum(r["blocks_out"] for r in bucket_stats)
-    elapsed = time.time() - t0
-    dps = n_docs / elapsed if elapsed > 0 else 0.0
+    # ---- publish: ONE atomic manifest commit.  The per-file input
+    # manifest is the append-detection baseline for the next build over
+    # a grown input; tokens, dropped above, leaves no fingerprint ----
+    grown = () if replace else ("doc_stats", "postings")
+    store.commit_append(
+        add={t: [seg] for t in grown},
+        replace={t: [seg] for t, stage in _TABLES.items()
+                 if t not in grown and stage not in kept},
+        meta={**old, **modes, "n_docs": n_docs, "avgdl": avgdl,
+              **({"input_files": sigs} if sigs else {})},
+        stage_fingerprints={s: f for s, f in fps.items() if s != "tokens"})
+    if replace:
+        store.vacuum()
 
+    elapsed = time.time() - clock.t0
+    dps = (n_docs - n_old) / elapsed if elapsed > 0 else 0.0  # new docs
     _write_lineage(store, bucket_stats, fp, dps)
-    # per-file input manifest: the append-detection baseline for the
-    # next build over a grown input
-    sigs = input_files_sig(pages)
-    if sigs:
-        store.set_meta("input_files", sigs)
-    _mark("lineage_and_counts")
-
-    return BuildResult(n_docs=n_docs, avgdl=avgdl, n_terms=n_terms,
-                       n_blocks=int(n_blocks), docs_per_sec=dps,
-                       elapsed_sec=elapsed, resumed_stages=resumed,
-                       stage_secs=stage_secs)
+    clock.mark("lineage_and_counts")
+    return BuildResult(
+        n_docs=n_docs, avgdl=avgdl,
+        n_terms=sum(r["terms_out"] for r in bucket_stats),
+        n_blocks=int(sum(r["blocks_out"] for r in bucket_stats)),
+        docs_per_sec=dps, elapsed_sec=elapsed, resumed_stages=resumed,
+        stage_secs=clock.secs)
 
 
-def ingest_segment(spark: SparkSession, new_pages: DataFrame,
-                   store: IndexStore, seg: str, codec: str, fp: str,
-                   extra_meta: dict | None = None,
-                   mark=lambda name: None,
-                   check_tokens=lambda: None) -> dict:
-    """Core incremental ingest: merge new page rows into a committed
-    index as one segment.
-
-    Every heavy step touches only the new data; the single committed-
-    data rewrite is the (tiny, block-level) terms table merge.  All
-    manifest changes land in ONE atomic commit_append, so a crash at
-    any point leaves either the old snapshot or the new one.
-
-    New docs take doc_ids after the committed id space (quality-ranked
-    among themselves).  BM25 scores stay exact because serve derives
-    them at query time from tf/dl payloads + the merged df / n_docs /
-    avgdl — nothing score-bearing is baked into committed payloads.
-
-    Shared by the file-growth append path (_append_index) and the
-    Structured Streaming foreachBatch ingest (streaming/jobs.py).
-    `check_tokens` runs right after the new tokens are written: an
-    input check raising there commits nothing.
-    """
+def ingest_segment(spark: SparkSession, pages: DataFrame, store: IndexStore,
+                   seg: str, codec: str, fp: str) -> BuildResult:
+    """Add `pages` to the store as one new segment `seg` (a Structured
+    Streaming epoch, streaming/jobs.py): the ingest pipeline over the
+    committed snapshot, whose recorded modes it keeps; an empty store's
+    first segment is written under `codec`.  `fp` is the segment's
+    stage fingerprint."""
     if seg in store.segments("postings"):
-        # a committed segment must never be overwritten: re-running the
-        # ingest over an already-indexed drop would left_anti every url
-        # away and replace the segment's data with EMPTY files while
-        # n_docs/df still count it (the at-least-once replay hazard —
-        # callers skip committed epochs, this guard makes the contract
-        # explicit)
+        # re-ingesting a committed segment would anti-join every url
+        # away and overwrite it with EMPTY files while n_docs/df still
+        # count it (the at-least-once replay hazard — callers skip
+        # committed epochs, this guard makes the contract explicit)
         raise ValueError(
             f"segment {seg!r} is already committed in this store; "
             "replay/skip it instead of re-ingesting")
-    # a store in another payload format or layout must not gain a
-    # segment in the current one: commit_append stamps payload_format
-    # store-wide
     meta = store.manifest().get("meta", {})
-    store_decoder(meta)
-    n_old = int(meta["n_docs"])
-    avgdl_old = float(meta["avgdl"])
-    positions = bool(meta.get("positions", False))
-    fields = tuple(meta.get("fields", ()) or ())
-
-    # ---- tokenize only the new pages (positional/fielded stores stay
-    # that way: the flags are inherited from the manifest) ----
-    store.write_segment(_tokenize(new_pages, positions, fields),
-                        "tokens", seg)
-    check_tokens()
-    mark("tokens_append")
-    tokens_new = store.read_segment(spark, "tokens", seg)
-
-    # ---- doc ids for the new docs, offset past the committed space.
-    # url is the document key: a re-crawled url that is ALREADY indexed
-    # is dropped (left_anti against committed doc_stats — a column-
-    # pruned scan of n_old single urls), matching the full build's
-    # one-doc-per-url groupBy semantics; its orphaned token rows never
-    # meet a doc_id and fall out of the postings join ----
-    # per-doc lengths from the tokenizer's NULL-term marker rows (one
-    # per doc) — same filter-not-groupBy shape as the full build (r06).
-    # The id assignment reads doc_lens three times (sample, per-range
-    # count, id write); persisted so the anti-join runs once ----
-    doc_lens = (tokens_new.filter(F.col("term").isNull())
-                .select("url", F.col("dl").alias("doc_len"))
-                .join(store.read(spark, "doc_stats").select("url"),
-                      "url", "left_anti")
-                .withColumn("quality", F.col("doc_len").cast("double"))
-                .persist(StorageLevel.MEMORY_AND_DISK))
-    assigned, stats = assign_doc_ids_ranged(
-        doc_lens,
-        num_partitions=_write_width(spark),
-        stats_col="doc_len")
-    doc_stats_new = (
-        assigned
-        .withColumn("doc_id", (F.col("doc_id") + F.lit(n_old)).cast("long"))
-        .select("doc_id", "url", "doc_len", "quality"))
-    store.write_segment(doc_stats_new, "doc_stats", seg)
-    doc_lens.unpersist()
-    n_new, dl_sum_new = int(stats["n"]), int(stats["sum"])
-    n_total = n_old + n_new
-    avgdl_total = ((avgdl_old * n_old + dl_sum_new) / n_total
-                   if n_total else 0.0)
-    mark("doc_stats_append")
-
-    # ---- postings for the new docs (same pipeline, new data only) ----
-    final_new = _final_blocks(
-        spark, tokens_new,
-        store.read_segment(spark, "doc_stats", seg),
-        n_new, n_total, avgdl_total, codec, positions)
-    # continue each term's block numbering after its committed blocks
-    terms_old = store.read(spark, "terms")
-    fcols = _FINAL_COLS + (["pos_payload"] if positions else [])
-    final_new = (
-        final_new
-        .join(terms_old.select("term", F.col("n_blocks").alias("_ob")),
-              "term", "left")
-        .withColumn("block_id", (F.col("block_id") +
-                                 F.coalesce(F.col("_ob"), F.lit(0)))
-                    .cast("int"))
-        .select(*fcols))
-    store.write_segment(final_new, "postings", seg,
-                        partition_by=["bucket"])
-    mark("postings_append")
-
-    # ---- merged terms: old + new df/n_blocks, written as a NEW segment
-    # that atomically REPLACES the old one at commit (no self-overwrite,
-    # no window where df disagrees with the visible postings) ----
-    # a new block of a committed term has block_id > 0 (numbering
-    # continues past the committed blocks), so `first` still marks one
-    # row per term
-    bucket_stats = _write_dictionary(store, terms_old.withColumn(
-        "first", F.lit(True)).unionByName(
-        _block_terms(store.read_segment(spark, "postings", seg))), seg)
-    mark("terms_append")
-
-    # ---- ONE atomic snapshot commit (the stage fingerprints are
-    # build_index's, so a later resume over the same input resumes;
-    # tokens is left out: the segment's tokens are dropped below) ----
-    fps = _stage_fingerprints(fp, codec, positions, fields)
-    del fps["tokens"]
-    store.commit_append(
-        add={"doc_stats": [seg], "postings": [seg]},
-        replace={"terms": [seg], "terms_rev": [seg],
-                 "terms_ngram": [seg]},
-        meta={"n_docs": n_total, "avgdl": avgdl_total, "codec": codec,
-              "payload_format": PAYLOAD_FORMAT,
-              **(extra_meta or {})},
-        stage_fingerprints=fps,
-    )
-    store.drop("tokens")
-    return {"n_new": n_new, "n_total": n_total, "avgdl": avgdl_total,
-            "bucket_stats": bucket_stats}
+    return _ingest(spark, pages, store, seg, fp,
+                   _modes(meta.get("codec", codec),
+                          meta.get("positions", False), meta.get("fields")),
+                   replace=False)
 
 
 def _uri_variants(f: str) -> set[str]:
@@ -1207,20 +1169,14 @@ def _uri_variants(f: str) -> set[str]:
 
 
 def _append_index(spark: SparkSession, pages: DataFrame, store: IndexStore,
-                  codec: str, fp: str, cur_sigs: dict[str, str],
-                  new_files: list[str]) -> BuildResult:
-    """File-growth append: filter the input to its NEW files and run the
-    segment ingest over just those rows."""
+                  fp: str, modes: dict, sigs: dict[str, str],
+                  new_files: list[str], clock: _Clock) -> BuildResult:
+    """File-growth append: filter the input to its NEW files and ingest
+    just those rows as one segment on top of the committed store.  A
+    killed append is detected as an append again and resumes from its
+    stage commits."""
+    import dataclasses
     import zlib
-    t0 = time.time()
-    stage_secs: dict[str, float] = {}
-    _last = [t0]
-
-    def _mark(name: str) -> None:
-        now = time.time()
-        stage_secs[name] = round(now - _last[0], 2)
-        _last[0] = now
-
     seg = "a%08x" % zlib.crc32(";".join(new_files).encode())
 
     # input_file_name() and DataFrame.inputFiles() render file URIs
@@ -1272,28 +1228,10 @@ def _append_index(spark: SparkSession, pages: DataFrame, store: IndexStore,
                 "commit a partial segment. First affected: "
                 f"{dropped[0]!r}")
 
-    # html-only input: extract AFTER the per-file filter (the filter's
-    # input_file_name() is only defined directly over the file scan)
-    if "text" not in new_pages.columns:
-        new_pages = extract_pages(new_pages)
-    with _input_scan(spark, cur_sigs):
-        stats = ingest_segment(spark, new_pages, store, seg, codec, fp,
-                               extra_meta={"input_files": cur_sigs},
-                               mark=_mark, check_tokens=_check_files)
-
-    bucket_stats = stats["bucket_stats"]
-    n_terms = sum(r["terms_out"] for r in bucket_stats)
-    n_blocks = sum(r["blocks_out"] for r in bucket_stats)
-    elapsed = time.time() - t0
-    dps = stats["n_new"] / elapsed if elapsed > 0 else 0.0  # new-docs rate
-    _write_lineage(store, bucket_stats, fp, dps)
-    _mark("lineage_and_counts")
-
-    return BuildResult(n_docs=stats["n_total"], avgdl=stats["avgdl"],
-                       n_terms=n_terms, n_blocks=int(n_blocks),
-                       docs_per_sec=dps, elapsed_sec=elapsed,
-                       resumed_stages=[f"append:{seg}"],
-                       stage_secs=stage_secs)
+    res = _ingest(spark, new_pages, store, seg, fp, modes, replace=False,
+                  resume=True, sigs=sigs, clock=clock,
+                  check_tokens=_check_files)
+    return dataclasses.replace(res, resumed_stages=[f"append:{seg}"])
 
 
 def maybe_compact(spark: SparkSession, index_dir: str,
@@ -1335,19 +1273,16 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
     window on (bucket, term)), linear unions for the rest.  One atomic
     manifest swap at the end (commit_append replace=…): a crash
     mid-compaction leaves the old snapshot fully intact; superseded
-    segment directories are removed best-effort AFTER the commit.
+    segment directories are removed (IndexStore.vacuum) AFTER it.
     """
-    import shutil
     import zlib
 
     from pyspark.sql import Window
 
     store = IndexStore(index_dir)
     store_decoder(store.manifest().get("meta", {}))
-    tables = ["doc_stats", "postings"]
-    mirrors = ["terms", "terms_rev", "terms_ngram"]
-    pre = {t: store.segments(t) for t in tables + mirrors}
-    if all(len(pre[t]) <= 1 for t in tables):
+    pre = {t: store.segments(t) for t in _TABLES}
+    if all(len(pre[t]) <= 1 for t in ("doc_stats", "postings")):
         return {"compacted": False,
                 "segments_before": max(len(v) for v in pre.values())}
     t0 = time.time()
@@ -1369,14 +1304,9 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
 
     store.write_segment(store.read(spark, "doc_stats"), "doc_stats", seg)
 
-    every = tables + mirrors
-    store.commit_append(replace={t: [seg] for t in every})
+    store.commit_append(replace={t: [seg] for t in _TABLES})
     store.drop("tokens")
-    for t in every:
-        for s in set(pre.get(t, [])):
-            if s != seg:
-                shutil.rmtree(os.path.join(store.path(t), f"seg={s}"),
-                              ignore_errors=True)
+    store.vacuum()
     return {"compacted": True, "segment": seg,
             "segments_before": max(len(v) for v in pre.values()),
             "elapsed_sec": round(time.time() - t0, 2)}

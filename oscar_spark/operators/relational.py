@@ -209,7 +209,7 @@ ORDER_STATS_SQL = (
     "FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus")
 
 
-# ---- windowed event aggregation (batch twin of streaming/jobs.py;
+# ---- windowed event aggregation (hourly event counts;
 # the reference has no streaming — §2.8 — this covers the events table) ----
 def events_hourly(spark, sf_dir):
     ev = _t(spark, sf_dir, "events")

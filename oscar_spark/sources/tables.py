@@ -16,19 +16,23 @@ the snapshot/commit semantics we rely on:
       postings/bucket=*/  (parquet, under seg=*/; columns: the *_SCHEMA
                           constants below; each posting block carries its
                           own payload bytes)
-      tokens/             the build's resume checkpoint, present only
+      tokens/             the ingest's resume checkpoint, present only
                           while a build or append runs: dropped once
                           postings (its last reader) commit
       lineage/            partition_id, input_fingerprint, rows_in,
                           terms_out, docs_per_sec, snapshot_id, ts
       _manifest.json      stage snapshots {fingerprint, snapshot_id, ts},
-                          segment lists, and store meta (n_docs, avgdl,
+                          segment lists, store meta (n_docs, avgdl,
                           codec, payload_format, positions, fields,
-                          input_files)
+                          input_files) and the pending segment
 
-A stage directory is only readable through the store if the manifest has
-committed it (write-then-commit, so a killed build never exposes a
-partial stage — the resumability contract of BASELINE.json).
+Every write is one segment (`seg=base` for a build, `a<crc>` an
+append, `e<epoch>` a streaming epoch, `c<crc>` a compaction).  Each
+stage of a pending segment records a stage commit in the manifest's
+`pending` entry, which no reader looks at; one publish (commit_append)
+lists the segment and moves its fingerprints into `snapshots`, in one
+atomic manifest replace — a killed ingest is never seen half done (the
+resumability contract of BASELINE.json).
 """
 
 from __future__ import annotations
@@ -40,8 +44,6 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-STAGES = ("doc_stats", "postings", "terms")
 
 # Every committed table's columns (DDL: data columns in write order,
 # then the `bucket` partition column where the table has one).  Reads
@@ -110,17 +112,20 @@ class IndexStore:
             os.replace(tmp, self.manifest_path)  # atomic commit
             return out
 
-    def commit(self, stage: str, fingerprint: str) -> int:
+    def commit_stage(self, segment: str, stage: str, fingerprint: str,
+                     meta: dict) -> None:
+        """Record that `stage` of the pending `segment` is written under
+        `fingerprint`, with the meta it was written under (modes, corpus
+        counts); a stage commit of another segment starts a new pending
+        entry."""
         def fn(m):
-            sid = m["next_snapshot_id"]
-            m["snapshots"][stage] = {
-                "fingerprint": fingerprint,
-                "snapshot_id": sid,
-                "ts": time.time(),
-            }
-            m["next_snapshot_id"] = sid + 1
-            return sid
-        return self._mutate(fn)
+            p = m.get("pending")
+            if not p or p["segment"] != segment:
+                p = m["pending"] = {"segment": segment, "stages": {},
+                                    "meta": {}}
+            p["stages"][stage] = fingerprint
+            p["meta"].update(meta)
+        self._mutate(fn)
 
     def snapshot_id(self, stage: str,
                     manifest: dict | None = None) -> int | None:
@@ -129,26 +134,18 @@ class IndexStore:
         return snap["snapshot_id"] if snap else None
 
     # --- store-level metadata (e.g. posting codec) ---
-    def set_meta(self, key: str, value) -> None:
-        self._mutate(lambda m: m.setdefault("meta", {})
-                     .__setitem__(key, value))
-
     def get_meta(self, key: str, default=None):
         return self.manifest().get("meta", {}).get(key, default)
 
-    def clear_meta(self) -> None:
-        self._mutate(lambda m: m.pop("meta", None))
-
     # --- table IO ---
     # Every table is written under an outer `seg=<name>` partition level
-    # (the base build is seg=base; each incremental append adds one) and
-    # reads filter to the MANIFEST-LISTED segments — the sandbox analog
-    # of Iceberg snapshot isolation: a crashed append's half-written
-    # segment directory is simply never listed, so it is invisible, and
-    # "commit" is one atomic manifest replace.  Spark prunes the seg
-    # partition, so the filter costs file-listing only.  A reader that
-    # must see ONE snapshot across several reads (an engine open) reads
-    # the manifest once and passes it to each call.
+    # and reads filter to the MANIFEST-LISTED segments — the sandbox
+    # analog of Iceberg snapshot isolation: a pending or crashed
+    # ingest's segment directory is simply never listed, so it is
+    # invisible, and "publish" is one atomic manifest replace.  Spark
+    # prunes the seg partition, so the filter costs file-listing only.
+    # A reader that must see ONE snapshot across several reads (an
+    # engine open) reads the manifest once and passes it to each call.
 
     def path(self, table: str) -> str:
         return os.path.join(self.dir, table)
@@ -156,45 +153,32 @@ class IndexStore:
     def segments(self, table: str,
                  manifest: dict | None = None) -> list[str]:
         m = self.manifest() if manifest is None else manifest
-        return m.get("segments", {}).get(table, ["base"])
+        return m.get("segments", {}).get(table, [])
 
     def drop(self, table: str) -> None:
-        """Retire a table: ONE manifest commit removes its snapshot and
-        lists it with no segments (an unlisted table would default to
-        ["base"]), then its files are deleted.  A kill between the two
-        leaves only unlisted bytes, which the next full write() of the
-        table clears."""
+        """Retire a table: ONE manifest commit removes its snapshot, its
+        pending stage commit and its segment list, then its files are
+        deleted.  A kill between the two leaves only unlisted bytes,
+        which the next vacuum clears."""
         import shutil
 
         def fn(m):
             m["snapshots"].pop(table, None)
-            m.setdefault("segments", {})[table] = []
+            m.get("pending", {}).get("stages", {}).pop(table, None)
+            m.get("segments", {}).pop(table, None)
         self._mutate(fn)
         shutil.rmtree(self.path(table), ignore_errors=True)
 
-    def _set_segments(self, table: str, segs: list[str]) -> None:
-        self._mutate(lambda m: m.setdefault("segments", {})
-                     .__setitem__(table, segs))
-
-    def write(self, df: DataFrame, table: str,
-              partition_by: list[str] | None = None) -> None:
-        """Full (re)write of a table as its `base` segment.
-
-        The seg value comes from the DIRECTORY NAME (seg=base/), not a
-        data column: partitionBy("seg") on a constant column routed the
-        biggest write of the build through Spark's dynamic-partition
-        sort path and measurably halved tokenize-stage scaling."""
-        import shutil
-        shutil.rmtree(self.path(table), ignore_errors=True)
-        self.write_segment(df, table, "base", partition_by)
-        self._set_segments(table, ["base"])
-
     def write_segment(self, df: DataFrame, table: str, segment: str,
                       partition_by: list[str] | None = None) -> None:
-        """Write one NEW segment of a table; invisible to read() until
-        a commit (commit_append) lists it in the manifest.  Files go directly
-        into the table's seg=<name> directory (same layout partitionBy
-        would produce for that one seg value)."""
+        """Write one segment of a table; invisible to read() until a
+        publish (commit_append) lists it in the manifest.  Files go
+        directly into the table's seg=<name> directory, the layout
+        partitionBy would produce for that one seg value.  The seg value
+        comes from the DIRECTORY NAME, not a data column: partitionBy
+        ("seg") on a constant column routed the biggest write of the
+        build through Spark's dynamic-partition sort path and measurably
+        halved tokenize-stage scaling."""
         w = df.write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(*partition_by)
@@ -204,22 +188,23 @@ class IndexStore:
                       replace: dict[str, list[str]] | None = None,
                       meta: dict | None = None,
                       stage_fingerprints: dict[str, str] | None = None) -> None:
-        """ONE atomic manifest replace covering an entire incremental
-        append: segment additions, segment swaps (e.g. the merged terms
-        table replacing its predecessor), metadata updates, and stage
-        fingerprint bumps.  All segment DIRECTORIES must already be
-        fully written; a crash before this call leaves the old snapshot
+        """The publish: ONE atomic manifest replace covering a whole
+        segment — segment additions, segment swaps (a build's segment,
+        or the merged terms table, replacing its predecessors), the
+        store's new metadata and stage fingerprint bumps; the pending
+        entry is cleared.  All segment DIRECTORIES must already be fully
+        written; a crash before this call leaves the old snapshot
         intact, a crash after it the new one — never a mix."""
         def fn(m):
+            m.pop("pending", None)
+            listed = m.setdefault("segments", {})
             for t, segs in (add or {}).items():
-                cur = m.setdefault("segments", {}).setdefault(t, ["base"])
-                for s in segs:
-                    if s not in cur:
-                        cur.append(s)
+                cur = listed.setdefault(t, [])
+                cur += [s for s in segs if s not in cur]
             for t, segs in (replace or {}).items():
-                m.setdefault("segments", {})[t] = segs
-            for k, v in (meta or {}).items():
-                m.setdefault("meta", {})[k] = v
+                listed[t] = segs
+            if meta is not None:
+                m["meta"] = meta
             sid = m["next_snapshot_id"]
             for stage, fpv in (stage_fingerprints or {}).items():
                 m["snapshots"][stage] = {"fingerprint": fpv,
@@ -228,6 +213,19 @@ class IndexStore:
                 sid += 1
             m["next_snapshot_id"] = sid
         self._mutate(fn)
+
+    def vacuum(self) -> None:
+        """Delete every segment directory the manifest does not list: the
+        segments a publish replaced, and any a killed ingest left
+        behind.  Run after a publish that replaces segments (a build, a
+        compaction)."""
+        import glob
+        import shutil
+        m = self.manifest()
+        for d in glob.glob(os.path.join(self.dir, "*", "seg=*")):
+            table = os.path.basename(os.path.dirname(d))
+            if d.rsplit("seg=", 1)[1] not in self.segments(table, m):
+                shutil.rmtree(d, ignore_errors=True)
 
     def _reader(self, spark: SparkSession, table: str,
                 schema: str | None, m: dict) -> DataFrame:

@@ -1,8 +1,7 @@
 """Streaming surface.
 
 The reference has NO streaming (strictly batch build → immutable serve,
-SURVEY.md §2.8); this module is a beyond-reference extension showing the
-engine's operators run under Structured Streaming for incremental
-ingest: windowed event aggregation and an incremental tokenize→tf stage
-(the streaming front half of the index build).
+SURVEY.md §2.8); this module is a beyond-reference extension: a
+Structured Streaming ingest that adds each micro-batch of new page
+files to the index as one segment.
 """

@@ -1,63 +1,13 @@
-"""Structured Streaming jobs (beyond-reference extension; §2.8 is 'none'
-in the reference — these exist to make incremental ingest possible, not
-to mirror oscar).
+"""Structured Streaming index ingest (beyond-reference extension; §2.8
+is 'none' in the reference — this exists to make incremental ingest
+possible, not to mirror oscar).
 
-Batch/streaming parity: each streaming job reuses the SAME transformation
-function as its batch twin, so the streaming output equals the batch
-answer on a bounded input (asserted in tests via the memory sink +
-processAllAvailable)."""
+Every micro-batch runs the same ingest pipeline as a batch build or
+append (build/indexer.py), as one segment of the store."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-
-def windowed_event_counts(events: DataFrame,
-                          watermark: bool = False) -> DataFrame:
-    """Tumbling 1-hour window counts per event_type (batch OR streaming
-    DataFrame in, same plan out)."""
-    if watermark:
-        events = events.withWatermark("ts", "2 hours")
-    return (events
-            .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-            .agg(F.count("*").alias("n"),
-                 F.round(F.sum("value"), 4).alias("total_value"))
-            .select(F.col("w.start").alias("win_start"), "event_type",
-                    "n", "total_value"))
-
-
-def stream_events_to_memory(spark: SparkSession, parquet_dir: str,
-                            table_name: str = "stream_out") -> DataFrame:
-    """Drive the windowed agg as a real streaming query over the parquet
-    events fixture (memory sink, complete mode), synchronously."""
-    import os
-    import tempfile
-    schema = spark.read.parquet(parquet_dir).schema
-    if os.path.isfile(parquet_dir):
-        # FileStreamSource requires a directory; expose the single file
-        # through a symlink dir (testdata ships one file per table)
-        d = tempfile.mkdtemp(prefix="stream_src_")
-        os.symlink(os.path.abspath(parquet_dir),
-                   os.path.join(d, os.path.basename(parquet_dir)))
-        parquet_dir = d
-    stream = (spark.readStream.schema(schema).parquet(parquet_dir))
-    agg = windowed_event_counts(stream, watermark=False)
-    q = (agg.writeStream.outputMode("complete")
-         .format("memory").queryName(table_name).start())
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {table_name}")
-
-
-def streaming_token_counts(pages: DataFrame) -> DataFrame:
-    """Incremental build front-half: per-batch tokenize+tf (stateless
-    mapInPandas works identically under readStream)."""
-    from oscar_spark.build.indexer import TOKENS_SCHEMA, _tokenize_batches
-    return pages.select("url", "text").mapInPandas(
-        _tokenize_batches, TOKENS_SCHEMA)
 
 
 def stream_index_ingest(spark: SparkSession, pages_dir: str,
@@ -66,21 +16,21 @@ def stream_index_ingest(spark: SparkSession, pages_dir: str,
     """Continuously index a growing pages directory: each micro-batch of
     new files becomes one committed index segment.
 
-    readStream(pages_dir) → foreachBatch: the first batch does a full
-    build, every later batch runs indexer.ingest_segment (doc ids
-    appended after the committed space, postings as a new segment,
-    terms merged, ONE atomic manifest commit).  The streaming
-    checkpoint tracks which files were consumed, so a crashed driver
-    resumes without re-ingesting.
+    readStream(pages_dir) → foreachBatch: every batch, the first one
+    included, runs indexer.ingest_segment as segment e<epoch> (doc ids
+    appended after the committed space — none for the first — postings
+    as a new segment, terms merged, ONE atomic manifest commit).  The
+    streaming checkpoint tracks which files were consumed, so a crashed
+    driver resumes without re-ingesting.
 
     foreachBatch is at-least-once: a crash BETWEEN the store's atomic
-    commit_append and the streaming checkpoint advance replays the
-    epoch.  On replay every url is already indexed, so re-running the
-    ingest would overwrite the manifest-listed seg=e<epoch> directories
-    with EMPTY data while n_docs/df still count them — so a replayed
-    epoch whose segment is already committed is a true no-op here (the
-    composition with the store's snapshot isolation: half-written
-    uncommitted segments get rewritten, committed ones are skipped).
+    publish and the streaming checkpoint advance replays the epoch.  On
+    replay every url is already indexed, so re-running the ingest would
+    overwrite the manifest-listed seg=e<epoch> directories with EMPTY
+    data while n_docs/df still count them — so a replayed epoch whose
+    segment is already committed is a true no-op here (the composition
+    with the store's snapshot isolation: half-written uncommitted
+    segments get rewritten, committed ones are skipped).
     trigger(availableNow) drains what exists and stops; drop it for a
     long-running daemon."""
     schema = spark.read.parquet(pages_dir).schema
@@ -96,23 +46,20 @@ def stream_index_ingest(spark: SparkSession, pages_dir: str,
 def make_batch_ingestor(spark: SparkSession, index_dir: str,
                         codec: str | None = None):
     """The foreachBatch callback of stream_index_ingest (module-level so
-    the replay-skip contract is directly testable): first batch = full
-    build; later batches = ingest_segment; a REPLAYED epoch whose
-    segment is already committed is a no-op (see stream_index_ingest's
-    at-least-once note)."""
-    from oscar_spark.build.indexer import build_index, ingest_segment
+    the replay-skip contract is directly testable): every epoch is
+    ingest_segment(..., f"e{epoch}"), the first one on an empty store;
+    a REPLAYED epoch whose segment is already committed is a no-op (see
+    stream_index_ingest's at-least-once note)."""
+    from oscar_spark.build.indexer import ingest_segment
     from oscar_spark.config import POSTINGS_CODEC
     from oscar_spark.sources.tables import IndexStore
 
-    def _ingest(batch_df: DataFrame, epoch_id: int) -> None:
+    def _batch(batch_df: DataFrame, epoch_id: int) -> None:
         store = IndexStore(index_dir)
-        if store.get_meta("n_docs") is None:
-            build_index(spark, batch_df, index_dir, codec=codec)
-        elif f"e{epoch_id}" in store.segments("postings"):
-            # replayed epoch, already committed — skip (see docstring)
-            return
-        else:
-            ingest_segment(spark, batch_df, store, f"e{epoch_id}",
-                           codec or POSTINGS_CODEC, fp=f"stream-e{epoch_id}")
+        seg = f"e{epoch_id}"
+        if seg in store.segments("postings"):
+            return  # replayed epoch, already committed (see docstring)
+        ingest_segment(spark, batch_df, store, seg,
+                       codec or POSTINGS_CODEC, fp=f"stream-{seg}")
 
-    return _ingest
+    return _batch

@@ -210,10 +210,13 @@ def test_append_recrawled_urls_not_duplicated(spark, tmp_path):
     assert ds.select("url").distinct().count() == 200
 
 
-def test_double_append(spark, tmp_path):
+def test_double_append(spark, tmp_path, monkeypatch):
     """Two successive file-growth appends: detection keys off the
     UPDATED input manifest each time; df after 150+75+75 equals a
-    from-scratch 300-doc build."""
+    from-scratch 300-doc build.  The first append is killed in its
+    terms stage first: readers and the append detector see nothing of
+    it, and its resume is an append again that tokenizes nothing."""
+    from oscar_spark.build import indexer
     from oscar_spark.build.indexer import build_index
     from oscar_spark.fixtures.pages import generate_pages
     from oscar_spark.sources.tables import IndexStore
@@ -226,7 +229,24 @@ def test_double_append(spark, tmp_path):
     r1 = build_index(spark, spark.read.parquet(str(pdir)), d)
     assert r1.n_docs == 150
     _write_pages_file(pdf.iloc[150:225], str(pdir / "f1.parquet"))
+
+    def published() -> dict:
+        return {k: v for k, v in IndexStore(d).manifest().items()
+                if k != "pending"}
+
+    def killed(*a, **kw):
+        raise RuntimeError("killed in terms")
+    before = published()
+    monkeypatch.setattr(indexer, "_write_dictionary", killed)
+    with pytest.raises(RuntimeError, match="killed"):
+        build_index(spark, spark.read.parquet(str(pdir)), d, resume=True)
+    assert published() == before
+    monkeypatch.undo()
+    calls, real = [], indexer._tokenize
+    monkeypatch.setattr(indexer, "_tokenize",
+                        lambda *a: calls.append(a) or real(*a))
     r2 = build_index(spark, spark.read.parquet(str(pdir)), d, resume=True)
+    assert calls == []
     assert r2.resumed_stages[0].startswith("append:") and r2.n_docs == 225
     _write_pages_file(pdf.iloc[225:], str(pdir / "f2.parquet"))
     r3 = build_index(spark, spark.read.parquet(str(pdir)), d, resume=True)
@@ -248,7 +268,9 @@ def test_segment_snapshot_isolation(spark, tmp_path):
     from pyspark.sql import functions as F
     from oscar_spark.sources.tables import IndexStore
     store = IndexStore(str(tmp_path / "st"))
-    store.write(spark.range(5).select(F.col("id").alias("x")), "t")
+    store.write_segment(spark.range(5).select(F.col("id").alias("x")),
+                        "t", "base")
+    store.commit_append(add={"t": ["base"]})
     assert store.read(spark, "t").count() == 5
     store.write_segment(spark.range(3).select(F.col("id").alias("x")),
                         "t", "extra")
@@ -336,8 +358,9 @@ def test_ingest_segment_refuses_committed_segment(spark, built_index):
 
 def test_streaming_replayed_epoch_is_noop(spark, tmp_path):
     """Simulate the at-least-once crash window: the batch ingestor
-    invoked again with an epoch whose segment is already committed
-    must leave the store byte-identical (no empty-segment overwrite)."""
+    invoked again with an epoch whose segment is already committed —
+    the first epoch's included — must leave the store byte-identical
+    (no empty-segment overwrite)."""
     import json
 
     from oscar_spark.fixtures.pages import pages_spark_df
@@ -347,7 +370,7 @@ def test_streaming_replayed_epoch_is_noop(spark, tmp_path):
     d = str(tmp_path / "idx")
     pages = pages_spark_df(spark, 120)
     ingest = make_batch_ingestor(spark, d)
-    ingest(pages.limit(80), 0)          # first batch → full build
+    ingest(pages.limit(80), 0)          # first batch → seg e0
     ingest(pages.subtract(pages.limit(80)), 1)  # second batch → seg e1
     store = IndexStore(d)
     assert "e1" in store.segments("postings")
@@ -359,6 +382,10 @@ def test_streaming_replayed_epoch_is_noop(spark, tmp_path):
     ingest(pages.subtract(pages.limit(80)), 1)
     assert json.dumps(store.manifest(), sort_keys=True) == manifest_before
     assert store.read(spark, "doc_stats").count() == n_before == 120
+    # and of the first epoch, after the second one committed
+    ingest(pages.limit(80), 0)
+    assert json.dumps(store.manifest(), sort_keys=True) == manifest_before
+    assert store.read(spark, "doc_stats").count() == 120
 
 
 # ---- append URI matching ----

@@ -1,7 +1,7 @@
 """Build-stage shape: the jobs a build runs, how its dictionary files are
 written, the range partitioning behind doc ids and the mirrors, the
-doc-id probe, and what a finished or resumed build keeps of its tokens
-checkpoint."""
+doc-id probe, the Arrow posting encoder, and how a killed build resumes
+and what it keeps of its tokens checkpoint."""
 
 from __future__ import annotations
 
@@ -10,6 +10,7 @@ import os
 import re
 import time
 
+import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -305,6 +306,36 @@ def test_killed_build_resumes_without_tokenizing(
     assert check_index(spark, d)["ok"]
 
 
+def test_flagless_resume_keeps_killed_build_modes(spark, tmp_path,
+                                                  monkeypatch, no_tokens):
+    """A positional, fielded build killed before its postings commit
+    records its modes with its first stage commit, so a resume that
+    passes no mode flags (`cli.py build --resume`) finishes the same
+    build from its tokens checkpoint instead of a plain one."""
+    from oscar_spark.build import indexer
+    from oscar_spark.fixtures.pages import pages_spark_df
+    from oscar_spark.sources.tables import IndexStore
+    pages = pages_spark_df(spark, 100)
+    d, d_clean = str(tmp_path / "idx"), str(tmp_path / "clean")
+
+    def killed(*a, **kw):
+        raise RuntimeError("killed in doc_stats")
+    monkeypatch.setattr(indexer, "assign_doc_ids_ranged", killed)
+    with pytest.raises(RuntimeError, match="killed"):
+        indexer.build_index(spark, pages, d, positions=True,
+                            fields=("lang",))
+    monkeypatch.undo()
+    res = indexer.build_index(spark, pages, d, resume=True)
+    assert res.resumed_stages == ["tokens"]
+    store = IndexStore(d)
+    assert store.get_meta("positions") is True
+    assert store.get_meta("fields") == ["lang"]
+    indexer.build_index(spark, pages, d_clean, positions=True,
+                        fields=("lang",))
+    assert _tables(spark, d) == _tables(spark, d_clean)
+    no_tokens(d)
+
+
 def test_resume_under_other_codec_matches_fresh_build(
         spark, file_build, tmp_path, monkeypatch, no_tokens):
     """A finished store resumed under another codec has no checkpoint to
@@ -324,3 +355,70 @@ def test_resume_under_other_codec_matches_fresh_build(
     indexer.build_index(spark, pages, d_fresh, codec="pfor")
     assert _tables(spark, d) == _tables(spark, d_fresh)
     no_tokens(d)
+
+
+# ---- the Arrow posting encoder ----
+
+def test_arrow_encoder_matches_whole_run_encode():
+    """_encode_partition_arrow over split Arrow batches (the mapInArrow
+    path, carry-over across the 262144-row unit boundary included) must
+    emit exactly the blocks of ONE encode_runs call over the unsplit
+    run — same rows, same payload and pos_payload bytes — for both
+    codecs, with and without positions."""
+    import pyarrow as pa
+
+    from oscar_spark.build import indexer
+    from oscar_spark.functions.codec import encode_runs
+
+    rng = np.random.RandomState(7)
+    n_terms, n = 400, 600_000
+    term_ids = np.sort(rng.randint(0, n_terms, size=n))
+    terms = np.array([f"t{i:05d}" for i in range(n_terms)])[term_ids]
+    # doc ids sorted within each term, spanning several ranges
+    ids = np.empty(n, dtype=np.int64)
+    bounds = np.flatnonzero(np.concatenate(
+        ([True], term_ids[1:] != term_ids[:-1])))
+    for lo, hi in zip(bounds, np.append(bounds[1:], n)):
+        ids[lo:hi] = np.sort(rng.randint(0, 3 * indexer.RANGE_SIZE,
+                                         size=hi - lo))
+        # doc ids must be unique per (term, range) group for the codec
+        ids[lo:hi] = np.cumsum(
+            np.maximum(np.diff(np.concatenate(([0], ids[lo:hi]))), 1))
+    tfs = rng.randint(1, 6, size=n).astype("int32")
+    dls = rng.randint(10, 300, size=n).astype("int32")
+    # per-posting strictly increasing positions, tf of them each
+    pos_offs = np.concatenate(([0], np.cumsum(tfs))).astype(np.int32)
+    gaps = rng.randint(1, 20, size=int(pos_offs[-1]))
+    seg_start = np.repeat(pos_offs[:-1], tfs)
+    csum = np.cumsum(gaps)
+    flat = (csum - (csum[seg_start] - gaps[seg_start])).astype(np.int32)
+    tbl = pa.table({
+        "term": pa.array(terms, pa.string()),
+        "doc_id": pa.array(ids, pa.int64()),
+        "tf": pa.array(tfs, pa.int32()),
+        "dl": pa.array(dls, pa.int32()),
+        "pos": pa.ListArray.from_arrays(pa.array(pos_offs),
+                                        pa.array(flat)),
+    })
+    # the second cut lands exactly on the 262144-row unit boundary
+    cuts = [0, 50_000, 262_144, 300_001, 555_555, n]
+    codes, uniq = pd.factorize(terms)
+    for codec in ("varint", "pfor"):
+        for with_pos in (False, True):
+            src = tbl if with_pos else tbl.drop(["pos"])
+            batches = [b for a, e in zip(cuts, cuts[1:])
+                       for b in src.slice(a, e - a).to_batches()]
+            got = pa.Table.from_batches(list(
+                indexer._encode_partition_arrow(
+                    iter(batches), codec, with_pos))).to_pandas()
+            want = pd.DataFrame(encode_runs(
+                codes.astype(np.int64), ids // indexer.RANGE_SIZE, ids,
+                tfs.astype(np.int64), dls.astype(np.int64),
+                indexer.BLOCK_SIZE, indexer.RANGE_SIZE, codec=codec,
+                positions=flat if with_pos else None))
+            want["term"] = uniq[want["term"].to_numpy()]
+            assert list(got.columns) == list(want.columns)
+            assert ("pos_payload" in got.columns) == with_pos
+            for c in got.columns:
+                assert got[c].tolist() == want[c].tolist(), (codec,
+                                                             with_pos, c)

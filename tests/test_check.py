@@ -39,7 +39,8 @@ def test_check_index_catches_meta_corruption(spark, tmp_path):
     d = str(tmp_path / "cidx")
     build_index(spark, pages_spark_df(spark, 60), d)
     store = IndexStore(d)
-    store.set_meta("n_docs", 999999)
+    store.commit_append(meta={**store.manifest()["meta"],
+                              "n_docs": 999999})
     res = check_index(spark, d)
     assert not res["ok"]
     assert not res["checks"]["meta_counts_match"]["ok"]
@@ -84,7 +85,8 @@ def test_payload_dedup_store_rejected(spark, tmp_path):
     d = str(tmp_path / "idx")
     build_index(spark, spark.read.parquet(str(pdir)), d)
     store = IndexStore(d)
-    store.set_meta("payload_dedup", True)
+    store.commit_append(meta={**store.manifest()["meta"],
+                              "payload_dedup": True})
     before = json.dumps(store.manifest(), sort_keys=True)
 
     with pytest.raises(ValueError, match="rebuild"):

@@ -1,6 +1,6 @@
 """Operator tests that aren't covered by the DuckDB oracle sweep:
-multimodal plumbing, streaming parity, ANN⊆brute consistency, memory
-pin/drop, and the minhash-LSH ⊇ high-jaccard guarantee."""
+multimodal plumbing, ANN⊆brute consistency, memory pin/drop, and the
+minhash-LSH ⊇ high-jaccard guarantee."""
 
 from __future__ import annotations
 
@@ -30,29 +30,6 @@ def test_multimodal_features(spark):
     vids = [r for r in media.collect() if r["kind"] == "video"]
     expected = sum(r["duration_ms"] // 5000 + 1 for r in vids)
     assert len(frames) == expected
-
-
-# ---------- streaming (beyond-reference; batch/stream parity) ----------
-
-def test_streaming_windowed_counts_match_batch(spark):
-    from oscar_spark.streaming.jobs import (
-        stream_events_to_memory, windowed_event_counts)
-    batch = windowed_event_counts(
-        spark.read.parquet(f"{SF}/events.parquet")).collect()
-    streamed = stream_events_to_memory(spark, f"{SF}/events.parquet",
-                                       "t_stream_parity").collect()
-    key = lambda r: (r["win_start"], r["event_type"])
-    assert sorted(map(tuple, streamed)) == sorted(map(tuple, batch))
-    assert len(batch) > 0
-
-
-def test_streaming_token_counts(spark, pages_df):
-    """The tokenize stage is stateless → identical rows batch vs stream
-    (here driven as batch; structural check that the shared fn is used)."""
-    from oscar_spark.streaming.jobs import streaming_token_counts
-    out = streaming_token_counts(pages_df.limit(20))
-    rows = out.collect()
-    assert rows and set(out.columns) == {"url", "term", "tf", "dl"}
 
 
 # ---------- similarity consistency ----------

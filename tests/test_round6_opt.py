@@ -8,35 +8,6 @@ sweep).
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
-
-
-def test_generate_pages_row_range_slices_are_byte_identical():
-    from oscar_spark.fixtures.pages import generate_pages
-    full = generate_pages(500, seed=43, start_index=1000)
-    parts = [generate_pages(500, seed=43, start_index=1000,
-                            row_range=(lo, min(lo + 137, 500)))
-             for lo in range(0, 500, 137)]
-    stitched = pd.concat(parts, ignore_index=True)
-    pd.testing.assert_frame_equal(stitched, full)
-
-
-def test_pages_spark_df_dist_subsplit_matches_chunk_protocol(spark):
-    """The sub-split distributed generator emits exactly the rows of the
-    pinned chunked protocol (chunk ci = seed 42+ci), bytes included."""
-    from oscar_spark.fixtures.pages import generate_pages, pages_spark_df_dist
-    n, chunk = 250, 100
-    got = (pages_spark_df_dist(spark, n, chunk=chunk)
-           .toPandas().sort_values("url").reset_index(drop=True))
-    want = pd.concat(
-        [generate_pages(min(chunk, n - start), seed=42 + ci,
-                        start_index=start)
-         for ci, start in enumerate(range(0, n, chunk))],
-        ignore_index=True).sort_values("url").reset_index(drop=True)
-    assert len(got) == n
-    pd.testing.assert_frame_equal(got, want)
-
 
 def test_minhash_signature_distinct_elision_equivalence(spark):
     """min(md5(p||shingle)) over the raw shingle multiset equals min
@@ -135,71 +106,6 @@ def test_scan_parallelize_noop_when_enough_partitions(spark):
     assert parallelize(many) is many
 
 
-def test_arrow_encoder_matches_whole_run_encode():
-    """_encode_partition_arrow over split Arrow batches (the mapInArrow
-    path, carry-over across the 262144-row unit boundary included) must
-    emit exactly the blocks of ONE encode_runs call over the unsplit
-    run — same rows, same payload and pos_payload bytes — for both
-    codecs, with and without positions."""
-    import pyarrow as pa
-
-    from oscar_spark.build import indexer
-    from oscar_spark.functions.codec import encode_runs
-
-    rng = np.random.RandomState(7)
-    n_terms, n = 400, 600_000
-    term_ids = np.sort(rng.randint(0, n_terms, size=n))
-    terms = np.array([f"t{i:05d}" for i in range(n_terms)])[term_ids]
-    # doc ids sorted within each term, spanning several ranges
-    ids = np.empty(n, dtype=np.int64)
-    bounds = np.flatnonzero(np.concatenate(
-        ([True], term_ids[1:] != term_ids[:-1])))
-    for lo, hi in zip(bounds, np.append(bounds[1:], n)):
-        ids[lo:hi] = np.sort(rng.randint(0, 3 * indexer.RANGE_SIZE,
-                                         size=hi - lo))
-        # doc ids must be unique per (term, range) group for the codec
-        ids[lo:hi] = np.cumsum(
-            np.maximum(np.diff(np.concatenate(([0], ids[lo:hi]))), 1))
-    tfs = rng.randint(1, 6, size=n).astype("int32")
-    dls = rng.randint(10, 300, size=n).astype("int32")
-    # per-posting strictly increasing positions, tf of them each
-    pos_offs = np.concatenate(([0], np.cumsum(tfs))).astype(np.int32)
-    gaps = rng.randint(1, 20, size=int(pos_offs[-1]))
-    seg_start = np.repeat(pos_offs[:-1], tfs)
-    csum = np.cumsum(gaps)
-    flat = (csum - (csum[seg_start] - gaps[seg_start])).astype(np.int32)
-    tbl = pa.table({
-        "term": pa.array(terms, pa.string()),
-        "doc_id": pa.array(ids, pa.int64()),
-        "tf": pa.array(tfs, pa.int32()),
-        "dl": pa.array(dls, pa.int32()),
-        "pos": pa.ListArray.from_arrays(pa.array(pos_offs),
-                                        pa.array(flat)),
-    })
-    # the second cut lands exactly on the 262144-row unit boundary
-    cuts = [0, 50_000, 262_144, 300_001, 555_555, n]
-    codes, uniq = pd.factorize(terms)
-    for codec in ("varint", "pfor"):
-        for with_pos in (False, True):
-            src = tbl if with_pos else tbl.drop(["pos"])
-            batches = [b for a, e in zip(cuts, cuts[1:])
-                       for b in src.slice(a, e - a).to_batches()]
-            got = pa.Table.from_batches(list(
-                indexer._encode_partition_arrow(
-                    iter(batches), codec, with_pos))).to_pandas()
-            want = pd.DataFrame(encode_runs(
-                codes.astype(np.int64), ids // indexer.RANGE_SIZE, ids,
-                tfs.astype(np.int64), dls.astype(np.int64),
-                indexer.BLOCK_SIZE, indexer.RANGE_SIZE, codec=codec,
-                positions=flat if with_pos else None))
-            want["term"] = uniq[want["term"].to_numpy()]
-            assert list(got.columns) == list(want.columns)
-            assert ("pos_payload" in got.columns) == with_pos
-            for c in got.columns:
-                assert got[c].tolist() == want[c].tolist(), (codec,
-                                                             with_pos, c)
-
-
 def test_simhash_bitsum_count_identity(spark):
     """2·Σ_occ bit_j − n_occ ≡ Σ_occ (±1) — the integer identity behind
     the r06b simhash aggregate rewrite (bare shift+mask operands plus
@@ -273,16 +179,3 @@ def test_shingle_kernel_equivalence(spark):
         "istanbul ßtraße x"]
     jvm = pinned.select(F.lower("text").alias("t")).first()["t"]
     assert jvm == "i\u0307stanbul ßtraße x"
-
-
-def test_generate_pages_text_matches_extract():
-    """The r06 direct text construction (title title paras [tail text])
-    is byte-identical to extract_text(html) for every generated page —
-    including the 1% corrupted rows (invalid UTF-8 + unclosed tag)."""
-    from oscar_spark.fixtures.pages import generate_pages
-    from oscar_spark.functions.extract import extract_text
-    df = generate_pages(4000, seed=42)
-    n_corrupt = sum(1 for h in df.html if b"\xff" in h)
-    assert n_corrupt > 0  # the corruption branch is exercised
-    for h, t in zip(df.html, df.text):
-        assert extract_text(h) == t
