@@ -882,7 +882,8 @@ def build_index(spark: SparkSession, pages: DataFrame, index_dir: str,
 
     Without resume the build starts a new store: its publish replaces
     every segment and all metadata (modes, input files) of an earlier
-    store in index_dir."""
+    store in index_dir.  A killed build resumes as a build, never as an
+    append onto the store it was replacing."""
     from oscar_spark.config import POSTINGS_CODEC
     store = IndexStore(index_dir)
     m = store.manifest()
@@ -910,6 +911,8 @@ def build_index(spark: SparkSession, pages: DataFrame, index_dir: str,
     # daily crawl drop costs O(new data), not a rebuild ----
     recorded = meta.get("input_files")
     if (resume and recorded and sigs and len(sigs) > len(recorded)
+            # a killed build resumes as the build
+            and m.get("pending", {}).get("segment") != "base"
             and not store.committed(
                 "postings", _stage_fingerprints(fp, modes)["postings"])
             # a codec/positional/fielded flip means a rebuild
@@ -962,19 +965,32 @@ def _ingest(spark: SparkSession, pages: DataFrame, store: IndexStore,
     pending = m.get("pending") or {}
     if pending.get("segment") != seg:
         pending = {"stages": {}}
-    kept: set[str] = set()  # a build's stages the committed store holds
+    # a resumed build keeps each committed table whose stage fingerprint
+    # matches and that its pending segment does not hold
+    kept = {s for s, f in fps.items() if resume and replace
+            and pending["stages"].get(s) != f
+            and (m["snapshots"].get(s) or {}).get("fingerprint") == f}
+    if replace and any(seg in store.segments(t, m)
+                       for t, s in _TABLES.items() if s not in kept):
+        # the build rewrites listed directories in place: publish the
+        # snapshot without the tables it rewrites and their snapshots
+        # first, and with no store meta but a kept doc_stats' counts.  A
+        # killed rebuild then leaves a store that refuses to open (no
+        # payload format) and resumes as a build, never one that pairs
+        # new tables with old ones
+        store.commit_append(
+            replace={t: [] for t, s in _TABLES.items() if s not in kept},
+            meta={k: m["meta"][k] for k in ("n_docs", "avgdl")
+                  if "doc_stats" in kept},
+            stage_fingerprints=dict.fromkeys(set(_TABLES.values()) - kept))
 
     def done(stage: str) -> dict | None:
         """The meta `stage` was committed with — by the pending segment,
-        or for a build by the committed store, whose table it then
-        keeps — or None: run the stage."""
+        or by the committed store whose table a build keeps — or None:
+        run the stage."""
         if resume and pending["stages"].get(stage) == fps[stage]:
             return pending["meta"]
-        snap = m["snapshots"].get(stage) or {}
-        if resume and replace and snap.get("fingerprint") == fps[stage]:
-            kept.add(stage)
-            return m.get("meta", {})
-        return None
+        return m.get("meta", {}) if stage in kept else None
 
     def commit(stage: str, **counts) -> None:
         store.commit_stage(seg, stage, fps[stage], {**modes, **counts})
@@ -1106,8 +1122,6 @@ def _ingest(spark: SparkSession, pages: DataFrame, store: IndexStore,
         meta={**old, **modes, "n_docs": n_docs, "avgdl": avgdl,
               **({"input_files": sigs} if sigs else {})},
         stage_fingerprints={s: f for s, f in fps.items() if s != "tokens"})
-    if replace:
-        store.vacuum()
 
     elapsed = time.time() - clock.t0
     dps = (n_docs - n_old) / elapsed if elapsed > 0 else 0.0  # new docs
@@ -1272,8 +1286,8 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
     Scale shape: ONE shuffle of the postings table (the renumbering
     window on (bucket, term)), linear unions for the rest.  One atomic
     manifest swap at the end (commit_append replace=…): a crash
-    mid-compaction leaves the old snapshot fully intact; superseded
-    segment directories are removed (IndexStore.vacuum) AFTER it.
+    mid-compaction leaves the old snapshot fully intact; the publish
+    removes the superseded segment directories AFTER it.
     """
     import zlib
 
@@ -1306,7 +1320,6 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
 
     store.commit_append(replace={t: [seg] for t in _TABLES})
     store.drop("tokens")
-    store.vacuum()
     return {"compacted": True, "segment": seg,
             "segments_before": max(len(v) for v in pre.values()),
             "elapsed_sec": round(time.time() - t0, 2)}

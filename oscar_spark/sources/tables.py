@@ -31,8 +31,12 @@ append, `e<epoch>` a streaming epoch, `c<crc>` a compaction).  Each
 stage of a pending segment records a stage commit in the manifest's
 `pending` entry, which no reader looks at; one publish (commit_append)
 lists the segment and moves its fingerprints into `snapshots`, in one
-atomic manifest replace — a killed ingest is never seen half done (the
-resumability contract of BASELINE.json).
+atomic manifest replace, then removes the directories it unlisted — a
+killed append or epoch is never seen half done (the resumability
+contract of BASELINE.json).  A rebuild that rewrites the listed
+`seg=base` in place first publishes a snapshot without the tables it
+rewrites and without the store meta, so until it is resumed the store
+refuses to open instead of pairing new tables with old ones.
 """
 
 from __future__ import annotations
@@ -117,15 +121,18 @@ class IndexStore:
         """Record that `stage` of the pending `segment` is written under
         `fingerprint`, with the meta it was written under (modes, corpus
         counts); a stage commit of another segment starts a new pending
-        entry."""
+        entry, and the abandoned one's directories are removed."""
         def fn(m):
             p = m.get("pending")
-            if not p or p["segment"] != segment:
+            gone = [("*", p["segment"])] if p and p["segment"] != segment \
+                else []
+            if gone or not p:
                 p = m["pending"] = {"segment": segment, "stages": {},
                                     "meta": {}}
             p["stages"][stage] = fingerprint
             p["meta"].update(meta)
-        self._mutate(fn)
+            return gone
+        self._remove(self._mutate(fn))
 
     def snapshot_id(self, stage: str,
                     manifest: dict | None = None) -> int | None:
@@ -159,7 +166,7 @@ class IndexStore:
         """Retire a table: ONE manifest commit removes its snapshot, its
         pending stage commit and its segment list, then its files are
         deleted.  A kill between the two leaves only unlisted bytes,
-        which the next vacuum clears."""
+        which the next drop clears."""
         import shutil
 
         def fn(m):
@@ -187,45 +194,53 @@ class IndexStore:
     def commit_append(self, add: dict[str, list[str]] | None = None,
                       replace: dict[str, list[str]] | None = None,
                       meta: dict | None = None,
-                      stage_fingerprints: dict[str, str] | None = None) -> None:
+                      stage_fingerprints: dict[str, str | None] | None = None
+                      ) -> None:
         """The publish: ONE atomic manifest replace covering a whole
         segment — segment additions, segment swaps (a build's segment,
         or the merged terms table, replacing its predecessors), the
-        store's new metadata and stage fingerprint bumps; the pending
-        entry is cleared.  All segment DIRECTORIES must already be fully
-        written; a crash before this call leaves the old snapshot
-        intact, a crash after it the new one — never a mix."""
+        store's new metadata and stage fingerprint bumps (None drops the
+        stage's snapshot); the pending entry is cleared.  All segment
+        DIRECTORIES must already be fully written; a crash before this
+        call leaves the old snapshot intact, a crash after it the new
+        one — never a mix.  Then the directories of the segments it
+        unlisted, and of a pending segment it did not list, are
+        removed; a kill before that leaves only unlisted bytes."""
         def fn(m):
-            m.pop("pending", None)
+            p = m.pop("pending", None)
+            gone = [("*", p["segment"])] if p else []
             listed = m.setdefault("segments", {})
             for t, segs in (add or {}).items():
                 cur = listed.setdefault(t, [])
                 cur += [s for s in segs if s not in cur]
             for t, segs in (replace or {}).items():
+                gone += [(t, s) for s in listed.get(t, []) if s not in segs]
                 listed[t] = segs
             if meta is not None:
                 m["meta"] = meta
             sid = m["next_snapshot_id"]
             for stage, fpv in (stage_fingerprints or {}).items():
-                m["snapshots"][stage] = {"fingerprint": fpv,
-                                         "snapshot_id": sid,
-                                         "ts": time.time()}
-                sid += 1
+                m["snapshots"].pop(stage, None)
+                if fpv is not None:
+                    m["snapshots"][stage] = {"fingerprint": fpv,
+                                             "snapshot_id": sid,
+                                             "ts": time.time()}
+                    sid += 1
             m["next_snapshot_id"] = sid
-        self._mutate(fn)
+            return gone
+        self._remove(self._mutate(fn))
 
-    def vacuum(self) -> None:
-        """Delete every segment directory the manifest does not list: the
-        segments a publish replaced, and any a killed ingest left
-        behind.  Run after a publish that replaces segments (a build, a
-        compaction)."""
+    def _remove(self, gone: list[tuple[str, str]]) -> None:
+        """Delete the given segment directories that the manifest does
+        not list (table "*": every table's)."""
         import glob
         import shutil
-        m = self.manifest()
-        for d in glob.glob(os.path.join(self.dir, "*", "seg=*")):
-            table = os.path.basename(os.path.dirname(d))
-            if d.rsplit("seg=", 1)[1] not in self.segments(table, m):
-                shutil.rmtree(d, ignore_errors=True)
+        m = self.manifest() if gone else {}
+        for t, seg in gone:
+            for d in glob.glob(os.path.join(self.dir, t, f"seg={seg}")):
+                if seg not in self.segments(os.path.basename(
+                        os.path.dirname(d)), m):
+                    shutil.rmtree(d, ignore_errors=True)
 
     def _reader(self, spark: SparkSession, table: str,
                 schema: str | None, m: dict) -> DataFrame:

@@ -306,6 +306,43 @@ def test_killed_build_resumes_without_tokenizing(
     assert check_index(spark, d)["ok"]
 
 
+def test_killed_rebuild_never_mixes_with_old_store(
+        spark, file_build, tmp_path, monkeypatch, no_tokens):
+    """A rebuild over a store built from fewer files unlists what it
+    rewrites before its first write: killed inside the terms stage, it
+    leaves a store that refuses to open rather than new doc_stats and
+    postings beside the old dictionary, and a resume over the grown
+    input finishes the build (not an append onto the half-written
+    store)."""
+    from oscar_spark.build import indexer
+    from oscar_spark.build.check import check_index
+    from oscar_spark.functions.codec import store_decoder
+    from oscar_spark.sources.tables import IndexStore
+    pages = _pages_of(file_build, spark)
+    d = str(tmp_path / "idx")
+    indexer.build_index(spark, spark.read.parquet(
+        os.path.join(os.path.dirname(file_build[0]), "part-0.parquet")), d)
+
+    def killed(*a, **kw):
+        raise RuntimeError("killed in terms")
+    monkeypatch.setattr(indexer, "_write_dictionary", killed)
+    with pytest.raises(RuntimeError, match="killed"):
+        indexer.build_index(spark, pages, d)
+    monkeypatch.undo()
+    store = IndexStore(d)
+    assert store.segments("postings") == []
+    with pytest.raises(ValueError, match="payload format"):
+        store_decoder(store.manifest().get("meta", {}))
+
+    res = indexer.build_index(spark, pages, d, resume=True)
+    assert res.resumed_stages == ["tokens", "doc_stats", "postings"]
+    assert res.n_docs == file_build[1].n_docs
+    assert _tables(spark, d) == _tables(spark, file_build[0])
+    assert os.listdir(store.path("postings")) == ["seg=base"]
+    no_tokens(d)
+    assert check_index(spark, d)["ok"]
+
+
 def test_flagless_resume_keeps_killed_build_modes(spark, tmp_path,
                                                   monkeypatch, no_tokens):
     """A positional, fielded build killed before its postings commit
